@@ -16,9 +16,9 @@ import org.apache.spark.sql.SparkSession
   * (2) one untimed self-warm run (page cache, per-plan codegen);
   * (3) 3 timed back-to-back runs — 5 when the warm run exceeds 1 s,
   * where run-to-run variance is dominated by GC pauses — reporting
-  * the MEDIAN. Cross-check any surprising number with
-  * `graft.tools.BenchOne <query>` before believing it: the suite
-  * context is still one shared JVM.
+  * the MEDIAN. The suite context is still one shared JVM: the
+  * in-suite vs isolated cross-checks are in BASELINE.md ("Measurement
+  * protocol").
   * Also times the fragment-write path (`ingest`), mirroring the
   * reference's DenseWrite workload (BASELINE.md).
   */
@@ -31,6 +31,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val targetDir = java.nio.file.Paths.get("target").toAbsolutePath.toString
 
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -82,7 +83,7 @@ object Bench {
     // fragment-ingest benchmark: write sf lineitem as a fresh array-table
     resetStorage()
     val ingestSec = median((1 to BaseSweeps).map { _ =>
-      val ingestDir = s"/root/repo/target/graft-arrays/bench_ingest_${System.nanoTime()}"
+      val ingestDir = s"$targetDir/graft-arrays/bench_ingest_${System.nanoTime()}"
       val sec = time {
         graft.storage.ArrayTable.ingest(spark,
           spark.read.parquet(s"$sfDir/lineitem.parquet"), ingestDir,
@@ -105,7 +106,7 @@ object Bench {
     val x10Keys = Seq("minhash_neardups", "dedup_drop_gate", "text_perplexity",
       "tfidf_keywords", "bm25_topk", "media_h264_decode")
       .filter(SparkEntry.queries.contains)
-    val x10Dir = s"/root/repo/target/graft-bench-x10-${System.nanoTime()}"
+    val x10Dir = s"$targetDir/graft-bench-x10-${System.nanoTime()}"
     val x10 = try {
       graft.tools.ScaleRehearsal.synthesizeDocs(spark, sfDir, x10Dir, 10)
       x10Keys.map { n =>
@@ -139,8 +140,8 @@ object Bench {
     // the LAST stdout line, a compact JSON that always fits the tail:
     // same metric/value/unit/sf contract, calibration inline, and a
     // pointer to the full per-query file.
-    val pqFile = s"/root/repo/BENCH_full_c$cpus.json"
-    java.nio.file.Files.write(java.nio.file.Paths.get(pqFile),
+    val pqFile = java.nio.file.Paths.get(s"BENCH_full_c$cpus.json").toAbsolutePath
+    java.nio.file.Files.write(pqFile,
       (line + "\n").getBytes("UTF-8"))
     println(s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec",""" +
       s""""n_queries":${all.size},"calibration":$cal,"sf":"$sfDir",""" +

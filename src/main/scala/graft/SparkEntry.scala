@@ -54,7 +54,8 @@ object SparkEntry {
 
   // ------------------------------------------------------ array builders
 
-  private val arrayBase = "/root/repo/target/graft-arrays"
+  private val arrayBase =
+    java.nio.file.Paths.get("target", "graft-arrays").toAbsolutePath.toString
   private def sfKey(dir: String) = dir.replaceAll("[^A-Za-z0-9.]", "_")
 
   /** Build-once array-table fixtures derived deterministically from the
@@ -163,11 +164,9 @@ object SparkEntry {
   }
 
   // --- the minhash_index_gate pipeline, staged ------------------------
-  // Shared by the gate query below and graft.tools.GateProfile (which
-  // wall-clocks each stage): ONE definition pins the profiler to the
-  // benched gate — a hand-mirrored copy drifts silently on the next
-  // gate change (it already had: the profiler's planted-id offset
-  // diverged from the gate's DupOff).
+  // Split into stages so each can be timed on its own; the per-stage
+  // profile is in BASELINE.md ("Round 14: minhash_index_gate
+  // regression").
 
   /** (corpus docs, planted near-dup batch slice, full probe batch). */
   private[graft] def minhashGateInputs(s: SparkSession, dir: String)
@@ -1026,7 +1025,6 @@ object SparkEntry {
       val (docs, planted, batch) = minhashGateInputs(s, d)
       // the probe and the one-shot arm are independent given (batch,
       // docs, uri) — overlap their eager checkpoint jobs (§2.6).
-      // GateProfile keeps timing the shared stage functions serially.
       val arms = graft.core.Par.jobs(s)(
         () => minhashGateProbe(batch, docs, uri),
         () => minhashGateOneShot(docs, batch))
@@ -1405,8 +1403,8 @@ object SparkEntry {
     // PQ (product quantization) gates, config m=8/ksub=256 = 8 bytes
     // per 64-dim vector (32x vs float32; int8 is only 4x). The
     // embeddings are near-orthogonal — PQ's WORST case — so the floors
-    // hold a fortiori on clustered real embeddings (PqCurve,
-    // BASELINE.md). Round-trip: every vector's reconstruction cosine.
+    // hold a fortiori on clustered real embeddings (BASELINE.md, "PQ
+    // quality sweep"). Round-trip: every vector's reconstruction cosine.
     "pq_roundtrip_gate" -> ((s, d) => {
       val e = t(s, d, "embeddings")
       val cb = Similarity.trainPq(e, "vec_id", "embedding", m = 8, ksub = 256)
@@ -1568,7 +1566,7 @@ object SparkEntry {
       val e = t(s, d, "embeddings")
       val q = e.filter(col("vec_id") < 8)
       // floor 0.9 at nprobe=14/16, from the measured recall@10 curve
-      // (tools/IvfCurve, BASELINE.md "IVF recall-vs-nprobe"): the test
+      // (BASELINE.md, "IVF recall-vs-nprobe curve"): the test
       // embeddings are near-uniform on the sphere (no cluster
       // structure), so recall tracks the probed-corpus fraction —
       // nprobe=12 hits exactly 0.90 at sf0.01 (zero margin) while 14

@@ -52,16 +52,6 @@ case class Tokens(child: Expression) extends UnaryExpression {
 }
 
 object Tokens {
-  /** A/B seam + fallback: `graft.tokens.kernel=false` makes
-    * `lmTokens`/`termsOf` build the original regex expression instead
-    * of this kernel (same rows by the TokensSpec contract — the seam
-    * exists for interleaved A/B timing and as a kill switch). Tolerant
-    * parse: anything but an explicit "false" means enabled. */
-  def enabled: Boolean =
-    !scala.util.Try(org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("graft.tokens.kernel", "true")).toOption
-      .exists(_.trim.equalsIgnoreCase("false"))
-
   def compute(s: UTF8String): ArrayData = {
     val str = s.toString
     val n = str.length

@@ -194,10 +194,10 @@ object Dedup {
     // on a long-lived cluster; the lazy plan recomputes anywhere. Keep
     // true for single-node/bench runs, false for 1000-executor jobs
     // where losing one executor mid-dedup must not kill the pipeline.
-    // NOT widened (Widen.bySize measured a wash here in interleaved
-    // A/B at sf0.1 — the extra exchange of the text costs what the
-    // parallelism wins; the signature kernel is cheap per byte, unlike
-    // media decode)
+    // NOT widened (a size-gated round-robin widen measured a wash here
+    // in interleaved A/B at sf0.1, OPTIMIZATION_r20.md negative result
+    // 1 — the extra exchange of the text costs what the parallelism
+    // wins; the signature kernel is cheap per byte, unlike media decode)
     val dfw = df.select(col(idCol), col(textCol))
     val sigsPlan = dfw.select(col(idCol),
         minhashSignatureFromHashes(normHashes(col(textCol)), numHashes).as("__sig"))
@@ -954,7 +954,7 @@ object Dedup {
     // checkpoint: the distinct-text frame feeds FOUR plan branches
     // (segment index, probe expansion, and both residue legs inside
     // editTextPairs) — uncheckpointed, each branch re-ran the scan +
-    // distinct exchange (r21 QueryProfile: edit_drop_gate was ~35
+    // distinct exchange (r21 stage profile: edit_drop_gate was ~35
     // small stages, most of them repeats of this subtree). Vocab-
     // scale by the operator's contract (distinct linkage keys), so
     // materializing it is safe at any corpus size; AQE-coalesced

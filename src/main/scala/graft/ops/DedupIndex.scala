@@ -792,15 +792,6 @@ object DedupIndex {
     candidatePairs(bandedRows(batch, idCol, textCol, p), uri, p, maxProbeKeys)
   }
 
-  /** diagnostic seam (ScaleRehearsal): the distinct bucket keys a
-    * batch would probe — the input to any pushdown-vehicle coverage
-    * analysis. */
-  private[graft] def probeBuckets(batch: DataFrame, idCol: String,
-      textCol: String, uri: String): DataFrame = {
-    val p = readParams(batch.sparkSession, uri)
-    bandedRows(batch, idCol, textCol, p).select("bucket").distinct()
-  }
-
   /** The batch minus docs near-duplicating the indexed corpus — the
     * steady-state ingest filter. Anti-join on the probe matches; batch
     * side work only. */

@@ -46,11 +46,8 @@ object NgramLm {
     * `split` expression walks per document — the LM passes tokenize
     * the corpus 3-4 times per train+score, and the regex walk was the
     * dominant per-task cost (guide §4; r20 verdict item 3). Rows are
-    * identical (TokensSpec pins kernel == expression);
-    * `graft.tokens.kernel=false` restores the expression form. */
-  def lmTokens(text: Column): Column =
-    if (graft.functions.Tokens.enabled) graft.functions.Tokens(lower(text))
-    else filter(split(lower(text), "[^\\p{L}\\p{N}]+"), t => t =!= "")
+    * identical (TokensSpec pins kernel == expression). */
+  def lmTokens(text: Column): Column = graft.functions.Tokens(lower(text))
 
   /** Adjacent-pair structs (pw, w) of the token array — derived with
     * narrow array ops (slice + zip_with), no per-doc window shuffle.

@@ -40,11 +40,9 @@ object Search {
     * Kernel-backed ([[graft.functions.Tokens]]) like
     * [[NgramLm.lmTokens]]: corpusStats and the query-term splits paid
     * the regex NFA per document/query; the kernel is the same direct
-    * character-class walk TermCounts uses (TokensSpec pins equality;
-    * `graft.tokens.kernel=false` restores the expression form). */
-  def termsOf(text: Column): Column =
-    if (graft.functions.Tokens.enabled) graft.functions.Tokens(lower(text))
-    else filter(split(lower(text), "[^\\p{L}\\p{N}]+"), t => length(t) > 0)
+    * character-class walk TermCounts uses (TokensSpec pins equality
+    * with the `split`-on-`[^\p{L}\p{N}]+` expression). */
+  def termsOf(text: Column): Column = graft.functions.Tokens(lower(text))
 
   /** Inverted index: one row per (doc, term) with the term frequency
     * and the document length riding along. Columns: doc_id, term,
@@ -144,7 +142,7 @@ object Search {
     // outright instead of the old localCheckpoint: the df aggregation
     // still runs exactly once, but the hot-term / elision decisions
     // become free driver-side set ops instead of one-or-three extra
-    // Spark jobs each (r21: QueryProfile showed ~60% of
+    // Spark jobs each (r21: a stage-listener profile showed ~60% of
     // bm25_index_topk's wall was between-job driver time — job count
     // is the cost at the floor, and the removed jobs are pure
     // bookkeeping at any scale). The rebuilt frame is a LocalRelation:
@@ -348,7 +346,7 @@ object Search {
   /** Write options for every postings parquet write. NOTE (r21): a
     * parquet BLOOM FILTER on `term` was tried here (r20 verdict item
     * 4) and REVERTED after measurement: (a) the probe already reads
-    * only matching row groups locally (QueryProfile: 0.2 MB input),
+    * only matching row groups locally (profiled: 0.2 MB input),
     * (b) parquet silently DROPS the bloom whenever a chunk is fully
     * dictionary-encoded — the dictionary is already exact membership,
     * and the in()-pushdown threshold raised in GraftSession lets the

@@ -399,35 +399,6 @@ object Similarity {
         element_at(ids, i).as("id")))).getField("id")
   }
 
-  /** diagnostic seam (ScaleRehearsal): average candidate rows a probe
-    * touches per query — the boundedness number the adaptive geometry
-    * (and past the flat ceiling, the two-level layout) exists to
-    * control. Uses the same geometry-dispatched probe the real top-k
-    * runs. */
-  private[graft] def probeCandidateAvg(spark: org.apache.spark.sql.SparkSession,
-      uri: String, queries: DataFrame, queryId: String, queryVec: String,
-      nprobe: Int, nprobeCoarse: Int = 4): Double = {
-    val incPath0 = cellsIncPath(spark, uri)
-    val genPath = cellsPath(spark, uri)
-    val (cents, twoLevel) = indexGeometryAt(spark, uri, genPath)
-    val probeCells = twoLevel match {
-      case None => probeNarrow(col("__qv"), cents, nprobe)
-      case Some((coarse, members)) =>
-        graft.functions.HierProbeK(col("__qv"), cents, coarse, members,
-          math.min(coarse.size, math.max(2, nprobeCoarse)), nprobe)
-    }
-    val probes = queries
-      .select(col(queryId).as("query_id"), col(queryVec).as("__qv"))
-      .withColumn("centroid_id", explode(probeCells))
-      .select("query_id", "centroid_id")
-    val sizes = readCellsAllFrom(spark, uri, genPath, incPath0)
-      .groupBy("centroid_id").agg(count(lit(1)).as("__n"))
-    probes.join(sizes, Seq("centroid_id"), "left")
-      .na.fill(0, Seq("__n"))
-      .groupBy("query_id").agg(sum("__n").as("__c"))
-      .agg(avg("__c")).head().getDouble(0)
-  }
-
   /** fine position → coarse group id, inverted from the members table.
     * Requires dense fine ids 0..k-1 (the [[trainCoarse]] contract) —
     * checked HERE so the two-level layout write and the probe's

@@ -16,10 +16,9 @@ import org.apache.spark.sql.DataFrame
   * Shape: when the input's HONEST size estimate (optimized-plan stats
   * = file bytes for a scan, the [[Dedup.corpusFitsBroadcast]]
   * discipline) is at most `graft.widen.maxInputBytes` (default
-  * 256 MB), round-robin repartition to ~`bytesPerTask` (512 KB)
-  * partitions, capped at defaultParallelism. Above the budget the
-  * input is left alone — a 100 TB corpus already carries thousands of
-  * row groups and must never be blanket-reshuffled, so this is
+  * 256 MB), round-robin repartition to defaultParallelism. Above the
+  * budget the input is left alone — a 100 TB corpus already carries
+  * thousands of row groups and must never be blanket-reshuffled, so this is
   * size-adaptive, not a local-mode constant: on ANY cluster,
   * repartitioning ≤256 MB costs well under a second and guarantees a
   * CPU-bound kernel uses the cores. Results are row-set identical
@@ -31,7 +30,6 @@ import org.apache.spark.sql.DataFrame
   * shuffle only the bytes the kernel reads). Set
   * `graft.widen.maxInputBytes=0` to disable (A/B seam). */
 object Widen {
-  private val BytesPerTask = 512L << 10
 
   /** Tolerant conf parse: a malformed `graft.widen.maxInputBytes` must
     * not crash a query path — unparseable falls back to the default
@@ -47,37 +45,18 @@ object Widen {
       }
     }.getOrElse(256L << 20)
 
-  /** AVAILABLE-BUT-UNUSED primitive: no production caller today (the
-    * MinHash-LSH adoption was measured a wash and reverted —
-    * OPTIMIZATION_r20.md negative result 1). Kept because the shape —
-    * size-gated round-robin to ~[[BytesPerTask]] partitions — is the
-    * correct general form of the floor; adopt it by measurement, not
-    * by default. */
-  def bySize(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val maxBytes = maxInputBytes(spark)
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (maxBytes <= 0 || est > maxBytes) df
-    else {
-      val p = spark.sparkContext.defaultParallelism
-      val parts = math.max(1L, math.min(p.toLong, est.toLong / BytesPerTask)).toInt
-      // below 2 target partitions the exchange buys nothing
-      if (parts < 2) df else df.repartition(parts)
-    }
-  }
-
   /** Parallelism floor for frames whose per-ROW cost dominates their
     * byte size (media decode, codec synthesis): a narrow id/key frame
     * is ~free to shuffle at any scale, while leaving it at the scan's
     * partitioning single-threads minutes of decode CPU behind a
-    * single-row-group file. Round-robin to defaultParallelism; same
-    * conf kill-switch as [[bySize]] (`graft.widen.maxInputBytes=0`).
+    * single-row-group file. Round-robin to defaultParallelism;
+    * `graft.widen.maxInputBytes=0` disables it.
     *
     * The size budget applies HERE too (r20 ADVICE: this path used to
     * repartition unconditionally — fine for today's 8 B/row id frames,
     * but a future caller passing a wide frame would pay a silent full
     * exchange): inputs whose honest plan estimate exceeds the budget
-    * are left alone, same as [[bySize]]. */
+    * are left alone. */
   def forHeavyRows(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val maxBytes = maxInputBytes(spark)

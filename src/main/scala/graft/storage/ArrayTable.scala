@@ -109,6 +109,18 @@ object ArrayTable {
       role: String, content: String): Unit =
     Encryption.envelopeWrite(spark, encKeyFresh(spark, uri), path, role, content)
 
+  /** [[sidecarWrite]] for a sidecar whose PRESENCE marks its fragment
+    * live (the manifest): the envelope goes to a `_`-prefixed temp file
+    * in the same directory and is renamed onto `path`, so a concurrent
+    * [[fragments]] that sees the file always parses it whole. */
+  private def sidecarCommit(spark: SparkSession, uri: String, path: String,
+      role: String, content: String): Unit = {
+    val slash = path.lastIndexOf('/')
+    val tmp = s"${path.substring(0, slash)}/_${path.substring(slash + 1)}.tmp"
+    sidecarWrite(spark, uri, tmp, role, content)
+    require(vfs(spark).rename(tmp, path), s"could not commit $path")
+  }
+
   private def sidecarRead(spark: SparkSession, uri: String, path: String,
       role: String): String =
     Encryption.envelopeRead(spark, encKey(spark, uri), path, role)
@@ -280,7 +292,7 @@ object ArrayTable {
         }
       }
     }
-    sidecarWrite(spark, uri, s"$fragDir/__manifest.json", "manifest", manifestJson(info))
+    sidecarCommit(spark, uri, s"$fragDir/__manifest.json", "manifest", manifestJson(info))
     info
   }
 
@@ -399,7 +411,7 @@ object ArrayTable {
       })
       spark.read.parquet(s"${f.path}/data").write.mode("overwrite")
         .options(opts).parquet(s"$dest/data")
-      sidecarWrite(spark, dstUri, s"$dest/__manifest.json", "manifest",
+      sidecarCommit(spark, dstUri, s"$dest/__manifest.json", "manifest",
         manifestJson(f))
     }
     if (fs.exists(s"$srcUri/__labels"))
@@ -834,7 +846,7 @@ object ArrayTable {
         // per-fragment unionByName paid a 1k-way union on a
         // 1k-fragment array with one tombstone — measured 80.8 s to
         // PLAN + 26.7 s to execute vs 1.8 s + 0.6 s for this shape
-        // (graft.tools.FragmentsRehearsal, r13).
+        // (BASELINE.md, "Round 13: many-fragment MVCC resolution").
         //
         // The name parse is VALIDATED driver-side against the
         // authoritative manifest values before use: any fragment whose

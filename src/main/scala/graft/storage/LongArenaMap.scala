@@ -42,10 +42,6 @@ final class LongArenaMap private (
 
   def payloadLen(start: Int): Int = arena(start).toInt
   def payload(idx: Int): Long = arena(idx)
-
-  /** heap bytes of the three arrays (diagnostics). */
-  def footprintBytes: Long =
-    8L * keys.length + 4L * offs.length + 8L * arena.length
 }
 
 object LongArenaMap {

@@ -446,16 +446,6 @@ object PointIndex {
     }
   }
 
-  /** Measured heap bytes of a served slot's map shards (diagnostics/
-    * bench evidence for the ~3×-raw-tier-bytes claim; runs one cheap
-    * job over the cached shards). */
-  private[graft] def mapFootprint(spark: SparkSession,
-      slot: String): Option[Long] = {
-    val e = entries.synchronized(Option(entries.get((spark, slot))))
-    e.map(_.rdd.asInstanceOf[RDD[LongArenaMap]]
-      .map(_.footprintBytes).sum().toLong)
-  }
-
   // ---- warm-at-flip ---------------------------------------------------
 
   private lazy val warmer = java.util.concurrent.Executors

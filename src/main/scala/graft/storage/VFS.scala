@@ -51,15 +51,6 @@ class VFS(conf: Configuration) {
 
   def fileSize(uri: String): Long = { val p = new Path(uri); fs(p).getFileStatus(p).getLen }
 
-  /** Pin a file's modification time (ms). Structured-streaming file
-    * sources order discovery by mtime — a rehearsal that stamps staged
-    * files with strictly increasing, FIXED mtimes gets a deterministic
-    * arrival order (hence byte-reproducible survivor sets) instead of
-    * whatever sub-ms rename timing produced. */
-  def setTimes(uri: String, mtimeMs: Long): Unit = {
-    val p = new Path(uri); fs(p).setTimes(p, mtimeMs, -1L)
-  }
-
   /** (length, mtime) — a cheap change fingerprint for memoizing parsed
     * sidecars keyed by path (legacy unversioned paths get rewritten in
     * place on rebuilds, so path alone is not a cache key). */

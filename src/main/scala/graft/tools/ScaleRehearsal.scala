@@ -1,13 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.{Curation, Dedup, Similarity, TextAnalysis}
 
-/** 10x scale rehearsal (BASELINE.md): synthesizes a corpus `mult` times
-  * the sf0.1 tables under target/ and times the heaviest operators,
-  * plus the LSH bucket-cap hit rate — the nonlinearity probes a bench
-  * at fixed sf cannot see.
+/** Scale-corpus synthesis: builds a documents table `mult` times the
+  * size of an sf directory's, for the scale keys of [[graft.Bench]] and
+  * the benchmark's corpus workload. The operator timings measured on it
+  * are in BASELINE.md ("Scale rehearsal").
   *
   * Corpus synthesis is NOT naive replication: 10 identical copies would
   * plant 10-way near-dup cliques (a quadratic pair blowup with no
@@ -17,14 +16,6 @@ import graft.ops.{Curation, Dedup, Similarity, TextAnalysis}
   * were near-dups WITHIN a copy stay near-dups (same transform on both
   * sides). The result approximates a genuinely larger corpus with the
   * same internal dup rate.
-  *
-  *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
-  *     sbt "runMain graft.tools.ScaleRehearsal [mult] [ops]"
-  *
-  * Optional `ops` is a comma list restricting which operators run
-  * (e.g. "index_build,index_probe_500,packing,dup_spans" for the
-  * 100x steady-state run — the full sweep at 100x would mostly
-  * re-measure the one-shot paths the 10x/30x curves already pin).
   */
 object ScaleRehearsal {
 
@@ -39,7 +30,7 @@ object ScaleRehearsal {
   private def perm(target: String, k: Int): String =
     target.indices.map(i => ('a' + (i * 3 + k * 5 + 7) % 26).toChar).mkString
 
-  private def scramble(c: org.apache.spark.sql.Column, copy: Int) =
+  private def scramble(c: Column, copy: Int) =
     translate(translate(c, Target1, perm(Target1, copy % 26)),
       Target2, perm(Target2, copy / 26))
 
@@ -47,8 +38,8 @@ object ScaleRehearsal {
     * documented above: per-copy scrambled suffixes keep cross-copy
     * jaccard below the dedup threshold, so the dup rate matches a
     * genuinely larger corpus) and write it to `outDir/documents.parquet`.
-    * Shared with [[graft.Bench]]'s x10 scaling keys so the bench and
-    * the rehearsal measure the SAME synthetic corpus shape. */
+    * Shared by [[graft.Bench]]'s x10 scaling keys and the benchmark's
+    * corpus workload, so both measure the SAME synthetic corpus shape. */
   def synthesizeDocs(spark: SparkSession, sfDir: String, outDir: String,
       mult: Int): Unit = {
     val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -59,1957 +50,5 @@ object ScaleRehearsal {
         concat(col("text"), lit(" "), scramble(col("text"), c)))
     }.reduce(_ unionByName _)
       .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val mult = args.headOption.map(_.toInt).getOrElse(10)
-    val only: Set[String] = args.drop(1).headOption
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty)
-    def runOp(name: String): Boolean = only.isEmpty || only(name)
-    val outDir = s"/root/repo/target/scale${mult}x"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-
-    def time[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-
-    // ---- synthesize the mult-x corpus -------------------------------
-    val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
-    val docsX = (0 until mult).map { c =>
-      val shifted = docs0.withColumn("doc_id", col("doc_id") + lit(c.toLong << 24))
-      if (c == 0) shifted
-      else shifted.withColumn("text",
-        concat(col("text"), lit(" "), scramble(col("text"), c)))
-    }.reduce(_ unionByName _)
-    docsX.write.mode("overwrite").parquet(s"$outDir/documents.parquet")
-
-    if (runOp("ingest_lineitem")) {
-      val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      (0 until mult).map(c => li0.withColumn("l_orderkey", col("l_orderkey") + lit(c.toLong << 32)))
-        .reduce(_ unionByName _)
-        .write.mode("overwrite").parquet(s"$outDir/lineitem.parquet")
-    }
-
-    val docs = spark.read.parquet(s"$outDir/documents.parquet")
-    println(s"[rehearsal] docs=${docs.count()} (mult=$mult)")
-
-    val results = scala.collection.mutable.LinkedHashMap[String, Double]()
-
-    // ---- LSH bucket-cap hit rate ------------------------------------
-    // re-derive the banded buckets exactly as minhashNearDups does and
-    // measure what the 64-id cap drops at this scale
-    val stats: Option[org.apache.spark.sql.Row] = if (!runOp("lsh_cap_stats")) None else {
-      val sigs = docs.select(col("doc_id").as("__id"),
-        Dedup.minhashSignatureFromHashes(graft.functions.ShingleHashes(
-          lower(regexp_replace(trim(col("text")), TextAnalysis.WsClass + "+", " ")), 5), 64).as("__sig"))
-      val banded = sigs.select(col("__id"),
-          posexplode(transform(sequence(lit(0), lit(15)),
-            b => xxhash64(slice(col("__sig"), b * 4 + 1, lit(4)), b))))
-        .select(col("__id"), col("pos").as("__band"), col("col").as("__bucket"))
-      val s = banded.groupBy("__band", "__bucket").agg(count(lit(1)).as("n"))
-        .agg(count(lit(1)).as("buckets"),
-          sum(when(col("n") > 64, 1L).otherwise(0L)).as("over_cap"),
-          sum(when(col("n") > 64, col("n")).otherwise(0L)).as("ids_in_dropped"),
-          sum(col("n")).as("ids_total"),
-          max(col("n")).as("max_bucket")).head()
-      println(s"[rehearsal] buckets=${s.getLong(0)} overCap=${s.getLong(1)} " +
-        s"idsDropped=${s.getLong(2)}/${s.getLong(3)} maxBucket=${s.getLong(4)}")
-      Some(s)
-    }
-
-    // ---- heavy operators at mult-x ----------------------------------
-    if (runOp("minhash_neardups")) {
-      val (_, tMinhash) = time(
-        Dedup.minhashNearDups(docs, "doc_id", "text", threshold = 0.6).count())
-      results += "minhash_neardups" -> tMinhash
-    }
-
-    if (runOp("dedup_drop")) {
-      val (survivors, tDrop) = time(
-        Dedup.dropNearDups(docs, "doc_id", "text", threshold = 0.6).count())
-      results += "dedup_drop" -> tDrop
-      println(s"[rehearsal] dropNearDups kept $survivors of ${docs.count()}")
-    }
-
-    if (runOp("edit_neardups")) {
-      // Scale the VOCAB, not the dup-group sizes: each copy c appends a
-      // 3x-repeated-digit code to p_name (any two distinct codes differ
-      // in >= 3 char positions, keeping cross-copy distance > maxDist),
-      // so distinct strings grow mult-x while per-copy pair structure —
-      // and therefore output — scales LINEARLY. Naive replication would
-      // instead grow same-text groups mult-x and the dist-0 output
-      // quadratically, a shape with no real-corpus analogue (mirrors
-      // the docsX scramble rationale above).
-      val part0 = spark.read.parquet(s"$sfDir/part.parquet")
-      // persist (CacheManager-managed) rather than localCheckpoint: the
-      // latter pins its checkpoint RDD outside the cache, so unpersist()
-      // on the Dataset would be a no-op and the multiplied table would
-      // stay resident through every later rehearsal op
-      val partX = (0 until mult).map { c =>
-        val code = f"$c%03d".flatMap(ch => s"$ch$ch$ch")
-        part0.withColumn("p_partkey", col("p_partkey") + lit(c.toLong << 32))
-          .withColumn("p_name", concat(col("p_name"), lit(" " + code)))
-      }.reduce(_ unionByName _)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nRows = partX.count() // eager materialization, outside the clock
-      val (nPairs, tEdit) = time(
-        Dedup.editNearDups(partX, "p_partkey", "p_name", maxDist = 2).count())
-      println(s"[rehearsal] edit_neardups pairs=$nPairs over $nRows rows")
-      results += "edit_neardups" -> tEdit
-      partX.unpersist()
-    }
-
-    // k=4 over ~85-char linkage keys (the titles/addresses shape): the
-    // measured envelope behind editNearDups' maxDist<=8 require. Probe
-    // fan-out here is ~(2k+1)^2*(k+1)/2 keys per distinct string of
-    // ~17-char segments — the worst practical shape before the require
-    // message's "use ngram/minhash families" advice applies. Planted:
-    // every 50th key gets a 4-substitution copy ('z' is outside conv's
-    // base-26 digit set, so the distance is exactly 4).
-    if (runOp("edit_k4")) {
-      val n = docs.count()
-      def addr(idc: Column) = concat_ws(" ", (0 until 10).map(j =>
-        conv(pmod(xxhash64(idc, lit(j)), lit(208827064576L)).cast("string"),
-          10, 26)): _*)
-      val base = spark.range(n)
-        .select(col("id").as("key_id"), addr(col("id")).as("key"))
-      val edited = base.filter(col("key_id") % 50 === 0)
-        .select((col("key_id") + (1L << 40)).as("key_id"),
-          concat(substring(col("key"), 1, 20), lit("zzzz"),
-            substring(col("key"), 25, 1 << 20)).as("key"))
-      val all = base.unionByName(edited)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nAll = all.count(); val nPlanted = edited.count()
-      val (nPairs, tEd) = time(
-        Dedup.editNearDups(all, "key_id", "key", maxDist = 4).count())
-      require(nPairs >= nPlanted,
-        s"lost planted k=4 pairs: $nPairs found, $nPlanted planted")
-      println(s"[rehearsal] edit_k4_neardups: $nPairs pairs over $nAll keys " +
-        s"($nPlanted planted)")
-      results += "edit_k4_neardups" -> tEd
-      // linkage shape: small dirty batch best-matched against the corpus
-      val (nBest, tBest) = time(Dedup.editJoinBest(
-        edited.select(col("key_id").as("lid"), col("key")), "lid", "key",
-        base.select(col("key_id").as("rid"), col("key")), "rid", "key",
-        maxDist = 4).count())
-      require(nBest == nPlanted,
-        s"editJoinBest matched $nBest of $nPlanted dirty keys")
-      results += "edit_k4_join_best" -> tBest
-      all.unpersist()
-    }
-
-    // Interval-join SKEW row: the rangeJoin doc delegates hot bins
-    // ("many intervals over one hot bin — real candidate mass") to AQE
-    // skew splitting; this measures that delegation once. Both arms
-    // have the SAME totals (1M hot-shape events + 1M background, ~25M
-    // output pairs, ~75M candidate pairs): the skew arm piles the hot
-    // million on ONE user in ONE 2-hour span (2-3 hot (user,bin) keys),
-    // the uniform arm spreads the identical structure over 1000 users.
-    // AQE detects skew by INPUT partition bytes, so knobs are scaled to
-    // rehearsal size (at 100 TB the defaults trigger naturally):
-    // skewedPartitionThresholdInBytes=16m, advisoryPartitionSizeInBytes
-    // =4m, skewedPartitionFactor=2; a 64-char payload keeps hot
-    // partitions above the scaled threshold.
-    if (runOp("interval_skew")) {
-      val hourUs = 3600L * 1000000L
-      val pay = lit("x" * 64).as("payload")
-      val hotEv = spark.range(1000000).select(col("id").as("event_id"),
-        lit(0L).as("user_id"),
-        timestamp_micros(pmod(xxhash64(col("id")), lit(2 * hourUs))).as("ts"),
-        pay)
-      val bgEv = spark.range(1000000).select(
-        (col("id") + (1L << 40)).as("event_id"),
-        (pmod(xxhash64(col("id"), lit(1)), lit(10000L)) + 100000L).as("user_id"),
-        timestamp_micros(pmod(xxhash64(col("id"), lit(2)),
-          lit(720 * hourUs))).as("ts"), pay)
-      val hotWin = spark.range(50).select(col("id").as("win_id"),
-        lit(0L).as("user_id"),
-        timestamp_micros(col("id") * (2 * hourUs / 50)).as("ws"),
-        timestamp_micros(col("id") * (2 * hourUs / 50) + 2 * hourUs).as("we"))
-      val bgWin = spark.range(5000).select((col("id") + 1000000L).as("win_id"),
-        (pmod(xxhash64(col("id"), lit(3)), lit(10000L)) + 100000L).as("user_id"),
-        timestamp_micros(pmod(xxhash64(col("id"), lit(4)),
-          lit(720 * hourUs))).as("ws"),
-        timestamp_micros(pmod(xxhash64(col("id"), lit(4)),
-          lit(720 * hourUs)) + 2 * hourUs).as("we"))
-      // uniform arm: the hot structure replicated per-user — 1000 users
-      // each with 1000 events and 50 windows in their own 2 h span
-      val uniEv = spark.range(1000000).select(col("id").as("event_id"),
-        pmod(col("id"), lit(1000L)).as("user_id"),
-        timestamp_micros(pmod(xxhash64(col("id")), lit(2 * hourUs))).as("ts"),
-        pay)
-      val uniWin = spark.range(50000).select(col("id").as("win_id"),
-        (col("id") / 50).cast("long").as("user_id"),
-        timestamp_micros((col("id") % 50) * (2 * hourUs / 50)).as("ws"),
-        timestamp_micros((col("id") % 50) * (2 * hourUs / 50) + 2 * hourUs)
-          .as("we"))
-      val knobs = Seq(
-        "spark.sql.adaptive.skewJoin.enabled" -> "true",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16m",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4m",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2")
-      val saved = knobs.map { case (k, _) =>
-        k -> spark.conf.getOption(k) }
-      knobs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
-        val (nSkew, tSkew) = time(graft.ops.AsOf.rangeJoin(
-          hotEv.unionByName(bgEv), hotWin.unionByName(bgWin),
-          Seq("user_id"), "ts", "ws", "we", "w_").count())
-        val (nUni, tUni) = time(graft.ops.AsOf.rangeJoin(
-          uniEv.unionByName(bgEv), uniWin.unionByName(bgWin),
-          Seq("user_id"), "ts", "ws", "we", "w_").count())
-        println(f"[rehearsal] interval_skew: skew $nSkew matches in " +
-          f"$tSkew%.2f s, uniform $nUni matches in $tUni%.2f s " +
-          f"(ratio ${tSkew / math.max(tUni, 1e-9)}%.2f); knobs: " +
-          knobs.map { case (k, v) => s"$k=$v" }.mkString(", "))
-        require(tSkew < 10 * tUni,
-          f"hot-user skew blew up the wall: $tSkew%.1f s vs uniform $tUni%.1f s")
-        results += "interval_skew_hot" -> tSkew
-        results += "interval_skew_uniform" -> tUni
-      } finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
-
-    if (runOp("phrase_scan")) {
-      // the claim under test: automaton scan cost is corpus-bound, not
-      // corpus x phrases — P=16 vs P=2048 should be ~flat, while the
-      // naive per-(doc, phrase) contains pays the full product (and
-      // must agree row-for-row with the automaton: parity asserted)
-      val vocab = Seq("key", "agg", "row", "scan", "slow", "fast", "table",
-        "value", "part", "hash", "merge", "batch", "spark", "line", "sort",
-        "window", "order", "data", "column", "join", "small", "customer",
-        "query", "big", "stream", "group", "vector", "filter", "the")
-      val pairs = for (x <- vocab; y <- vocab) yield s"$x $y"
-      val triples = for (x <- vocab.take(8); y <- vocab; z <- vocab.take(6))
-        yield s"$x $y $z"
-      val p2048 = (pairs ++ triples).distinct.take(2048)
-      val p16 = p2048.take(16)
-      val (n16, t16) = time(graft.ops.TextAnalysis
-        .phraseMatches(docs, "doc_id", "text", p16).count())
-      val (n2k, t2k) = time(graft.ops.TextAnalysis
-        .phraseMatches(docs, "doc_id", "text", p2048).count())
-      val (nNaive, tNaive) = time(docs
-        .withColumn("phrase", // separator as an explicit escape, never a
-          // raw control char (invisible in diffs/review)
-          explode(split(lit(p2048.mkString("\u0001")), "\u0001")))
-        .filter(expr("contains(text, phrase)")).count())
-      require(n2k == nNaive, s"automaton/naive disagree: $n2k vs $nNaive")
-      println(s"[rehearsal] phrase_scan p16=$n16 rows, p2048=$n2k rows " +
-        s"(naive parity ok)")
-      results += "phrase_scan_p16" -> t16
-      results += "phrase_scan_p2048" -> t2k
-      results += "phrase_scan_naive_p2048" -> tNaive
-    }
-
-    if (runOp("range_join") || runOp("overlap_join")) {
-      // interval containment at mult-x: per-copy user_id offsets keep
-      // copies independent, so matches scale linearly with the corpus
-      val ev0 = graft.streaming.EventStreams.normalizeEventTs(
-        spark.read.parquet(s"$sfDir/events.parquet"))
-        .select(col("event_id"), col("user_id"), col("ts"))
-      // event_id offset must be a MULTIPLE OF 35 so every copy derives
-      // both window sets (event_id % 5 and % 7) from the same residue
-      // classes — true replicas, exactly-linear expected matches
-      val evX = (0 until mult).map(c => ev0
-        .withColumn("user_id", col("user_id") + lit(c.toLong << 32))
-        .withColumn("event_id", col("event_id") + lit(c.toLong * (35L << 40))))
-        .reduce(_ unionByName _)
-      val wins = evX.filter(col("event_id") % 5 === 0)
-        .select(col("user_id"), col("event_id").as("win_id"),
-          col("ts").as("ws"), (col("ts") + expr("INTERVAL 2 HOURS")).as("we"))
-      if (runOp("range_join")) {
-        val (nMatch, tRange) = time(graft.ops.AsOf.rangeJoin(
-          evX, wins, Seq("user_id"), "ts", "ws", "we", "w_").count())
-        println(s"[rehearsal] range_join matches=$nMatch over ${mult}x events")
-        results += "range_join" -> tRange
-      }
-      if (runOp("overlap_join")) {
-        // interval x interval: 1-hour windows overlapping the 2-hour ones
-        val lwins = evX.filter(col("event_id") % 7 === 0)
-          .select(col("user_id"), col("event_id").as("lwin_id"),
-            col("ts").as("ls"), (col("ts") + expr("INTERVAL 1 HOUR")).as("le"))
-        val (nOv, tOv) = time(graft.ops.AsOf.overlapJoin(
-          lwins, wins, Seq("user_id"), "ls", "le", "ws", "we", "w_").count())
-        println(s"[rehearsal] overlap_join matches=$nOv over ${mult}x events")
-        results += "overlap_join" -> tOv
-      }
-    }
-
-    if (runOp("dedup_star_cc")) {
-      val (_, tStar) = time {
-        val pairs = Dedup.minhashNearDups(docs, "doc_id", "text", threshold = 0.6)
-          .localCheckpoint(true)
-        Dedup.dupClusters(pairs, driverLimit = 0L).count()
-      }
-      results += "dedup_star_cc" -> tStar
-    }
-
-    if (runOp("simhash_neardups")) {
-      val (_, tSim) = time(
-        Dedup.simhashNearDups(docs, "doc_id", "text", maxHamming = 3).count())
-      results += "simhash_neardups" -> tSim
-    }
-
-    if (runOp("contamination")) {
-      val bench = docs0.limit(200).select(col("doc_id").as("bench_id"),
-        col("text").as("snippet"))
-      val (_, tContam) = time(
-        Curation.contamination(docs, "doc_id", "text", bench, "snippet", n = 8).count())
-      results += "contamination" -> tContam
-    }
-
-    if (runOp("bloom_contamination")) {
-      val bench = docs0.limit(200).select(col("doc_id").as("bench_id"),
-        col("text").as("snippet"))
-      val (nHits, tBloom) = time(
-        Curation.bloomContamination(docs, "doc_id", "text", bench, "snippet",
-          n = 8).count())
-      results += "bloom_contamination" -> tBloom
-      println(s"[rehearsal] bloom_contamination: $nHits contaminated docs, " +
-        s"flagged=${graft.core.Stats.counterValue("decontam.bloom_docs_flagged")} " +
-        s"of probed=${graft.core.Stats.counterValue("decontam.bloom_docs_probed")}")
-    }
-
-    if (runOp("text_tokens_bpe")) {
-      val (_, tBpe) = time(
-        TextAnalysis.bpeTokenCounts(docs.select(col("doc_id"), col("text"))
-          .as[(Long, String)]).agg(sum("_2")).head())
-      results += "text_tokens_bpe" -> tBpe
-    }
-
-    if (runOp("ingest_lineitem")) {
-      val lineitem = spark.read.parquet(s"$outDir/lineitem.parquet")
-      println(s"[rehearsal] lineitem=${lineitem.count()}")
-      val (_, tIngest) = time {
-        val uri = s"$outDir/ingest_li"
-        graft.storage.ArrayTable.ingest(spark, lineitem, uri,
-          Seq("l_orderkey", "l_linenumber"), overwrite = true)
-        graft.storage.VFS(spark).delete(uri)
-      }
-      results += "ingest_lineitem" -> tIngest
-    }
-
-    // ---- round-8 ops: persisted-index probe, packing, dup spans -----
-    // index build is the amortized one-time pass; the PROBE is the
-    // steady-state cost — measure both, plus the probe's scan
-    // selectivity (bytes of index actually read vs index size)
-    val idxUri = s"$outDir/minhash_index"
-    if (runOp("index_build")) {
-      val (_, tIdxBuild) = time(
-        graft.ops.DedupIndex.build(docs.select("doc_id", "text"), "doc_id", "text", idxUri))
-      results += "index_build" -> tIdxBuild
-    }
-    if (runOp("index_probe_500")) {
-      val batch = docs0.limit(500)
-        .withColumn("doc_id", col("doc_id") + (1L << 50))
-        .withColumn("text", concat(col("text"), lit(" xyzzy")))
-      val (probeHits, tProbe) = time(
-        graft.ops.DedupIndex.probe(batch, "doc_id", "text", idxUri, threshold = 0.6).count())
-      results += "index_probe_500" -> tProbe
-      println(s"[rehearsal] index probe of 500 docs: $probeHits matches")
-    }
-    if (runOp("index_probe_verify")) {
-      // the EXACT-VERIFY probe (verifyWith) must also stay batch-
-      // proportional: pre-r14 this path shingle-hashed the WHOLE
-      // corpus to feed a pair-scale join — a bend that only shows at
-      // scale, which is why it gets its own rehearsal row now that the
-      // corpus side is semi-join-pruned to candidate mids
-      val batch = docs0.limit(500)
-        .withColumn("doc_id", col("doc_id") + (1L << 50))
-        .withColumn("text", concat(col("text"), lit(" xyzzy")))
-      val (vHits, tVProbe) = time(
-        graft.ops.DedupIndex.probe(batch, "doc_id", "text", idxUri,
-          threshold = 0.6, verifyWith = Some(docs.select("doc_id", "text"))).count())
-      results += "index_probe_verify" -> tVProbe
-      println(s"[rehearsal] verified index probe of 500 docs: $vHits matches")
-    }
-
-    if (runOp("packing")) {
-      val (_, tPack) = time(
-        graft.ops.Packing.packStats(
-          graft.ops.Packing.packDocs(docs, "doc_id", "text", 512L), 512L)
-          .agg(sum("tokens")).head())
-      results += "packing" -> tPack
-    }
-
-    if (runOp("packed_ids")) {
-      // tokenize-and-pack end to end: the BPE segmentation pass (memoized
-      // per distinct word) + packing + the flatten shuffle of the ids
-      val (nPacks, tPackedIds) = time(
-        graft.ops.Packing.packedTokenIds(docs, "doc_id", "text", 2048L).count())
-      results += "packed_ids" -> tPackedIds
-      println(s"[rehearsal] packed_ids: $nPacks packs")
-    }
-
-    if (runOp("token_mixture")) {
-      val withTok = docs.withColumn("n_tokens", TextAnalysis.tokenCount(col("text")))
-      val shares = (0 until 10).map(i => s"src$i" -> 0.1).toMap
-      val (kept, tMix) = time(graft.ops.Curation.tokenMixtureSample(
-        withTok, "source", "doc_id", "n_tokens", shares).count())
-      results += "token_mixture" -> tMix
-      println(s"[rehearsal] token_mixture kept $kept rows")
-    }
-
-    if (runOp("dup_spans")) {
-      val (_, tSpans) = time(
-        Curation.dupSpans(docs, "doc_id", "text", n = 8).agg(sum("shared_grams")).head())
-      results += "dup_spans" -> tSpans
-    }
-
-    if (runOp("dedup_substring")) {
-      // removal ships every window OCCURRENCE (not just distinct grams)
-      // through the one gram shuffle — the heaviest curation shape
-      val (removedTotal, tStrip) = time(
-        Curation.removeDupSpans(docs, "doc_id", "text", n = 8)
-          .agg(sum("n_removed")).head().getLong(0))
-      results += "dedup_substring" -> tStrip
-      println(s"[rehearsal] dedup_substring removed $removedTotal tokens")
-    }
-
-    // ---- round-10: catalog DML / MVCC read paths at scale ----------
-    // many-fragment array + conditional-delete tombstones + truncation:
-    // the costs here are (a) manifest-driven fragment planning, (b) the
-    // per-fragment anti-filter the tombstones compile to, (c) the
-    // truncation-tiebreak pruning — all metadata-scale except the data
-    // pass itself, which is what the timing checks.
-    if (runOp("snapshot_diff")) {
-      import graft.storage.ArrayTable
-      val uri = s"$outDir/diff_arr"
-      graft.storage.VFS(spark).delete(uri)
-      val base = docs.select(col("doc_id"),
-        length(col("text")).cast("long").as("len"))
-      ArrayTable.ingest(spark, base, uri, Seq("doc_id"), tsOpt = Some(1000L),
-        overwrite = true, allowsDuplicates = true)
-      // append 1% of the corpus with shifted ids (disjoint MBR range)
-      ArrayTable.write(spark, base.filter(col("doc_id") % 100 === 0)
-        .withColumn("doc_id", col("doc_id") + lit(1L << 40)), uri, Some(2000L))
-      val (nFast, tFast) = time(
-        ArrayTable.diff(spark, uri, (0L, 1500L), (0L, 2500L)).count())
-      results += "snapshot_diff_fast" -> tFast
-      // a tombstone in the window forces the two-snapshot anti-diff
-      ArrayTable.delete(spark, uri, "len >= 300 and len < 320", Some(3000L))
-      val (nSlow, tSlow) = time(
-        ArrayTable.diff(spark, uri, (0L, 2500L), (0L, 3500L)).count())
-      results += "snapshot_diff_general" -> tSlow
-      println(s"[rehearsal] snapshot_diff: fast=$nFast rows, general=$nSlow deletes")
-    }
-
-    if (runOp("catalog_dml")) {
-      import graft.storage.ArrayTable
-      val uri = s"$outDir/catalog_dml_arr"
-      graft.storage.VFS(spark).delete(uri)
-      val base = docs.select(col("doc_id"),
-        length(col("text")).cast("long").as("len"))
-      val (_, tFrag) = time {
-        (0 until 16).foreach { b =>
-          ArrayTable.ingest(spark, base.filter(pmod(col("doc_id"), lit(16)) === b),
-            uri, Seq("doc_id"), overwrite = false)
-        }
-      }
-      results += "catalog_frag_writes_16" -> tFrag
-      (0 until 6).foreach { k =>
-        ArrayTable.delete(spark, uri,
-          s"len >= ${240 + k * 40} and len < ${260 + k * 40}")
-      }
-      val (nTomb, tRead) = time(ArrayTable.read(spark, uri).count())
-      results += "catalog_read_6_tombstones" -> tRead
-      println(s"[rehearsal] catalog read with tombstones: $nTomb rows over 16 fragments")
-      val tsPre = ArrayTable.fragments(spark, uri).map(_.ts).max
-      while (System.currentTimeMillis() <= tsPre) Thread.sleep(1)
-      ArrayTable.truncate(spark, uri)
-      ArrayTable.ingest(spark, base.filter(pmod(col("doc_id"), lit(16)) === 0),
-        uri, Seq("doc_id"))
-      val (nCur, tTrunc) = time(ArrayTable.read(spark, uri).count())
-      results += "catalog_read_post_truncate" -> tTrunc
-      val (nTT, tTT) = time(
-        ArrayTable.read(spark, uri, at = Some((0L, tsPre))).count())
-      results += "catalog_timetravel_pre_truncate" -> tTT
-      println(s"[rehearsal] post-truncate=$nCur, time-travel(pre)=$nTT")
-    }
-
-    // ---- round-11 ops: semantic dedup, classifier, sketch profile,
-    //      budgeted sampling ------------------------------------------
-    // embeddings synthesis mirrors the docs trick: copy c>0 gets a
-    // per-copy index rotation + a per-copy HASH-DERIVED sign mask, so
-    // cross-copy cosine ~0 (no planted m-way cliques); 1% planted
-    // exact duplicates per copy exercise pair emission at every scale.
-    // The mask must differ for copies sharing a rotation (c = c' mod
-    // dim): a parity-only sign rule made copies 64..99 EXACT
-    // duplicates of 0..35 at mult=100 (~72k spurious cross-copy
-    // pairs — caught by this rehearsal's pair count).
-    lazy val embX: DataFrame = {
-      val e0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val dim = 64
-      val copies = (0 until mult).map { c =>
-        val shifted = e0.withColumn("vec_id", col("vec_id") + lit(c.toLong << 24))
-        if (c == 0) shifted
-        else {
-          val mask = scala.util.hashing.byteswap64(c.toLong)
-          val signs = typedLit((0 until dim).map(j =>
-            if (((mask >> (j % 64)) & 1L) == 1L) -1.0f else 1.0f))
-          shifted.withColumn("embedding",
-            transform(sequence(lit(0), lit(dim - 1)), j =>
-              element_at(col("embedding"), pmod(j + lit(c), lit(dim)) + 1) *
-                element_at(signs, j + 1)))
-        }
-      }.reduce(_ unionByName _)
-      val planted = copies.filter(pmod(col("vec_id"), lit(100)) === 0)
-        .withColumn("vec_id", col("vec_id") + (1L << 50))
-      copies.unionByName(planted)
-        .write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
-      spark.read.parquet(s"$outDir/embeddings.parquet")
-    }
-
-    if (runOp("semantic_dedup")) {
-      val n = embX.count()
-      // constant TARGET CELL SIZE (~500), the published SemDeDup shape:
-      // within-cell candidate pairs then grow LINEARLY in corpus size
-      // (n * cellSize / 2), not quadratically — cells ~ n/500
-      val cells = math.max(16, (n / 500L).toInt)
-      val (pairs, tSem) = time(
-        Dedup.semanticNearDups(embX, "vec_id", "embedding",
-          nClusters = cells, minCosine = 0.999).count())
-      results += "semantic_dedup" -> tSem
-      println(s"[rehearsal] semantic_dedup: $pairs pairs over $n vecs, $cells cells")
-    }
-
-    if (runOp("semantic_hier")) {
-      // production-k SemDeDup: k=4096 cells end to end under two-level
-      // (coarse-probed) assignment vs the flat argmin at the same k —
-      // the path semantic_hier_gate pins for correctness, measured
-      // here for cost and pair-set agreement at scale
-      val n = embX.count()
-      val k = 4096
-      val (pairsH, tH) = time(Dedup.semanticNearDups(embX, "vec_id",
-        "embedding", nClusters = k, minCosine = 0.999,
-        coarseProbe = Some((64, 6))).count())
-      results += "semantic_hier_k4096" -> tH
-      val (pairsF, tF) = time(Dedup.semanticNearDups(embX, "vec_id",
-        "embedding", nClusters = k, minCosine = 0.999).count())
-      results += "semantic_flat_k4096" -> tF
-      println(s"[rehearsal] semantic k=$k over $n vecs: " +
-        s"hier $pairsH pairs / ${tH}s, flat $pairsF pairs / ${tF}s")
-    }
-
-    if (runOp("classify")) {
-      val cents = graft.ops.Similarity.trainCentroids(embX, "vec_id", "embedding", 8)
-      val labeled = embX.withColumn("cls",
-        graft.ops.Similarity.assignNarrow(col("embedding"), cents).cast("int"))
-      // training is sample-bounded: a FIXED 20k sample whatever the
-      // corpus size, so the curve should be FLAT (only the one
-      // hash-ordered sampling pass sees the corpus)
-      val (w, tTrain) = time(graft.ops.Classify.trainSoftmax(
-        labeled, "vec_id", "embedding", "cls", numClasses = 8,
-        sampleSize = 20000, epochs = 300, lr = 2.0))
-      results += "classify_train" -> tTrain
-      // scoring is the corpus-scale narrow pass — should be ~linear
-      val (_, tScore) = time(labeled.select(
-        graft.ops.Classify.predictSoftmax(col("embedding"), w).as("p"))
-        .agg(sum("p")).head())
-      results += "classify_score" -> tScore
-    }
-
-    if (runOp("sketch_profile")) {
-      import graft.storage.ArrayTable
-      val uri = s"$outDir/sketch_profile_arr"
-      graft.storage.VFS(spark).delete(uri)
-      val base = docs.select(col("doc_id"), length(col("text")).cast("long").as("len"))
-      (0 until 8).foreach { b =>
-        ArrayTable.ingest(spark, base.filter(pmod(col("doc_id"), lit(8)) === b),
-          uri, Seq("doc_id"), overwrite = false)
-      }
-      val (nSk, tSketch) = time(
-        graft.ops.Profile.writeFragmentSketches(spark, uri, Seq("len")))
-      results += "sketch_profile_write" -> tSketch
-      val (_, tMerge) = time(
-        graft.ops.Profile.mergedSketchProfile(spark, uri).count())
-      results += "sketch_profile_merge" -> tMerge
-      println(s"[rehearsal] sketch_profile: $nSk fragments sketched")
-    }
-
-    if (runOp("stratified_sample")) {
-      val (_, tStrat) = time(
-        Curation.stratifiedSample(docs, "lang", "doc_id", n = 1000).count())
-      results += "stratified_sample" -> tStrat
-    }
-
-    if (runOp("token_budget")) {
-      val withToks = docs.withColumn("n_tokens", TextAnalysis.tokenCount(col("text")))
-        .select("doc_id", "source", "n_tokens")
-      // budget cuts every source at any mult (sources grow with the
-      // corpus) — the windowed path is what's being measured
-      val (kept, tBudget) = time(Curation.tokenBudgetSample(
-        withToks, "source", "doc_id", "n_tokens", budget = 100000L).count())
-      results += "token_budget" -> tBudget
-      println(s"[rehearsal] token_budget kept $kept rows")
-    }
-
-    // ---- round-11b ops: BM25 retrieval, cross-corpus decontamination,
-    //      hierarchical assignment at large k -------------------------
-    if (runOp("bm25")) {
-      // steady-state cost: score a 200-query batch against the corpus
-      val queries = docs0.limit(200).select(col("doc_id").as("query_id"),
-        concat_ws(" ", slice(graft.ops.Search.termsOf(col("text")), 5, 5)).as("qtext"))
-      val (hits, tBm25) = time(
-        graft.ops.Search.bm25TopK(docs, "doc_id", "text",
-          queries, "query_id", "qtext", k = 10).count())
-      results += "bm25_topk_200" -> tBm25
-      println(s"[rehearsal] bm25_topk_200: $hits result rows")
-      // persisted-index split: one-time build vs steady-state probe
-      val bmUri = s"$outDir/bm25_index"
-      val (_, tBuild) = time(
-        graft.ops.Search.buildIndex(docs, "doc_id", "text", bmUri))
-      results += "bm25_index_build" -> tBuild
-      val (ihits, tProbe) = time(
-        graft.ops.Search.bm25IndexTopK(spark, bmUri,
-          queries, "query_id", "qtext", k = 10).count())
-      results += "bm25_index_topk_200" -> tProbe
-      println(s"[rehearsal] bm25_index_topk_200: $ihits result rows")
-      // CONTEXT for the numbers above: the synthetic corpus has a
-      // ~300-term vocabulary, so every query term matches ~all docs —
-      // the 200-query batch is 200 successive worst-case full-corpus
-      // rankings (~10M scored pairs at 10x). A selective batch (terms
-      // from ONE copy's scrambled suffix, df ~ corpus/mult) shows the
-      // per-term-postings cost the index actually pays on Zipfian text:
-      if (mult > 1) {
-        val rare = docs.filter(shiftright(col("doc_id"), 24) === 5)
-          .limit(200).select((col("doc_id") + (2L << 40)).as("query_id"),
-            concat_ws(" ", slice(graft.ops.Search.termsOf(col("text")), -5, 5))
-              .as("qtext"))
-        val (rhits, tRare) = time(
-          graft.ops.Search.bm25IndexTopK(spark, bmUri,
-            rare, "query_id", "qtext", k = 10).count())
-        results += "bm25_index_rare_200" -> tRare
-        println(s"[rehearsal] bm25_index_rare_200: $rhits result rows")
-      }
-    }
-
-    // ---- round-12 retrieval additions (r12 verdict item 3: every new
-    //      op gets a curve) ------------------------------------------
-    if (runOp("retrieval")) {
-      val queries = docs0.limit(200).select(col("doc_id").as("query_id"),
-        concat_ws(" ", slice(graft.ops.Search.termsOf(col("text")), 5, 5)).as("qtext"))
-
-      // metadata-filtered BM25: the filter narrows the CANDIDATE set
-      // (left-semi after scoring), so cost tracks plain bm25_topk
-      val (fhits, tFilt) = time(
-        graft.ops.Search.bm25TopK(docs, "doc_id", "text",
-          queries, "query_id", "qtext", k = 10,
-          docFilter = Some(col("lang") === "en")).count())
-      results += "bm25_topk_filtered_200" -> tFilt
-      println(s"[rehearsal] bm25_topk_filtered_200: $fhits rows")
-
-      // per-doc TF-IDF keywords: postings + vocab-keyed df join over
-      // the WHOLE corpus (the one-shot corpus-triage pass)
-      val (_, tTfidf) = time(
-        graft.ops.Search.tfidfKeywords(docs, "doc_id", "text", k = 5)
-          .agg(count(lit(1))).head())
-      results += "tfidf_keywords" -> tTfidf
-
-      // PMI collocations: bigram LM train + bounded top-n
-      val (_, tPmi) = time(
-        graft.ops.NgramLm.pmiCollocations(docs, "text", n = 50).count())
-      results += "pmi_collocations" -> tPmi
-
-      // filtered ANN over a payload-carrying IVF index: predicate
-      // applies inside the statically-pruned cell scan
-      val n = embX.count()
-      val knnUri = s"$outDir/knn_filtered_index"
-      // a fixed copy-0 batch so the query load is IDENTICAL at every
-      // mult (the 997-modulus version shrank the batch at small mult)
-      val qv = embX.filter(shiftright(col("vec_id"), 24) === 0).limit(200)
-      val (_, tKnnBuild) = time(
-        Similarity.buildIvfIndex(
-          embX.withColumn("flag", pmod(col("vec_id"), lit(2))),
-          "vec_id", "embedding", knnUri, nCentroids = 64,
-          payload = Seq("flag")))
-      results += "knn_filtered_build" -> tKnnBuild
-      val (khits, tKnn) = time(
-        Similarity.ivfIndexTopK(spark, knnUri, qv, "vec_id", "embedding",
-          k = 10, nprobe = 8, filter = Some(col("flag") === 0)).count())
-      results += "knn_filtered_200" -> tKnn
-      println(s"[rehearsal] knn_filtered_200: $khits rows over $n vecs")
-
-      // hybrid RRF: both bounded rankings (BM25 + IVF cosine over the
-      // id-aligned embeddings) fused on the candidate set only
-      val lex = graft.ops.Search.bm25TopK(docs, "doc_id", "text",
-        queries, "query_id", "qtext", k = 20)
-        .select("query_id", "doc_id", "rank").localCheckpoint(true)
-      val sem0 = Similarity.ivfIndexTopK(spark, knnUri,
-        queries.join(embX, col("query_id") === col("vec_id"))
-          .select(col("query_id").as("vec_id"), col("embedding")),
-        "vec_id", "embedding", k = 20, nprobe = 8)
-        .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
-        .localCheckpoint(true)
-      val (hhits, tRrf) = time(
-        graft.ops.Search.rrfFuse(Seq(lex, sem0), k = 10).count())
-      results += "hybrid_rrf_fuse_200" -> tRrf
-      val (_, tRrfE2e) = time {
-        val l2 = graft.ops.Search.bm25TopK(docs, "doc_id", "text",
-          queries, "query_id", "qtext", k = 20)
-          .select("query_id", "doc_id", "rank")
-        val s2 = Similarity.ivfIndexTopK(spark, knnUri,
-          queries.join(embX, col("query_id") === col("vec_id"))
-            .select(col("query_id").as("vec_id"), col("embedding")),
-          "vec_id", "embedding", k = 20, nprobe = 8)
-          .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank"))
-        graft.ops.Search.rrfFuse(Seq(l2, s2), k = 10).count()
-      }
-      results += "hybrid_rrf_e2e_200" -> tRrfE2e
-      println(s"[rehearsal] hybrid_rrf: fuse-only $hhits rows")
-    }
-
-    if (runOp("bm25_zipf")) {
-      // Realistic term-frequency shape: the ~300-term synthetic corpus
-      // above makes EVERY query a worst case; this op measures what a
-      // production corpus costs. Vocabulary 50k, ~120 tokens/doc, term
-      // rank log-uniform in [1, V) == Zipf s=1 (P(rank) ~ 1/rank),
-      // all deterministic from xxhash64(doc_id, position).
-      val V = 50000.0
-      val nZipf = docs.count()
-      spark.range(nZipf).select(col("id").as("doc_id"),
-        concat_ws(" ", transform(sequence(lit(0), lit(119)), p =>
-          concat(lit("t"), floor(exp(
-            (pmod(xxhash64(col("id"), p), lit(1000000L)).cast("double") / 1e6)
-              * lit(math.log(V)))).cast("long").cast("string")))).as("text"))
-        .write.mode("overwrite").parquet(s"$outDir/zipf_docs.parquet")
-      val zdocs = spark.read.parquet(s"$outDir/zipf_docs.parquet")
-      val zUri = s"$outDir/bm25_zipf_index"
-      val (_, tZBuild) = time(
-        graft.ops.Search.buildIndex(zdocs, "doc_id", "text", zUri))
-      results += "bm25_zipf_build" -> tZBuild
-      // tail batch: 200 queries x 5 mid/tail-rank terms (df ~ n*120/V/rank)
-      val tail = spark.range(200).select(col("id").as("query_id"),
-        concat_ws(" ", transform(sequence(lit(0), lit(4)), j =>
-          concat(lit("t"), (lit(1000) + pmod(col("id") * 37 + j * 1013L,
-            lit(40000L))).cast("string")))).as("qtext"))
-      val (thits, tTail) = time(graft.ops.Search.bm25IndexTopK(spark, zUri,
-        tail, "query_id", "qtext", k = 10).count())
-      results += "bm25_zipf_tail_200" -> tTail
-      println(s"[rehearsal] bm25_zipf_tail_200: $thits rows")
-      // hot batch: 20 queries over ranks 1..8 (each term in a large
-      // corpus fraction) — the honest worst case, and what elision buys
-      val hot = spark.range(20).select(col("id").as("query_id"),
-        concat_ws(" ", transform(sequence(lit(0), lit(4)), j =>
-          concat(lit("t"), (lit(1) + pmod(col("id") + j, lit(8L)))
-            .cast("string")))).as("qtext"))
-      val (hhits, tHot) = time(graft.ops.Search.bm25IndexTopK(spark, zUri,
-        hot, "query_id", "qtext", k = 10).count())
-      results += "bm25_zipf_hot_20" -> tHot
-      val (ehits, tHotE) = time(graft.ops.Search.bm25IndexTopK(spark, zUri,
-        hot, "query_id", "qtext", k = 10, maxDfFraction = 0.2).count())
-      results += "bm25_zipf_hot_20_elided" -> tHotE
-      println(s"[rehearsal] bm25_zipf hot: $hhits rows in ${tHot}s, " +
-        s"elided(0.2): $ehits rows in ${tHotE}s; counters: " +
-        graft.core.Stats.countersSnapshot.filter(_._1.startsWith("bm25")))
-    }
-
-    if (runOp("decontam")) {
-      // eval-set shape: 500 ref docs vs the full corpus
-      val ref = docs0.limit(500)
-        .select((col("doc_id") + (1L << 40)).as("ref_id"),
-          concat(lit(" "), upper(col("text"))).as("text"))
-      val (flagged, tDecon) = time(
-        Dedup.crossNearDups(docs, "doc_id", "text",
-          ref, "ref_id", "text", threshold = 0.6).count())
-      results += "decontam_500" -> tDecon
-      println(s"[rehearsal] decontam_500: $flagged cross pairs")
-    }
-
-    if (runOp("hier_assign")) {
-      // large-k assignment throughput: flat O(k) vs two-level
-      // O(m + k*nprobe/m) dots per row at k=2048 over the full corpus
-      val k = 2048
-      val cents = graft.ops.Similarity.trainCentroids(embX, "vec_id", "embedding",
-        k, lloydSteps = 1, trainPerCentroid = 16)
-      val (_, tFlat) = time(embX.select(
-        graft.ops.Similarity.assignNarrow(col("embedding"), cents).as("c"))
-        .agg(sum("c")).head())
-      results += "assign_flat_k2048" -> tFlat
-      val (coarse, members) = graft.ops.Similarity.trainCoarse(cents, 45, spark)
-      val (_, tHier) = time(embX.select(
-        graft.ops.Similarity.assignHierarchical(col("embedding"), cents,
-          coarse, members, nprobe = 6).as("c"))
-        .agg(sum("c")).head())
-      results += "assign_hier_k2048" -> tHier
-      // agreement-vs-probe-depth curve (cost O(m + k*nprobe/m) per row)
-      for (np <- Seq(3, 6, 12, 24)) {
-        val agree = embX.select(
-          (graft.ops.Similarity.assignNarrow(col("embedding"), cents) ===
-            graft.ops.Similarity.assignHierarchical(col("embedding"), cents,
-              coarse, members, nprobe = np)).cast("double").as("eq"))
-          .agg(avg("eq")).head().getDouble(0)
-        println(f"[rehearsal] hier_assign k=$k nprobe=$np agreement=$agree%.4f")
-      }
-    }
-
-    // ---- round-11c ops: PQ index, shard export, narrow text ops ------
-    if (runOp("pq")) {
-      val uri = s"$outDir/pq_index"
-      val (_, tBuild) = time(graft.ops.Similarity.buildPqIndex(
-        embX, "vec_id", "embedding", uri, m = 8, ksub = 256))
-      results += "pq_build" -> tBuild // sample-bounded train + 1 encode pass
-      val queries = embX.filter(col("vec_id") < 64)
-      val (hits, tProbe) = time(graft.ops.Similarity.pqIndexTopK(
-        spark, uri, queries, "vec_id", "embedding", k = 10).count())
-      results += "pq_probe_64" -> tProbe // ADC over the 8-byte codes table
-      val cb = graft.ops.Similarity.pqCodebook(spark, uri)
-      val (_, tRerank) = time(graft.ops.Similarity.pqTopK(
-        embX, "vec_id", "embedding", queries, "vec_id", "embedding",
-        k = 10, rerank = 100, codebookOpt = Some(cb)).count())
-      results += "pq_rerank_64" -> tRerank // + exact rescore of top-100
-      println(s"[rehearsal] pq: $hits probe hits over ${embX.count()} vecs")
-    }
-
-    if (runOp("shards")) {
-      val withToks = docs
-        .withColumn("n_tokens", TextAnalysis.tokenCount(col("text")))
-        .select("doc_id", "text", "n_tokens")
-      // shard count grows with the corpus (fixed ~rows per shard file),
-      // exactly how a production export picks it — parallelism scales
-      val nSh = math.max(16, (docs.count() / 25000L).toInt)
-      val (mani, tShard) = time(graft.ops.Shards.writeShards(
-        withToks, s"$outDir/shards", "doc_id", nSh,
-        tokenCol = Some("n_tokens")))
-      results += "shard_export" -> tShard
-      println(s"[rehearsal] shards: ${mani.size} shards, rows=${mani.map(_._2).sum}")
-    }
-
-    if (runOp("text_narrow")) {
-      // per-row regex/fold kernels — these must scale LINEARLY
-      val (_, tStrip) = time(docs.select(Curation.stripMarkup(
-        concat(lit("<p>"), col("text"), lit("</p><script>var x=1;</script>"))).as("c"))
-        .agg(sum(length(col("c")))).head())
-      results += "markup_strip" -> tStrip
-      val (_, tEnt) = time(docs
-        .select(TextAnalysis.wordEntropy(col("text")).as("h"))
-        .agg(sum("h")).head())
-      results += "word_entropy" -> tEnt
-    }
-
-    // ---- round-16: quality-path piece profile -----------------------
-    // The r15 kernels (LangIdK, translate char counts) fixed the two
-    // measured interpreted-eval bombs; this arm profiles the REMAINING
-    // quality-stage pieces individually — the per-token rlike in
-    // gopherRules, the stopword ===-chain HOF in qualityFeatures, the
-    // per-line trim HOFs — so "kernel it" decisions follow measurement
-    // (threshold ~5 s / 500k docs), not expression-class suspicion.
-    if (runOp("quality_profile")) {
-      import graft.ops.TextAnalysis.tokens
-      def piece(name: String, c: Column): Unit = {
-        val (_, t) = time(docs.select(c.as("v")).agg(sum("v")).head())
-        println(f"[rehearsal] quality piece $name: $t%.2f s")
-        results += s"qp_$name" -> t
-      }
-      val toks = tokens(col("text"))
-      // the two named HOF remnants
-      piece("stopword_chain", size(filter(tokens(lower(col("text"))),
-        t => TextAnalysis.stopwords("en").map(w => t === lit(w))
-          .reduceLeft(_ || _))))
-      piece("alpha_tokens_rlike", size(filter(toks, t => t.rlike("[A-Za-z]"))))
-      // the per-line HOFs
-      val lines = split(col("text"), "\n")
-      piece("bullet_lines", size(filter(lines, l =>
-        trim(l).startsWith("- ") || trim(l).startsWith("* ") ||
-          trim(l).startsWith("•"))))
-      piece("ellipsis_lines", size(filter(lines, l => trim(l).endsWith("..."))))
-      // remaining scalar pieces for context
-      piece("ellipses_regex", (length(col("text")) -
-        length(regexp_replace(col("text"), "\\.\\.\\.", ""))) / 3)
-      piece("mean_word_len_join", length(array_join(toks, "")).cast("double")
-        / greatest(size(toks).cast("double"), lit(1.0)))
-      piece("gopher_stops_intersect", size(array_intersect(
-        array_distinct(tokens(lower(col("text")))),
-        array(Seq("the", "be", "to", "of", "and", "that", "have", "with")
-          .map(lit): _*))))
-      // the composed structs end-to-end — agg over hash(struct) so
-      // Catalyst cannot prune any field out of the measurement
-      val (_, tQf) = time(docs.select(
-        TextAnalysis.qualityFeatures(col("text")).as("q"))
-        .agg(sum(hash(col("q")))).head())
-      println(f"[rehearsal] quality piece qualityFeatures_full: $tQf%.2f s")
-      results += "qp_qualityFeatures_full" -> tQf
-      val (_, tGr) = time(docs.select(
-        TextAnalysis.gopherRules(col("text")).as("g"))
-        .agg(sum(hash(col("g")))).head())
-      println(f"[rehearsal] quality piece gopherRules_full: $tGr%.2f s")
-      results += "qp_gopherRules_full" -> tGr
-    }
-
-    // ---- round-16: dense-array completion at a 10^8-cell box --------
-    // The dense fill path (grid = spark.range cross products, left-join
-    // data on dims, coalesce fill) had oracle-size evidence only. The
-    // claims to measure at real grid scale: (a) the grid is generated
-    // DISTRIBUTED (codegen'd Range — never driver-side), and output-
-    // sized work is the only O(grid) cost; (b) the data side stays
-    // data-sized — at this density AQE broadcasts it, so the grid never
-    // shuffles; (c) a sub-box read is sub-box-priced: the dim-range
-    // predicates reach the fragment parquet scan (the analogue of the
-    // reference's tile pruning, tiledb/core.cc:1225-1258), so input IO
-    // tracks the box, not the domain. Conservation: fill arithmetic is
-    // asserted exactly (counts and sums are closed-form).
-    if (runOp("dense_scale")) {
-      import graft.core.{ArraySchema, Attr, Dim}
-      import graft.storage.{ArrayTable, Dense}
-      val uri = s"$outDir/dense_scale_arr"
-      graft.storage.VFS(spark).delete(uri)
-      val side = 10000L          // domain side: 10^4 x 10^4 = 10^8 cells
-      val written = 2000000L     // 2% density
-      val schema = ArraySchema(
-        dims = Seq(Dim("x", "int64", Some(("0", (side - 1).toString))),
-          Dim("y", "int64", Some(("0", (side - 1).toString)))),
-        attrs = Seq(Attr("v", "float64", fill = Some("-1"))),
-        sparse = false)
-      ArrayTable.create(spark, uri, schema)
-      // distinct coords by construction: y strides 50 per x-wrap
-      val (_, tWrite) = time(ArrayTable.write(spark,
-        spark.range(written).select(
-          (col("id") % side).as("x"),
-          (expr(s"id div $side") * 50L).as("y"),
-          col("id").cast("double").as("v")),
-        uri, Some(1000L)))
-      results += "dense_write_2m" -> tWrite
-      // full-box completion: 10^8 output rows, count+sum in one pass
-      val (r1, tFull) = time(Dense.read(spark, uri)
-        .agg(count(lit(1)).as("n"), sum(col("v")).as("s")).head())
-      val expSum = (written - 1) * written / 2 - (side * side - written).toDouble
-      require(r1.getLong(0) == side * side && r1.getDouble(1) == expSum,
-        s"dense full-box fill arithmetic broke: $r1 (want ${side * side}, $expSum)")
-      println(f"[rehearsal] dense_full_box: 1e8 cells in $tFull%.1f s")
-      results += "dense_full_box_1e8" -> tFull
-      // stepped read: ceil(1e4/7) x ceil(1e4/13) = 1429 x 770 cells
-      val (r2, tStep) = time(Dense.slice(spark, uri, Map(
-          "x" -> graft.query.MultiIndex.DenseSlice(None, None, 7L),
-          "y" -> graft.query.MultiIndex.DenseSlice(None, None, 13L)))
-        .agg(count(lit(1))).head())
-      require(r2.getLong(0) == 1429L * 770L, s"stepped count ${r2.getLong(0)}")
-      results += "dense_stepped" -> tStep
-      // qc fill over the full box: non-matching cells filled, shape kept
-      val (r3, tQc) = time(Dense.read(spark, uri, cond = Some("v >= 1000000"))
-        .agg(count(lit(1)).as("n"), sum(col("v")).as("s")).head())
-      val expQc = (written - 1) * written / 2 - (1000000L - 1) * 1000000L / 2 -
-        (side * side - (written - 1000000L)).toDouble
-      require(r3.getLong(0) == side * side && r3.getDouble(1) == expQc,
-        s"dense qc fill arithmetic broke: $r3 (want ${side * side}, $expQc)")
-      results += "dense_qc_fill" -> tQc
-      // sub-box (10^6 cells, 1% of the domain): must price as the box
-      val (r4, tBox) = time(Dense.read(spark, uri,
-          Map("x" -> (2000L, 2999L), "y" -> (2000L, 2999L)))
-        .agg(count(lit(1))).head())
-      require(r4.getLong(0) == 1000000L, s"sub-box count ${r4.getLong(0)}")
-      println(f"[rehearsal] dense sub-box 1e6/1e8: $tBox%.2f s vs " +
-        f"full $tFull%.1f s")
-      results += "dense_subbox_1e6" -> tBox
-      graft.storage.VFS(spark).delete(uri)
-    }
-
-    // ---- round-15: phrase scan at production P (blocklist scale) -----
-    // The P<=2048 curve above proves flat-in-P SCAN cost; real
-    // blocklist/canary sets run 10^5-10^6 phrases, where the automaton
-    // BUILD (~1.5M trie nodes at P=100k) and its per-partition copies
-    // become the cost. Phrases are hash-derived pseudo-words (near-zero
-    // prefix sharing — the honest worst case; a vocab cross-product
-    // would share prefixes and understate node count), planted into
-    // 0.1% of docs so the output stays match-bound but nonzero.
-    if (runOp("phrase_scan_100k")) {
-      val P = 100000
-      def pw(i: Long, j: Int) = java.lang.Long.toString(
-        (i * 2654435761L + j * 40503L) & 0xffffffL, 26)
-      val phrases = (0L until P.toLong).map(i =>
-        s"${pw(i, 0)} ${pw(i, 1)} ${pw(i, 2)}").toArray
-      val t0 = System.nanoTime()
-      val ac = new TextAnalysis.AhoCorasick(phrases)
-      val tBuild = (System.nanoTime() - t0) / 1e9
-      println(f"[rehearsal] phrase automaton P=$P: ${ac.nodes} nodes, " +
-        f"built in $tBuild%.2f s")
-      results += "phrase_automaton_build_100k" -> tBuild
-      val docsP = docs.withColumn("text",
-        when(pmod(col("doc_id"), lit(1000)) === 0,
-          concat(col("text"), lit(" " + phrases(42)))).otherwise(col("text")))
-      val (nHit, tScan) = time(TextAnalysis
-        .phraseMatches(docsP, "doc_id", "text", phrases.toSeq).count())
-      println(s"[rehearsal] phrase_scan_p100k: $nHit matches")
-      results += "phrase_scan_p100k" -> tScan
-      // steady state: a SECOND scan with the same broadcast phrase set
-      // must pay scan cost only (the per-executor automaton cache)
-      val (nHit2, tScan2) = time(TextAnalysis
-        .phraseMatches(docsP, "doc_id", "text", phrases.toSeq).count())
-      require(nHit == nHit2, s"rescan disagrees: $nHit vs $nHit2")
-      results += "phrase_scan_p100k_rescan" -> tScan2
-    }
-
-    // The counterfactual arm — the pre-r15 per-PARTITION automaton
-    // build at P=100k (32 concurrent ~1.5M-node builds on one heap).
-    // Separate op so its expected heap explosion can't take down the
-    // main sweep; run it once for the found-and-fixed record.
-    if (runOp("phrase_scan_100k_nocache")) {
-      import spark.implicits._
-      val P = 100000
-      def pw(i: Long, j: Int) = java.lang.Long.toString(
-        (i * 2654435761L + j * 40503L) & 0xffffffL, 26)
-      val phrases = (0L until P.toLong).map(i =>
-        s"${pw(i, 0)} ${pw(i, 1)} ${pw(i, 2)}").toArray
-      val bc = spark.sparkContext.broadcast(phrases)
-      val (n, t) = time(docs.select(col("doc_id"), col("text"))
-        .as[(Long, String)]
-        .mapPartitions { it =>
-          val ac = new TextAnalysis.AhoCorasick(bc.value)
-          it.flatMap { case (id, txt) =>
-            if (txt == null) Iterator.empty
-            else ac.containedIn(txt).iterator.map(pi => (id, pi))
-          }
-        }.count())
-      println(s"[rehearsal] phrase_scan_p100k_nocache: $n matches")
-      results += "phrase_scan_p100k_nocache" -> t
-    }
-
-    // ---- round-16: search-index pending-batch probe tax --------------
-    // searchIndexStream leaves one postings_inc/<tag>/ dir per batch;
-    // probes union the base generation with every pending dir
-    // (Search.liveState). Unlike the dedup indexes — where per-BATCH
-    // cost grows with file count, so in-loop compaction defaults ON —
-    // the search append stays O(batch); the tax is PROBE-side only.
-    // This arm measures that probe curve in pending count {0, 25, 50,
-    // 100} plus post-compact, the measured basis for choosing
-    // searchIndexStream's compactEvery (default off).
-    if (runOp("search_inc_tax")) {
-      val idx = s"$outDir/search_inc_idx"
-      val (_, tB) = time(
-        graft.ops.Search.buildIndex(docs, "doc_id", "text", idx))
-      results += "sit_build" -> tB
-      // selective queries (rare scrambled-suffix terms): the shape the
-      // index's pruning exists for, hence the most tax-sensitive
-      val queries = docs
-        .filter(shiftright(col("doc_id"), 24) === lit((mult - 1).min(5)))
-        .limit(100).select((col("doc_id") + (7L << 40)).as("query_id"),
-          concat_ws(" ",
-            slice(graft.ops.Search.termsOf(col("text")), -5, 5)).as("qtext"))
-        .localCheckpoint(true)
-      def probe(tag: String): Unit = {
-        val ts = (1 to 3).map(_ => time(graft.ops.Search.bm25IndexTopK(
-          spark, idx, queries, "query_id", "qtext", k = 10).count())._2).sorted
-        println(f"[rehearsal] search_inc_tax probe $tag: median ${ts(1)}%.2f s")
-        results += s"sit_$tag" -> ts(1)
-      }
-      probe("pending0")
-      var appended = 0
-      def appendUpTo(n: Int): Unit = while (appended < n) {
-        // micro-batch-sized (~2k docs), each in its own id space so
-        // postings genuinely grow (no dedup absorbs them)
-        val b = docs
-          .filter(pmod(col("doc_id"), lit(251)) === lit(appended % 251))
-          .limit(2000)
-          .select((col("doc_id") + ((appended + 9L) << 41)).as("doc_id"),
-            col("text"))
-        graft.ops.Search.appendBatchToIndex(b, "doc_id", "text", idx,
-          f"batch-$appended%03d")
-        appended += 1
-      }
-      val (_, tApp) = time(appendUpTo(25))
-      results += "sit_append_25" -> tApp
-      probe("pending25")
-      appendUpTo(50); probe("pending50")
-      appendUpTo(100); probe("pending100")
-      val (_, tC) = time(graft.ops.Search.compactIndex(spark, idx))
-      println(f"[rehearsal] search_inc_tax compact(100 pending): $tC%.2f s")
-      results += "sit_compact" -> tC
-      probe("compacted")
-      // ---- round-17: the BOUNDED maintenance arm ---------------------
-      // appends continue for another 100 batches, but a MINOR fold
-      // every 25 (Search.minorCompactIndex — O(appends), the in-loop
-      // default of searchIndexStream) collapses the pending dirs into
-      // one term-sorted fold dir. The claim under test: the probe tax
-      // stays near the post-compact floor WITHOUT ever rewriting the
-      // base generation (asserted on the generation path), and the
-      // fold wall is batch-scale, not corpus-scale.
-      val fsS = graft.storage.VFS(spark)
-      val baseGen = graft.storage.VersionedDir.resolve(fsS, idx, "postings")
-      var tMinor = 0.0
-      val (_, tApp2) = time((1 to 4).foreach { _ =>
-        appendUpTo(appended + 25)
-        val (_, tm) = time(graft.ops.Search.minorCompactIndex(spark, idx))
-        tMinor += tm
-      })
-      require(graft.storage.VersionedDir.resolve(fsS, idx, "postings") == baseGen,
-        "minor folds must never rewrite the base generation")
-      println(f"[rehearsal] search_inc_tax minor folds (4x over 100 appends): $tMinor%.2f s total")
-      results += "sit_append_minor_100" -> (tApp2 - tMinor)
-      results += "sit_minor_folds" -> tMinor
-      probe("minorfold")
-      // the advisory that decides when the accumulated inc tier is
-      // worth a major: print it as data, not a feeling
-      println(s"[rehearsal] search_inc_tax advice after minors: ${
-        graft.ops.Search.maintenanceAdvice(spark, idx)}")
-    }
-
-    // ---- round-15: streaming steady state over ~100 micro-batches ----
-    // The streaming gates' state lives in the persisted indexes, so the
-    // claims under test are (a) per-batch wall tracks the BATCH, not
-    // the growing index — the curve across batch decades must stay
-    // flat while the index grows from empty to the full mult-x corpus —
-    // and (b) state growth is linear in survivors (index rows/bytes),
-    // never in batches x corpus.
-    // `waves` > 1 adds the production MAINTENANCE pattern: files land in
-    // waves; between waves the query stops, the index compacts (the
-    // reader-safe generation flip; appends must be quiesced — compact
-    // is not writer-concurrent), and the query RESUMES from its
-    // checkpoint — which also exercises restart recovery `waves` times.
-    // ONE harness for both persisted-index streaming gates (text LSH +
-    // semantic IVF): the protocol — staging, wave loop, listener,
-    // decade reporting — must not fork, or the two curves silently
-    // measure different things. Parameterized by the gate's bootstrap,
-    // stream constructor, and compaction verb.
-    def streamGateRehearsal(tag: String, waves: Int, src: DataFrame,
-        keyCol: String, unit: String,
-        bootstrap: String => Unit,
-        mkStream: (DataFrame, String, String, String) =>
-          org.apache.spark.sql.streaming.StreamingQuery,
-        compactIndex: String => Unit,
-        reportIndex: String => String,
-        advice: String => graft.storage.MaintenanceAdvice): Unit = {
-      import graft.storage.ArrayTable
-      val nBatches = 100
-      val idxUri = s"$outDir/${tag}_index"
-      val sinkUri = s"$outDir/${tag}_sink"
-      val srcDir = s"$outDir/${tag}_src"
-      val stageDir = s"$outDir/${tag}_stage"
-      val ckpt = s"$outDir/${tag}_ckpt"
-      val fs = graft.storage.VFS(spark)
-      Seq(idxUri, sinkUri, srcDir, stageDir, ckpt).foreach(u => fs.delete(u))
-      bootstrap(idxUri)
-      ArrayTable.create(spark, sinkUri,
-        graft.core.ArraySchema.infer(src.schema, Seq(keyCol))
-          .copy(allowsDuplicates = true))
-      // one file per micro-batch, hash-spread so every batch mixes
-      // copies (a copy-contiguous order would make late batches pure
-      // dups of early ones — no steady-state survivor flow)
-      src.repartition(nBatches, col(keyCol)).write.parquet(stageDir)
-      // drop EMPTY staged files up front: a hash partition that came
-      // out empty still triggers a batch, but with numInputRows == 0
-      // the listener (rightly) never records it — the drain-until-
-      // `moved`-batches wait below would stall 30 s and then fail the
-      // whole rehearsal spuriously
-      // classified in ONE job over all staged files (a read-per-file
-      // loop is ~nBatches sequential driver round-trips); compare by
-      // basename — input_file_name() is URI-styled, fs.ls is not
-      def basename(p: String) = p.substring(p.lastIndexOf('/') + 1)
-      val nonEmpty = spark.read.parquet(stageDir)
-        .select(input_file_name().as("__f")).distinct()
-        .as[String](org.apache.spark.sql.Encoders.STRING)
-        .collect().map(basename).toSet
-      val staged = fs.ls(stageDir).filter(_.endsWith(".parquet")).sorted
-        .filter(f => nonEmpty(basename(f)))
-      fs.mkdirs(srcDir)
-      // keyed by batchId: a restart-replayed batch overwrites its own
-      // row (last run wins) instead of double-counting in the curve
-      val lats =
-        new java.util.concurrent.ConcurrentHashMap[Long, (Double, Long)]()
-      val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-        import org.apache.spark.sql.streaming.StreamingQueryListener._
-        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-        override def onQueryProgress(e: QueryProgressEvent): Unit = {
-          val p = e.progress
-          if (p.numInputRows > 0)
-            lats.put(p.batchId,
-              (p.durationMs.get("triggerExecution").toDouble / 1e3,
-                p.numInputRows))
-        }
-      }
-      spark.streams.addListener(listener)
-      val t0 = System.nanoTime()
-      var tCompact = 0.0
-      var moved = 0
-      val perWave = (staged.size + waves - 1) / waves
-      // deterministic arrival order (r19): FileStreamSource discovers
-      // files in MTIME order, and sub-ms rename timing used to decide
-      // which near-dup of a cross-batch pair arrived (hence survived)
-      // first — a ±0.1% survivor drift across runs that a regression
-      // diff couldn't distinguish from a real change. Stamping each
-      // staged file with a FIXED, strictly increasing mtime makes the
-      // batch sequence — and therefore the survivor set — identical
-      // across runs: two back-to-back rehearsals must now agree
-      // byte-for-byte.
-      val mtimeBase = 1600000000000L // fixed epoch; age window irrelevant
-      var stamped = 0
-      try {
-        staged.grouped(perWave).zipWithIndex.foreach { case (wave, w) =>
-          wave.foreach { f =>
-            val dst = s"$srcDir/${basename(f)}"
-            fs.rename(f, dst)
-            fs.setTimes(dst, mtimeBase + stamped * 1000L)
-            stamped += 1
-          }
-          moved += wave.size
-          val q = mkStream(spark.readStream.schema(src.schema)
-              .option("maxFilesPerTrigger", "1").parquet(srcDir),
-            idxUri, sinkUri, ckpt)
-          try q.processAllAvailable() finally q.stop()
-          // listener events ride an async bus: drain until every moved
-          // file's batch has reported (bounded), or a wave's tail would
-          // be silently missing from the decade curve
-          val deadline = System.nanoTime() + 30L * 1000000000L
-          while (lats.size < moved && System.nanoTime() < deadline)
-            Thread.sleep(50)
-          require(lats.size >= moved,
-            s"$tag: listener drained only ${lats.size} of $moved batches")
-          if (waves > 1 && w < waves - 1) {
-            // the simulated LULL: the query above is stopped, appends
-            // quiesced. The MAJOR is data-driven, not scheduled —
-            // MaintenanceAdvice compares the tiers from listings only
-            // (rehearsal floor 1 MB: mult-x corpora are small next to
-            // the production 32 MB default)
-            val a = advice(idxUri)
-            println(s"[rehearsal] $tag wave $w lull: $a")
-            if (a.needsMajor(maxIncFraction = 0.25, minIncBytes = 1L << 20)) {
-              val c0 = System.nanoTime()
-              compactIndex(idxUri)
-              val tc = (System.nanoTime() - c0) / 1e9
-              tCompact += tc
-              println(f"[rehearsal] $tag wave $w MAJOR compact $tc%.1f s; " +
-                s"after: ${advice(idxUri)}")
-            } else println(s"[rehearsal] $tag wave $w: advisory vetoed the major")
-          }
-        }
-      } finally spark.streams.removeListener(listener)
-      val total = (System.nanoTime() - t0) / 1e9
-      import scala.jdk.CollectionConverters._
-      val byBatch = lats.asScala.toVector.sortBy(_._1)
-      def med(xs: Seq[Double]) = if (xs.isEmpty) 0.0
-        else xs.sorted.apply(xs.size / 2)
-      val durs = byBatch.map(_._2._1)
-      // per-decade medians: the whole flatness story in 10 numbers
-      val decades = byBatch.grouped(math.max(1, byBatch.size / 10)).toVector
-      decades.zipWithIndex.foreach { case (d, i) =>
-        println(f"[rehearsal] $tag decade $i: median ${med(d.map(_._2._1))}%.2f s " +
-          f"over ${d.size} batches (${d.map(_._2._2).sum} $unit)")
-      }
-      val early = med(durs.slice(5, 15))
-      val late = med(durs.slice(durs.size - 10, durs.size))
-      val survivors = ArrayTable.read(spark, sinkUri).count()
-      // order-independent survivor fingerprint: with the deterministic
-      // mtime stamping above, two back-to-back runs must print the
-      // SAME hash — a survivor-set regression can no longer hide in
-      // arrival-order noise. bit_xor, not sum: a sum of 100k xxhash64
-      // values overflows Long and ANSI mode (Spark 4 default) throws.
-      val survHash = Option(ArrayTable.read(spark, sinkUri)
-          .agg(expr(s"bit_xor(xxhash64($keyCol))")).head().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      println(f"[rehearsal] $tag: ${byBatch.size} batches, " +
-        f"early median $early%.2f s, late median $late%.2f s " +
-        f"(late/early ${late / math.max(early, 1e-9)}%.2f), " +
-        f"survivors=$survivors hash=$survHash%016x, ${reportIndex(idxUri)}, " +
-        f"index bytes=${fs.du(idxUri)}, compact $tCompact%.1f s, " +
-        f"total $total%.1f s")
-      results += s"${tag}_early_med" -> early
-      results += s"${tag}_late_med" -> late
-      results += s"${tag}_total" -> total
-    }
-    // Three maintenance arms per gate: compactEvery=0 + waves=1 is the
-    // no-maintenance counterfactual (drift curve); compactEvery=0 +
-    // waves=4 is the legacy EXTERNAL stop → compact → restart recipe;
-    // compactEvery=25 + waves=1 is the r16 IN-LOOP product default —
-    // the flat claim with NO external orchestration and no restarts.
-    if (runOp("streaming") || runOp("streaming_compact") ||
-        runOp("streaming_inloop") || runOp("streaming_inloop_major") ||
-        runOp("streaming_inloop_major4")) {
-      val src = docs.select(col("doc_id"), col("text"))
-      def run(tag: String, waves: Int, compactEvery: Int): Unit =
-        streamGateRehearsal(
-          tag, waves, src, "doc_id", "docs",
-          idx => graft.ops.DedupIndex.build(
-            src.limit(0), "doc_id", "text", idx),
-          (raw, idx, sink, ck) => graft.streaming.EventStreams
-            .nearDedupStream(raw, "doc_id", "text", idx, sink, ck,
-              threshold = 0.6, compactEvery = compactEvery),
-          idx => graft.ops.DedupIndex.compact(spark, idx),
-          idx => s"index sig rows=${
-            graft.ops.DedupIndex.readSigsAll(spark, idx).count()}",
-          idx => graft.ops.DedupIndex.maintenanceAdvice(spark, idx))
-      if (runOp("streaming")) run("stream_nd", waves = 1, compactEvery = 0)
-      if (runOp("streaming_compact"))
-        run("stream_nd_compact", waves = 4, compactEvery = 0)
-      if (runOp("streaming_inloop"))
-        run("stream_nd_inloop", waves = 1, compactEvery = 25)
-      // r17: the full LIFECYCLE at scale — bounded minor folds in-loop
-      // every 25 batches, plus ONE advisory-triggered MAJOR fold at the
-      // mid-run lull (stream stopped between the two waves). Run at
-      // mult=100 (500k docs) to buy the tiering claim its decade.
-      if (runOp("streaming_inloop_major"))
-        run("stream_nd_im", waves = 2, compactEvery = 25)
-      // r19: the STEADY-STATE shape (majors at 3 lulls — the cadence
-      // stream_sem_im4 measures): with the base tiers point-served,
-      // the only corpus-tracking term left is the inc scan, and
-      // advisory-cadence majors are exactly what bound it. This is the
-      // arm the late/early ≤1.1 claim is judged on; stream_nd_im
-      // (1 mid-run major) stays for round-over-round comparability.
-      if (runOp("streaming_inloop_major4"))
-        run("stream_nd_im4", waves = 4, compactEvery = 25)
-    }
-    // the SEARCH-INDEX stream under the identical protocol — the last
-    // persisted-index stream without a measured per-batch curve. The
-    // claim differs from the dedup gates: appendBatchToIndex never
-    // probes, so per-batch cost must be FLAT in pending count by
-    // construction (O(batch) postings build + one dir write); the
-    // probe-side tax those pending dirs accrue is the search_inc_tax
-    // arm above. compactEvery=0 is the measured default under test.
-    if (runOp("streaming_search") || runOp("streaming_search_inloop")) {
-      val src = docs.select(col("doc_id"), col("text"))
-      def runSearch(tag: String, waves: Int, compactEvery: Int): Unit =
-        streamGateRehearsal(tag, waves, src, "doc_id", "docs",
-          idx => graft.ops.Search.buildIndex(src.limit(0), "doc_id", "text", idx),
-          (raw, idx, sink, ck) => graft.streaming.EventStreams
-            .searchIndexStream(raw, "doc_id", "text", idx, sink, ck,
-              compactEvery = compactEvery),
-          idx => graft.ops.Search.compactIndex(spark, idx),
-          idx => {
-            val inc = s"$idx/postings_inc"
-            val fsv = graft.storage.VFS(spark)
-            s"pending inc dirs=${if (fsv.exists(inc)) fsv.ls(inc).size else 0}"
-          },
-          idx => graft.ops.Search.maintenanceAdvice(spark, idx))
-      // compactEvery=0: the maintenance-free counterfactual (appends
-      // must be FLAT in pending count by construction)
-      if (runOp("streaming_search"))
-        runSearch("stream_search", waves = 1, compactEvery = 0)
-      // r17: the product default (bounded minor folds in-loop every 25)
-      // plus one advisory-triggered MAJOR at the mid-run lull
-      if (runOp("streaming_search_inloop"))
-        runSearch("stream_search_il", waves = 2, compactEvery = 25)
-    }
-
-    // the SEMANTIC gate under the identical protocol; IVF bootstrap
-    // trains on a 1%-sample seed corpus (centroid training needs data)
-    if (runOp("streaming_sem") || runOp("streaming_sem_inloop") ||
-        runOp("streaming_sem_inloop_major") ||
-        runOp("streaming_sem_inloop_major4")) {
-      val src = embX.select(col("vec_id"), col("embedding"))
-      def runSem(tag: String, waves: Int, compactEvery: Int): Unit =
-        streamGateRehearsal(tag, waves, src, "vec_id", "vecs",
-          idx => graft.ops.Similarity.buildIvfIndex(
-            src.filter(pmod(col("vec_id"), lit(97)) === 0)
-              .withColumn("vec_id", col("vec_id") + (3L << 50)),
-            "vec_id", "embedding", idx, nCentroids = 64),
-          (raw, idx, sink, ck) => graft.streaming.EventStreams
-            .semanticDedupStream(raw, "vec_id", "embedding", idx, sink, ck,
-              minCosine = 0.999, nprobe = 4, compactEvery = compactEvery),
-          // ADAPTIVE major: when the corpus outgrows the bootstrap
-          // geometry >=2x, re-train to ~512 rows/cell — per-probe
-          // candidates stay O(nprobe x 512) at any corpus size. The
-          // fixed-64-cell bootstrap measured late/early 3.18x at 100x
-          // (per-probe candidates grew linearly with the index).
-          idx => graft.ops.Similarity.compactIvfIndex(spark, idx,
-            resplitTargetRows = 512),
-          _ => "ivf cells",
-          idx => graft.ops.Similarity.maintenanceAdvice(spark, idx))
-      if (runOp("streaming_sem"))
-        runSem("stream_sem", waves = 4, compactEvery = 0)
-      if (runOp("streaming_sem_inloop"))
-        runSem("stream_sem_inloop", waves = 1, compactEvery = 25)
-      // r17: full lifecycle at scale (see stream_nd_im)
-      if (runOp("streaming_sem_inloop_major"))
-        runSem("stream_sem_im", waves = 2, compactEvery = 25)
-      // r17: the STEADY-STATE shape — majors at advisory cadence (3
-      // lulls), so the geometry tracks the corpus within the 2x
-      // hysteresis band for the whole run instead of doubling past one
-      // mid-run re-split
-      if (runOp("streaming_sem_inloop_major4"))
-        runSem("stream_sem_im4", waves = 4, compactEvery = 25)
-    }
-
-    // ---- round-17: nd probe-cost attribution across a corpus decade --
-    // stream_nd_im measured late/early 1.26 at 100x where 10x was 1.03.
-    // Hypotheses: (a) a 5k-doc batch probes 5k x 16 bands = up to 80k
-    // distinct buckets > maxProbeKeys (32k), flipping candidatePairs
-    // from isin FILE-PRUNING to the broadcast-semi-join full-tier scan
-    // (documented trade: the isin literal is a plan bomb at 10^6 keys);
-    // (b) the sig fetch's broadcast semi join scans the whole sigs tier
-    // per probe regardless. Two pre-built index sizes x two batch sizes
-    // x both key paths = the attribution matrix. Measurement first —
-    // a fix only if the isolated win justifies it.
-    if (runOp("nd_probe_scale")) {
-      val small = docs.filter(shiftright(col("doc_id"), 24) === 0)
-      def buildIdx(d: DataFrame, tag: String): String = {
-        val u = s"$outDir/ndprobe_$tag"
-        graft.storage.VFS(spark).delete(u)
-        graft.ops.DedupIndex.build(d, "doc_id", "text", u)
-        u
-      }
-      val idxS = buildIdx(small, "small")
-      val idxL = buildIdx(docs, "large")
-      def batch(n: Int) = docs.limit(n)
-        .select((col("doc_id") + lit(11L << 44)).as("doc_id"), col("text"))
-        .localCheckpoint(true)
-      val b2k = batch(2000) // 2k x 16 = 32k keys: the isin side of the cap
-      val b5k = batch(5000) // 5k x 16 = 80k keys: the semi-join side
-      def probeMed(idx: String, b: DataFrame, mpk: Int, tag: String): Unit = {
-        val ts = (1 to 3).map(_ => time(graft.ops.DedupIndex.probe(
-          b, "doc_id", "text", idx, threshold = 0.6,
-          maxProbeKeys = mpk).count())._2).sorted
-        println(f"[rehearsal] nd_probe_scale $tag: median ${ts(1)}%.2f s")
-        results += s"nps_$tag" -> ts(1)
-      }
-      // r19 default: POINT-LOOKUP serving — run 1 builds the
-      // generation's executor-resident maps, runs 2-3 are the steady
-      // state a streaming probe loop sees: O(batch) hash lookups that
-      // never scan the tier (page cache is out of the loop entirely —
-      // the flatness claim no longer depends on where the tier bytes
-      // live). FLAT small vs large is the acceptance row.
-      probeMed(idxS, b2k, 1 << 15, "small_b2k_point")
-      probeMed(idxL, b2k, 1 << 15, "large_b2k_point")
-      probeMed(idxS, b5k, 1 << 15, "small_b5k_point")
-      probeMed(idxL, b5k, 1 << 15, "large_b5k_point")
-      // r18 comparison arm: scan model with the base tier riding
-      // TierCache (warm memory scans — the cost that tracked the tier)
-      spark.conf.set("graft.index.pointProbe", "false")
-      probeMed(idxS, b2k, 1 << 15, "small_b2k_isin")
-      probeMed(idxL, b2k, 1 << 15, "large_b2k_isin")
-      probeMed(idxL, b2k, 1, "large_b2k_semi") // forced semi, same batch
-      probeMed(idxS, b5k, 1 << 15, "small_b5k_semi")
-      probeMed(idxL, b5k, 1 << 15, "large_b5k_semi")
-      probeMed(idxL, b5k, 1 << 17, "large_b5k_isin") // forced isin, 80k keys
-      // r17 comparison arm: cache disabled AND cleared per cell — the
-      // exact disk-scan paths the r17 matrix measured. PointIndex is
-      // cleared too: its persisted map RDDs would otherwise pin
-      // storage memory under the disk-scan cells being compared
-      // against r17/r18 numbers measured without them
-      spark.conf.set("graft.index.cacheBase", "false")
-      graft.storage.TierCache.clear()
-      graft.storage.PointIndex.clear()
-      probeMed(idxL, b2k, 1 << 15, "large_b2k_isin_nocache")
-      probeMed(idxL, b2k, 1, "large_b2k_semi_nocache")
-      probeMed(idxL, b5k, 1 << 15, "large_b5k_semi_nocache")
-      spark.conf.unset("graft.index.cacheBase")
-      spark.conf.unset("graft.index.pointProbe")
-      // range-pushdown coverage diagnostic: coalesce the probe's
-      // bucket keys into <=512 BETWEEN ranges (cutting the 511 largest
-      // gaps — the span-minimal interval cover) and report what
-      // fraction of the tier the ranges still cover. Uniform hash keys
-      // should cover ~everything => no interval-family pushdown can
-      // prune the scan, whatever its plan cost. This bounds the best
-      // case of the r17-documented "range batching" vehicle without
-      // building it.
-      def rangeCoverage(idx: String, b: DataFrame, tag: String): Unit = {
-        val ks = graft.ops.DedupIndex.probeBuckets(b, "doc_id", "text", idx)
-          .as[Long].collect().sorted
-        val nRanges = 512
-        val cuts = (1 until ks.length)
-          .sortBy(i => -(ks(i).toDouble - ks(i - 1).toDouble))
-          .take(nRanges - 1).sorted
-        val starts = 0 +: cuts
-        val ends = cuts.map(_ - 1) :+ (ks.length - 1)
-        val cond = starts.zip(ends)
-          .map { case (s, e) => col("bucket").between(ks(s), ks(e)) }
-          .reduce(_ or _)
-        // live generation, not the legacy $idx/data literal: a compact
-        // (or arm reordering after a compacting arm) deletes the legacy
-        // dir, and this diagnostic must measure the generation probes
-        // actually read
-        val tier = spark.read.parquet(
-          graft.ops.DedupIndex.liveDataPath(spark, idx))
-        val frac = tier.filter(cond).count().toDouble / tier.count()
-        println(f"[rehearsal] nd_probe_scale $tag: ${ks.length} keys -> " +
-          f"$nRanges ranges cover ${frac * 100}%.2f%% of tier rows")
-        results += s"nps_${tag}_covpct" -> frac * 100
-      }
-      rangeCoverage(idxL, b2k, "large_b2k_rangecov")
-      rangeCoverage(idxL, b5k, "large_b5k_rangecov")
-    }
-
-    // ---- round-18: two-level IVF geometry past the flat cell cap ----
-    // At corpus/4096 > resplitTargetRows the 4096-dir flat ceiling
-    // binds and per-cell occupancy (hence per-probe candidates) grows
-    // linearly with the corpus again. The two-level layout keeps the
-    // cell count at corpus/target with <= sqrt(k) partition dirs. This
-    // arm measures the boundedness claim head-to-head at the same
-    // corpus: flat AT the cap vs two-level PAST it, same nprobe.
-    if (runOp("ivf_twolevel_scale")) {
-      val vecs = embX.select(col("vec_id"), col("embedding"))
-        .localCheckpoint(true)
-      val nVecs = vecs.count()
-      val q = vecs.orderBy(xxhash64(col("vec_id"))).limit(256)
-        .localCheckpoint(true)
-      val brute = graft.ops.Similarity.bruteForceTopK(vecs, "vec_id",
-        "embedding", q, "vec_id", "embedding", k = 10)
-        .select("query_id", "neighbor_id")
-        .as[(Long, Long)].collect().toSet
-      def arm(tag: String, target: Long, maxFlat: Int,
-          nprobes: Seq[Int]): Unit = {
-        val uri = s"$outDir/ivf2l_$tag"
-        graft.storage.VFS(spark).delete(uri)
-        graft.ops.Similarity.buildIvfIndex(vecs, "vec_id", "embedding",
-          uri, nCentroids = 64)
-        val tC = time(graft.ops.Similarity.compactIvfIndex(spark, uri,
-          resplitTargetRows = target, maxFlatCells = maxFlat))._2
-        val nCells = graft.ops.Similarity.indexCentroids(spark, uri).size
-        nprobes.foreach { np =>
-          val cand = graft.ops.Similarity.probeCandidateAvg(spark, uri,
-            q, "vec_id", "embedding", nprobe = np)
-          val ts = (1 to 3).map(_ => time(graft.ops.Similarity.ivfIndexTopK(
-            spark, uri, q, "vec_id", "embedding", k = 10, nprobe = np)
-            .count())._2).sorted
-          val got = graft.ops.Similarity.ivfIndexTopK(spark, uri, q,
-            "vec_id", "embedding", k = 10, nprobe = np)
-            .select("query_id", "neighbor_id")
-            .as[(Long, Long)].collect().toSet
-          val recall = (brute & got).size.toDouble / brute.size
-          println(f"[rehearsal] ivf_twolevel_scale $tag np=$np: " +
-            f"cells=$nCells candidates/query=${cand}%.0f probe median " +
-            f"${ts(1)}%.2f s recall@10=$recall%.3f resplit ${tC}%.1f s " +
-            f"(corpus $nVecs)")
-          results += s"ivf2l_${tag}_np${np}_cand" -> cand
-          results += s"ivf2l_${tag}_np${np}_probe" -> ts(1)
-          results += s"ivf2l_${tag}_np${np}_recall" -> recall
-        }
-      }
-      // flat AT the cap: target sized so wantCells lands exactly at
-      // 4096 (what the pre-r18 code did for ANY smaller target)
-      arm("flat_atcap", math.max(1L, nVecs / 4096), 4096, Seq(4))
-      // two-level PAST the cap: target 16 wants ~corpus/16 cells.
-      // np=4 shows boundedness (candidates = nprobe x target); np=12
-      // matches the flat arm's CANDIDATE budget for a fair recall row
-      arm("twolevel", 16, 4096, Seq(4, 12))
-    }
-
-    // ---- round-19: two-level recall-vs-(nprobeCoarse, nprobe) curve --
-    // The r18 arm pinned boundedness (candidates/query = nprobe ×
-    // target past the cap) and ONE matched-budget recall sample, which
-    // trailed flat IVF by ~0.08 on the worst-case uniform-sphere
-    // embeddings. nprobeCoarse is the documented recovery dial — this
-    // arm measures the full grid so past-the-cap deployments size BOTH
-    // dials from a curve (the flat geometry got its IvfCurve table in
-    // r10; this is the two-level analogue).
-    if (runOp("ivf2l_curve")) {
-      val vecs = embX.select(col("vec_id"), col("embedding"))
-        .localCheckpoint(true)
-      val nVecs = vecs.count()
-      val q = vecs.orderBy(xxhash64(col("vec_id"))).limit(256)
-        .localCheckpoint(true)
-      val brute = graft.ops.Similarity.bruteForceTopK(vecs, "vec_id",
-        "embedding", q, "vec_id", "embedding", k = 10)
-        .select("query_id", "neighbor_id")
-        .as[(Long, Long)].collect().toSet
-      val uri = s"$outDir/ivf2l_curve"
-      graft.storage.VFS(spark).delete(uri)
-      graft.ops.Similarity.buildIvfIndex(vecs, "vec_id", "embedding",
-        uri, nCentroids = 64)
-      graft.ops.Similarity.compactIvfIndex(spark, uri,
-        resplitTargetRows = 16, maxFlatCells = 4096)
-      val nCells = graft.ops.Similarity.indexCentroids(spark, uri).size
-      println(s"[rehearsal] ivf2l_curve: corpus=$nVecs cells=$nCells " +
-        "(two-level), queries=256, k=10")
-      for (npc <- Seq(2, 4, 6, 8, 12); np <- Seq(4, 8, 12, 16, 24)) {
-        val got = graft.ops.Similarity.ivfIndexTopK(spark, uri, q,
-          "vec_id", "embedding", k = 10, nprobe = np, nprobeCoarse = npc)
-          .select("query_id", "neighbor_id")
-          .as[(Long, Long)].collect().toSet
-        val recall = (brute & got).size.toDouble / brute.size
-        val cand = graft.ops.Similarity.probeCandidateAvg(spark, uri,
-          q, "vec_id", "embedding", nprobe = np, nprobeCoarse = npc)
-        println(f"[rehearsal] ivf2l_curve npc=$npc%2d np=$np%2d: " +
-          f"recall@10=$recall%.4f candidates/query=$cand%.0f")
-        results += s"ivf2lc_npc${npc}_np${np}_recall" -> recall
-        results += s"ivf2lc_npc${npc}_np${np}_cand" -> cand
-      }
-    }
-
-    // ---- round-20: two-level recall on a CLUSTERED distribution ------
-    // The r19 grid ran on the uniform sphere — the adversarial case for
-    // ANY coarse quantizer (every cell boundary is equally plausible, so
-    // a wrong coarse pick always costs real neighbors). Real embedding
-    // corpora are clustered; this arm synthesizes a hash-deterministic
-    // mixture (128 centers, per-coordinate noise ~0.35 of center scale
-    // → within-cluster cosine ~0.9, cross-cluster ~0) at the SAME
-    // corpus size and re-measures the matched-budget rows beside flat
-    // IVF, pinning the "gap is smaller on real data" claim with a
-    // number (BASELINE.md r19 grid's closing sentence).
-    if (runOp("ivf2l_clustered")) {
-      val dim = 64
-      val nCenters = 128
-      val n = spark.read.parquet(s"$sfDir/embeddings.parquet").count() * mult
-      // hash → [-1, 1), deterministic per (cols): centers keyed by
-      // (cluster, coord), noise by (vec, coord)
-      def h11(cols: org.apache.spark.sql.Column*) =
-        (pmod(xxhash64(cols: _*), lit(2000000L)) - lit(1000000L)) / 1000000.0
-      val vecs = spark.range(n).select(col("id").as("vec_id"),
-          transform(sequence(lit(0), lit(dim - 1)), j =>
-            (h11(pmod(col("id"), lit(nCenters)), j) +
-              lit(0.35) * h11(col("id"), j, lit(7))).cast("float"))
-            .as("embedding"))
-        .localCheckpoint(true)
-      val q = vecs.orderBy(xxhash64(col("vec_id"))).limit(256)
-        .localCheckpoint(true)
-      val brute = graft.ops.Similarity.bruteForceTopK(vecs, "vec_id",
-        "embedding", q, "vec_id", "embedding", k = 10)
-        .select("query_id", "neighbor_id")
-        .as[(Long, Long)].collect().toSet
-      def clusteredArm(tag: String, target: Long, maxFlat: Int,
-          cells2: Seq[(Int, Int)]): Unit = { // (npc, np)
-        val uri = s"$outDir/ivf2l_clus_$tag"
-        graft.storage.VFS(spark).delete(uri)
-        graft.ops.Similarity.buildIvfIndex(vecs, "vec_id", "embedding",
-          uri, nCentroids = 64)
-        graft.ops.Similarity.compactIvfIndex(spark, uri,
-          resplitTargetRows = target, maxFlatCells = maxFlat)
-        val nCells = graft.ops.Similarity.indexCentroids(spark, uri).size
-        cells2.foreach { case (npc, np) =>
-          val got = graft.ops.Similarity.ivfIndexTopK(spark, uri, q,
-            "vec_id", "embedding", k = 10, nprobe = np, nprobeCoarse = npc)
-            .select("query_id", "neighbor_id")
-            .as[(Long, Long)].collect().toSet
-          val recall = (brute & got).size.toDouble / brute.size
-          val cand = graft.ops.Similarity.probeCandidateAvg(spark, uri,
-            q, "vec_id", "embedding", nprobe = np, nprobeCoarse = npc)
-          println(f"[rehearsal] ivf2l_clustered $tag npc=$npc np=$np: " +
-            f"cells=$nCells recall@10=$recall%.4f candidates/query=$cand%.0f " +
-            f"(corpus $n)")
-          results += s"ivf2lclus_${tag}_npc${npc}_np${np}_recall" -> recall
-          results += s"ivf2lclus_${tag}_npc${npc}_np${np}_cand" -> cand
-        }
-      }
-      // flat AT the cap (npc unused by flat geometry) vs two-level past
-      // it at the SAME candidate budgets as the r18/r19 uniform rows:
-      // flat np=4 ≈ two-level np=12 ≈ ~195 candidates/query
-      clusteredArm("flat", math.max(1L, n / 4096), 4096, Seq((4, 4)))
-      clusteredArm("twolevel", 16, 4096,
-        Seq((8, 4), (8, 12), (8, 24), (12, 12)))
-    }
-
-    // ---- round-20: probe-loop broadcast lifecycle ---------------------
-    // The point path creates up to two packed-key broadcasts per probe
-    // (bucket keys + candidate ids). r20 leases them and DESTROYS each
-    // (blocking — blocks removed synchronously, driver value included)
-    // the moment its consuming stage materializes. This arm runs a
-    // 100-batch probe loop — the streaming steady-state shape — and
-    // checks created == destroyed THROUGHOUT: with blocking destroy,
-    // that equality IS a flat broadcast-block count (nothing awaits the
-    // ContextCleaner).
-    if (runOp("probe_loop")) {
-      val uri = s"$outDir/probeloop_idx"
-      graft.storage.VFS(spark).delete(uri)
-      graft.ops.DedupIndex.build(docs, "doc_id", "text", uri)
-      val b = docs.limit(500)
-        .select((col("doc_id") + lit(9L << 44)).as("doc_id"), col("text"))
-        .localCheckpoint(true)
-      graft.ops.DedupIndex.probe(b, "doc_id", "text", uri, 0.6).count() // warm maps
-      graft.core.Stats.reset()
-      val t0 = System.nanoTime()
-      (1 to 100).foreach { i =>
-        graft.ops.DedupIndex.probe(b, "doc_id", "text", uri, 0.6).count()
-        if (i % 20 == 0) {
-          val s = graft.core.Stats.countersSnapshot
-          val c = s.getOrElse("pointindex.bcast_created", 0L)
-          val d = s.getOrElse("pointindex.bcast_destroyed", 0L)
-          println(s"[rehearsal] probe_loop batch $i: bcast created=$c destroyed=$d")
-          require(c == d, s"broadcast accumulation at batch $i: $c created, $d destroyed")
-        }
-      }
-      val tLoop = (System.nanoTime() - t0) / 1e9
-      results += "probe_loop_100" -> tLoop
-      println(f"[rehearsal] probe_loop: 100 probes in $tLoop%.1f s, broadcasts flat")
-    }
-
-    // ---- round-17: CONCURRENCY rehearsal ------------------------------
-    // The guarded-flip machinery is spec-tested single-threaded; this
-    // arm runs it under REAL timing: two streams maintaining DIFFERENT
-    // persisted indexes (text LSH near-dedup + BM25 postings) drain
-    // their sources concurrently with in-loop minor folds every 10
-    // batches, while an external probe loop hammers BOTH live indexes
-    // throughout — every probe must succeed (grace generations cover
-    // in-flight readers across fold flips) and be correct. Then one
-    // DELIBERATE append-during-major drives the single-writer abort
-    // (VersionedDir.commitGuarded) under real thread timing: the abort
-    // must fire loudly, the index must lose nothing, and a quiesced
-    // re-run must succeed.
-    if (runOp("concurrency")) {
-      import graft.storage.ArrayTable
-      val fs = graft.storage.VFS(spark)
-      val ndIdx = s"$outDir/conc_nd_index"; val ndSink = s"$outDir/conc_nd_sink"
-      val seIdx = s"$outDir/conc_se_index"; val seSink = s"$outDir/conc_se_sink"
-      val ndSrc = s"$outDir/conc_nd_src";   val seSrc = s"$outDir/conc_se_src"
-      val ndCk = s"$outDir/conc_nd_ckpt";   val seCk = s"$outDir/conc_se_ckpt"
-      Seq(ndIdx, ndSink, seIdx, seSink, ndSrc, seSrc, ndCk, seCk)
-        .foreach(u => fs.delete(u))
-      val src = docs.select(col("doc_id"), col("text"))
-      graft.ops.DedupIndex.build(src.limit(0), "doc_id", "text", ndIdx)
-      graft.ops.Search.buildIndex(src.limit(0), "doc_id", "text", seIdx)
-      val sinkSchema = graft.core.ArraySchema.infer(src.schema, Seq("doc_id"))
-        .copy(allowsDuplicates = true)
-      ArrayTable.create(spark, ndSink, sinkSchema)
-      ArrayTable.create(spark, seSink, sinkSchema)
-      src.repartition(40, col("doc_id")).write.parquet(ndSrc)
-      src.repartition(40, col("doc_id")).write.parquet(seSrc)
-      // probe inputs: dedup batch in a foreign id space (results keyed
-      // by matches, not identity), selective BM25 queries
-      val probeBatch = docs.limit(64)
-        .select((col("doc_id") + lit(9L << 44)).as("doc_id"), col("text"))
-        .localCheckpoint(true)
-      val queries = docs.limit(32)
-        .select(col("doc_id").as("query_id"), concat_ws(" ",
-          slice(graft.ops.Search.termsOf(col("text")), 1, 5)).as("qtext"))
-        .localCheckpoint(true)
-      @volatile var streamsDone = false
-      val probeOk = new java.util.concurrent.atomic.AtomicInteger
-      val probeFail = new java.util.concurrent.atomic.AtomicReference[Throwable]
-      val prober = new Thread(() => {
-        while (!streamsDone && probeFail.get == null) {
-          try {
-            graft.ops.DedupIndex.probe(
-              probeBatch, "doc_id", "text", ndIdx, threshold = 0.6).count()
-            graft.ops.Search.bm25IndexTopK(
-              spark, seIdx, queries, "query_id", "qtext", k = 5).count()
-            probeOk.incrementAndGet()
-          } catch { case t: Throwable => probeFail.set(t) }
-        }
-      }, "conc-prober")
-      val t0c = System.nanoTime()
-      val qNd = graft.streaming.EventStreams.nearDedupStream(
-        spark.readStream.schema(src.schema)
-          .option("maxFilesPerTrigger", "1").parquet(ndSrc),
-        "doc_id", "text", ndIdx, ndSink, ndCk,
-        threshold = 0.6, compactEvery = 10)
-      val qSe = graft.streaming.EventStreams.searchIndexStream(
-        spark.readStream.schema(src.schema)
-          .option("maxFilesPerTrigger", "1").parquet(seSrc),
-        "doc_id", "text", seIdx, seSink, seCk, compactEvery = 10)
-      prober.start()
-      try { qNd.processAllAvailable(); qSe.processAllAvailable() }
-      finally { qNd.stop(); qSe.stop(); streamsDone = true; prober.join() }
-      val tStreams = (System.nanoTime() - t0c) / 1e9
-      require(probeFail.get == null,
-        s"concurrent probe FAILED during in-loop folds: ${probeFail.get}")
-      require(probeOk.get > 0, "prober never completed a probe cycle")
-      // zero lost rows, cross-checked three ways: the search sink saw
-      // every staged doc; the dedup sink's survivors match the index's
-      // distinct sig ids; a post-run probe is still exact
-      val nDocs = src.count()
-      val seSinkN = ArrayTable.read(spark, seSink).count()
-      require(seSinkN == nDocs, s"search sink lost rows: $seSinkN != $nDocs")
-      val ndSurvivors = ArrayTable.read(spark, ndSink).count()
-      val ndSigIds = graft.ops.DedupIndex.readSigsAll(spark, ndIdx)
-        .select("id").distinct().count()
-      require(ndSigIds == ndSurvivors,
-        s"dedup index ids $ndSigIds != sink survivors $ndSurvivors")
-      val cNd = graft.core.Stats.counterValue(s"stream.compact_secs_x100.$ndIdx")
-      val cSe = graft.core.Stats.counterValue(s"stream.compact_secs_x100.$seIdx")
-      println(f"[rehearsal] concurrency: streams $tStreams%.1f s, " +
-        f"probes ok=${probeOk.get}, survivors=$ndSurvivors/$nDocs docs, " +
-        f"in-loop fold wall nd=${cNd / 100.0}%.1f s se=${cSe / 100.0}%.1f s")
-      results += "conc_streams_total" -> tStreams
-      results += "conc_probes_ok" -> probeOk.get.toDouble
-      // ---- deliberate append-during-major ----------------------------
-      // a hammering append thread runs while the MAJOR compact reads
-      // the tiers; the guarded flip must abort LOUDLY (never silently
-      // drop the mid-compact appends). On abort the appended rows live
-      // in both tiers' reads — probes stay correct — and a quiesced
-      // re-run must flip cleanly.
-      @volatile var stopAppends = false
-      val nAppended = new java.util.concurrent.atomic.AtomicInteger
-      val hammer = new Thread(() => {
-        var i = 2
-        while (!stopAppends) {
-          graft.ops.DedupIndex.append(
-            docs.limit(50).select(
-              (col("doc_id") + lit(i.toLong << 45)).as("doc_id"), col("text")),
-            "doc_id", "text", ndIdx)
-          nAppended.incrementAndGet(); i += 1
-        }
-      }, "conc-hammer")
-      val idsBefore = ndSigIds
-      hammer.start()
-      var abortSeen = false
-      var tries = 0
-      try {
-        while (!abortSeen && tries < 12 && !stopAppends) {
-          tries += 1
-          try graft.ops.DedupIndex.compact(spark, ndIdx)
-          catch {
-            case e: RuntimeException
-                if e.getMessage != null && e.getMessage.contains("ABORTED") =>
-              abortSeen = true
-              println(s"[rehearsal] concurrency: guarded abort observed " +
-                s"on major-compact try $tries (${nAppended.get} appends in flight)")
-          }
-        }
-      } finally { stopAppends = true; hammer.join() }
-      require(abortSeen,
-        s"append-during-major never tripped the guarded abort in $tries tries")
-      graft.ops.DedupIndex.compact(spark, ndIdx) // quiesced: must succeed
-      val idsAfter = graft.ops.DedupIndex.readSigsAll(spark, ndIdx)
-        .select("id").distinct().count()
-      require(idsAfter == idsBefore + 50L * nAppended.get,
-        s"rows lost across abort+recompact: $idsAfter != " +
-          s"$idsBefore + ${50L * nAppended.get}")
-      val (mNd, tProbeFinal) = time(graft.ops.DedupIndex.probe(
-        probeBatch, "doc_id", "text", ndIdx, threshold = 0.6).count())
-      println(f"[rehearsal] concurrency: post-abort recompact clean, " +
-        f"$idsAfter ids (${nAppended.get} hammer appends x50 all present), " +
-        f"final probe $mNd matches in $tProbeFinal%.2f s")
-      results += "conc_abort_tries" -> tries.toDouble
-    }
-
-    // ---- round-15: COMPOSED end-to-end pipeline on ONE heap ----------
-    // Every heavy operator above has an isolated curve, but the r11
-    // (semantic-dedup heap fights) and r13 (tfidf DISK_ONLY OOM) scale
-    // bugs only surfaced under COMPOSED memory pressure. This runs the
-    // full training-data chain — ingest -> clean -> exact dedup -> near
-    // dedup -> decontam -> quality filter -> pack -> materialize ->
-    // shard — as one job chain over the mult-x corpus, measuring
-    // per-stage walls and ASSERTING the chain's conservation laws
-    // between stages (a silent row leak at a stage boundary is exactly
-    // the class of bug isolated curves cannot see).
-    // `encrypted = true` re-runs the identical 11-stage chain with the
-    // SOURCE an encrypted array-table (every read decrypts) and the
-    // shard SINK encrypted (every write encrypts) — the r16 composition
-    // probe: the standalone overhead measured ~10% write / ~5% read at
-    // sf0.1; the claim is that nothing worse emerges under the composed
-    // chain's memory pressure. ONE definition for both arms, so the
-    // per-stage delta table compares the same code.
-    def pipelineArm(tag: String, encrypted: Boolean): Unit = {
-      import org.apache.spark.storage.StorageLevel
-      val stages = scala.collection.mutable.LinkedHashMap[String, Double]()
-      // persist (CacheManager-managed, spillable) + eager count: walls
-      // attribute to their own stage, parents are releasable the moment
-      // the child materializes (localCheckpoint frames would pin their
-      // RDDs outside the CacheManager for the whole chain)
-      def stage(name: String)(f: => DataFrame): (DataFrame, Long) = {
-        val t0 = System.nanoTime()
-        val df = f.persist(StorageLevel.MEMORY_AND_DISK)
-        val n = df.count()
-        val t = (System.nanoTime() - t0) / 1e9
-        stages += name -> t
-        println(f"[rehearsal] $tag/$name: $n rows in $t%.2f s")
-        (df, n)
-      }
-      val encKey: Option[String] = if (!encrypted) None else {
-        // merge-into-registry idiom: enable() replaces the key set
-        graft.storage.Encryption.enable(spark,
-          graft.storage.Encryption.sessionKeys(
-            spark.sparkContext.hadoopConfiguration) +
-            ("rehearsal-pipeline" ->
-              "rehearsal-pipeline-key-0123456789".getBytes(
-                java.nio.charset.StandardCharsets.UTF_8).take(32)))
-        Some("rehearsal-pipeline")
-      }
-      val source: DataFrame = encKey match {
-        case None => docs
-        case Some(id) =>
-          // source at rest encrypted: one-time ingest OUTSIDE the staged
-          // chain (its cost is reported separately), then every chain
-          // read of the corpus decrypts
-          val arr = s"$outDir/${tag}_src_arr"
-          val (_, tEncIngest) = time(graft.storage.ArrayTable.ingest(
-            spark, docs.select(col("doc_id"), col("text")), arr,
-            Seq("doc_id"), overwrite = true, encryptionKey = Some(id)))
-          println(f"[rehearsal] $tag/src_ingest_encrypted: $tEncIngest%.2f s")
-          results += s"${tag}_src_ingest" -> tEncIngest
-          graft.storage.ArrayTable.read(spark, arr)
-      }
-      val (ingested, nIn) = stage("ingest")(
-        source.select(col("doc_id"), col("text")))
-      val (clean, nClean) = stage("clean")(ingested.withColumn("text",
-        Curation.redactPii(Curation.stripMarkup(col("text")))))
-      require(nClean == nIn, s"clean is 1:1 but $nIn -> $nClean")
-      // language TAG (not filter — the synthetic corpus is pseudo-word
-      // text, a lang filter would empty the chain): the per-doc cost a
-      // real pipeline pays to split by language, via the LangIdK kernel
-      val (tagged, nTagged) = stage("lang_tag")(
-        clean.withColumn("lang_pred", TextAnalysis.langId(col("text"))))
-      require(nTagged == nClean, s"lang tag is 1:1 but $nClean -> $nTagged")
-      val (exact, nExact) = stage("exact_dedup")(
-        Dedup.exactByHash(tagged.drop("lang_pred"), "text", "doc_id"))
-      require(nExact <= nClean, s"exact dedup grew rows: $nClean -> $nExact")
-      ingested.unpersist(); clean.unpersist()
-      val (near, nNear) = stage("near_dedup")(
-        Dedup.dropNearDups(exact, "doc_id", "text", threshold = 0.6))
-      require(nNear <= nExact, s"near dedup grew rows: $nExact -> $nNear")
-      tagged.unpersist()
-      // eval-set decontamination: 500 refs that ARE near-dups of copy-0
-      // docs (uppercase + pad — normalization folds both), so the stage
-      // must actually remove rows, not just run
-      val ref = docs0.limit(500)
-        .select((col("doc_id") + (1L << 45)).as("ref_id"),
-          concat(lit(" "), upper(col("text"))).as("text"))
-      val (flagged, nFlagged) = stage("decontam_flag")(
-        Dedup.crossNearDups(near, "doc_id", "text", ref, "ref_id", "text",
-          threshold = 0.6).select(col("corpus_id").as("doc_id")).distinct())
-      val (decon, nDecon) = stage("decontam_drop")(
-        near.join(flagged, Seq("doc_id"), "left_anti"))
-      require(nDecon == nNear - nFlagged,
-        s"decontam accounting broke: $nNear - $nFlagged != $nDecon")
-      require(nFlagged > 0, "decontam flagged nothing — planted refs lost")
-      exact.unpersist()
-      val (qual, nQual) = stage("quality_filter")(
-        decon.filter(TextAnalysis.qualityScore(col("text")) > 0.2))
-      require(nQual <= nDecon, s"quality filter grew rows: $nDecon -> $nQual")
-      near.unpersist(); flagged.unpersist()
-      val (packed, nPacked) = stage("pack")(
-        graft.ops.Packing.packDocs(qual, "doc_id", "text", 512L))
-      decon.unpersist()
-      // conservation: every nonzero-token doc packs exactly once, and
-      // tokens are conserved through packing (zero-token docs drop)
-      val nNonzero = qual
-        .filter(TextAnalysis.tokenCount(col("text")) > 0).count()
-      require(nPacked == nNonzero,
-        s"pack lost docs: $nNonzero nonzero-token in, $nPacked packed")
-      val tokIn = qual.agg(sum(TextAnalysis.tokenCount(col("text"))))
-        .head().getLong(0)
-      val tokOut = packed.agg(sum(col("tokens"))).head().getLong(0)
-      require(tokIn == tokOut, s"token leak through packing: $tokIn != $tokOut")
-      val overBudget = graft.ops.Packing.packStats(packed, 512L)
-        .filter(col("tokens") > 512L && !col("oversize")).count()
-      require(overBudget == 0L, s"$overBudget packs over budget unflagged")
-      val (seqs, nSeqs) = stage("materialize")(
-        graft.ops.Packing.sequencesOf(packed, qual, "doc_id", "text"))
-      qual.unpersist(); packed.unpersist()
-      val nSh = math.max(16, (nSeqs / 25000L).toInt)
-      val t0Sh = System.nanoTime()
-      val shardsUri = s"$outDir/${tag}_shards"
-      val mani = graft.ops.Shards.writeShards(seqs,
-        shardsUri, "pack_id", nSh, tokenCol = Some("tokens"),
-        encryptionKey = encKey)
-      stages += "shard" -> (System.nanoTime() - t0Sh) / 1e9
-      require(mani.map(_._2).sum == nSeqs,
-        s"shard manifest rows ${mani.map(_._2).sum} != $nSeqs sequences")
-      if (encKey.isDefined) {
-        // at-rest check: no shard data file may start with the plain
-        // parquet magic (modular encryption replaces it with PARE)
-        val fs = graft.storage.VFS(spark)
-        val dataFiles = fs.lsFilesRecursive(s"$shardsUri/data")
-          .filter(_.endsWith(".parquet"))
-        require(dataFiles.nonEmpty, "no shard files written")
-        val magic = new String(
-          fs.readBytes(dataFiles.head).take(4),
-          java.nio.charset.StandardCharsets.US_ASCII)
-        require(magic == "PARE", s"shard file not encrypted: magic=$magic")
-      }
-      seqs.unpersist()
-      stages.foreach { case (k, v) => results += s"${tag}_$k" -> v }
-      results += s"${tag}_total" -> stages.values.sum
-      println(f"[rehearsal] $tag: $nIn%d -> exact $nExact%d -> near " +
-        f"$nNear%d -> decontam $nDecon%d -> quality $nQual%d -> " +
-        f"$nSeqs%d sequences in ${mani.size}%d shards, " +
-        f"total ${stages.values.sum}%.1f s, all conservation checks passed")
-    }
-    // pipeline_warm: a discarded first pass — the chain's first run in a
-    // JVM pays JIT/codegen/shuffle-service warmup that dwarfs the
-    // enc-vs-plain delta (measured 105 s cold vs 42 s warm for the SAME
-    // chain); request it before pipeline,pipeline_enc so both measured
-    // arms run warm and the per-stage delta isolates encryption.
-    if (runOp("pipeline_warm")) pipelineArm("pipeline_warm", encrypted = false)
-    if (runOp("pipeline")) pipelineArm("pipeline", encrypted = false)
-    if (runOp("pipeline_enc")) pipelineArm("pipeline_enc", encrypted = true)
-
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }.mkString("{", ",", "}")
-    val capJson = stats.map(s =>
-      s""","buckets_over_cap":${s.getLong(1)},"max_bucket":${s.getLong(4)}""").getOrElse("")
-    println(s"""{"metric":"scale_rehearsal","mult":$mult,"queries":$qs$capJson}""")
-    spark.stop()
   }
 }

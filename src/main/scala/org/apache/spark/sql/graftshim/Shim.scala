@@ -32,7 +32,7 @@ object Shim {
     * applied), unwrapped from the AQE adapter — AdaptiveSparkPlanExec
     * has no children, so a plain `collect` over `executedPlan` sees
     * nothing once AQE wraps the query. Used by plan-shape assertions
-    * (scale guards) and the Plans tool. */
+    * (scale guards). */
   def plannedPhysical(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.execution.SparkPlan =
     df.queryExecution.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan

@@ -326,6 +326,38 @@ class ArrayTableSpec extends SparkSpec {
       .select("x").as[Long].collect().toSeq == Seq(1L, 2L, 3L))
   }
 
+  test("readers racing an appending writer never see a partial manifest") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val uri = freshUri("appendrace")
+    ArrayTable.ingest(spark, Seq((0L, 1, 0.0, "a")).toDF("x", "y", "v", "s"),
+      uri, dims, tsOpt = Some(100L), overwrite = true)
+    val appends = 20
+    @volatile var stop = false
+    val reader = Future {
+      var loops = 0
+      var lastRows = 1L
+      while (!stop) {
+        val frags = ArrayTable.fragments(spark, uri).size
+        assert(frags >= 1 && frags <= appends + 1, s"fragment count $frags")
+        val rows = graft.query.ArrayQuery(spark, uri).attrs("v").df.count()
+        assert(rows >= lastRows && rows <= appends + 1, s"row count $rows")
+        lastRows = rows
+        loops += 1
+      }
+      loops
+    }
+    try (1 to appends).foreach { i =>
+      ArrayTable.write(spark,
+        Seq((i.toLong, 1, i.toDouble, s"w$i")).toDF("x", "y", "v", "s"), uri,
+        Some(100L + i))
+    } finally stop = true
+    assert(Await.result(reader, 120.seconds) > 0, "reader never completed a loop")
+    assert(ArrayTable.fragments(spark, uri).size == appends + 1)
+    assert(ArrayTable.read(spark, uri).count() == appends + 1)
+  }
+
   test("enumerations: encode on write, decode on read, extend") {
     val uri = freshUri("enum")
     val schema = ArraySchema(

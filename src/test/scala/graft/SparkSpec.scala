@@ -11,10 +11,9 @@ object TestSession {
     s
   }
   val sf = "/root/testdata/sf0.001"
-  def tmpDir(name: String): String = {
-    val d = s"/root/repo/target/test-arrays/$name-${System.nanoTime()}"
-    d
-  }
+  def tmpDir(name: String): String =
+    java.nio.file.Paths.get("target", "test-arrays", s"$name-${System.nanoTime()}")
+      .toAbsolutePath.toString
 }
 
 abstract class SparkSpec extends AnyFunSuite {
