@@ -64,35 +64,29 @@ object DedupIndex {
   private def paramsPath(uri: String) = s"$uri/_params.json"
   private def dataPath(uri: String) = s"$uri/data"
   private def sigsPath(uri: String) = s"$uri/sigs"
-  /** live sigs dir — same [[graft.storage.VersionedDir]] flip as the
-    * bucket table: [[compact]] coalesces the per-append sig files
-    * (every probe opens EVERY sigs file for its map-side semi-join
-    * pass, so file count — 1 per append — is probe-cost growth the
-    * streaming rehearsal measured; legacy unversioned dirs resolve as
-    * generation 0). */
-  private[graft] def liveSigsPath(spark: SparkSession, uri: String): String =
-    graft.storage.VersionedDir.resolve(VFS(spark), uri, "sigs")
-  /** live bucket-table dir — [[compact]] flips generations via
-    * [[graft.storage.VersionedDir]], so probes concurrent with (or
-    * crashed) compacts always resolve a complete directory. */
-  private[graft] def liveDataPath(spark: SparkSession, uri: String): String =
-    graft.storage.VersionedDir.resolve(VFS(spark), uri, "data")
 
-  /** INC tier (r16): [[append]] writes into `data_inc`/`sigs_inc`
-    * (their own [[graft.storage.VersionedDir]] bases) instead of the
-    * base generation dirs. The split is what makes streaming
-    * maintenance BOUNDED: [[minorCompact]] folds only the inc tier —
-    * O(appends since the last major compact), never a rewrite of the
-    * base corpus — while [[compact]] (major) folds base ∪ inc into a
-    * new base generation and resets the inc tier. Readers take base ∪
-    * inc in ONE multi-path flat scan (both tiers are plain sorted
-    * parquet files — same pushdowns, one listing each, no per-tier
-    * union legs). Pre-r16 indexes have no inc dirs and read
-    * identically (existence-filtered). */
+  /** The two tiered tables ([[graft.storage.TieredTable]]): the narrow
+    * bucket rows `data` and the signature rows `sigs`, each a base plus
+    * an INC tier (`data_inc`/`sigs_inc`). [[append]] writes the inc
+    * tiers only, which is what makes streaming maintenance BOUNDED:
+    * [[minorCompact]] folds only the inc tiers — O(appends since the
+    * last major), never a rewrite of the base corpus — while [[compact]]
+    * (major) folds base ∪ inc into new base generations and resets the
+    * inc tiers. Generation flips keep probes concurrent with (or
+    * crashed) maintenance on complete directories. */
+  private def dataTable(uri: String) = graft.storage.TieredTable(uri, "data")
+  private def sigsTable(uri: String) = graft.storage.TieredTable(uri, "sigs")
+
+  private[graft] def liveDataPath(spark: SparkSession, uri: String): String =
+    dataTable(uri).basePath(VFS(spark))
   private[graft] def liveDataIncPath(spark: SparkSession, uri: String): String =
-    graft.storage.VersionedDir.resolve(VFS(spark), uri, "data_inc")
+    dataTable(uri).incPath(VFS(spark))
   private[graft] def liveSigsIncPath(spark: SparkSession, uri: String): String =
-    graft.storage.VersionedDir.resolve(VFS(spark), uri, "sigs_inc")
+    sigsTable(uri).incPath(VFS(spark))
+
+  /** [[graft.storage.TierCache]] / [[graft.storage.PointIndex]] key of a
+    * table's base generation. */
+  private def slot(t: graft.storage.TieredTable) = s"${t.uri}#${t.name}"
 
   private def readFlatMulti(spark: SparkSession, paths: Seq[String]): DataFrame = {
     val fs = VFS(spark)
@@ -112,15 +106,17 @@ object DedupIndex {
     * the cached leg (InMemoryTableScan batch stats over the key-sorted
     * tier) and push into the inc leg's parquet scan as before. With
     * `graft.index.cacheBase=false` this is exactly the r17 one-scan
-    * multi-path read. */
-  private def readTiered(spark: SparkSession, uri: String, slot: String,
-      inc: String, basePath: String): DataFrame = {
+    * multi-path read. Tiers resolve inc first
+    * ([[graft.storage.TieredTable.resolve]]), with `point` between. */
+  private def readTiered(spark: SparkSession, t: graft.storage.TieredTable,
+      point: String = ""): DataFrame = {
     val fs = VFS(spark)
+    val (inc, basePath) = t.resolve(fs, point)
     if (!graft.storage.TierCache.enabled(spark))
       return readFlatMulti(spark, Seq(inc, basePath))
     // existence-guard the base leg exactly as readFlatMulti does: a
-    // crash state with no committed generation and no legacy dir
-    // (VersionedDir falls back to the nonexistent legacy path) must
+    // crash state with no committed generation and no generation-0 dir
+    // (VersionedDir falls back to the nonexistent build path) must
     // degrade to the inc tier, not throw AnalysisException
     if (!fs.exists(basePath)) return readFlatMulti(spark, Seq(inc))
     // double-residency guard (r20): when this generation's POINT maps
@@ -136,43 +132,22 @@ object DedupIndex {
     // and the cache path is unchanged.
     val base =
       if (graft.storage.PointIndex.enabled(spark) &&
-          graft.storage.PointIndex.hasLive(spark, s"$uri#$slot", basePath))
+          graft.storage.PointIndex.hasLive(spark, slot(t), basePath))
         spark.read.parquet(basePath)
-      else graft.storage.TierCache.scan(spark, s"$uri#$slot", basePath)(
+      else graft.storage.TierCache.scan(spark, slot(t), basePath)(
         spark.read.parquet(basePath))
-    // data-file check, not bare exists: a freshly-reset empty inc
-    // generation lists only its commit marker, and a parquet scan of a
-    // data-file-less dir dies on schema inference
-    val incLive = fs.exists(inc) &&
-      graft.storage.VersionedDir.hasDataFiles(fs.lsFilesRecursive(inc).toSet)
-    if (incLive) spark.read.parquet(inc).unionByName(base) else base
+    t.incRows(spark, inc).fold(base)(_.unionByName(base))
   }
 
-  /** base ∪ inc bucket rows — every reader's view of the index.
-    *
-    * INC resolved FIRST, deliberately: a read racing a major compact's
-    * base-flip → inc-reset window then pairs the OLD inc (grace copy,
-    * still on disk) with the NEW base — appended rows appear TWICE
-    * (transient, healed by the probe's pair distinct). Base-first
-    * resolution would pair the OLD base with the NEW reset-empty inc —
-    * appended rows transiently VANISH, which for a dedup probe means a
-    * real duplicate can slip through as a survivor. Duplicates are the
-    * benign direction; order the resolutions for it. */
-  private[graft] def readDataAll(spark: SparkSession, uri: String): DataFrame = {
-    val inc = liveDataIncPath(spark, uri)
-    // race injection: a full maintenance flip can be forced HERE —
-    // after the inc resolution, before the base's (FlipRaceSpec pins
-    // the duplicates-not-vanishing contract deterministically)
-    graft.storage.FlipHooks.at("dedup.read.betweenResolves")
-    readTiered(spark, uri, "data", inc, liveDataPath(spark, uri))
-  }
+  /** base ∪ inc bucket rows — every reader's view of the index. A full
+    * maintenance flip can be forced between the tier resolutions
+    * (FlipRaceSpec pins the duplicates-not-vanishing contract). */
+  private[graft] def readDataAll(spark: SparkSession, uri: String): DataFrame =
+    readTiered(spark, dataTable(uri), "dedup.read.betweenResolves")
 
-  /** base ∪ inc signature rows (inc resolved first — see
-    * [[readDataAll]]). */
-  private[graft] def readSigsAll(spark: SparkSession, uri: String): DataFrame = {
-    val inc = liveSigsIncPath(spark, uri)
-    readTiered(spark, uri, "sigs", inc, liveSigsPath(spark, uri))
-  }
+  /** base ∪ inc signature rows. */
+  private[graft] def readSigsAll(spark: SparkSession, uri: String): DataFrame =
+    readTiered(spark, sigsTable(uri))
 
   private def writeParams(spark: SparkSession, uri: String, p: Params): Unit = {
     import graft.core.Json._
@@ -448,7 +423,6 @@ object DedupIndex {
     * PROBES remain safe throughout — generation flip. */
   def compact(spark: SparkSession, uri: String, filesPerBand: Int = 4): Unit = {
     val p = readParams(spark, uri)
-    val fs = VFS(spark)
     // zero sig rows == zero indexed docs (build and append write both
     // tables together): nothing to compact, and flipping EITHER table
     // to a generation written from an empty frame would rest on writer
@@ -456,65 +430,22 @@ object DedupIndex {
     // streaming bootstrap keeps its schema-bearing original files)
     val nSigs = readSigsAll(spark, uri).count()
     if (nSigs == 0) return
-    // inc listings FIRST (the guard basis for the resets below): an
-    // append lands in the inc tier, so the single-writer check moved
-    // there with the appends; the base dirs only change via compacts
-    val dataIncBefore = graft.storage.VersionedDir.liveListing(fs, uri, "data_inc")
-    val sigsIncBefore = graft.storage.VersionedDir.liveListing(fs, uri, "sigs_inc")
-    val dataBefore = graft.storage.VersionedDir.liveListing(fs, uri, "data")
-    val next = graft.storage.VersionedDir.next(fs, uri, "data")
     // distinct() FIRST: heals exact row duplicates from replayed
     // appends and from a crash between a base flip and its inc reset
     // (rows then live in both tiers until this fold). It must run
-    // BEFORE the over-cap sizes below — duplicate rows would inflate
-    // bucket counts and permanently drop genuinely under-cap buckets.
-    // Changed-text re-appends are NOT collapsed — different sigs stay
-    // distinct rows and keep surfacing through probe's est values,
-    // per the unique-id contract.
-    val rows = readDataAll(spark, uri).distinct()
-    val sizes = rows.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > p.maxBucket)
-      .select("band", "bucket")
-    rows.join(sizes, Seq("band", "bucket"), "left_anti")
-      .repartitionByRange(math.max(1, p.bands * filesPerBand),
-        col("band"), col("bucket"))
-      .sortWithinPartitions("band", "bucket")
-      .write.mode("overwrite")
-      .options(graft.storage.Encryption.dirWriteOptions(spark, uri))
-      .parquet(next)
-    // flip: concurrent probes keep reading the old generation until
-    // the marker lands; a crash here leaves it live (no missing-dir
-    // window). Guarded against base writes (single-writer belt).
-    graft.storage.VersionedDir.commitGuarded(fs, uri, "data", next, dataBefore)
-    // race injection: the base-flip → inc-reset window (appended rows
-    // live in BOTH tiers; probes must see duplicates, never a gap)
-    graft.storage.FlipHooks.at("dedup.compact.afterDataFlip")
-    // reset the inc tier to an EMPTY generation — guarded against the
-    // listing taken BEFORE the fold read: an append that landed mid-
-    // compact aborts here, loudly (its rows are in the live inc but
-    // not in the new base; dropping the tier would lose them). On
-    // abort the rows exist in BOTH tiers until the next compact's
-    // distinct() — probes stay correct throughout (pair distinct).
-    if (graft.storage.VersionedDir.hasDataFiles(dataIncBefore))
-      graft.storage.VersionedDir.resetEmptyGuarded(fs, uri, "data_inc",
-        dataIncBefore, grace = 2)
-    val sigsBefore = graft.storage.VersionedDir.liveListing(fs, uri, "sigs")
-    val sigs = readSigsAll(spark, uri)
-    val nextSigs = graft.storage.VersionedDir.next(fs, uri, "sigs")
-    sigs.distinct()
-      .repartitionByRange(
-        math.max(1, math.ceil(nSigs / 250000.0).toInt), col("id"))
-      .sortWithinPartitions("id")
-      .write.mode("overwrite")
-      .options(graft.storage.Encryption.dirWriteOptions(spark, uri))
-      .parquet(nextSigs)
-    graft.storage.VersionedDir.commitGuarded(fs, uri, "sigs", nextSigs, sigsBefore)
-    // race injection: the sigs-flip → sigs-inc-reset window
-    graft.storage.FlipHooks.at("dedup.compact.afterSigsFlip")
-    if (graft.storage.VersionedDir.hasDataFiles(sigsIncBefore))
-      graft.storage.VersionedDir.resetEmptyGuarded(fs, uri, "sigs_inc",
-        sigsIncBefore, grace = 2)
+    // BEFORE writeCapped's over-cap sizes — duplicate rows would
+    // inflate bucket counts and permanently drop genuinely under-cap
+    // buckets. Changed-text re-appends are NOT collapsed — different
+    // sigs stay distinct rows and keep surfacing through probe's est
+    // values, per the unique-id contract.
+    dataTable(uri).major(spark, "dedup.compact.afterDataFlip") { next =>
+      writeCapped(readDataAll(spark, uri).distinct(), uri, p, filesPerBand,
+        "overwrite", next)
+    }
+    sigsTable(uri).major(spark, "dedup.compact.afterSigsFlip") { next =>
+      graft.storage.TieredTable.writeSorted(readSigsAll(spark, uri).distinct(),
+        uri, Seq("id"), graft.storage.TieredTable.filesFor(nSigs), next)
+    }
     // warm-at-flip (r20): build the NEW generations' point maps on the
     // background warmer so the first post-flip probe finds them hot
     // instead of paying the full tier-pass first-touch (measured 8.6 s
@@ -522,74 +453,32 @@ object DedupIndex {
     // path — every abort above throws before this line — and the paths
     // re-resolve AFTER the commits, so a crashed flip never warms a
     // stale generation.
+    val fs = VFS(spark)
+    val (data, sigs) = (dataTable(uri), sigsTable(uri))
     graft.storage.PointIndex.warmAsync(spark,
-      (s"$uri#data", liveDataPath(spark, uri)),
-      (s"$uri#sigs", liveSigsPath(spark, uri)))
+      slot(data) -> data.basePath(fs), slot(sigs) -> sigs.basePath(fs))
   }
 
   /** BOUNDED maintenance (r16): fold ONLY the inc tier — coalesce the
     * one-file-per-append sig/bucket files into few sorted files via the
-    * inc tier's own generation flip. Cost is O(appends since the last
-    * MAJOR compact); the base corpus is never read or rewritten, which
-    * is what makes this safe to run inside a streaming foreachBatch at
-    * any index size (the in-loop `compactEvery` default). File-count
-    * growth — the measured probe tax — resets each fold; bucket-range
-    * sorting within the folded files restores row-group pruning over
-    * the inc tier. Run [[compact]] (major) during lulls to fold the
-    * accumulated inc tier into the base and re-enforce the at-rest
-    * bucket cap globally. Reader-safe (flip); single-writer vs appends
-    * (guarded — a mid-fold append aborts the flip loudly). */
+    * inc tier's own generation flip
+    * ([[graft.storage.TieredTable.minorFold]]). Cost is O(appends since
+    * the last MAJOR compact); the base corpus is never read or
+    * rewritten, which is what makes this safe to run inside a streaming
+    * foreachBatch at any index size (the in-loop `compactEvery`
+    * default). File-count growth — the measured probe tax — resets each
+    * fold; bucket-range sorting within the folded files restores
+    * row-group pruning over the inc tier. No cap re-enforcement (probe
+    * applies the exact corpus ∪ batch cap itself); run [[compact]]
+    * (major) during lulls to fold the accumulated inc tier into the
+    * base and re-enforce the at-rest bucket cap globally. Reader-safe
+    * (flip); single-writer vs appends (guarded — a mid-fold append
+    * aborts the flip loudly). */
   def minorCompact(spark: SparkSession, uri: String,
       filesPerBand: Int = 1): Unit = {
     val p = readParams(spark, uri)
-    val fs = VFS(spark)
-    val dataIncBefore = graft.storage.VersionedDir.liveListing(fs, uri, "data_inc")
-    if (graft.storage.VersionedDir.hasDataFiles(dataIncBefore)) {
-      val cur = liveDataIncPath(spark, uri)
-      // zero-row guard (mirrors the sigs tier): legacy empty-append
-      // files hold no rows — folding them would rewrite and flip an
-      // empty generation every cadence for nothing. append() now skips
-      // empty batches entirely, so this triggers only on pre-existing
-      // zero-row files, which the next MAJOR compact retires.
-      val nIncData = spark.read.parquet(cur).count()
-      if (nIncData > 0) {
-        val next = graft.storage.VersionedDir.next(fs, uri, "data_inc")
-        // exact-row distinct rides the fold's own shuffle for free: a
-        // crash-replayed append's duplicate rows heal HERE (bounding the
-        // probe's raw-count cap inflation to one cadence), while
-        // changed-text re-appends keep both rows (different sigs) per
-        // the unique-id contract. No cap re-enforcement (probe applies
-        // the exact corpus ∪ batch cap itself).
-        spark.read.parquet(cur)
-          .distinct()
-          .repartitionByRange(math.max(1, p.bands * filesPerBand),
-            col("band"), col("bucket"))
-          .sortWithinPartitions("band", "bucket")
-          .write.mode("overwrite")
-          .options(graft.storage.Encryption.dirWriteOptions(spark, uri))
-          .parquet(next)
-        graft.storage.VersionedDir.commitGuarded(fs, uri, "data_inc", next,
-          dataIncBefore, grace = 2)
-      }
-    }
-    val sigsIncBefore = graft.storage.VersionedDir.liveListing(fs, uri, "sigs_inc")
-    if (graft.storage.VersionedDir.hasDataFiles(sigsIncBefore)) {
-      val cur = liveSigsIncPath(spark, uri)
-      val nIncSigs = spark.read.parquet(cur).count()
-      if (nIncSigs > 0) {
-        val next = graft.storage.VersionedDir.next(fs, uri, "sigs_inc")
-        spark.read.parquet(cur)
-          .distinct()
-          .repartitionByRange(
-            math.max(1, math.ceil(nIncSigs / 250000.0).toInt), col("id"))
-          .sortWithinPartitions("id")
-          .write.mode("overwrite")
-          .options(graft.storage.Encryption.dirWriteOptions(spark, uri))
-          .parquet(next)
-        graft.storage.VersionedDir.commitGuarded(fs, uri, "sigs_inc", next,
-          sigsIncBefore, grace = 2)
-      }
-    }
+    dataTable(uri).minorFold(spark, Seq("band", "bucket"))(_ => p.bands * filesPerBand)
+    sigsTable(uri).minorFold(spark, Seq("id"))(graft.storage.TieredTable.filesFor)
   }
 
   /** Tier stats + major-compact advisory: base = live data + sigs
@@ -597,9 +486,7 @@ object DedupIndex {
     * only, no data read — cheap enough for an operator poll loop. */
   def maintenanceAdvice(spark: SparkSession,
       uri: String): graft.storage.MaintenanceAdvice =
-    graft.storage.MaintenanceAdvice.of(VFS(spark),
-      Seq(liveDataPath(spark, uri), liveSigsPath(spark, uri)),
-      Seq(liveDataIncPath(spark, uri), liveSigsIncPath(spark, uri)))
+    graft.storage.TieredTable.advice(VFS(spark), dataTable(uri), sigsTable(uri))
 
   /** The probe's base-tier rows served by POINT LOOKUP
     * ([[graft.storage.PointIndex]]) instead of a tier scan — the
@@ -627,24 +514,19 @@ object DedupIndex {
       lease: Option[graft.storage.PointIndex.Lease]): Option[DataFrame] = {
     if (!graft.storage.PointIndex.enabled(spark)) return None
     val fs = VFS(spark)
-    val inc = liveDataIncPath(spark, uri)
-    graft.storage.FlipHooks.at("dedup.read.betweenResolves")
-    val basePath = liveDataPath(spark, uri)
+    val t = dataTable(uri)
+    val (inc, basePath) = t.resolve(fs, "dedup.read.betweenResolves")
     if (!fs.exists(basePath)) return None
-    graft.storage.PointIndex.bucketRows(spark, s"$uri#data", basePath, banded,
+    graft.storage.PointIndex.bucketRows(spark, slot(t), basePath, banded,
         lease)
       .map { baseRows =>
-        val incLive = fs.exists(inc) &&
-          graft.storage.VersionedDir.hasDataFiles(fs.lsFilesRecursive(inc).toSet)
-        if (!incLive) baseRows
-        else {
+        t.incRows(spark, inc).fold(baseRows) { incScan =>
           // the inc leg keeps the scan path's pruning contract: below
           // maxProbeKeys the probe buckets push as an isin literal
           // (footer-stat file/row-group pruning over the fold-sorted
           // inc files); above it, the broadcast semi-join
           val probeKeys = banded.select("bucket").distinct()
             .limit(maxProbeKeys + 1).collect().map(_.getLong(0))
-          val incScan = spark.read.parquet(inc)
           val pruned =
             if (probeKeys.length <= maxProbeKeys)
               incScan.filter(col("bucket").isin(probeKeys: _*))
@@ -666,18 +548,13 @@ object DedupIndex {
       lease: Option[graft.storage.PointIndex.Lease]): Option[DataFrame] = {
     if (!graft.storage.PointIndex.enabled(spark)) return None
     val fs = VFS(spark)
-    val inc = liveSigsIncPath(spark, uri)
-    val basePath = liveSigsPath(spark, uri)
+    val t = sigsTable(uri)
+    val (inc, basePath) = t.resolve(fs)
     if (!fs.exists(basePath)) return None
-    graft.storage.PointIndex.sigRows(spark, s"$uri#sigs", basePath, mids,
-        lease)
+    graft.storage.PointIndex.sigRows(spark, slot(t), basePath, mids, lease)
       .map { baseSigs =>
-        val incLive = fs.exists(inc) &&
-          graft.storage.VersionedDir.hasDataFiles(fs.lsFilesRecursive(inc).toSet)
-        if (!incLive) baseSigs
-        else spark.read.parquet(inc)
-          .join(broadcast(mids), Seq("id"), "left_semi")
-          .unionByName(baseSigs)
+        t.incRows(spark, inc).fold(baseSigs)(
+          _.join(broadcast(mids), Seq("id"), "left_semi").unionByName(baseSigs))
       }
   }
 

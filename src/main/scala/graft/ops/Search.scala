@@ -322,53 +322,36 @@ object Search {
   // Persisted inverted index
   // -------------------------------------------------------------------
 
-  /** Index layout: `postings/tb=NN/` term-hash-bucketed postings
-    * (term, doc_id, tf, dl), each bucket's files SORTED by term so
-    * parquet footer stats prune to the probed terms; `_stats.json`
-    * holds the exact-integer corpus stats (nDocs, sumDl) that BM25
-    * needs globally. There is NO separate document-frequency table:
-    * a term's postings all live in its bucket, so a probe recomputes
-    * exact df from the rows it reads anyway — which also makes
-    * [[appendToIndex]] trivially correct (postings files + a stats
-    * bump; no global table to rebuild).
-    *
-    * The 100 TB story mirrors [[DedupIndex]]: build once (one corpus
-    * pass, one shuffle), then every query batch reads only the
-    * buckets (static partition pruning on `tb`) and row groups
-    * (term-range footer stats) its terms live in — steady-state cost
-    * proportional to the query terms' postings, never the corpus. */
-  case class IndexParams(buckets: Int)
-
   private def statsPath(uri: String) = s"$uri/_stats.json"
   private def paramsPath(uri: String) = s"$uri/_params.json"
   private def postingsPath(uri: String) = s"$uri/postings"
 
-  /** Write options for every postings parquet write. NOTE (r21): a
-    * parquet BLOOM FILTER on `term` was tried here (r20 verdict item
-    * 4) and REVERTED after measurement: (a) the probe already reads
-    * only matching row groups locally (profiled: 0.2 MB input),
-    * (b) parquet silently DROPS the bloom whenever a chunk is fully
-    * dictionary-encoded — the dictionary is already exact membership,
-    * and the in()-pushdown threshold raised in GraftSession lets the
-    * reader prune on it — and (c) where it did materialize it added an
-    * erratic ~66 KB/file footer that broke the tier-size monotonicity
-    * [[maintenanceAdvice]] compares (a 2-doc base read LARGER than its
-    * 4x-corpus major compaction). Term-sorted files + footer stats +
-    * dictionary in() pruning are the honest layout. */
-  private def postingsWriteOptions(spark: org.apache.spark.sql.SparkSession,
-      uri: String): Map[String, String] =
-    graft.storage.Encryption.dirWriteOptions(spark, uri)
-
   private def termBucket(term: Column, buckets: Int): Column =
     pmod(xxhash64(term), lit(buckets.toLong)).cast("int")
 
-  /** Read a postings dir, tolerating the empty-corpus case: Spark
-    * writes an EMPTY partitioned parquet dir with no schema footprint
-    * (just _SUCCESS), which `read.parquet` then refuses to infer —
-    * an index built over zero docs (the streaming bootstrap shape)
-    * must still probe cleanly. doc_id falls back to long. */
-  private def readPostingsOrEmpty(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = readPostingsMulti(spark, Seq(path), None)
+  /** The ONE postings writer: `post` (term, doc_id, tf, dl) bucketed
+    * into `tb=NN/` dirs by term hash, each bucket's files sorted by
+    * (term, doc_id) so footer stats prune to the probed terms. Build,
+    * batch append, minor fold and major all write through here.
+    *
+    * NOTE (r21): a parquet BLOOM FILTER on `term` was tried here (r20
+    * verdict item 4) and REVERTED after measurement: (a) the probe
+    * already reads only matching row groups locally (profiled: 0.2 MB
+    * input), (b) parquet silently DROPS the bloom whenever a chunk is
+    * fully dictionary-encoded — the dictionary is already exact
+    * membership, and the in()-pushdown threshold raised in GraftSession
+    * lets the reader prune on it — and (c) where it did materialize it
+    * added an erratic ~66 KB/file footer that broke the tier-size
+    * monotonicity [[maintenanceAdvice]] compares (a 2-doc base read
+    * LARGER than its 4x-corpus major compaction). Term-sorted files +
+    * footer stats + dictionary in() pruning are the honest layout. */
+  private def writePostings(post: DataFrame, uri: String, buckets: Int,
+      target: String): Unit =
+    post.withColumn("tb", termBucket(col("term"), buckets))
+      .repartition(col("tb"))
+      .sortWithinPartitions(col("term"), col("doc_id"))
+      .write.options(graft.storage.Encryption.dirWriteOptions(post.sparkSession, uri))
+      .partitionBy("tb").parquet(target)
 
   /** ONE flat scan over the base generation plus every pending batch
     * dir — never a union of per-dir reads. The per-leg union shape
@@ -399,7 +382,7 @@ object Search {
     // dirs and _/. sidecars (_SUCCESS, _genstats.json, .crc). Anything
     // else — flat data files, a different partition column, a foreign
     // layout — would otherwise be dropped from every probe and
-    // compaction (readIndexStats never validates the layout)
+    // compaction (the stats sidecars never validate the layout)
     entries.find { e =>
       val name = e.substring(e.lastIndexOf('/') + 1)
       !name.startsWith("tb=") && !name.startsWith("_") && !name.startsWith(".")
@@ -426,29 +409,36 @@ object Search {
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], PostingsSchema)
 
-  private def writeStats(spark: org.apache.spark.sql.SparkSession,
-      uri: String, nDocs: Long, sumDl: Long, buckets: Int): Unit = {
-    import graft.core.Json._
-    val fs = graft.storage.VFS(spark)
-    graft.storage.Encryption.dirJsonWrite(spark, uri, statsPath(uri),
-      render(JObj(Seq("nDocs" -> JLong(nDocs), "sumDl" -> JLong(sumDl)))))
-    graft.storage.Encryption.dirJsonWrite(spark, uri, paramsPath(uri),
-      render(JObj(Seq("buckets" -> JLong(buckets), "layout" -> JLong(1)))))
-  }
+  private def readJson(spark: org.apache.spark.sql.SparkSession, uri: String,
+      path: String): graft.core.Json.JObj =
+    graft.core.Json.parse(graft.storage.Encryption.dirJsonRead(spark, uri, path)).obj
 
-  def readIndexStats(spark: org.apache.spark.sql.SparkSession,
-      uri: String): (Long, Long, Int) = {
-    import graft.core.Json._
-    val fs = graft.storage.VFS(spark)
-    val s = parse(graft.storage.Encryption.dirJsonRead(spark, uri, statsPath(uri))).obj
-    val p = parse(graft.storage.Encryption.dirJsonRead(spark, uri, paramsPath(uri))).obj
-    def l(o: JObj, k: String): Long =
-      o(k).getOrElse(sys.error(s"bm25 index missing $k")).long
-    (l(s, "nDocs"), l(s, "sumDl"), l(p, "buckets").toInt)
-  }
+  private def long(o: graft.core.Json.JObj, k: String): Long =
+    o(k).getOrElse(sys.error(s"bm25 index missing $k")).long
+
+  /** Term bucket count, pinned in `_params.json` at build. */
+  private def readBuckets(spark: org.apache.spark.sql.SparkSession,
+      uri: String): Int = long(readJson(spark, uri, paramsPath(uri)), "buckets").toInt
 
   /** Build (or rebuild) the BM25 index at `uri`. One corpus text pass
-    * (the postings aggregation), one range write. */
+    * (the postings aggregation), one range write.
+    *
+    * Index layout: `postings/tb=NN/` term-hash-bucketed postings
+    * (term, doc_id, tf, dl), each bucket's files SORTED by term so
+    * parquet footer stats prune to the probed terms; `_stats.json`
+    * holds the exact-integer corpus stats (nDocs, sumDl) that BM25
+    * needs globally and `_params.json` the bucket count. There is NO
+    * separate document-frequency table: a term's postings all live in
+    * its bucket, so a probe recomputes exact df from the rows it reads
+    * anyway — which also makes [[appendBatchToIndex]] trivially
+    * correct (postings files + a stats sidecar; no global table to
+    * rebuild).
+    *
+    * The 100 TB story mirrors [[DedupIndex]]: build once (one corpus
+    * pass, one shuffle), then every query batch reads only the
+    * buckets (static partition pruning on `tb`) and row groups
+    * (term-range footer stats) its terms live in — steady-state cost
+    * proportional to the query terms' postings, never the corpus. */
   def buildIndex(docs: DataFrame, idCol: String, textCol: String,
       uri: String, buckets: Int = 64,
       encryptionKey: Option[String] = None): Unit = {
@@ -460,50 +450,25 @@ object Search {
     require(buckets > 0 && buckets <= 4096,
       s"buckets must be in [1, 4096], got $buckets (the probe path " +
         "pushes one isin literal per bucket into every postings scan)")
+    import graft.core.Json._
     val spark = docs.sparkSession
     graft.storage.VFS(spark).delete(uri)
     // postings carry the corpus TERMS — an encrypted corpus needs an
     // encrypted index. The dir marker makes appends/compactions
     // inherit the key with no further plumbing.
     encryptionKey.foreach(id => graft.storage.Encryption.markDir(spark, uri, id))
-    postings(docs, idCol, textCol)
-      .withColumn("tb", termBucket(col("term"), buckets))
-      .repartition(col("tb"))
-      .sortWithinPartitions(col("term"), col("doc_id"))
-      .write.options(postingsWriteOptions(spark, uri))
-      .partitionBy("tb").parquet(postingsPath(uri))
+    writePostings(postings(docs, idCol, textCol), uri, buckets, postingsPath(uri))
     // stats from the JUST-WRITTEN postings (sum(dl) = sum(tf)) + a
-    // metadata-only row count — no second corpus text pass
-    val sumDl = Option(readPostingsOrEmpty(spark, postingsPath(uri))
+    // metadata-only row count — no second corpus text pass. The read
+    // tolerates an index built over zero docs (the streaming bootstrap
+    // shape), whose postings dir holds no tb= dirs.
+    val sumDl = Option(readPostingsMulti(spark, Seq(postingsPath(uri)), None)
       .agg(sum(col("tf"))).head().get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
-    writeStats(spark, uri, docs.count(), sumDl, buckets)
-  }
-
-  /** Incrementally add docs: batch-sized postings files per touched
-    * bucket + an exact stats bump. df needs no maintenance (recomputed
-    * at probe time from the complete per-term postings); idf and the
-    * length normalizer shift for ALL queries as the corpus grows —
-    * exactly BM25's definition, and the index path stays equal to an
-    * inline run over corpus ∪ batch.
-    *
-    * NOT idempotent (a replay double-appends) and writes the legacy
-    * root stats that a compacted generation supersedes — for streaming
-    * / retry-prone ingest use [[appendBatchToIndex]] + [[compactIndex]]
-    * instead, and don't mix the two append styles on one index. */
-  def appendToIndex(docs: DataFrame, idCol: String, textCol: String,
-      uri: String): Unit = {
-    val spark = docs.sparkSession
-    val (n0, s0, buckets) = readIndexStats(spark, uri)
-    val batch = postings(docs, idCol, textCol).localCheckpoint(true)
-    batch.withColumn("tb", termBucket(col("term"), buckets))
-      .repartition(col("tb"))
-      .sortWithinPartitions(col("term"), col("doc_id"))
-      .write.options(postingsWriteOptions(spark, uri))
-      .mode("append").partitionBy("tb").parquet(postingsPath(uri))
-    val s1 = Option(batch.agg(sum(col("tf"))).head().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-    writeStats(spark, uri, n0 + docs.count(), s0 + s1, buckets)
+    graft.storage.Encryption.dirJsonWrite(spark, uri, statsPath(uri),
+      render(JObj(Seq("nDocs" -> JLong(docs.count()), "sumDl" -> JLong(sumDl)))))
+    graft.storage.Encryption.dirJsonWrite(spark, uri, paramsPath(uri),
+      render(JObj(Seq("buckets" -> JLong(buckets), "layout" -> JLong(1)))))
   }
 
   // --- incremental batch appends (idempotent, streaming-safe) ---
@@ -517,9 +482,25 @@ object Search {
   private case class IncDir(dir: String, tag: String, nDocs: Long,
       sumDl: Long, tags: Seq[String])
 
+  /** One snapshot of the index, from ONE listing of the inc tier: the
+    * live base postings generation with its exact stats (nDocs,
+    * sumDl), the base's already-folded tag set, the fold-number
+    * high-water mark, and every committed inc dir. */
+  private case class IncState(base: String, baseDocs: Long, baseDl: Long,
+      folded: Set[String], foldHw: Int, committed: Seq[IncDir]) {
+    /** (retired, pending): committed dirs already subsumed by the base
+      * generation's folded tag set or by another committed fold's tag
+      * list — grace dirs, kept one maintenance cycle for in-flight
+      * probes — and the rest. */
+    def retiredAndPending: (Seq[IncDir], Seq[IncDir]) = {
+      val excluded = folded ++ committed.flatMap(_.tags)
+      committed.partition(d => excluded(d.tag))
+    }
+  }
+
   /** All COMMITTED inc dirs (stats sidecar present — it doubles as the
-    * commit marker) plus the base generation's already-folded tag set.
-    * With `retireCrashed` (MAINTENANCE verbs only — never a read path),
+    * commit marker) plus the base generation's state. With
+    * `retireCrashed` (MAINTENANCE verbs only — never a read path),
     * also deletes stats-less `fold-` dirs: fold tags are
     * maintenance-owned (reserved in [[appendBatchToIndex]]) and
     * maintenance is single-writer, so a marker-less fold dir seen by a
@@ -527,16 +508,24 @@ object Search {
     * same dir seen by a concurrent PROBE is the current fold's
     * in-flight write, which a read path must ignore, not delete. */
   private def incCommitted(spark: org.apache.spark.sql.SparkSession,
-      uri: String, retireCrashed: Boolean = false)
-      : (String, Set[String], Seq[IncDir]) = {
-    import graft.core.Json._
+      uri: String, retireCrashed: Boolean = false): IncState = {
     val fs = graft.storage.VFS(spark)
     val base = graft.storage.VersionedDir.resolve(fs, uri, "postings")
     val genStatsPath = s"$base/_genstats.json"
-    val folded =
-      if (!fs.exists(genStatsPath)) Set.empty[String]
-      else parse(graft.storage.Encryption.dirJsonRead(spark, uri, genStatsPath))
-        .obj("tags").map(_.arr.map(_.str).toSet).getOrElse(Set.empty[String])
+    // ONE parse of the generation's `_genstats.json`: exact base stats,
+    // folded tags and the persisted fold high-water mark. The build
+    // generation has none — its stats are the root `_stats.json`, and
+    // nothing is folded into it yet.
+    val (baseDocs, baseDl, folded, hw) =
+      if (fs.exists(genStatsPath)) {
+        val o = readJson(spark, uri, genStatsPath)
+        (long(o, "nDocs"), long(o, "sumDl"),
+          o("tags").map(_.arr.map(_.str).toSet).getOrElse(Set.empty[String]),
+          o("foldHw").map(_.long.toInt).getOrElse(0))
+      } else {
+        val o = readJson(spark, uri, statsPath(uri))
+        (long(o, "nDocs"), long(o, "sumDl"), Set.empty[String], 0)
+      }
     // race injection: a major can be forced AFTER the base+genstats
     // resolution, BEFORE the inc listing — the old generation and its
     // grace dirs must still read as a consistent pre-flip view
@@ -550,9 +539,8 @@ object Search {
         if (retireCrashed && tag.startsWith(FoldTagPrefix)) fs.delete(d)
         None
       } else try {
-        val o = parse(graft.storage.Encryption.dirJsonRead(spark, uri,
-          s"$d/_stats.json")).obj
-        Some(IncDir(d, tag, o("nDocs").get.long, o("sumDl").get.long,
+        val o = readJson(spark, uri, s"$d/_stats.json")
+        Some(IncDir(d, tag, long(o, "nDocs"), long(o, "sumDl"),
           o("tags").map(_.arr.map(_.str)).getOrElse(Nil)))
       } catch {
         // the dir vanished between the listing and this read: a
@@ -563,73 +551,49 @@ object Search {
         case _: java.io.FileNotFoundException => None
       }
     }
-    (base, folded, committed)
-  }
-
-  /** Exact base-generation stats (nDocs, sumDl): the generation's
-    * `_genstats.json`, or the legacy root sidecar for pre-tiered
-    * indexes (whole-index stats ARE base stats there — no inc tier
-    * existed). */
-  private def baseStats(spark: org.apache.spark.sql.SparkSession,
-      uri: String, base: String): (Long, Long) = {
-    import graft.core.Json._
-    val fs = graft.storage.VFS(spark)
-    val genStatsPath = s"$base/_genstats.json"
-    if (fs.exists(genStatsPath)) {
-      val o = parse(graft.storage.Encryption.dirJsonRead(spark, uri, genStatsPath)).obj
-      (o("nDocs").get.long, o("sumDl").get.long)
-    } else {
-      val (n, s, _) = readIndexStats(spark, uri)
-      (n, s)
-    }
-  }
-
-  /** Persisted fold-number high-water mark from the base generation's
-    * `_genstats.json` (0 when absent — pre-r18 generations and fresh
-    * indexes). Keeps minor-fold numbering monotonic across MAJOR
-    * compacts, whose genstats rewrite resets the folded-tags set to
-    * the compaction snapshot and would otherwise forget every earlier
-    * fold number. */
-  private def baseFoldHw(spark: org.apache.spark.sql.SparkSession,
-      uri: String, base: String): Int = {
-    import graft.core.Json._
-    val fs = graft.storage.VFS(spark)
-    val genStatsPath = s"$base/_genstats.json"
-    if (!fs.exists(genStatsPath)) 0
-    else parse(graft.storage.Encryption.dirJsonRead(spark, uri, genStatsPath))
-      .obj("foldHw").map(_.long.toInt).getOrElse(0)
+    // fold-number high-water mark: max over every tag this index still
+    // remembers (dirs present, their subsumed tags, the base's folded
+    // set) AND the persisted mark — a major compact rewrites the folded
+    // set from its own snapshot, so without the carry a post-major fold
+    // counter would restart at 1 and could collide with a stale grace
+    // dir. A probe holding a retired fold path can then never see that
+    // path re-materialize with different content within its grace window.
+    val foldHw = (committed.map(_.tag) ++ committed.flatMap(_.tags) ++ folded)
+      .flatMap(foldNum).maxOption.getOrElse(0).max(hw)
+    IncState(base, baseDocs, baseDl, folded, foldHw, committed)
   }
 
   /** The live index state: base postings generation (VersionedDir —
     * compaction flips reader-safely), the PENDING inc dirs — committed
     * batch/fold dirs not yet subsumed by the base generation's folded
-    * tag set or by another committed fold's tag list — and the summed
-    * exact stats. A batch dir only counts once its `_stats.json`
-    * exists (written AFTER its postings — the sidecar doubles as the
-    * commit marker); retired-but-not-yet-deleted grace dirs (one
-    * maintenance cycle, for in-flight probes) are excluded from both
-    * the scan roots and the stats, so a crash between any commit and
-    * its source cleanup never double-counts. */
+    * tag set or by another committed fold's tag list — the summed
+    * exact stats, and the bucket count. A batch dir only counts once
+    * its `_stats.json` exists (written AFTER its postings — the sidecar
+    * doubles as the commit marker); retired-but-not-yet-deleted grace
+    * dirs (one maintenance cycle, for in-flight probes) are excluded
+    * from both the scan roots and the stats, so a crash between any
+    * commit and its source cleanup never double-counts. Reads each
+    * index-level sidecar once. */
   private def liveState(spark: org.apache.spark.sql.SparkSession,
       uri: String): (String, Seq[String], Long, Long, Int) = {
-    val (base, folded, committed) = incCommitted(spark, uri)
-    val excluded = folded ++ committed.flatMap(_.tags)
-    val pending = committed.filterNot(d => excluded(d.tag))
-    val (n0, s0) = baseStats(spark, uri, base)
-    val buckets = readIndexStats(spark, uri)._3
-    (base, pending.map(_.dir),
-      n0 + pending.map(_.nDocs).sum, s0 + pending.map(_.sumDl).sum, buckets)
+    val st = incCommitted(spark, uri)
+    val pending = st.retiredAndPending._2
+    (st.base, pending.map(_.dir), st.baseDocs + pending.map(_.nDocs).sum,
+      st.baseDl + pending.map(_.sumDl).sum, readBuckets(spark, uri))
   }
 
-  /** IDEMPOTENT per-batch append — the streaming-safe form of
-    * [[appendToIndex]]: the batch's postings land in their own
-    * `postings_inc/<tag>/` directory with a per-batch stats sidecar
-    * written last. Replaying the same tag (micro-batch retry, crash
-    * replay) OVERWRITES the same directory — effectively-once, where
-    * the plain parquet-append + global-stats-bump of [[appendToIndex]]
-    * would double postings AND stats. Probes union the base
-    * generation with pending batch dirs; [[compactIndex]] folds them
-    * into a new base generation reader-safely. */
+  /** IDEMPOTENT per-batch append — the streaming-safe append: the
+    * batch's postings land in their own `postings_inc/<tag>/`
+    * directory with a per-batch stats sidecar written last. Replaying
+    * the same tag (micro-batch retry, crash replay) OVERWRITES the same
+    * directory — effectively-once: postings and stats are never
+    * doubled. df needs no maintenance (recomputed at probe time from
+    * the complete per-term postings); idf and the length normalizer
+    * shift for ALL queries as the corpus grows — exactly BM25's
+    * definition, and the index path stays equal to an inline run over
+    * corpus ∪ batches. Probes union the base generation with pending
+    * batch dirs; [[minorCompactIndex]] and [[compactIndex]] fold them
+    * reader-safely. */
   def appendBatchToIndex(docs: DataFrame, idCol: String, textCol: String,
       uri: String, tag: String): Unit = {
     require(tag.nonEmpty && !tag.contains('/'), s"bad batch tag '$tag'")
@@ -643,15 +607,10 @@ object Search {
     // drip zero-row tag dirs that every probe lists and every fold
     // rewrites (replaying an empty batch re-skips — still idempotent)
     if (docs.isEmpty) return
-    val buckets = readIndexStats(spark, uri)._3
     val dir = s"${incPath(uri)}/$tag"
     fs.delete(dir)
     val batch = postings(docs, idCol, textCol).localCheckpoint(true)
-    batch.withColumn("tb", termBucket(col("term"), buckets))
-      .repartition(col("tb"))
-      .sortWithinPartitions(col("term"), col("doc_id"))
-      .write.options(postingsWriteOptions(spark, uri))
-      .partitionBy("tb").parquet(s"$dir/postings")
+    writePostings(batch, uri, readBuckets(spark, uri), s"$dir/postings")
     val s1 = Option(batch.agg(sum(col("tf"))).head().get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
     graft.storage.Encryption.dirJsonWrite(spark, uri, s"$dir/_stats.json",
@@ -692,32 +651,17 @@ object Search {
       uri: String): Unit = {
     import graft.core.Json._
     val fs = graft.storage.VFS(spark)
-    val (base, folded, committed) = incCommitted(spark, uri, retireCrashed = true)
-    val excluded = folded ++ committed.flatMap(_.tags)
-    val (retired, pending) = committed.partition(d => excluded(d.tag))
+    val st = incCommitted(spark, uri, retireCrashed = true)
+    val (retired, pending) = st.retiredAndPending
     // retired dirs have had their one-cycle grace: clean them up even
     // when there is nothing new to fold
     if (pending.size <= 1) { retired.foreach(d => fs.delete(d.dir)); return }
-    val buckets = readIndexStats(spark, uri)._3
-    // fold numbers never reuse a LIVE number: max over every tag this
-    // index still remembers (dirs present, their subsumed tags, the
-    // base's folded set, AND the persisted high-water mark — a major
-    // compact rewrites the folded set from its own snapshot, so
-    // without the high-water carry a post-major fold counter would
-    // restart at 1 and could collide with a stale grace dir), so a
-    // probe holding a retired fold path can never see that path
-    // re-materialize with different content within its grace window
-    val nFold = ((committed.map(_.tag) ++ committed.flatMap(_.tags) ++ folded)
-      .flatMap(foldNum).maxOption.getOrElse(0)
-      .max(baseFoldHw(spark, uri, base))) + 1
-    val dir = f"${incPath(uri)}/$FoldTagPrefix$nFold%06d"
+    // fold numbers never reuse a LIVE number (see IncState.foldHw)
+    val dir = f"${incPath(uri)}/$FoldTagPrefix${st.foldHw + 1}%06d"
     fs.delete(dir)
-    readPostingsMulti(spark, pending.map(d => s"${d.dir}/postings"), None)
-      .withColumn("tb", termBucket(col("term"), buckets))
-      .repartition(col("tb"))
-      .sortWithinPartitions(col("term"), col("doc_id"))
-      .write.options(postingsWriteOptions(spark, uri))
-      .partitionBy("tb").parquet(s"$dir/postings")
+    writePostings(
+      readPostingsMulti(spark, pending.map(d => s"${d.dir}/postings"), None),
+      uri, readBuckets(spark, uri), s"$dir/postings")
     val tags = (pending.map(_.tag) ++ pending.flatMap(_.tags)).distinct
     graft.storage.Encryption.dirJsonWrite(spark, uri, s"$dir/_stats.json",
       render(JObj(Seq("nDocs" -> JLong(pending.map(_.nDocs).sum),
@@ -749,22 +693,15 @@ object Search {
     // one missed — its rows and stats would land in the new
     // generation while its tag stayed off the folded list, and the
     // next read would double-count it.)
-    val (base, folded, committed) = incCommitted(spark, uri, retireCrashed = true)
-    val excluded = folded ++ committed.flatMap(_.tags)
-    val (retired, pendingDirs) = committed.partition(d => excluded(d.tag))
+    val st = incCommitted(spark, uri, retireCrashed = true)
+    val (retired, pendingDirs) = st.retiredAndPending
     if (pendingDirs.isEmpty) { retired.foreach(d => fs.delete(d.dir)); return }
-    val (n0, s0) = baseStats(spark, uri, base)
-    val n = n0 + pendingDirs.map(_.nDocs).sum
-    val sumDl = s0 + pendingDirs.map(_.sumDl).sum
-    val buckets = readIndexStats(spark, uri)._3
+    val n = st.baseDocs + pendingDirs.map(_.nDocs).sum
+    val sumDl = st.baseDl + pendingDirs.map(_.sumDl).sum
     val target = graft.storage.VersionedDir.next(fs, uri, "postings")
-    val all = readPostingsMulti(spark,
-        base +: pendingDirs.map(d => s"${d.dir}/postings"), None)
-      .withColumn("tb", termBucket(col("term"), buckets))
-    all.repartition(col("tb"))
-      .sortWithinPartitions(col("term"), col("doc_id"))
-      .write.options(postingsWriteOptions(spark, uri))
-      .partitionBy("tb").parquet(target)
+    writePostings(readPostingsMulti(spark,
+        st.base +: pendingDirs.map(d => s"${d.dir}/postings"), None),
+      uri, readBuckets(spark, uri), target)
     // the new folded set covers EVERY dir in the listing snapshot —
     // pending (now baked into the generation) AND retired grace dirs
     // (already excluded, but excluded via the OLD genstats: dropping
@@ -774,16 +711,13 @@ object Search {
     // their postings)
     val tags = ((pendingDirs ++ retired).map(_.tag) ++
       (pendingDirs ++ retired).flatMap(_.tags)).distinct
-    // fold-number high-water mark survives the genstats rewrite: the
-    // folded set resets to this snapshot's tags, so numbers seen only
-    // in the OLD set would otherwise be forgotten and reused by the
-    // next minor fold
-    val hw = ((committed.map(_.tag) ++ committed.flatMap(_.tags) ++ folded)
-      .flatMap(foldNum).maxOption.getOrElse(0))
-      .max(baseFoldHw(spark, uri, base))
+    // the fold-number high-water mark survives the genstats rewrite:
+    // the folded set resets to this snapshot's tags, so numbers seen
+    // only in the OLD set would otherwise be forgotten and reused by
+    // the next minor fold
     graft.storage.Encryption.dirJsonWrite(spark, uri, s"$target/_genstats.json",
       render(JObj(Seq("nDocs" -> JLong(n), "sumDl" -> JLong(sumDl),
-        "tags" -> JArr(tags.map(JStr)), "foldHw" -> JLong(hw)))))
+        "tags" -> JArr(tags.map(JStr)), "foldHw" -> JLong(st.foldHw)))))
     graft.storage.VersionedDir.commit(fs, uri, "postings", target)
     // race injection: the commit → cleanup window (retired grace dirs
     // still on disk; the rewritten genstats must keep them excluded —
@@ -798,9 +732,8 @@ object Search {
     * the fold that subsumed them). Listings only, no data read. */
   def maintenanceAdvice(spark: org.apache.spark.sql.SparkSession,
       uri: String): graft.storage.MaintenanceAdvice = {
-    val fs = graft.storage.VFS(spark)
     val (base, incs, _, _, _) = liveState(spark, uri)
-    graft.storage.MaintenanceAdvice.of(fs, Seq(base),
+    graft.storage.MaintenanceAdvice.of(graft.storage.VFS(spark), Seq(base),
       incs.map(d => s"$d/postings"))
   }
 

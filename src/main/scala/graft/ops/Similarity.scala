@@ -723,14 +723,19 @@ object Similarity {
       .parquet(cellsIncPath(spark, uri))
   }
 
-  /** Live INC-tier cells dir (r16): [[appendToIvfIndex]] writes here —
-    * its own [[graft.storage.VersionedDir]] base — so that
-    * [[minorCompactIvfIndex]] can fold appends WITHOUT rewriting the
-    * base cells (bounded in-loop streaming maintenance, same tiering
-    * as [[graft.ops.DedupIndex]]). Pre-r16 indexes have no inc dir and
-    * read identically. */
+  /** The cells as one tiered table ([[graft.storage.TieredTable]]):
+    * base `cells` plus the INC tier `cells_inc` that
+    * [[appendToIvfIndex]] writes, so that [[minorCompactIvfIndex]] can
+    * fold appends WITHOUT rewriting the base cells (bounded in-loop
+    * streaming maintenance, the same lifecycle as
+    * [[graft.ops.DedupIndex]]). Readers always resolve complete
+    * generations, even concurrently with (or after a crash of)
+    * [[compactIvfIndex]]. */
+  private def cellsTable(uri: String) = graft.storage.TieredTable(uri, "cells")
+
+  /** Live INC-tier cells dir. */
   def cellsIncPath(spark: org.apache.spark.sql.SparkSession, uri: String): String =
-    graft.storage.VersionedDir.resolve(graft.storage.VFS(spark), uri, "cells_inc")
+    cellsTable(uri).incPath(graft.storage.VFS(spark))
 
   /** Every reader's view of the cells: base ∪ inc. TWO partitioned
     * legs (never one multi-root read — key=value partition discovery
@@ -738,26 +743,20 @@ object Similarity {
     * 2; the probed `centroid_id isin` prunes partition dirs in both. */
   private[graft] def readCellsAll(spark: org.apache.spark.sql.SparkSession,
       uri: String): DataFrame = {
-    // INC resolved first — see readCellsAllFrom's ordering contract
-    val inc = cellsIncPath(spark, uri)
-    readCellsAllFrom(spark, uri, cellsPath(spark, uri), inc)
+    val (inc, base) = cellsTable(uri).resolve(graft.storage.VFS(spark))
+    readCellsAllFrom(spark, uri, base, inc)
   }
 
   /** [[readCellsAll]] against PRE-RESOLVED tier paths: callers that
     * also read the centroid sidecar must take base + geometry from ONE
-    * resolution ([[cellsPath]] once) — a re-splitting major flips
-    * cells AND centroids together, and geometry from generation G
-    * with cells from G+1 would prune by the wrong cells. The INC path
-    * must be resolved BEFORE the base: a read racing a major's
-    * base-flip → inc-reset window then sees appended rows TWICE (old
-    * inc grace copy + new base — the documented transient, healed by
-    * the fold's distinct and tolerated by top-k) instead of NOT AT ALL
-    * (old base + new reset-empty inc — rows transiently vanish, and a
-    * dedup probe would let a real duplicate through). */
+    * resolution — a re-splitting major flips cells AND centroids
+    * together, and geometry from generation G with cells from G+1
+    * would prune by the wrong cells. Resolve both tiers with
+    * [[graft.storage.TieredTable.resolve]] (inc first: a read racing a
+    * major sees appended rows twice, never not at all). */
   private def readCellsAllFrom(spark: org.apache.spark.sql.SparkSession,
       uri: String, basePath: String, inc: String,
       baseFilter: Option[Column] = None): DataFrame = {
-    val fs = graft.storage.VFS(spark)
     val base0 = spark.read.parquet(basePath)
     // baseFilter applies to the BASE leg only, BEFORE layout columns
     // drop: a two-level probe prunes the base's group_id partition
@@ -767,9 +766,7 @@ object Similarity {
     // derivable from the geometry sidecar — never part of the rows
     val base = if (base1.columns.contains("group_id")) base1.drop("group_id")
       else base1
-    // a just-reset inc generation is an EMPTY dir (no schema to infer):
-    // only read the tier when it actually holds files
-    if (fs.lsFilesRecursive(inc).exists(_.endsWith(".parquet"))) {
+    cellsTable(uri).incRows(spark, inc).fold(base) { incLeg =>
       // flat inc files carry centroid_id as a DATA column (long); a
       // FLAT base leg's is partition-inferred (int). Align by casting
       // the BASE side UP — partition pruning still evaluates predicates
@@ -782,34 +779,18 @@ object Similarity {
         if (base.schema("centroid_id").dataType ==
             org.apache.spark.sql.types.LongType) base
         else base.withColumn("centroid_id", col("centroid_id").cast("long"))
-      aligned.unionByName(spark.read.parquet(inc))
-    } else base
+      aligned.unionByName(incLeg)
+    }
   }
 
   /** reserved cell-file columns (everything else is search payload) */
   private val IvfCellCols: Set[String] =
     Set("neighbor_id", "vec", "codes", "scale", "centroid_id", "group_id")
 
-  /** Live cells directory of a persisted IVF index. Maintenance flips
-    * generations ([[graft.storage.VersionedDir]]): readers always
-    * resolve a complete directory, even concurrently with (or after a
-    * crash of) [[compactIvfIndex]]. */
+  /** Live (base) cells directory of a persisted IVF index. */
   def cellsPath(spark: org.apache.spark.sql.SparkSession, uri: String): String =
-    graft.storage.VersionedDir.resolve(graft.storage.VFS(spark), uri, "cells")
+    cellsTable(uri).basePath(graft.storage.VFS(spark))
 
-  /** Re-write each cell directory of a persisted IVF index into ONE
-    * file: appends accumulate one batch-sized file per append per
-    * cell, and the per-file open cost eventually dominates probe
-    * reads. One pass of the stored vectors — hash-repartitioned on
-    * the cell id (each cell lands whole in one task, parallelism =
-    * cell count) — no centroid retraining, no assignment recompute
-    * (the partition column IS the assignment). The cheap maintenance
-    * verb between appends and a full [[buildIvfIndex]] retrain,
-    * mirroring the dedup index's append → compact → build ladder.
-    * The rewritten cells land in a NEW generation dir committed via
-    * [[graft.storage.VersionedDir]] — concurrent probes keep reading
-    * the old generation until the marker flips, and a crash leaves
-    * the old generation live (no delete-then-rename window). */
   /** Hard cap on re-split cell count — the same partition-dir sanity
     * bound as the search index's bucket cap (a probe touches only
     * nprobe cells regardless, but a cells tree with 10⁶ dirs is a
@@ -826,7 +807,30 @@ object Similarity {
     * growing linearly again. */
   val MaxIvfCellsTwoLevel: Int = 1 << 17
 
-  /** `resplitTargetRows` > 0 makes the major ADAPTIVE: when mean cell
+  /** MAJOR maintenance of a persisted IVF index: fold base ∪ inc into
+    * a new base generation with ONE file per cell, then reset the inc
+    * tier ([[graft.storage.TieredTable.major]]). Appends accumulate one
+    * batch-sized file each, and the per-file open cost eventually
+    * dominates probe reads. One pass of the stored vectors —
+    * hash-repartitioned on the cell id (each cell lands whole in one
+    * task, parallelism = cell count) — no centroid retraining, no
+    * assignment recompute (the stored centroid_id IS the assignment).
+    * The cheap maintenance verb between appends and a full
+    * [[buildIvfIndex]] retrain, mirroring the dedup index's append →
+    * compact → build ladder. Concurrent probes keep reading the old
+    * generation until the marker flips, and a crash leaves the old
+    * generation live (no delete-then-rename window).
+    *
+    * CONSISTENCY WINDOW: between the base flip and the inc reset (or
+    * after a crash/abort there), appended rows exist in BOTH tiers; a
+    * concurrent ad-hoc probe can transiently return a duplicated
+    * neighbor occupying two top-k slots. Deliberately NOT deduped
+    * probe-side (O(index)-per-probe shuffle to guard one instant — see
+    * [[ivfIndexTopK]]); the window is lull-time-only by the
+    * quiesce-appends contract, and this fold's exact-row distinct heals
+    * any crash residue on the next run.
+    *
+    * `resplitTargetRows` > 0 makes the major ADAPTIVE: when mean cell
     * occupancy has outgrown the target — the corpus grew ≥2× past the
     * geometry (hysteresis, so majors don't churn the quantizer) — the
     * fold RE-TRAINS the centroids at `totalRows / target` cells
@@ -839,8 +843,9 @@ object Similarity {
     * new centroids ride INSIDE the new generation (`_centroids.json`)
     * so geometry and cells flip atomically — a concurrent probe reads
     * either (old cells, old centroids) or (new, new), never a mix.
-    * 0 (default) = fixed geometry, the pre-r17 behavior. */
-  /** `maxFlatCells` (default [[MaxIvfCells]]) bounds the FLAT layout:
+    * 0 (default) = fixed geometry, the pre-r17 behavior.
+    *
+    * `maxFlatCells` (default [[MaxIvfCells]]) bounds the FLAT layout:
     * a re-split wanting more cells flips to the TWO-LEVEL layout —
     * fine cells as a sorted data column inside ≤ √k coarse partition
     * dirs, coarse/member tables riding the generation sidecar — so the
@@ -860,141 +865,101 @@ object Similarity {
     * adversarial uniform distribution) closes at ~2× nprobe. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, uri: String,
       resplitTargetRows: Long = 0, maxFlatCells: Int = MaxIvfCells): Unit = {
-    val fs = graft.storage.VFS(spark)
-    // MAJOR maintenance: fold base ∪ inc into a new base generation
-    // (one file per cell), then reset the inc tier. Inc listing taken
-    // FIRST (the single-writer guard basis — appends land there now);
-    // its reset aborts loudly if an append landed mid-compact (rows
-    // live in inc but not the new base). CONSISTENCY WINDOW: between
-    // the base flip and the inc reset (or after a crash/abort there),
-    // appended rows exist in BOTH tiers; a concurrent ad-hoc probe can
-    // transiently return a duplicated neighbor occupying two top-k
-    // slots. Deliberately NOT deduped probe-side (O(index)-per-probe
-    // shuffle to guard one instant — see ivfIndexTopK); the window is
-    // lull-time-only by the quiesce-appends contract, and this fold's
-    // exact-row distinct heals any crash residue on the next run.
-    val incBefore = graft.storage.VersionedDir.liveListing(fs, uri, "cells_inc")
-    val before = graft.storage.VersionedDir.liveListing(fs, uri, "cells")
-    val incPath0 = cellsIncPath(spark, uri) // inc first (single-writer: inert here)
-    val genPath = graft.storage.VersionedDir.resolve(fs, uri, "cells")
-    val (cents0, twoLevel0) = indexGeometryAt(spark, uri, genPath)
-    val nCells = cents0.size
-    val raw = readCellsAllFrom(spark, uri, genPath, incPath0)
-    val payload = indexPayloadAt(spark, uri, genPath)
-      .getOrElse(raw.schema.fieldNames.filterNot(IvfCellCols).toSeq)
-    // sizing from the RAW count (columnar, no shuffle; crash-replay
-    // duplicates inflate it only until this very fold heals them)
-    val wantCells =
-      if (resplitTargetRows <= 0) nCells
-      else math.min(MaxIvfCellsTwoLevel.toLong, math.max(nCells.toLong,
-        math.ceil(raw.count().toDouble / resplitTargetRows).toLong)).toInt
-    val resplit = resplitTargetRows > 0 && wantCells >= 2 * nCells
-    val all = raw.distinct() // exact-row heal only; changed-vec re-appends stay visible
-    val next = graft.storage.VersionedDir.next(fs, uri, "cells")
-    // re-train on the raw read (sampling tolerates replay dupes; the
-    // distinct()'d frame would re-run its shuffle per action). Wanting
-    // more cells than the flat ceiling flips the geometry AND layout
-    // to two-level — the hierarchical trainer keeps training O(√k)
-    // dots per sample row where the flat one is O(k).
-    val (cents, twoLevel) =
-      if (!resplit) (cents0, twoLevel0)
-      else if (wantCells <= maxFlatCells)
-        (trainCentroids(raw, "neighbor_id", "vec", wantCells), None)
-      else {
-        val (f, c, mem) = trainCentroidsTwoLevel(raw, "neighbor_id", "vec",
-          wantCells)
-        (f, Some((c, mem)))
+    val cells = cellsTable(uri)
+    val resplitFrom = cells.major(spark, "ivf.compact.afterCellsFlip") { next =>
+      val (incPath0, genPath) = cells.resolve(graft.storage.VFS(spark))
+      val (cents0, twoLevel0) = indexGeometryAt(spark, uri, genPath)
+      val nCells = cents0.size
+      val raw = readCellsAllFrom(spark, uri, genPath, incPath0)
+      val payload = indexPayloadAt(spark, uri, genPath)
+        .getOrElse(raw.schema.fieldNames.filterNot(IvfCellCols).toSeq)
+      // sizing from the RAW count (columnar, no shuffle; crash-replay
+      // duplicates inflate it only until this very fold heals them)
+      val wantCells =
+        if (resplitTargetRows <= 0) nCells
+        else math.min(MaxIvfCellsTwoLevel.toLong, math.max(nCells.toLong,
+          math.ceil(raw.count().toDouble / resplitTargetRows).toLong)).toInt
+      val resplit = resplitTargetRows > 0 && wantCells >= 2 * nCells
+      val all = raw.distinct() // exact-row heal only; changed-vec re-appends stay visible
+      // re-train on the raw read (sampling tolerates replay dupes; the
+      // distinct()'d frame would re-run its shuffle per action). Wanting
+      // more cells than the flat ceiling flips the geometry AND layout
+      // to two-level — the hierarchical trainer keeps training O(√k)
+      // dots per sample row where the flat one is O(k).
+      val (cents, twoLevel) =
+        if (!resplit) (cents0, twoLevel0)
+        else if (wantCells <= maxFlatCells)
+          (trainCentroids(raw, "neighbor_id", "vec", wantCells), None)
+        else {
+          val (f, c, mem) = trainCentroidsTwoLevel(raw, "neighbor_id", "vec",
+            wantCells)
+          (f, Some((c, mem)))
+        }
+      val folded =
+        if (!resplit) all
+        else all.drop("centroid_id").withColumn("centroid_id", twoLevel match {
+          case None => assignNarrow(col("vec"), cents)
+          // hierarchical assignment — the flat argmin at k past the
+          // ceiling is the k-scaling wall the kernel work retired
+          case Some((c, mem)) =>
+            assignHierarchical(col("vec"), cents, c, mem, nprobe = 4)
+        })
+      twoLevel match {
+        case None =>
+          folded
+            .repartition(math.max(1, cents.size), col("centroid_id"))
+            .write.partitionBy("centroid_id").mode("overwrite")
+            .options(graft.storage.Encryption.dirWriteOptions(spark, uri))
+            .parquet(next)
+        case Some((coarse, members)) =>
+          // TWO-LEVEL layout: ≤ √k coarse partition dirs (group_id), fine
+          // centroid_id a range-clustered SORTED data column within — dir
+          // pruning on the probed groups, row-group pruning on the probed
+          // fine cells, and the dir count stays bounded at any k
+          val groupOf = groupOfFine(cents, members)
+          folded
+            .withColumn("group_id", element_at(
+              typedlit(groupOf.toSeq), col("centroid_id").cast("int") + 1))
+            .repartitionByRange(math.max(1, coarse.size),
+              col("group_id"), col("centroid_id"))
+            .sortWithinPartitions("group_id", "centroid_id")
+            .write.partitionBy("group_id").mode("overwrite")
+            .options(graft.storage.Encryption.dirWriteOptions(spark, uri))
+            .parquet(next)
       }
-    val folded =
-      if (!resplit) all
-      else all.drop("centroid_id").withColumn("centroid_id", twoLevel match {
-        case None => assignNarrow(col("vec"), cents)
-        // hierarchical assignment — the flat argmin at k past the
-        // ceiling is the k-scaling wall the kernel work retired
-        case Some((c, mem)) =>
-          assignHierarchical(col("vec"), cents, c, mem, nprobe = 4)
-      })
-    twoLevel match {
-      case None =>
-        folded
-          .repartition(math.max(1, cents.size), col("centroid_id"))
-          .write.partitionBy("centroid_id").mode("overwrite")
-          .options(graft.storage.Encryption.dirWriteOptions(spark, uri))
-          .parquet(next)
-      case Some((coarse, members)) =>
-        // TWO-LEVEL layout: ≤ √k coarse partition dirs (group_id), fine
-        // centroid_id a range-clustered SORTED data column within — dir
-        // pruning on the probed groups, row-group pruning on the probed
-        // fine cells, and the dir count stays bounded at any k
-        val groupOf = groupOfFine(cents, members)
-        folded
-          .withColumn("group_id", element_at(
-            typedlit(groupOf.toSeq), col("centroid_id").cast("int") + 1))
-          .repartitionByRange(math.max(1, coarse.size),
-            col("group_id"), col("centroid_id"))
-          .sortWithinPartitions("group_id", "centroid_id")
-          .write.partitionBy("group_id").mode("overwrite")
-          .options(graft.storage.Encryption.dirWriteOptions(spark, uri))
-          .parquet(next)
+      // geometry rides in the generation, written BEFORE the flip marker
+      graft.storage.Encryption.dirJsonWrite(spark, uri,
+        s"$next/_centroids.json", geometryJsonStr(cents, payload, twoLevel))
+      if (resplit) Some(nCells -> cents.size) else None
     }
-    // geometry rides in the generation, written BEFORE the flip marker
-    graft.storage.Encryption.dirJsonWrite(spark, uri,
-      s"$next/_centroids.json", geometryJsonStr(cents, payload, twoLevel))
-    graft.storage.VersionedDir.commitGuarded(fs, uri, "cells", next, before)
-    // race injection: the cells-flip → inc-reset window (the
-    // documented both-tiers transient)
-    graft.storage.FlipHooks.at("ivf.compact.afterCellsFlip")
-    if (resplit)
+    resplitFrom.foreach { case (from, to) =>
       org.slf4j.LoggerFactory.getLogger(getClass).info(
-        s"ivf re-split $uri: $nCells -> ${cents.size} cells " +
+        s"ivf re-split $uri: $from -> $to cells " +
           s"(target $resplitTargetRows rows/cell)")
-    if (graft.storage.VersionedDir.hasDataFiles(incBefore))
-      graft.storage.VersionedDir.resetEmptyGuarded(fs, uri, "cells_inc",
-        incBefore, grace = 2)
+    }
   }
 
-  /** BOUNDED maintenance (r16): fold ONLY the inc-tier cells — one
-    * file per cell in a new inc generation — O(appends since the last
-    * major compact), never a base rewrite. This is what
+  /** BOUNDED maintenance (r16): fold ONLY the inc-tier cells into few
+    * flat centroid-sorted files (~250k rows each, the same shape
+    * appends write — row-group pruning on the sorted column, file
+    * count reset to ~1) in a new inc generation
+    * ([[graft.storage.TieredTable.minorFold]]) — O(appends since the
+    * last major compact), never a base rewrite. This is what
     * [[graft.streaming.EventStreams.semanticDedupStream]]'s in-loop
     * `compactEvery` runs, so the cadence batch's stall tracks the
     * streamed-in volume, not the index size. Reader-safe (generation
     * flip); single-writer vs appends (guarded). */
   def minorCompactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      uri: String): Unit = {
-    val fs = graft.storage.VFS(spark)
-    val incBefore = graft.storage.VersionedDir.liveListing(fs, uri, "cells_inc")
-    // gate on DATA files: a freshly-reset inc generation lists only
-    // its _COMMITTED marker, and reading it would fail schema inference
-    if (!graft.storage.VersionedDir.hasDataFiles(incBefore)) return
-    // fold to FEW flat centroid-sorted files (~250k rows each), same
-    // shape appends write — row-group pruning on the sorted column,
-    // file count reset to ~1
-    // exact-row distinct: heals a crash-replayed append's duplicate
-    // rows at the fold (its own extra hash exchange, bounded by the
-    // inc tier); changed-vec re-appends keep both rows per the
-    // unique-id contract
-    val inc = spark.read.parquet(cellsIncPath(spark, uri)).distinct()
-    val n = inc.count()
-    if (n == 0) return
-    val next = graft.storage.VersionedDir.next(fs, uri, "cells_inc")
-    inc.repartitionByRange(
-        math.max(1, math.ceil(n / 250000.0).toInt), col("centroid_id"))
-      .sortWithinPartitions("centroid_id")
-      .write.mode("overwrite")
-      .options(graft.storage.Encryption.dirWriteOptions(spark, uri))
-      .parquet(next)
-    graft.storage.VersionedDir.commitGuarded(fs, uri, "cells_inc", next,
-      incBefore, grace = 2)
-  }
+      uri: String): Unit =
+    cellsTable(uri).minorFold(spark, Seq("centroid_id"))(
+      graft.storage.TieredTable.filesFor)
 
   /** Tier stats + major-compact advisory: base = the live cells
     * generation, inc = the live cells_inc generation. Listings only,
     * no data read — cheap enough for an operator poll loop. */
   def maintenanceAdvice(spark: org.apache.spark.sql.SparkSession,
       uri: String): graft.storage.MaintenanceAdvice =
-    graft.storage.MaintenanceAdvice.of(graft.storage.VFS(spark),
-      Seq(cellsPath(spark, uri)), Seq(cellsIncPath(spark, uri)))
+    graft.storage.TieredTable.advice(graft.storage.VFS(spark), cellsTable(uri))
 
   /** Sidecar path for a given cells generation: the IN-GENERATION
     * `_centroids.json` when present (written by every compact since
@@ -1159,11 +1124,10 @@ object Similarity {
     // ONE generation resolution for geometry + cells: a re-splitting
     // major flips both together, and centroids from generation G over
     // the cells of G+1 would probe the wrong partitions
-    val incPath0 = cellsIncPath(spark, uri) // INC BEFORE base (see readCellsAllFrom)
-    // race injection: a major can be forced between the tier
-    // resolutions (FlipRaceSpec — duplicates tolerated, rows never lost)
-    graft.storage.FlipHooks.at("ivf.read.betweenResolves")
-    val genPath = cellsPath(spark, uri)
+    // (inc first; a major can be forced between the tier resolutions —
+    // FlipRaceSpec: duplicates tolerated, rows never lost)
+    val (incPath0, genPath) =
+      cellsTable(uri).resolve(graft.storage.VFS(spark), "ivf.read.betweenResolves")
     val (cents, twoLevel) = indexGeometryAt(spark, uri, genPath)
     // flat geometry: O(k) probe kernel. Two-level geometry (a re-split
     // past the flat ceiling): probe the nearest coarse groups, select

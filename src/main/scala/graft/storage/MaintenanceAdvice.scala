@@ -6,7 +6,7 @@ package graft.storage
   * during lulls" needs a number, not a feeling. This compares the two
   * tiers from FILESYSTEM LISTINGS ONLY (file counts + `du` bytes — no
   * data read, no Spark job), so it is cheap enough to poll from an
-  * operator loop or the scale rehearsal's wave boundaries.
+  * operator loop or between ingest waves.
   *
   * The decision is RATIO-shaped, deliberately: an absolute inc-bytes
   * trigger would demand a 100 TB base rewrite over a 64 MB inc tier
@@ -33,9 +33,9 @@ case class MaintenanceAdvice(baseFiles: Int, baseBytes: Long,
     s"MaintenanceAdvice(base: $baseFiles files/$baseBytes B, " +
       s"inc: $incFiles files/$incBytes B, " +
       // labeled "at defaults": callers often decide with their own
-      // thresholds (the 100x rehearsal uses a 1 MB floor), and an
-      // operator reading a log line must not mistake this rendering
-      // of the DEFAULT-threshold answer for the decision taken
+      // thresholds (a small index wants a far lower floor than 32 MB),
+      // and an operator reading a log line must not mistake this
+      // rendering of the DEFAULT-threshold answer for the decision taken
       s"needsMajorAtDefaults=${needsMajor()})"
 }
 

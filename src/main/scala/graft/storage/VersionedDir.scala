@@ -5,10 +5,10 @@ package graft.storage
   * `<base>_v<N>`; each is committed by atomically creating a
   * `_COMMITTED` marker AFTER its Spark write completes, and readers
   * resolve the highest committed generation (falling back to the
-  * legacy unversioned `<base>` dir, generation 0). The previous
-  * generation is kept as a grace copy for readers that resolved just
-  * before a flip; older generations and crashed uncommitted attempts
-  * are retired by the next commit.
+  * unversioned `<base>` dir that an index build writes, generation 0).
+  * The previous generation is kept as a grace copy for readers that
+  * resolved just before a flip; older generations and crashed
+  * uncommitted attempts are retired by the next commit.
   *
   * This replaces delete-then-rename maintenance swaps, which leave a
   * window (and a crash state) with NO live directory: here a crash at
@@ -24,7 +24,7 @@ object VersionedDir {
   private val VerName = """.*_v(\d+)$""".r
 
   /** All generation dirs of `base` under `uri` (committed or not),
-    * including the legacy unversioned dir as generation 0. */
+    * including the unversioned build dir as generation 0. */
   private def generations(fs: VFS, uri: String, base: String): Seq[(String, Int)] = {
     val versioned = fs.ls(uri).flatMap { p =>
       val name = p.substring(p.lastIndexOf('/') + 1)
@@ -33,8 +33,8 @@ object VersionedDir {
         case _ => None
       }
     }
-    val legacy = s"$uri/$base"
-    if (fs.exists(legacy)) versioned :+ (legacy -> 0) else versioned
+    val built = s"$uri/$base"
+    if (fs.exists(built)) versioned :+ (built -> 0) else versioned
   }
 
   private def isCommitted(fs: VFS, path: String, gen: Int): Boolean =
@@ -61,12 +61,6 @@ object VersionedDir {
     p
   }
 
-  /** Commit `path` (previously returned by [[next]], now fully
-    * written) as the live generation, then retire: keep the new live
-    * generation plus ONE grace generation (the PREVIOUS live — not
-    * merely the next number down, which could be a crashed uncommitted
-    * attempt), delete every other generation including crashed
-    * attempts and the legacy dir. */
   /** The live generation's recursive file listing — take it BEFORE a
     * maintenance pass reads the live dir, pass it to [[commitGuarded]]
     * after the new generation is written. */
@@ -120,7 +114,15 @@ object VersionedDir {
     commitGuarded(fs, uri, base, nextGen, before, grace)
   }
 
-  /** `grace` = how many previously-committed generations survive the
+  /** Commit `path` (previously returned by [[next]], now fully
+    * written) as the live generation, then retire: keep the new live
+    * generation plus `grace` grace generations (the PREVIOUS live ones
+    * — not merely the next numbers down, which could be crashed
+    * uncommitted attempts), delete every other generation including
+    * crashed attempts and, beyond the grace window, the build
+    * generation 0.
+    *
+    * `grace` = how many previously-committed generations survive the
     * flip (default 1 — the classic one-grace design). FREQUENTLY
     * flipped bases — the inc tiers, which fold every `compactEvery`
     * streaming batches plus an extra fold per replayed batch — pass 2:
@@ -139,7 +141,7 @@ object VersionedDir {
     // keep the `grace` HIGHEST-numbered previously-committed
     // generations (never a crashed uncommitted attempt — readers can't
     // have resolved one); delete everything else, including crashed
-    // attempts and, beyond the grace window, the legacy dir
+    // attempts and, beyond the grace window, generation 0
     // exclusion is by generation NUMBER, never by path string: listed
     // paths are scheme-qualified (file:/...) while the caller's `path`
     // need not be, so a path-equality keep-set would delete the very

@@ -250,8 +250,8 @@ class EncryptionSpec extends SparkSpec {
       buckets = 4, encryptionKey = Some("idxkey"))
     graft.ops.Search.buildIndex(docs, "doc_id", "text", bmPlain, buckets = 4)
     val extra = Seq((9L, "alpha omega secret")).toDF("doc_id", "text")
-    graft.ops.Search.appendToIndex(extra, "doc_id", "text", bmEnc)
-    graft.ops.Search.appendToIndex(extra, "doc_id", "text", bmPlain)
+    graft.ops.Search.appendBatchToIndex(extra, "doc_id", "text", bmEnc, "batch-1")
+    graft.ops.Search.appendBatchToIndex(extra, "doc_id", "text", bmPlain, "batch-1")
     val cols = Seq($"query_id", $"doc_id", $"score", $"rank")
     val encTop = graft.ops.Search.bm25IndexTopK(spark, bmEnc, q, "qid", "qtext", k = 5)
     val plainTop = graft.ops.Search.bm25IndexTopK(spark, bmPlain, q, "qid", "qtext", k = 5)

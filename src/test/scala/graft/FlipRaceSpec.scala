@@ -306,4 +306,63 @@ class FlipRaceSpec extends SparkSpec {
     } finally FlipHooks.clear()
     assert(topk() == expected)
   }
+
+  test("dedup: a real append inside the minor fold's read → commit " +
+    "window aborts the fold loudly; nothing is lost, a re-run folds") {
+    val uri = TestSession.tmpDir("fliprace-fold-nd")
+    DedupIndex.build(mkCorpus(40, "alpha"), "doc_id", "text", uri)
+    def appendOne(id: Long, salt: String): Unit = DedupIndex.append(
+      Seq((id, docText(salt, id.toInt))).toDF("doc_id", "text"),
+      "doc_id", "text", uri)
+    appendOne(501L, "beta"); appendOne(502L, "beta")
+    val incBefore = DedupIndex.liveDataIncPath(spark, uri)
+    var fired = false
+    FlipHooks.setOnce("tiered.data.fold.beforeCommit") {
+      appendOne(600L, "gamma"); fired = true
+    }
+    try {
+      val e = intercept[RuntimeException] { DedupIndex.minorCompact(spark, uri) }
+      assert(fired, "pause point never fired")
+      assert(e.getMessage.contains("quiesce"), e.getMessage)
+    } finally FlipHooks.clear()
+    assert(DedupIndex.liveDataIncPath(spark, uri) == incBefore,
+      "the aborted fold moved the live inc generation")
+    assert(DedupIndex.readSigsAll(spark, uri).count() == 43L)
+    val dataRows = DedupIndex.readDataAll(spark, uri).count()
+    DedupIndex.minorCompact(spark, uri)
+    assert(DedupIndex.liveDataIncPath(spark, uri) != incBefore, "re-run did not fold")
+    assert(DedupIndex.readSigsAll(spark, uri).count() == 43L)
+    assert(DedupIndex.readDataAll(spark, uri).count() == dataRows)
+  }
+
+  test("ivf: a real append inside the minor fold's read → commit window " +
+    "aborts the fold loudly; nothing is lost, a re-run folds") {
+    val uri = TestSession.tmpDir("fliprace-fold-ivf")
+    val vecs = (0 until 200).map(i =>
+      (i.toLong, Array.tabulate(16)(j => math.sin(i * 7 + j * 13).toFloat)))
+      .toDF("vec_id", "embedding")
+    Similarity.buildIvfIndex(vecs, "vec_id", "embedding", uri, nCentroids = 8)
+    def appendOne(i: Long): Unit = Similarity.appendToIvfIndex(
+      Seq((900L + i, Array.tabulate(16)(j => math.sin(i * 11 + j * 5).toFloat)))
+        .toDF("vec_id", "embedding"), "vec_id", "embedding", uri)
+    appendOne(0); appendOne(1)
+    val incBefore = Similarity.cellsIncPath(spark, uri)
+    var fired = false
+    FlipHooks.setOnce("tiered.cells.fold.beforeCommit") {
+      appendOne(2); fired = true
+    }
+    try {
+      val e = intercept[RuntimeException] {
+        Similarity.minorCompactIvfIndex(spark, uri)
+      }
+      assert(fired, "pause point never fired")
+      assert(e.getMessage.contains("quiesce"), e.getMessage)
+    } finally FlipHooks.clear()
+    assert(Similarity.cellsIncPath(spark, uri) == incBefore,
+      "the aborted fold moved the live inc generation")
+    assert(Similarity.readCellsAll(spark, uri).count() == 203L)
+    Similarity.minorCompactIvfIndex(spark, uri)
+    assert(Similarity.cellsIncPath(spark, uri) != incBefore, "re-run did not fold")
+    assert(Similarity.readCellsAll(spark, uri).count() == 203L)
+  }
 }

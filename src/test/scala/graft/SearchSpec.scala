@@ -157,7 +157,7 @@ class SearchSpec extends SparkSpec {
         inline.select(cols: _*).exceptAll(idx.select(cols: _*)).count() == 0L)
       // append shifts df/avgdl for EVERYONE, exactly like a rebuild
       val batch = Seq((50L, "a freshly appended cat sentence")).toDF("doc_id", "text")
-      Search.appendToIndex(batch, "doc_id", "text", uri)
+      Search.appendBatchToIndex(batch, "doc_id", "text", uri, "batch-1")
       val inlineAll = Search.bm25TopK(docs.unionByName(batch), "doc_id", "text",
         q, "qid", "qtext", k = 5)
       val idxAll = Search.bm25IndexTopK(spark, uri, q, "qid", "qtext", k = 5)
