@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 /** Full-text retrieval over the document corpus: an inverted index
   * (postings) plus BM25 scoring and top-k search. A training-data
@@ -17,9 +18,11 @@ import org.apache.spark.sql.functions._
   *    length are row-local facts, counted inside the row by the
   *    [[graft.functions.TermCounts]] kernel — no corpus-sized exchange
   *    at all (previously one `groupBy(doc_id, term)` shuffle);
-  *  - document-frequency (df) stays corpus-side; the query-term
-  *    table (tiny by definition) is BROADCAST into it, so the
-  *    vocabulary table never shuffles;
+  *  - the query terms resolve on the driver (a query batch is small
+  *    by definition), the postings are restricted to them, and
+  *    document-frequency (df) is aggregated over what is left —
+  *    query-batch sized, so the vocabulary table never shuffles and
+  *    the query table never broadcasts for it;
   *  - candidate generation is a broadcast join of postings against
   *    the (query, term, idf) table — postings stream, nothing
   *    corpus-sized shuffles on an unbounded key;
@@ -104,22 +107,48 @@ object Search {
     val nDocs = docs.count()
     val sumDl = Option(post.agg(sum(col("tf"))).head().get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
-    // vocabulary-sized df table streams; the tiny query-term table
-    // broadcasts into it, then the (query, term, idf) result (still
-    // tiny) broadcasts into the postings stream.
-    val qterms = queries.select(col(qidCol).as("query_id"),
-      explode(array_distinct(termsOf(col(qtextCol)))).as("term"))
-    scoreFromPostings(post, qterms, nDocs, sumDl, k1, b, maxDfFraction,
-      requireAllTerms)
+    // the postings are restricted to the query terms before the df
+    // aggregate, so the collected df stays query-batch sized (the
+    // scoring join drops every other term anyway)
+    val qt = queryTerms(queries, qidCol, qtextCol)
+    scoreFromPostings(restrictToTerms(post, qt.terms, MaxPushedTerms), qt,
+      nDocs, sumDl, k1, b, maxDfFraction, requireAllTerms)
   }
 
-  /** Shared scoring core: joins a postings frame (doc_id, term, tf,
-    * dl) against a broadcastable (query_id, term) table and produces
-    * (query_id, doc_id, score raw). `df` (document frequency per term)
-    * is computed FROM the given postings — exact whether those are the
-    * whole corpus (inline path) or the pruned-but-complete postings of
-    * the query terms (index path: a term's postings all live in its
-    * bucket, so df over the pruned read is identical). */
+  /** Default cap on the terms a probe pushes as `term isin(...)`
+    * literals; larger term sets restrict through a broadcast left-semi
+    * join ([[restrictToTerms]]). */
+  private val MaxPushedTerms = 1 << 15
+
+  /** A query batch's distinct terms per query, resolved on the DRIVER
+    * with ONE collect of `(query_id, array_distinct(terms))` — Catalyst
+    * folds that projection over a local query frame, so it usually
+    * runs no job at all. `pairs` holds one (query_id, term) per
+    * distinct term of a query (a null or empty text holds none);
+    * `qid` is the query-id field with the caller's type. */
+  private final case class QueryTerms(qid: StructField, pairs: Array[(Any, String)]) {
+    lazy val terms: Array[String] = pairs.map(_._2).distinct
+  }
+
+  private def queryTerms(queries: DataFrame, qidCol: String,
+      qtextCol: String): QueryTerms = {
+    val q = queries.select(col(qidCol).as("query_id"),
+      array_distinct(termsOf(col(qtextCol))).as("terms"))
+    QueryTerms(q.schema("query_id"), q.collect().flatMap { r =>
+      if (r.isNullAt(1)) Nil else r.getSeq[String](1).map(t => (r.get(0), t))
+    })
+  }
+
+  /** `post` restricted to `terms`: a `term isin(...)` filter (pushed
+    * into a parquet scan's row groups) up to `maxPushed` terms; above
+    * that a broadcast left-semi join, since tens of thousands of
+    * literals bloat the plan. */
+  private def restrictToTerms(post: DataFrame, terms: Array[String],
+      maxPushed: Int): DataFrame =
+    if (terms.length <= maxPushed) post.filter(col("term").isin(terms.toSeq: _*))
+    else post.join(broadcast(post.sparkSession.createDataset(terms.toSeq)(
+      org.apache.spark.sql.Encoders.STRING).toDF("term")), Seq("term"), "left_semi")
+
   /** A probed term in more than this fraction of all docs triggers a
     * hot-term warning (and the `bm25.hot_terms_probed` counter) even
     * with elision off: its postings are a corpus-fraction scan for
@@ -127,32 +156,37 @@ object Search {
     * paying it. Warn-only — results never change without opt-in. */
   val HotTermDfFraction: Double = 0.2
 
-  private def scoreFromPostings(post: DataFrame, qterms: DataFrame,
+  /** Shared scoring core: joins a postings frame (term, doc_id, tf,
+    * dl) holding EVERY posting of the query terms and no other term
+    * against the batch's (query_id, term, idf) table and produces
+    * (query_id, doc_id, score raw). `df` (document frequency per term)
+    * is computed FROM those postings — exact on the inline path (the
+    * corpus postings restricted to the query terms) and on the index
+    * path (a term's postings all live in its bucket, so df over the
+    * pruned read is identical).
+    *
+    * Spark jobs of one index probe (listener-traced, 8 queries over a
+    * 3k-doc index): df aggregate + collect (2), the broadcast of the
+    * (query, term, idf) table (1 — a `LocalRelation` broadcast still
+    * runs a collect job), scoring shuffle + top-k (3). The query
+    * terms, the df join, the hot-term and elision decisions and the
+    * per-query AND counts are driver-side work on query-batch-sized
+    * data and cost no job; job count, not data volume, is the cost at
+    * this floor (about half of an 11-job probe was driver gap between
+    * jobs). */
+  private def scoreFromPostings(post: DataFrame, qt: QueryTerms,
       nDocs: Long, sumDl: Long, k1: Double, b: Double,
-      maxDfFraction: Double = 1.0,
-      requireAllTerms: Boolean = false): DataFrame = {
+      maxDfFraction: Double, requireAllTerms: Boolean): DataFrame = {
     val spark = post.sparkSession
     val n = nDocs.toDouble
     val avgdl = if (nDocs == 0L) 1.0 else sumDl.toDouble / nDocs
-    val dfAll = post.groupBy(col("term"))
-      .agg(count(lit(1)).cast("double").as("__df"))
-    // Per-(query, term) df — QUERY-BATCH-sized, and ALREADY driver-
-    // bounded by contract (the scoring path broadcasts qidf, and a
-    // broadcast relation is built on the driver), so COLLECT it
-    // outright instead of the old localCheckpoint: the df aggregation
-    // still runs exactly once, but the hot-term / elision decisions
-    // become free driver-side set ops instead of one-or-three extra
-    // Spark jobs each (r21: a stage-listener profile showed ~60% of
-    // bm25_index_topk's wall was between-job driver time — job count
-    // is the cost at the floor, and the removed jobs are pure
-    // bookkeeping at any scale). The rebuilt frame is a LocalRelation:
-    // downstream broadcasts need no extra job either.
-    val qdfJoined = dfAll.join(broadcast(qterms), "term")
-    val qdfRows = qdfJoined.collect()
-    val qdf = spark.createDataFrame(
-      java.util.Arrays.asList(qdfRows: _*), qdfJoined.schema)
-    val dfIdx = qdfJoined.schema.fieldIndex("__df")
-    val termIdx = qdfJoined.schema.fieldIndex("term")
+    // ONE aggregate collect: df of every probed term present in the
+    // postings, joined to the (query, term) pairs on the driver
+    val df = post.groupBy(col("term")).agg(count(lit(1)).cast("double"))
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val qdf = qt.pairs.flatMap { case (q, t) => df.get(t).map(d => (q, t, d)) }
+    def distinctTerms(rows: Array[(Any, String, Double)]): Long =
+      rows.map(_._2).distinct.length.toLong
     // optional stopword elision — the production knob for the
     // worst-case term: a term in >maxDfFraction of all docs has
     // near-zero idf but corpus-fraction-sized postings, so scoring
@@ -162,11 +196,10 @@ object Search {
     // (Stats counters `bm25.query_terms_elided`,
     // `bm25.hot_terms_probed`) either way: no silent caps, and no
     // silent full-corpus rankings.
-    val kept = qdf.filter(col("__df") <= lit(maxDfFraction) * lit(n))
+    val kept = qdf.filter(_._3 <= maxDfFraction * n)
     if (n > 0) {
       val log5 = org.slf4j.LoggerFactory.getLogger(getClass)
-      val hot = qdfRows.filter(_.getDouble(dfIdx) > HotTermDfFraction * n)
-        .map(_.getString(termIdx)).distinct.length.toLong
+      val hot = distinctTerms(qdf.filter(_._3 > HotTermDfFraction * n))
       if (hot > 0) {
         graft.core.Stats.counter(spark, "bm25.hot_terms_probed").add(hot)
         log5.warn(s"bm25: $hot probed term(s) appear in >" +
@@ -175,9 +208,7 @@ object Search {
           "idf; consider maxDfFraction elision")
       }
       if (maxDfFraction < 1.0) {
-        val elided = qdfRows.map(_.getString(termIdx)).distinct.length.toLong -
-          qdfRows.filter(_.getDouble(dfIdx) <= maxDfFraction * n)
-            .map(_.getString(termIdx)).distinct.length.toLong
+        val elided = distinctTerms(qdf) - distinctTerms(kept)
         if (elided > 0) {
           graft.core.Stats.counter(spark, "bm25.query_terms_elided").add(elided)
           log5.info(s"bm25: elided $elided query term(s) with df > " +
@@ -185,31 +216,39 @@ object Search {
         }
       }
     }
-    val qidf = kept
-      .select(col("query_id"), col("term"),
+    // conjunctive (AND) mode keeps docs matching EVERY non-elided query
+    // term: each (query, term) row carries its query's surviving-term
+    // count, compared below with the per-pair contribution count
+    // (postings rows are unique per (doc, term), so count == distinct
+    // matched terms)
+    val need: Map[Any, Long] =
+      if (requireAllTerms) kept.groupBy(_._1).map { case (q, ts) => q -> ts.length.toLong }
+      else Map.empty
+    val qdfSchema = StructType(Seq(qt.qid, StructField("term", StringType),
+      StructField("__df", DoubleType)) ++
+      (if (requireAllTerms) Seq(StructField("__need", LongType)) else Nil))
+    val qdfRows = kept.map { case (q, t, d) =>
+      if (requireAllTerms) Row(q, t, d, need(q)) else Row(q, t, d) }
+    val carried = if (requireAllTerms) Seq(col("__need")) else Nil
+    // idf stays a Spark expression over the local rows (bit-identical
+    // to every earlier plan of this oracle-pinned formula)
+    val qidf = spark.createDataFrame(java.util.Arrays.asList(qdfRows: _*), qdfSchema)
+      .select(Seq(col("query_id"), col("term"),
         log(lit(1.0) + (lit(n) - col("__df") + lit(0.5)) / (col("__df") + lit(0.5)))
-          .as("__idf"))
+          .as("__idf")) ++ carried: _*)
     val tfD = col("tf").cast("double")
     val scored = post.join(broadcast(qidf), "term")
-      .select(col("query_id"), col("doc_id"),
+      .select(Seq(col("query_id"), col("doc_id"),
         (col("__idf") * tfD * lit(k1 + 1.0) /
           (tfD + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / lit(avgdl))))
-          .as("__s"))
+          .as("__s")) ++ carried: _*)
       .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(col("__s")).as("score"), count(lit(1)).as("__nt"))
-    if (!requireAllTerms) scored.drop("__nt")
-    else {
-      // conjunctive (AND) mode: keep docs matching EVERY non-elided
-      // query term — the per-pair contribution count equals the
-      // query's surviving-term count (postings rows are unique per
-      // (doc, term), so count == distinct matched terms). The
-      // per-query term counts are query-batch-sized and broadcast.
-      val need = qidf.groupBy(col("query_id"))
-        .agg(count(lit(1)).as("__need"))
-      scored.join(broadcast(need), "query_id")
-        .filter(col("__nt") === col("__need"))
-        .select(col("query_id"), col("doc_id"), col("score"))
-    }
+    if (!requireAllTerms) scored.agg(sum(col("__s")).as("score"))
+    else scored
+      .agg(sum(col("__s")).as("score"), count(lit(1)).as("__nt"),
+        max(col("__need")).as("__need"))
+      .filter(col("__nt") === col("__need"))
+      .select(col("query_id"), col("doc_id"), col("score"))
   }
 
   /** Top-k docs per query by BM25, ranked on the 6-decimal-rounded
@@ -369,7 +408,15 @@ object Search {
     * explicit data schema. Strictly stronger than `tb isin` pruning:
     * pruned buckets are never listed into the scan at all. The frame
     * has NO tb column; the writer-side value is `termBucket(term)`,
-    * a pure function callers recompute when they need the layout. */
+    * a pure function callers recompute when they need the layout.
+    *
+    * The selected leaf dirs are listed HERE too, and the scan is built
+    * from that listing ([[org.apache.spark.sql.graftshim.Shim.parquetOfLeafDirs]]):
+    * `spark.read.parquet(dirs)` would list them again and, once they
+    * exceed Spark's parallel-discovery threshold (32 paths — reached by
+    * a probe as soon as one inc dir is pending), spend a Spark job on
+    * that listing (measured: 164 ms of a 1.1 s probe). Build, minor fold
+    * and major read through here as well. */
   private def readPostingsMulti(spark: org.apache.spark.sql.SparkSession,
       roots: Seq[String], tbs: Option[Array[Int]]): DataFrame = {
     val fs = graft.storage.VFS(spark)
@@ -399,7 +446,7 @@ object Search {
     // bucket selection matching no dirs (terms hashing to buckets this
     // index never wrote) is likewise a legitimate empty
     if (dirs.isEmpty) emptyPostings(spark)
-    else spark.read.schema(PostingsSchema).parquet(dirs: _*)
+    else org.apache.spark.sql.graftshim.Shim.parquetOfLeafDirs(spark, dirs, PostingsSchema)
   }
 
   private val PostingsSchema = org.apache.spark.sql.types.StructType.fromDDL(
@@ -436,20 +483,21 @@ object Search {
     *
     * The 100 TB story mirrors [[DedupIndex]]: build once (one corpus
     * pass, one shuffle), then every query batch reads only the
-    * buckets (static partition pruning on `tb`) and row groups
+    * buckets (path selection of `tb=` dirs) and row groups
     * (term-range footer stats) its terms live in — steady-state cost
     * proportional to the query terms' postings, never the corpus. */
   def buildIndex(docs: DataFrame, idCol: String, textCol: String,
       uri: String, buckets: Int = 64,
       encryptionKey: Option[String] = None): Unit = {
-    // probe-side plan size depends on this: bm25IndexTopK prunes with
-    // `tb isin(<= buckets literals)`, so the bucket count is a PLAN
-    // invariant, not just a layout knob. 4096 keeps the worst-case
-    // isin list trivial; a corpus needing more buckets wants a
-    // partitioned index per shard, not a wider literal list.
+    // probe-side cost depends on this: bm25IndexTopK prunes by PATH
+    // SELECTION, listing up to one `tb=` dir per bucket in every
+    // postings root it scans, so the bucket count bounds the probe's
+    // listing and file count, not just the layout. 4096 keeps the
+    // worst case bounded; a corpus needing more buckets wants a
+    // partitioned index per shard, not wider roots.
     require(buckets > 0 && buckets <= 4096,
-      s"buckets must be in [1, 4096], got $buckets (the probe path " +
-        "pushes one isin literal per bucket into every postings scan)")
+      s"buckets must be in [1, 4096], got $buckets (a probe lists up " +
+        "to one tb= dir per bucket in every postings root)")
     import graft.core.Json._
     val spark = docs.sparkSession
     graft.storage.VFS(spark).delete(uri)
@@ -737,86 +785,62 @@ object Search {
       incs.map(d => s"$d/postings"))
   }
 
-  /** Top-k BM25 against a persisted index. The query batch's distinct
-    * terms are collected (bounded: a query batch is small by
-    * definition; `maxProbeTerms` guards the contract) and pushed into
-    * the postings scan as partition (`tb isin`) + predicate
-    * (`term isin`) filters — bucket dirs prune statically, row groups
+  /** Top-k BM25 against a persisted index. The query batch's terms
+    * resolve on the driver in one collect (bounded: a query batch is
+    * small by definition; `maxProbeTerms` guards the contract); their
+    * buckets select the `tb=` dirs the scan lists (path selection in
+    * [[readPostingsMulti]] — pruned buckets are never listed), and the
+    * terms push into the scan as a `term isin` predicate, so row groups
     * prune on the sorted term column. Scoring then reuses the inline
     * core, so results match [[bm25TopK]] pair-for-pair (pinned by the
     * `bm25_index_topk` oracle and `SearchSpec`). */
   def bm25IndexTopK(spark: org.apache.spark.sql.SparkSession, uri: String,
       queries: DataFrame, qidCol: String, qtextCol: String,
       k: Int = 10, k1: Double = 1.25, b: Double = 0.75,
-      maxProbeTerms: Int = 1 << 15, maxDfFraction: Double = 1.0,
+      maxProbeTerms: Int = MaxPushedTerms, maxDfFraction: Double = 1.0,
       requireAllTerms: Boolean = false): DataFrame = {
     val (base, incs, nDocs, sumDl, buckets) = liveState(spark, uri)
-    // the probe pushes up to one isin literal PER BUCKET into every
-    // postings scan; buildIndex enforces <= 4096 at write time, but the
-    // cost is paid HERE from persisted params — re-validate so a
-    // foreign or legacy index fails loudly instead of bloating plans
+    // the bucket count bounds the probe's path selection (up to one
+    // listed `tb=` dir per bucket and root); buildIndex enforces
+    // <= 4096 at write time, but the cost is paid HERE from persisted
+    // params — re-validate so a foreign or legacy index fails loudly
     require(buckets > 0 && buckets <= 4096,
       s"bm25IndexTopK: index at $uri declares $buckets term buckets " +
         "(outside [1, 4096]); rebuild it with buckets <= 4096")
-    val qterms = queries.select(col(qidCol).as("query_id"),
-      explode(array_distinct(termsOf(col(qtextCol)))).as("term"))
-      .localCheckpoint(true)
-    val terms = qterms.select("term").distinct()
-      .limit(maxProbeTerms + 1).as[String](org.apache.spark.sql.Encoders.STRING)
-      .collect()
+    val qt = queryTerms(queries, qidCol, qtextCol)
+    val terms = qt.terms
     // Above maxProbeTerms the term list stops being pushable (32k+
     // string literals through isin bloat the plan), but the batch is
     // still servable: degrade to the broadcast left-semi probe shape
     // DedupIndex uses for oversized key sets. Bucket-dir pruning
-    // survives (the distinct tb set is bounded by the bucket count and
-    // computed executor-side); only the row-group term pruning is
-    // given up, and the elision is counted, never silent.
-    val overCap = terms.length > maxProbeTerms
+    // survives; only the row-group term pruning is given up, and the
+    // degradation is counted, never silent.
+    if (terms.length > maxProbeTerms) {
+      // the degraded path BROADCASTS the distinct query terms, so it
+      // needs its own hard ceiling: beyond 16x the pushable cap
+      // (~512k terms, tens of MB broadcast) the batch must be split by
+      // the caller — fail with that message instead of broadcasting
+      val hardCap = maxProbeTerms.toLong * 16
+      require(terms.length <= hardCap,
+        s"bm25IndexTopK: query batch has > hard cap $hardCap distinct " +
+          "terms; split the query batch into smaller chunks and union " +
+          "the results")
+      graft.core.Stats.counter(spark, "bm25.index_probe_semi_join").add(1L)
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"bm25IndexTopK: query batch exceeds $maxProbeTerms distinct terms; " +
+          "probing via broadcast semi-join (bucket pruning only)")
+    }
     // Math.floorMod == Spark's pmod for signed longs (remainderUnsigned
     // would diverge for non-power-of-two bucket counts)
-    val tbs =
-      if (!overCap) terms.map(t =>
-        java.lang.Math.floorMod(xxhash64Of(t), buckets.toLong).toInt).distinct
-      else {
-        // the degraded path still BROADCASTS the distinct query terms
-        // for the left-semi probe, so it needs its own hard ceiling:
-        // without one, a multi-million-term batch trades the old loud
-        // require for a driver OOM. Beyond 16x the pushable cap
-        // (~512k terms, tens of MB broadcast) the batch must be split
-        // by the caller — fail with that message, never OOM.
-        // clamp before limit(): an absurd maxProbeTerms (> MaxInt/16)
-        // would overflow hardCap.toInt + 1 to a negative limit and die
-        // with a confusing AnalysisException instead of this message
-        val hardCap = math.min(maxProbeTerms.toLong * 16,
-          Int.MaxValue.toLong - 1)
-        // bounded over-cap probe (limit n+1, same idiom as the pushable
-        // check above): never pay a full global distinct just to fail
-        val nBounded = qterms.select("term").distinct()
-          .limit(hardCap.toInt + 1).count()
-        require(nBounded <= hardCap,
-          s"bm25IndexTopK: query batch has > hard cap $hardCap distinct " +
-            "terms; split the query batch into smaller chunks and union " +
-            "the results")
-        graft.core.Stats.counter(spark, "bm25.index_probe_semi_join").add(1L)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"bm25IndexTopK: query batch exceeds $maxProbeTerms distinct terms; " +
-            "probing via broadcast semi-join (bucket pruning only)")
-        qterms.select(pmod(xxhash64(col("term")), lit(buckets.toLong))
-            .cast("int").as("tb"))
-          .distinct().as[Int](org.apache.spark.sql.Encoders.scalaInt).collect()
-      }
+    val tbs = terms.map(t =>
+      java.lang.Math.floorMod(xxhash64Of(t), buckets.toLong).toInt).distinct
     // ONE scan over base + pending dirs, bucket-pruned by PATH
-    // SELECTION inside readPostingsMulti (pruned buckets never enter
-    // the scan's file list); term pruning pushes into the row groups
-    // of the selected files exactly as before
-    val byBucket = readPostingsMulti(spark,
-      base +: incs.map(d => s"$d/postings"), Some(tbs))
-    val byTerm =
-      if (!overCap) byBucket.filter(col("term").isin(terms.toSeq: _*))
-      else byBucket.join(broadcast(qterms.select("term").distinct()),
-        Seq("term"), "left_semi")
-    val post = byTerm.select("term", "doc_id", "tf", "dl")
-    val scored = scoreFromPostings(post, qterms, nDocs, sumDl, k1, b,
+    // SELECTION inside readPostingsMulti; term pruning pushes into the
+    // row groups of the selected files
+    val post = restrictToTerms(readPostingsMulti(spark,
+        base +: incs.map(d => s"$d/postings"), Some(tbs)), terms, maxProbeTerms)
+      .select("term", "doc_id", "tf", "dl")
+    val scored = scoreFromPostings(post, qt, nDocs, sumDl, k1, b,
         maxDfFraction, requireAllTerms)
       .select(col("query_id"), col("doc_id"), round(col("score"), 6).as("score"))
     Similarity.topKPerKey(scored, "query_id", "doc_id", "score", k)

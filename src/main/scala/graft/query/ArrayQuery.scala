@@ -48,8 +48,13 @@ case class ArrayQuery(
 
   lazy val schema: ArraySchema = ArrayTable.schemaOf(spark, uri)
 
-  /** Build the lazy DataFrame plan. */
-  def df: DataFrame = {
+  /** Build the lazy DataFrame plan. A manifest-served aggregate
+    * ([[metadataAgg]]) returns before the scan is built: building the
+    * read costs a parquet schema-inference job the served aggregate
+    * never uses. */
+  def df: DataFrame = aggSpecs.flatMap(metadataAgg).getOrElse(scanDf)
+
+  private def scanDf: DataFrame = {
     // simple bounds go into the fragment-pruning read path; complex
     // per-dim selections (point lists, multi-ranges) become predicates
     val simpleBounds = ranges.collect {
@@ -66,8 +71,7 @@ case class ArrayQuery(
 
     aggSpecs match {
       case Some(specs) =>
-        metadataAgg(specs).getOrElse(
-          Aggregates.agg(filtered.drop(ArrayTable.TS, ArrayTable.SEQ), specs))
+        Aggregates.agg(filtered.drop(ArrayTable.TS, ArrayTable.SEQ), specs)
       case None =>
         val dimCols = dimSel.getOrElse(schema.dimNames)
         val attrCols = attrSel.getOrElse(schema.attrNames)

@@ -38,4 +38,52 @@ object Shim {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
       case p => p
     }
+
+  /** One parquet scan over the data files directly inside `leafDirs`,
+    * listed HERE, one `listStatus` per dir on the driver. The file index
+    * is built over a [[FileStatusCache]] seeded with that listing, so
+    * Spark never re-lists the dirs: `spark.read.parquet(dirs)` lists
+    * them again itself and, above
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` paths,
+    * does it in a Spark job. Files are filtered by Spark's own rule
+    * (`_`/`.` names are not data) and carry block locations unless
+    * `spark.sql.sources.ignoreDataLocality` is set, as in Spark's
+    * listing. A dir that vanished before its listing throws
+    * `FileNotFoundException`, as `spark.read` does. */
+  def parquetOfLeafDirs(spark: org.apache.spark.sql.SparkSession,
+      leafDirs: Seq[String], schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame = {
+    import org.apache.hadoop.fs.{FileStatus, LocatedFileStatus, Path}
+    import org.apache.spark.sql.execution.datasources._
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val conf = session.sessionState.newHadoopConf()
+    val located = !session.sessionState.conf.ignoreDataLocality
+    val listed = leafDirs.map { d =>
+      val raw = new Path(d)
+      val fs = raw.getFileSystem(conf)
+      val dir = fs.makeQualified(raw)
+      val files = fs.listStatus(dir).filter(s => s.isFile &&
+        !org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(s.getPath.getName))
+      dir -> files.map {
+        case s: LocatedFileStatus => s: FileStatus
+        case s if !located => s
+        // the long constructor: the short one reads permissions, which
+        // forks a process per file on the local FS (Spark's own note)
+        case s => new LocatedFileStatus(s.getLen, s.isDirectory, s.getReplication,
+          s.getBlockSize, s.getModificationTime, 0, null, null, null, null,
+          s.getPath, s.hasAcl, s.isEncrypted, s.isErasureCoded,
+          fs.getFileBlockLocations(s, 0, s.getLen))
+      }
+    }
+    val cache = new FileStatusCache {
+      private val seeded = new java.util.concurrent.ConcurrentHashMap[Path, Array[FileStatus]]()
+      listed.foreach { case (p, fs) => seeded.put(p, fs) }
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = Option(seeded.get(path))
+      override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = seeded.put(path, files)
+      override def invalidateAll(): Unit = seeded.clear()
+    }
+    val index = new InMemoryFileIndex(session, listed.map(_._1), Map.empty[String, String],
+      Some(schema), cache)
+    session.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, schema,
+      None, new parquet.ParquetFileFormat(), Map.empty[String, String])(session))
+  }
 }

@@ -84,6 +84,18 @@ class ArrayQuerySpec extends SparkSpec {
     assert(conded.df.collect()(0).getAs[Long]("v_count") == 40L)
   }
 
+  test("a manifest-served aggregate builds no scan: zero Spark jobs") {
+    // count and dim min/max answer from manifests; building .df must not
+    // start the read path's parquet schema-inference job either
+    val (count, countJobs) = jobsOf(ArrayQuery(spark, uri).agg(Map("v" -> Seq("count"))).df)
+    assert(countJobs.isEmpty, countJobs.toString)
+    assert(count.collect()(0).getAs[Long]("v_count") == 50L)
+    val (mm, mmJobs) = jobsOf(ArrayQuery(spark, uri).agg(Map("x" -> Seq("min", "max"))).df)
+    assert(mmJobs.isEmpty, mmJobs.toString)
+    val mmRow = mm.collect()(0)
+    assert(mmRow.getAs[Long]("x_min") == 1L && mmRow.getAs[Long]("x_max") == 50L)
+  }
+
   test("metadata count falls through when shadowing or deletes make it unsafe") {
     val u2 = TestSession.tmpDir("aqc")
     import spark.implicits._

@@ -357,6 +357,40 @@ class SearchSpec extends SparkSpec {
     } finally graft.storage.VFS(spark).delete(uri)
   }
 
+  test("bm25 index probe: at most 6 Spark jobs and no listing job, with " +
+    "more leaf dirs selected than Spark's parallel-discovery threshold") {
+    val uri = s"target/test-bm25-jobs-${System.nanoTime()}"
+    val q = Seq((0L, "the cat sat on the mat log"),
+      (1L, "dogs and cats an entirely unrelated sentence about spark")).toDF("qid", "qtext")
+    val batches = Seq(100L, 200L).map(off =>
+      docs.select(($"doc_id" + off).as("doc_id"), $"text"))
+    val fs = graft.storage.VFS(spark)
+    try {
+      Search.buildIndex(docs, "doc_id", "text", uri, buckets = 64)
+      batches.zipWithIndex.foreach { case (b, i) =>
+        Search.appendBatchToIndex(b, "doc_id", "text", uri, s"batch-${i + 1}") }
+      // precondition: the probe selects more leaf dirs than the default
+      // spark.sql.sources.parallelPartitionDiscovery.threshold (32)
+      val tbs = q.select(explode(Search.termsOf($"qtext")).as("t"))
+        .select(pmod(xxhash64($"t"), lit(64L)).cast("int")).as[Int].collect().toSet
+      val selected = fs.lsFilesRecursive(uri).map(f => f.substring(0, f.lastIndexOf('/')))
+        .distinct.count { d =>
+          val name = d.substring(d.lastIndexOf('/') + 1)
+          name.startsWith("tb=") && tbs(name.substring(3).toInt)
+        }
+      assert(selected > 32, s"only $selected leaf dirs selected")
+      val (got, probeJobs) = jobsOf(Search.bm25IndexTopK(spark, uri, q, "qid", "qtext", k = 5)
+        .select("query_id", "doc_id", "score", "rank").collect())
+      assert(probeJobs.nonEmpty && probeJobs.size <= 6,
+        s"${probeJobs.size} jobs: ${probeJobs.mkString("; ")}")
+      assert(!probeJobs.flatten.exists(_.startsWith("parquet at")),
+        s"file-listing job in the probe: ${probeJobs.mkString("; ")}")
+      val inline = Search.bm25TopK(batches.foldLeft(docs)(_ unionByName _),
+        "doc_id", "text", q, "qid", "qtext", k = 5)
+      assert(got.toSet == inline.select("query_id", "doc_id", "score", "rank").collect().toSet)
+    } finally fs.delete(uri)
+  }
+
   test("bm25 index probe plan: bucket partitions prune, terms push down") {
     val uri = s"target/test-bm25-plan-${System.nanoTime()}"
     try {
