@@ -98,6 +98,11 @@ case class ArraySchema(
     * keep their logical dtype at the read API layer). */
   def sparkSchema: StructType = StructType(dims.map(_.sparkField) ++ attrs.map(_.sparkField))
 
+  /** Schema of a fragment's parquet files as scans declare it:
+    * [[sparkSchema]] with every column nullable, as parquet reads them
+    * back (enum attrs stay int codes). */
+  def fileSchema: StructType = StructType(sparkSchema.fields.map(_.copy(nullable = true)))
+
   def toJson: String = JObj(Seq(
     "version" -> JLong(version),
     "sparse" -> JBool(sparse),

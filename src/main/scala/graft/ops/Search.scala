@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 /** Full-text retrieval over the document corpus: an inverted index
@@ -411,7 +412,8 @@ object Search {
     * a pure function callers recompute when they need the layout.
     *
     * The selected leaf dirs are listed HERE too, and the scan is built
-    * from that listing ([[org.apache.spark.sql.graftshim.Shim.parquetOfLeafDirs]]):
+    * over that listing ([[Shim.leafDirIndex]], read through
+    * [[Shim.parquetOf]]):
     * `spark.read.parquet(dirs)` would list them again and, once they
     * exceed Spark's parallel-discovery threshold (32 paths — reached by
     * a probe as soon as one inc dir is pending), spend a Spark job on
@@ -446,7 +448,7 @@ object Search {
     // bucket selection matching no dirs (terms hashing to buckets this
     // index never wrote) is likewise a legitimate empty
     if (dirs.isEmpty) emptyPostings(spark)
-    else org.apache.spark.sql.graftshim.Shim.parquetOfLeafDirs(spark, dirs, PostingsSchema)
+    else Shim.parquetOf(spark, Shim.leafDirIndex(spark, dirs, PostingsSchema), PostingsSchema)
   }
 
   private val PostingsSchema = org.apache.spark.sql.types.StructType.fromDDL(

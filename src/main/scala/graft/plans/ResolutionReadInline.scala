@@ -1,11 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.graftshim.Shim
 import graft.sources.{GraftRelation, GraftTable}
 import graft.storage.ArrayTable
 
@@ -118,11 +118,7 @@ case class ResolutionReadInline(spark: SparkSession) extends Rule[LogicalPlan]
     * relation's attribute ids on top; None -> keep the V1 relation. */
   private def inlined(l: LogicalRelation, conjuncts: Seq[Expression]): Option[LogicalPlan] = {
     val r = l.relation.asInstanceOf[GraftRelation]
-    val at = (r.t0, r.t1) match {
-      case (None, None) => None
-      case (a, b) => Some((a.getOrElse(0L), b.getOrElse(Long.MaxValue)))
-    }
-    ResolutionReadInline.inlinePlan(spark, r.uri, at, l.output, conjuncts,
+    ResolutionReadInline.inlinePlan(spark, r.uri, r.at, l.output, conjuncts,
       conf.sessionLocalTimeZone)
   }
 }
@@ -157,55 +153,12 @@ object ResolutionReadInline {
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Per-dim inclusive bounds from the pushed-down conjuncts, for
-    * fragment MBR (file-level) pruning. Conservative: only
-    * `dim <cmp> literal` comparisons (and their mirrors) contribute;
-    * everything else keeps every fragment. Literals convert to their
-    * external Scala form — the same currency `ArrayTable.read` expects
-    * from the V1 path. */
+    * fragment MBR (file-level) pruning: each conjunct translates to a
+    * data-source filter as Spark pushes it to any V1 source (literals in
+    * their external Scala form, mirrored comparisons flipped), then
+    * [[GraftRelation.boundsOf]] keeps the tightest bound per dim —
+    * the same bounds the V1 and DSv2 paths prune by. */
   private[graft] def boundsOf(conjuncts: Seq[Expression], dims: Set[String])
-      : Map[String, (Option[Any], Option[Any])] = {
-    def ext(l: Literal): Any = CatalystTypeConverters.convertToScala(l.value, l.dataType)
-    val perDim = conjuncts.flatMap {
-      case EqualTo(a: AttributeReference, v: Literal) if dims(a.name) =>
-        Seq((a.name, Some(ext(v)): Option[Any], Some(ext(v)): Option[Any]))
-      case EqualTo(v: Literal, a: AttributeReference) if dims(a.name) =>
-        Seq((a.name, Some(ext(v)): Option[Any], Some(ext(v)): Option[Any]))
-      case GreaterThan(a: AttributeReference, v: Literal) if dims(a.name) =>
-        Seq((a.name, Some(ext(v)): Option[Any], None: Option[Any]))
-      case GreaterThanOrEqual(a: AttributeReference, v: Literal) if dims(a.name) =>
-        Seq((a.name, Some(ext(v)): Option[Any], None: Option[Any]))
-      case LessThan(a: AttributeReference, v: Literal) if dims(a.name) =>
-        Seq((a.name, None: Option[Any], Some(ext(v)): Option[Any]))
-      case LessThanOrEqual(a: AttributeReference, v: Literal) if dims(a.name) =>
-        Seq((a.name, None: Option[Any], Some(ext(v)): Option[Any]))
-      // mirrored: literal <cmp> dim
-      case GreaterThan(v: Literal, a: AttributeReference) if dims(a.name) =>
-        Seq((a.name, None: Option[Any], Some(ext(v)): Option[Any]))
-      case GreaterThanOrEqual(v: Literal, a: AttributeReference) if dims(a.name) =>
-        Seq((a.name, None: Option[Any], Some(ext(v)): Option[Any]))
-      case LessThan(v: Literal, a: AttributeReference) if dims(a.name) =>
-        Seq((a.name, Some(ext(v)): Option[Any], None: Option[Any]))
-      case LessThanOrEqual(v: Literal, a: AttributeReference) if dims(a.name) =>
-        Seq((a.name, Some(ext(v)): Option[Any], None: Option[Any]))
-      case _ => Nil
-    }
-    // tightest bound per dim: max of lows / min of highs, so
-    // `dim > 5 AND dim > 10` prunes with 10, not whichever came first.
-    // Comparable-ordering only applies within one dim's literals, which
-    // share the dim's type.
-    def tightest(vs: Seq[Any], takeMax: Boolean): Option[Any] =
-      if (vs.isEmpty) None
-      else Some(vs.reduce { (a, b) =>
-        val cmp = (a, b) match {
-          case (x: java.lang.Comparable[_], y) if x.getClass == y.getClass =>
-            x.asInstanceOf[java.lang.Comparable[Any]].compareTo(y)
-          case _ => 0 // incomparable: keep the first (conservative)
-        }
-        if ((cmp >= 0) == takeMax) a else b
-      })
-    perDim.groupBy(_._1).map { case (d, bs) =>
-      d -> (tightest(bs.flatMap(_._2), takeMax = true),
-            tightest(bs.flatMap(_._3), takeMax = false))
-    }
-  }
+      : Map[String, (Option[Any], Option[Any])] =
+    GraftRelation.boundsOf(conjuncts.flatMap(Shim.toSourceFilter).toArray, dims)
 }

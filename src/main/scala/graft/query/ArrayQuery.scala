@@ -49,9 +49,7 @@ case class ArrayQuery(
   lazy val schema: ArraySchema = ArrayTable.schemaOf(spark, uri)
 
   /** Build the lazy DataFrame plan. A manifest-served aggregate
-    * ([[metadataAgg]]) returns before the scan is built: building the
-    * read costs a parquet schema-inference job the served aggregate
-    * never uses. */
+    * ([[metadataAgg]]) returns before the scan is built. */
   def df: DataFrame = aggSpecs.flatMap(metadataAgg).getOrElse(scanDf)
 
   private def scanDf: DataFrame = {
@@ -105,67 +103,32 @@ case class ArrayQuery(
   private def metadataAgg(specs: Map[String, Seq[String]]): Option[DataFrame] = {
     import graft.core.Json._
     val pairs = specs.toSeq.flatMap { case (a, ops) => ops.map(a -> _) }
-    val dimTypes = schema.dims.map(d => d.name -> d.sparkField.dataType).toMap
     val servable = pairs.nonEmpty && pairs.forall {
-      case (attr, "count") =>
-        schema.dimNames.contains(attr) || schema.attrNames.contains(attr)
-      case (attr, "min" | "max") => dimTypes.get(attr).exists {
-        case LongType | IntegerType | ShortType | ByteType |
-             DoubleType | FloatType | StringType => true
-        case _ => false
-      }
+      case (attr, "count") => schema.hasColumn(attr)
+      case (attr, "min" | "max") => ArrayTable.mbrServable(schema, attr)
       case _ => false
     }
     if (!servable || condExpr.nonEmpty || ranges.nonEmpty) None
     else {
-      val (t0, t1) = at.getOrElse((0L, Long.MaxValue))
-      val frags1 = ArrayTable.fragments(spark, uri).filter(f => f.ts >= t0 && f.ts <= t1)
-      val dels1 = ArrayTable.deletes(spark, uri).filter(d => d.ts >= t0 && d.ts <= t1)
-      // whole-table truncation prunes fragments at metadata level, so
-      // manifest-served aggregates stay available after INSERT OVERWRITE
-      val (frags, dels) = ArrayTable.applyTruncation(frags1, dels1)
+      val sel = ArrayTable.select(spark, uri, at)
       val needCount = pairs.exists(_._2 == "count")
-      val shadowingPossible = !schema.allowsDuplicates && frags.size > 1 &&
-        ArrayTable.anyOverlap(frags)
-      if (dels.nonEmpty || frags.isEmpty || (needCount && shadowingPossible)) None
+      if (sel.dels.nonEmpty || sel.frags.isEmpty || (needCount && sel.needDedup)) None
       else {
-        val total = frags.map(_.cellCount).sum
-        // one MBR endpoint per fragment; numeric compare when all sides
-        // are numeric (JLong exact via BigDecimal), else string compare
-        def extreme(dim: String, takeMin: Boolean): Option[JVal] = {
-          val ends = frags.map(f => if (takeMin) f.mbr.get(dim).map(_._1)
-            else f.mbr.get(dim).map(_._2))
-          if (ends.exists(_.isEmpty)) None
-          else {
-            val vals = ends.flatten
-            val nums = vals.map {
-              case JLong(l) => Some(BigDecimal(l))
-              case JNum(n) => Some(BigDecimal(n))
-              case _ => None
-            }
-            if (nums.forall(_.isDefined)) {
-              val z = vals.zip(nums.map(_.get))
-              Some((if (takeMin) z.minBy(_._2) else z.maxBy(_._2))._1)
-            } else if (vals.forall(_.isInstanceOf[JStr])) {
-              val ss = vals.collect { case s: JStr => s }
-              Some(if (takeMin) ss.minBy(_.v) else ss.maxBy(_.v))
-            } else None
-          }
-        }
-        // float dims surface as Double (Aggregates.aggColumn parity)
-        def outType(dt: org.apache.spark.sql.types.DataType) = dt match {
-          case FloatType => DoubleType
-          case other => other
-        }
+        val total = sel.frags.map(_.cellCount).sum
         val cols = pairs.map {
           case (attr, "count") => Some(lit(total).as(s"${attr}_count"))
           case (attr, op) =>
-            extreme(attr, takeMin = op == "min").map { v =>
+            sel.mbrExtreme(attr, takeMin = op == "min").map { v =>
               val l = v match {
                 case JLong(x) => lit(x); case JNum(x) => lit(x)
                 case JStr(x) => lit(x); case _ => lit(null)
               }
-              l.cast(outType(dimTypes(attr))).as(s"${attr}_$op")
+              // float dims surface as Double (Aggregates.aggColumn parity)
+              val out = schema.dim(attr).sparkField.dataType match {
+                case FloatType => DoubleType
+                case other => other
+              }
+              l.cast(out).as(s"${attr}_$op")
             }
         }
         if (cols.exists(_.isEmpty)) None

@@ -19,14 +19,16 @@ import graft.storage.ArrayTable
   *   df.write.format("graft").option("dims","x,y").mode("append").save(uri)
   * }}}
   *
-  * Reads go through DataSource V2: `getTable` inspects the array's
-  * driver-side metadata and, when a bare multi-path parquet scan is
-  * semantically sufficient (no shadowing/tombstones/version drift/enum
-  * decode — `ArrayTable.fastPathFragments`), serves a columnar
-  * `BatchScan` that delegates to Spark's vectorized parquet scan with
-  * pushed filters + pruned columns, plus fragment MBR pruning at plan
-  * time. When MVCC resolution is required the table advertises no
-  * read capability, so Spark falls back to the V1
+  * Reads go through DataSource V2: `getTable` takes the array's
+  * fragment selection (`ArrayTable.select`, the one every array read
+  * makes) and, when a bare multi-path parquet scan is semantically
+  * sufficient (no shadowing/tombstones/version drift/enum decode —
+  * `Selection.fastPath`), serves a columnar `BatchScan`: Spark's
+  * vectorized `ParquetScan` with pushed filters + pruned columns over
+  * the same pre-listed, declared-schema file index the resolution
+  * reads scan (`ArrayTable.fileIndex`), after fragment MBR pruning at
+  * plan time. When MVCC resolution is required the table advertises
+  * no read capability, so Spark falls back to the V1
   * `PrunedFilteredScan` below, which composes the full resolution
   * DataFrame. Writes always take the V1 path (append one immutable
   * fragment per save — MVCC preserved for every writer).
@@ -104,6 +106,7 @@ case class GraftRelation(sqlContext: SQLContext, uri: String,
 
   private def spark: SparkSession = sqlContext.sparkSession
   private lazy val arraySchema = ArrayTable.schemaOf(spark, uri)
+  private[graft] def at: Option[(Long, Long)] = ArrayTable.window(t0, t1)
 
   override def schema: StructType = arraySchema.sparkSchema
 
@@ -125,10 +128,6 @@ case class GraftRelation(sqlContext: SQLContext, uri: String,
     * is handed over as-is (no InternalRow -> Row detour). */
   override def buildScan(requiredColumns: Array[String],
       filters: Array[Filter]): RDD[Row] = {
-    val at = (t0, t1) match {
-      case (None, None) => None
-      case (a, b) => Some((a.getOrElse(0L), b.getOrElse(Long.MaxValue)))
-    }
     // dim bounds -> fragment MBR pruning + pushed range predicates
     val dimSet = arraySchema.dimNames.toSet
     val bounds = GraftRelation.boundsOf(filters.filter(f =>
@@ -169,7 +168,9 @@ object GraftRelation {
 
   /** Extract per-dim inclusive bounds from pushable filters for
     * fragment MBR pruning. Conservative: only top-level AND-ed
-    * comparisons on a single dim contribute. */
+    * comparisons on a single dim contribute, and each side keeps its
+    * tightest bound (max of lows, min of highs), so `dim > 5 AND
+    * dim > 10` prunes with 10 whichever came first. */
   def boundsOf(filters: Array[Filter], dims: Set[String])
       : Map[String, (Option[Any], Option[Any])] = {
     def walk(f: Filter): Seq[(String, Option[Any], Option[Any])] = f match {
@@ -181,8 +182,20 @@ object GraftRelation {
       case And(l, r) => walk(l) ++ walk(r)
       case _ => Nil
     }
+    // one dim's literals share the dim's type; an incomparable pair
+    // keeps the first, either being a valid bound
+    def tightest(vs: Seq[Any], takeMax: Boolean): Option[Any] =
+      vs.reduceOption { (a, b) =>
+        val cmp = (a, b) match {
+          case (x: java.lang.Comparable[_], y) if x.getClass == y.getClass =>
+            x.asInstanceOf[java.lang.Comparable[Any]].compareTo(y)
+          case _ => 0
+        }
+        if (cmp == 0 || (cmp > 0) == takeMax) a else b
+      }
     filters.flatMap(walk).groupBy(_._1).map { case (d, bs) =>
-      d -> (bs.flatMap(_._2).headOption, bs.flatMap(_._3).headOption)
+      d -> (tightest(bs.flatMap(_._2), takeMax = true),
+            tightest(bs.flatMap(_._3), takeMax = false))
     }
   }
 }
@@ -207,22 +220,17 @@ case class GraftTable(spark: SparkSession, uri: String,
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete {
 
-  private[graft] def at: Option[(Long, Long)] = (t0, t1) match {
-    case (None, None) => None
-    case (a, b) => Some((a.getOrElse(0L), b.getOrElse(Long.MaxValue)))
-  }
+  private[graft] def at: Option[(Long, Long)] = ArrayTable.window(t0, t1)
 
   private lazy val arraySchema =
     if (ArrayTable.exists(spark, uri)) Some(ArrayTable.schemaOf(spark, uri)) else None
 
-  private lazy val fastFrags: Option[Seq[ArrayTable.FragmentInfo]] =
-    if (arraySchema.isEmpty) None
-    else ArrayTable.fastPathFragments(spark, uri, at)
+  private lazy val selection: Option[ArrayTable.Selection] =
+    arraySchema.map(_ => ArrayTable.select(spark, uri, at))
 
   /** True when a bare parquet scan would be WRONG (shadowing,
     * tombstones, version drift, enum decode). */
-  private[graft] def needsResolution: Boolean =
-    arraySchema.isDefined && fastFrags.isEmpty
+  private[graft] def needsResolution: Boolean = selection.exists(!_.fastPath)
 
   override def name(): String = s"graft:$uri"
 
@@ -254,7 +262,7 @@ case class GraftTable(spark: SparkSession, uri: String,
     if (viaCatalog)
       java.util.EnumSet.of(TableCapability.BATCH_READ,
         TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
-    else if (fastFrags.isDefined) java.util.EnumSet.of(TableCapability.BATCH_READ)
+    else if (selection.exists(_.fastPath)) java.util.EnumSet.of(TableCapability.BATCH_READ)
     else java.util.Collections.emptySet()
 
   /** A resolution-needing table hands out a scan builder that fails at
@@ -281,7 +289,7 @@ case class GraftTable(spark: SparkSession, uri: String,
               sys.error(msg)
           }
       }
-    } else new GraftScanBuilder(spark, uri, arraySchema.get, fastFrags.get, options)
+    } else new GraftScanBuilder(spark, uri, selection.get, options)
   }
 
   /** SQL `DELETE FROM ... WHERE ...`: the pushed filters translate to
@@ -349,21 +357,18 @@ case class GraftTable(spark: SparkSession, uri: String,
     }
 }
 
-/** Delegating scan builder: fragment MBR pruning from the pushed
-  * filters happens here (partition-pruning analogue, driver-side), then
-  * Spark's own vectorized ParquetScan serves the data — columnar
-  * batches, row-group stat pruning and column pruning included. */
+/** Delegating scan builder over a fast-path selection: fragment MBR
+  * pruning from the pushed filters happens here (partition-pruning
+  * analogue, driver-side), then Spark's own vectorized ParquetScan
+  * serves the data over [[ArrayTable.fileIndex]] — columnar batches,
+  * row-group stat pruning and column pruning included. */
 class GraftScanBuilder(spark: SparkSession, uri: String,
-    arraySchema: graft.core.ArraySchema,
-    frags: Seq[ArrayTable.FragmentInfo],
+    sel: ArrayTable.Selection,
     options: CaseInsensitiveStringMap) extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
 
-  // parquet arrays/timestamps read back nullable; relaxed nullability
-  // keeps the delegate's read schema consistent with the files
-  private val dataSchema: StructType =
-    StructType(arraySchema.sparkSchema.fields.map(_.copy(nullable = true)))
+  private val dataSchema: StructType = sel.schema.fileSchema
   private var requiredSchema: StructType = dataSchema
   private var pushed: Array[Filter] = Array.empty
 
@@ -404,54 +409,29 @@ class GraftScanBuilder(spark: SparkSession, uri: String,
       : Option[(StructType, org.apache.spark.sql.catalyst.InternalRow)] = {
     import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min}
     import org.apache.spark.sql.connector.expressions.NamedReference
-    import graft.core.Json.{JLong, JNum, JStr, JVal}
+    import graft.core.Json.{JLong, JNum, JStr}
     if (pushed.nonEmpty || agg.groupByExpressions.nonEmpty) return None
-    val dimTypes = arraySchema.dims.map(d => d.name -> d.sparkField.dataType).toMap
+    val dimTypes = sel.schema.dims.map(d => d.name -> d.sparkField.dataType).toMap
     def refName(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
       e match {
         case n: NamedReference if n.fieldNames.length == 1 => Some(n.fieldNames()(0))
         case _ => None
       }
-    val total = frags.map(_.cellCount).sum
-    def servableDim(n: String) = dimTypes.get(n).exists {
-      case LongType | IntegerType | ShortType | ByteType |
-           DoubleType | FloatType | StringType => true
-      case _ => false
-    }
-    def extreme(dim: String, takeMin: Boolean): Option[Any] = {
-      val ends = frags.map(f => f.mbr.get(dim).map(p => if (takeMin) p._1 else p._2))
-      if (frags.isEmpty || ends.exists(_.isEmpty)) None
-      else {
-        val vals = ends.flatten
-        val nums = vals.map {
-          case JLong(l) => Some(BigDecimal(l)); case JNum(n) => Some(BigDecimal(n))
-          case _ => None
-        }
-        val winner: Option[JVal] =
-          if (nums.forall(_.isDefined)) {
-            val z = vals.zip(nums.map(_.get))
-            Some((if (takeMin) z.minBy(_._2) else z.maxBy(_._2))._1)
-          } else if (vals.forall(_.isInstanceOf[JStr])) {
-            val ss = vals.collect { case s: JStr => s }
-            Some(if (takeMin) ss.minBy(_.v) else ss.maxBy(_.v))
-          } else None
-        winner.map { v =>
-          (v, dimTypes(dim)) match {
-            case (JLong(l), LongType) => l
-            case (JLong(l), IntegerType) => l.toInt
-            case (JLong(l), ShortType) => l.toShort
-            case (JLong(l), ByteType) => l.toByte
-            case (JLong(l), DoubleType) => l.toDouble
-            case (JLong(l), FloatType) => l.toFloat
-            case (JNum(n), DoubleType) => n
-            case (JNum(n), FloatType) => n.toFloat
-            case (JStr(s), StringType) =>
-              org.apache.spark.unsafe.types.UTF8String.fromString(s)
-            case _ => return None
-          }
-        }
-      }
-    }
+    val total = sel.frags.map(_.cellCount).sum
+    def extreme(dim: String, takeMin: Boolean): Option[Any] =
+      sel.mbrExtreme(dim, takeMin).flatMap(v => (v, dimTypes(dim)) match {
+        case (JLong(l), LongType) => Some(l)
+        case (JLong(l), IntegerType) => Some(l.toInt)
+        case (JLong(l), ShortType) => Some(l.toShort)
+        case (JLong(l), ByteType) => Some(l.toByte)
+        case (JLong(l), DoubleType) => Some(l.toDouble)
+        case (JLong(l), FloatType) => Some(l.toFloat)
+        case (JNum(n), DoubleType) => Some(n)
+        case (JNum(n), FloatType) => Some(n.toFloat)
+        case (JStr(s), StringType) =>
+          Some(org.apache.spark.unsafe.types.UTF8String.fromString(s))
+        case _ => None
+      })
     val served = agg.aggregateExpressions.toSeq.map {
       case _: CountStar =>
         Some((StructField("count(*)", org.apache.spark.sql.types.LongType,
@@ -462,11 +442,11 @@ class GraftScanBuilder(spark: SparkSession, uri: String,
           (StructField(s"count($n)", org.apache.spark.sql.types.LongType,
             nullable = false), total: Any))
       case m: Min =>
-        refName(m.column).filter(servableDim).flatMap(n =>
+        refName(m.column).flatMap(n =>
           extreme(n, takeMin = true).map(v =>
             (StructField(s"min($n)", dimTypes(n)), v)))
       case m: Max =>
-        refName(m.column).filter(servableDim).flatMap(n =>
+        refName(m.column).flatMap(n =>
           extreme(n, takeMin = false).map(v =>
             (StructField(s"max($n)", dimTypes(n)), v)))
       case _ => None
@@ -490,14 +470,10 @@ class GraftScanBuilder(spark: SparkSession, uri: String,
   }
 
   private def buildFileScan(): Scan = {
-    val dimSet = arraySchema.dimNames.toSet
+    val dimSet = sel.schema.dimNames.toSet
     val bounds = GraftRelation.boundsOf(
       pushed.filter(f => GraftRelation.refs(f).forall(dimSet)), dimSet)
-    val pruned = frags.filter(f => ArrayTable.mbrIntersects(f, bounds))
-    val index = new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
-      spark,
-      pruned.map(f => new org.apache.hadoop.fs.Path(s"${f.path}/data")),
-      Map.empty[String, String], Some(dataSchema))
+    val index = ArrayTable.fileIndex(spark, sel.pruned(bounds).frags, sel.schema)
     val delegate = org.apache.spark.sql.execution.datasources.v2.parquet
       .ParquetScanBuilder(spark, index, dataSchema, dataSchema, options)
     org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan(

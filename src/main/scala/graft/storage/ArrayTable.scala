@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graftshim.Shim
 import graft.core._
 import graft.core.Json._
 import graft.query.QueryCondition
@@ -14,8 +15,8 @@ import graft.query.QueryCondition
   * {{{
   *   uri/
   *     __schema/schema_v00001.json ...      # evolution = new version
-  *     __fragments/f_<ts>_<seq>/data/part-... (parquet)  # one immutable fragment per write
-  *     __fragments/f_<ts>_<seq>/__manifest.json  # MBR per dim, cell count, ts, schema ver
+  *     __fragments/f_<ts>_<seq>_<uuid8>/data/part-... (parquet)  # one immutable fragment per write
+  *     __fragments/f_<ts>_<seq>_<uuid8>/__manifest.json  # MBR per dim, cell count, ts, schema ver
   *     __deletes/d_<ts>_<seq>.json          # conditional-delete log entries
   *     __meta.json                          # array metadata KV
   *     __trash/...                          # superseded fragments until vacuum
@@ -721,35 +722,92 @@ object ArrayTable {
 
   // -------------------------------------------------------------- reads
 
-  /** Fragments readable through a BARE multi-path parquet scan — no
-    * shadowing dedup, no tombstones, no version alignment, no enum
-    * decode — for the given time-travel window, after MBR pruning
-    * against `ranges`. None when the MVCC resolution path is required;
-    * callers (the DSv2 source) use this to decide whether a columnar
-    * file scan is semantically sufficient. */
-  def fastPathFragments(spark: SparkSession, uri: String,
-      at: Option[(Long, Long)] = None,
-      ranges: Map[String, (Option[Any], Option[Any])] = Map.empty): Option[Seq[FragmentInfo]] = {
-    val schema = schemaOf(spark, uri)
+  /** The open-timestamp window of optional `t0`/`t1` bounds; None
+    * when neither is set. */
+  def window(t0: Option[Long], t1: Option[Long]): Option[(Long, Long)] =
+    if (t0.isEmpty && t1.isEmpty) None
+    else Some((t0.getOrElse(0L), t1.getOrElse(Long.MaxValue)))
+
+  /** What one read sees: the fragments and conditional tombstones in
+    * effect (after whole-table truncation, see [[applyTruncation]]),
+    * and the facts a read derives from them. `truncated` records that
+    * a truncation entry fell in the window. */
+  case class Selection(schema: ArraySchema, frags: Seq[FragmentInfo],
+      dels: Seq[DeleteEntry], truncated: Boolean = false) {
+    /** Later fragments may shadow earlier cells: the read needs the
+      * dedup window. */
+    lazy val needDedup: Boolean =
+      !schema.allowsDuplicates && frags.size > 1 && anyOverlap(frags)
+    /** Every fragment was written under the current schema version. */
+    def singleVersion: Boolean = frags.forall(_.schemaVersion == schema.version)
+    /** A BARE multi-path parquet scan reads these fragments exactly: no
+      * shadowing dedup, no tombstones, no version alignment, no enum
+      * decode. */
+    def fastPath: Boolean = frags.nonEmpty && !needDedup && dels.isEmpty &&
+      singleVersion && schema.attrs.forall(_.enumLabel.isEmpty)
+    /** Fragment MBR pruning against per-dim inclusive bounds. */
+    def pruned(ranges: Map[String, (Option[Any], Option[Any])]): Selection =
+      if (ranges.isEmpty) this else copy(frags = frags.filter(f => mbrIntersects(f, ranges)))
+    /** MIN or MAX of `dim` from fragment MBRs alone: None unless the dim
+      * is [[mbrServable]], there is a fragment, every fragment records
+      * the endpoint, and the endpoints compare — all numeric (exact, via
+      * BigDecimal) or all strings. */
+    def mbrExtreme(dim: String, takeMin: Boolean): Option[JVal] = {
+      val ends = frags.map(f => f.mbr.get(dim).map(p => if (takeMin) p._1 else p._2))
+      if (!mbrServable(schema, dim) || frags.isEmpty || ends.exists(_.isEmpty)) None
+      else {
+        val vals = ends.flatten
+        val nums = vals.map {
+          case JLong(l) => Some(BigDecimal(l)); case JNum(n) => Some(BigDecimal(n))
+          case _ => None
+        }
+        if (nums.forall(_.isDefined)) {
+          val z = vals.zip(nums.map(_.get))
+          Some((if (takeMin) z.minBy(_._2) else z.maxBy(_._2))._1)
+        } else if (vals.forall(_.isInstanceOf[JStr])) {
+          val ss = vals.collect { case s: JStr => s }
+          Some(if (takeMin) ss.minBy(_.v) else ss.maxBy(_.v))
+        } else None
+      }
+    }
+  }
+
+  /** Dims whose fragment MBR endpoints answer MIN/MAX exactly:
+    * integral, floating and string types. */
+  def mbrServable(schema: ArraySchema, dim: String): Boolean =
+    schema.dims.find(_.name == dim).exists(_.sparkField.dataType match {
+      case LongType | IntegerType | ShortType | ByteType |
+           DoubleType | FloatType | StringType => true
+      case _ => false
+    })
+
+  /** The one fragment selection of every array read: fragments and
+    * tombstones in the time window `at` -> whole-table truncation ->
+    * fragment MBR pruning against `ranges`. Driver-side metadata only. */
+  def select(spark: SparkSession, uri: String, at: Option[(Long, Long)] = None,
+      ranges: Map[String, (Option[Any], Option[Any])] = Map.empty): Selection = {
     val (t0, t1) = at.getOrElse((0L, Long.MaxValue))
-    val frags1 = fragments(spark, uri).filter(f => f.ts >= t0 && f.ts <= t1)
-    val dels0 = deletes(spark, uri).filter(d => d.ts >= t0 && d.ts <= t1)
+    val inWindow = deletes(spark, uri).filter(d => d.ts >= t0 && d.ts <= t1)
     // truncation is a fragment-level prune, not a row filter — it keeps
     // the fast path available (post-truncate arrays are common after
     // INSERT OVERWRITE)
-    val (frags0, dels) = applyTruncation(frags1, dels0)
-    val frags = frags0.filter(f => mbrIntersects(f, ranges))
-    val needDedup = !schema.allowsDuplicates && frags.size > 1 && anyOverlap(frags)
-    val singleVersion = frags.forall(_.schemaVersion == schema.version)
-    val noEnums = schema.attrs.forall(_.enumLabel.isEmpty)
-    if (frags.nonEmpty && !needDedup && dels.isEmpty && singleVersion && noEnums)
-      Some(frags)
-    else None
+    val (frags, dels) = applyTruncation(
+      fragments(spark, uri).filter(f => f.ts >= t0 && f.ts <= t1), inWindow)
+    Selection(schemaOf(spark, uri), frags, dels, inWindow.exists(_.truncate)).pruned(ranges)
   }
 
-  /** Resolve the array to a DataFrame: fragment list -> timestamp filter
-    * (time travel) -> MBR prune -> multi-path parquet scan -> shadowing
-    * dedup -> delete tombstones -> enum decode.
+  /** Fragments readable through a BARE multi-path parquet scan for the
+    * given time-travel window, after MBR pruning against `ranges`
+    * ([[Selection.fastPath]]); None when the MVCC resolution path is
+    * required. */
+  def fastPathFragments(spark: SparkSession, uri: String,
+      at: Option[(Long, Long)] = None,
+      ranges: Map[String, (Option[Any], Option[Any])] = Map.empty): Option[Seq[FragmentInfo]] =
+    Some(select(spark, uri, at, ranges)).filter(_.fastPath).map(_.frags)
+
+  /** Resolve the array to a DataFrame: fragment selection ([[select]])
+    * -> multi-path parquet scan -> shadowing dedup -> delete tombstones
+    * -> enum decode.
     *
     * @param at      inclusive (start, end) open-timestamp range
     * @param ranges  per-dim inclusive bounds used for fragment MBR
@@ -758,14 +816,8 @@ object ArrayTable {
   def read(spark: SparkSession, uri: String,
       at: Option[(Long, Long)] = None,
       ranges: Map[String, (Option[Any], Option[Any])] = Map.empty,
-      keepVersionCols: Boolean = false): DataFrame = {
-    val (t0, t1) = at.getOrElse((0L, Long.MaxValue))
-    val frags1 = fragments(spark, uri).filter(f => f.ts >= t0 && f.ts <= t1)
-    val dels0 = deletes(spark, uri).filter(d => d.ts >= t0 && d.ts <= t1)
-    val (frags0, dels) = applyTruncation(frags1, dels0)
-    val frags = frags0.filter(f => mbrIntersects(f, ranges))
-    resolveFragments(spark, uri, frags, dels, ranges, keepVersionCols)
-  }
+      keepVersionCols: Boolean = false): DataFrame =
+    resolve(spark, uri, select(spark, uri, at, ranges), ranges, keepVersionCols)
 
   /** Row-level snapshot diff between two MVCC windows — the CDC-style
     * "what changed between version t and t'" query: rows present at
@@ -776,14 +828,14 @@ object ArrayTable {
     *
     * Scale shape — the manifest fast path: when both windows share a
     * start, the delta window (oldT1, newT1] introduces NO delete
-    * entries, no truncation exists, and no two fragments of the new
-    * window overlap on MBRs (shadowing provably impossible — the same
-    * manifest test the upsert read uses), the diff IS the delta
-    * fragments: ONE scan of exactly the appended data, the old
-    * snapshot never read. Time-window tombstones at or before oldT1
-    * cannot touch delta fragments (deletes mask only rows with
-    * ts <= delete ts), so they are equal in both snapshots and out of
-    * the diff by construction. Anything else (new tombstones,
+    * entries, no truncation falls in the new window, and no two
+    * fragments of the new window overlap on MBRs (shadowing provably
+    * impossible — the same manifest test the upsert read uses), the
+    * diff IS the delta fragments: ONE scan of exactly the appended
+    * data, the old snapshot never read. Time-window tombstones at or
+    * before oldT1 cannot touch delta fragments (deletes mask only rows
+    * with ts <= delete ts), so they are equal in both snapshots and out
+    * of the diff by construction. Anything else (new tombstones,
     * truncation, possible shadowing) falls back to the general
     * two-snapshot multiset anti-diff (`exceptAll` both ways). */
   def diff(spark: SparkSession, uri: String, oldAt: (Long, Long),
@@ -791,15 +843,10 @@ object ArrayTable {
     val (o0, o1) = oldAt
     val (n0, n1) = newAt
     require(o1 >= o0 && n1 >= n0, s"bad windows $oldAt / $newAt")
-    val delsAll = deletes(spark, uri)
-    val newFrags = fragments(spark, uri).filter(f => f.ts >= n0 && f.ts <= n1)
-    val deltaFrags = newFrags.filter(_.ts > o1)
-    val deltaDels = delsAll.exists(d => d.ts > o1 && d.ts >= n0 && d.ts <= n1)
-    val anyTrunc = delsAll.exists(_.truncate)
-    // allowsDuplicates arrays never shadow, so MBR overlap is irrelevant
-    val noShadow = schemaOf(spark, uri).allowsDuplicates || !anyOverlap(newFrags)
-    if (o0 == n0 && n1 >= o1 && !deltaDels && !anyTrunc && noShadow)
-      resolveFragments(spark, uri, deltaFrags, Nil)
+    val sel = select(spark, uri, Some(newAt))
+    if (o0 == n0 && n1 >= o1 && !sel.truncated && sel.dels.forall(_.ts <= o1) &&
+        !sel.needDedup)
+      resolve(spark, uri, sel.copy(frags = sel.frags.filter(_.ts > o1), dels = Nil))
         .withColumn("change_type", lit("insert"))
     else {
       val o = read(spark, uri, at = Some(oldAt))
@@ -809,81 +856,53 @@ object ArrayTable {
     }
   }
 
-  /** MVCC resolution over an explicit fragment subset (the read path,
-    * and the unit of partial consolidation). */
-  private def resolveFragments(spark: SparkSession, uri: String,
-      frags: Seq[FragmentInfo], dels: Seq[DeleteEntry],
+  /** MVCC resolution of a selection (the read path, and the unit of
+    * partial consolidation). */
+  private def resolve(spark: SparkSession, uri: String, sel: Selection,
       ranges: Map[String, (Option[Any], Option[Any])] = Map.empty,
       keepVersionCols: Boolean = false): DataFrame = {
-    val schema = schemaOf(spark, uri)
-
-    // MVCC resolution work actually needed for THIS read:
-    val needDedup = !schema.allowsDuplicates && frags.size > 1 && anyOverlap(frags)
-    val needVersionCols = keepVersionCols || needDedup || dels.nonEmpty
-    val singleVersion = frags.map(_.schemaVersion).distinct.size <= 1 &&
-      frags.forall(_.schemaVersion == schema.version)
-
+    val Selection(schema, frags, dels, _) = sel
+    val needDedup = sel.needDedup
     val base =
       if (frags.isEmpty) {
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           StructType(schema.sparkSchema.fields :+ StructField(TS, LongType, false)
             :+ StructField(SEQ, LongType, false)))
-      } else if (!needVersionCols && singleVersion) {
+      } else if (!keepVersionCols && !needDedup && dels.isEmpty && sel.singleVersion) {
         // FAST PATH: no shadowing/deletes/version columns required —
         // ONE multi-path parquet scan over all fragments. This is what
         // keeps planning O(1) in fragment count (a 10k-fragment array
         // must not become a 10k-way union).
-        spark.read.parquet(frags.map(f => s"${f.path}/data"): _*)
-          .withColumn(TS, lit(0L)).withColumn(SEQ, lit(0L))
+        scan(spark, frags, schema).withColumn(TS, lit(0L)).withColumn(SEQ, lit(0L))
       } else {
         // resolution path: (ts, seq) must ride every row for the
         // shadowing window / tombstone filters. They are parsed from
-        // the fragment DIRECTORY name (f_<ts>_<seq>_<uuid>, under the
-        // __fragments/ parent so a lookalike segment elsewhere in the
-        // array's own URI can't match), which lets all
-        // same-schema-version fragments share ONE multi-path scan:
-        // plan size is O(#schema versions), not O(#fragments). The old
-        // per-fragment unionByName paid a 1k-way union on a
-        // 1k-fragment array with one tombstone — measured 80.8 s to
-        // PLAN + 26.7 s to execute vs 1.8 s + 0.6 s for this shape
-        // (BASELINE.md, "Round 13: many-fragment MVCC resolution").
-        //
-        // The name parse is VALIDATED driver-side against the
-        // authoritative manifest values before use: any fragment whose
-        // directory name does not round-trip its manifest (ts, seq) —
-        // a legacy pre-uuid name, a hand-renamed dir — routes the read
-        // through the manifest-literal per-fragment union instead of
-        // risking a NULL ts that would silently widen the tombstone
-        // filter.
-        val pat = java.util.regex.Pattern.compile(
-          ".*/__fragments/f_(\\d+)_(\\d+)_[0-9a-f]{8}$")
-        val namesAuthoritative = frags.forall { f =>
+        // the fragment DIRECTORY name, so all same-schema-version
+        // fragments share ONE scan: plan size is O(#schema versions),
+        // not O(#fragments) — a per-fragment union measured 80.8 s to
+        // PLAN a 1k-fragment array with one tombstone (BASELINE.md,
+        // "Round 13: many-fragment MVCC resolution").
+        val pat = java.util.regex.Pattern.compile(".*/__fragments/f_(\\d+)_(\\d+)_[0-9a-f]{8}$")
+        frags.foreach { f =>
           val m = pat.matcher(f.path)
-          m.matches() && m.group(1).toLong == f.ts && m.group(2).toLong == f.seq &&
-            // regexp_extract takes the FIRST match per path: an array
-            // nested inside another array's fragment dir would match
-            // the OUTER segment, so any extra __fragments/ component
-            // routes to the literal path too
-            f.path.indexOf("/__fragments/") == f.path.lastIndexOf("/__fragments/")
+          // a name that does not round-trip the manifest (ts, seq) would
+          // read with a NULL or wrong ts and silently widen the tombstone
+          // filter; regexp_extract takes the FIRST match per path, so an
+          // extra __fragments/ component (an array nested in another's
+          // fragment dir) would parse the outer segment
+          require(m.matches() && m.group(1).toLong == f.ts && m.group(2).toLong == f.seq &&
+            f.path.indexOf("/__fragments/") == f.path.lastIndexOf("/__fragments/"),
+            s"fragment dir ${f.path} does not name its manifest (ts=${f.ts}, seq=${f.seq}) " +
+              "as __fragments/f_<ts>_<seq>_<uuid8>")
         }
-        if (namesAuthoritative) {
-          val re = "/__fragments/f_(\\d+)_(\\d+)_[0-9a-f]{8}/"
-          val fnTs = regexp_extract(input_file_name(), re, 1).cast(LongType)
-          val fnSeq = regexp_extract(input_file_name(), re, 2).cast(LongType)
-          frags.groupBy(_.schemaVersion).toSeq.sortBy(_._1).map { case (ver, group) =>
-            val vSchema = schemaOf(spark, uri, Some(ver))
-            val df = spark.read.parquet(group.map(f => s"${f.path}/data"): _*)
-            alignColumns(df, schema, vSchema)
-              .withColumn(TS, fnTs).withColumn(SEQ, fnSeq)
-          }.reduce(_ unionByName _)
-        } else {
-          frags.map { f =>
-            val vSchema = schemaOf(spark, uri, Some(f.schemaVersion))
-            val df = spark.read.parquet(s"${f.path}/data")
-            alignColumns(df, schema, vSchema)
-              .withColumn(TS, lit(f.ts)).withColumn(SEQ, lit(f.seq))
-          }.reduce(_ unionByName _)
-        }
+        val re = "/__fragments/f_(\\d+)_(\\d+)_[0-9a-f]{8}/"
+        val fnTs = regexp_extract(input_file_name(), re, 1).cast(LongType)
+        val fnSeq = regexp_extract(input_file_name(), re, 2).cast(LongType)
+        frags.groupBy(_.schemaVersion).toSeq.sortBy(_._1).map { case (ver, group) =>
+          val vSchema = if (ver == schema.version) schema else schemaOf(spark, uri, Some(ver))
+          alignColumns(scan(spark, group, vSchema), schema, vSchema)
+            .withColumn(TS, fnTs).withColumn(SEQ, fnSeq)
+        }.reduce(_ unionByName _)
       }
 
     val ranged = applyRanges(base, ranges)
@@ -905,6 +924,17 @@ object ArrayTable {
     val decoded = decodeEnums(afterDeletes, schema)
     if (keepVersionCols) decoded else decoded.drop(TS, SEQ)
   }
+
+  /** The pre-listed file index over `frags`' data dirs, declaring the
+    * file schema of the version `s` they were written under. Every
+    * array scan — resolution reads and the DSv2 source alike — plans
+    * over one of these: no listing job, no footer inference. */
+  private[graft] def fileIndex(spark: SparkSession, frags: Seq[FragmentInfo],
+      s: ArraySchema): org.apache.spark.sql.execution.datasources.InMemoryFileIndex =
+    Shim.leafDirIndex(spark, frags.map(f => s"${f.path}/data"), s.fileSchema)
+
+  private def scan(spark: SparkSession, frags: Seq[FragmentInfo], s: ArraySchema): DataFrame =
+    Shim.parquetOf(spark, fileIndex(spark, frags, s), s.fileSchema)
 
   /** Column alignment across schema versions: missing attrs come back as
     * their fill value (mergeSchema-style evolution). */
@@ -941,7 +971,7 @@ object ArrayTable {
 
   /** Fragment-level MBR pruning against requested dim ranges (numeric
     * dims; non-numeric comparisons conservatively keep the fragment). */
-  private[graft] def mbrIntersects(f: FragmentInfo,
+  private def mbrIntersects(f: FragmentInfo,
       ranges: Map[String, (Option[Any], Option[Any])]): Boolean =
     ranges.forall { case (d, (lo, hi)) =>
       f.mbr.get(d) match {
@@ -961,7 +991,7 @@ object ArrayTable {
 
   /** Do any two fragments overlap on every dim MBR? If not, shadowing is
     * impossible and the dedup shuffle is skipped. */
-  private[graft] def anyOverlap(frags: Seq[FragmentInfo]): Boolean = {
+  private def anyOverlap(frags: Seq[FragmentInfo]): Boolean = {
     def overlap(a: FragmentInfo, b: FragmentInfo): Boolean =
       a.mbr.keys.forall { d =>
         (a.mbr.get(d), b.mbr.get(d)) match {
@@ -1077,10 +1107,11 @@ object ArrayTable {
   def consolidate(spark: SparkSession, uri: String,
       plan: Seq[Seq[FragmentInfo]]): Seq[FragmentInfo] = {
     val fs = vfs(spark)
+    val schema = schemaOf(spark, uri)
     val allDels = deletes(spark, uri)
     plan.filter(_.size >= 2).map { group =>
       val (live, dels) = applyTruncation(group, allDels)
-      val merged = resolveFragments(spark, uri, live, dels)
+      val merged = resolve(spark, uri, Selection(schema, live, dels))
       val info = write(spark, merged, uri, Some(group.map(_.ts).max))
       fs.mkdirs(s"$uri/__trash")
       group.foreach(f => fs.rename(f.path, s"$uri/__trash/${f.name}"))

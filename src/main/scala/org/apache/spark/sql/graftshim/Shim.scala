@@ -20,6 +20,12 @@ object Shim {
   def toExpressionEager(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter.apply(c.node)
 
+  /** A Catalyst predicate as the data-source filter Spark pushes to V1
+    * sources (top-level columns only); None when it has no such form. */
+  def toSourceFilter(e: Expression): Option[org.apache.spark.sql.sources.Filter] =
+    org.apache.spark.sql.execution.datasources.DataSourceStrategy
+      .translateFilter(e, supportNestedPredicatePushdown = false)
+
   /** DataFrame over an already-resolved logical plan (private[sql] in
     * classic). Used by the MERGE rewrite to re-execute the statement's
     * source query as a plain frame. */
@@ -39,19 +45,20 @@ object Shim {
       case p => p
     }
 
-  /** One parquet scan over the data files directly inside `leafDirs`,
-    * listed HERE, one `listStatus` per dir on the driver. The file index
-    * is built over a [[FileStatusCache]] seeded with that listing, so
-    * Spark never re-lists the dirs: `spark.read.parquet(dirs)` lists
-    * them again itself and, above
+  /** A file index over the data files directly inside `leafDirs`,
+    * listed HERE, one `listStatus` per dir on the driver, with `schema`
+    * declared. The index is built over a [[FileStatusCache]] seeded
+    * with that listing, so Spark never re-lists the dirs:
+    * `spark.read.parquet(dirs)` lists them again itself and, above
     * `spark.sql.sources.parallelPartitionDiscovery.threshold` paths,
     * does it in a Spark job. Files are filtered by Spark's own rule
     * (`_`/`.` names are not data) and carry block locations unless
     * `spark.sql.sources.ignoreDataLocality` is set, as in Spark's
     * listing. A dir that vanished before its listing throws
     * `FileNotFoundException`, as `spark.read` does. */
-  def parquetOfLeafDirs(spark: org.apache.spark.sql.SparkSession,
-      leafDirs: Seq[String], schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame = {
+  def leafDirIndex(spark: org.apache.spark.sql.SparkSession, leafDirs: Seq[String],
+      schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.execution.datasources.InMemoryFileIndex = {
     import org.apache.hadoop.fs.{FileStatus, LocatedFileStatus, Path}
     import org.apache.spark.sql.execution.datasources._
     val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
@@ -81,8 +88,17 @@ object Shim {
       override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = seeded.put(path, files)
       override def invalidateAll(): Unit = seeded.clear()
     }
-    val index = new InMemoryFileIndex(session, listed.map(_._1), Map.empty[String, String],
+    new InMemoryFileIndex(session, listed.map(_._1), Map.empty[String, String],
       Some(schema), cache)
+  }
+
+  /** The parquet relation over `index`, read with the declared `schema`:
+    * planning it reads no footer. */
+  def parquetOf(spark: org.apache.spark.sql.SparkSession,
+      index: org.apache.spark.sql.execution.datasources.FileIndex,
+      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.execution.datasources._
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     session.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, schema,
       None, new parquet.ParquetFileFormat(), Map.empty[String, String])(session))
   }

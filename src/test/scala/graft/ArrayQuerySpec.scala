@@ -96,6 +96,30 @@ class ArrayQuerySpec extends SparkSpec {
     assert(mmRow.getAs[Long]("x_min") == 1L && mmRow.getAs[Long]("x_max") == 50L)
   }
 
+  test("slice, points, cond and time-travel reads: no job to build, one to collect") {
+    val u = TestSession.tmpDir("aqjobs")
+    val mk = (lo: Long, hi: Long) =>
+      (lo to hi).map(i => (i, (i % 5).toInt, i * 2.0, s"s$i")).toDF("x", "y", "v", "s")
+    ArrayTable.ingest(spark, mk(1L, 20L), u, Seq("x", "y"), tsOpt = Some(100L), overwrite = true)
+    ArrayTable.write(spark, mk(21L, 40L), u, Some(200L))
+    ArrayTable.write(spark, mk(41L, 60L), u, Some(300L))
+    val reads = Seq(
+      ("slice", ArrayQuery(spark, u).multiIndex("x" -> RangeIncl(Some(10L), Some(30L)))
+        .attrs("v"), 21),
+      ("points", ArrayQuery(spark, u).multiIndex("x" -> Points(Seq(3L, 33L, 59L)))
+        .attrs("s"), 3),
+      ("cond", ArrayQuery(spark, u).multiIndex("x" -> RangeIncl(Some(10L), Some(30L)))
+        .cond("v > 30.0").attrs("v"), 15),
+      ("time travel", ArrayQuery(spark, u).timestamp(0L, 250L).attrs("v"), 40))
+    reads.foreach { case (what, q, n) =>
+      val (df, buildJobs) = jobsOf(q.df)
+      assert(buildJobs.isEmpty, s"$what: building .df started $buildJobs")
+      val (rows, runJobs) = jobsOf(df.collect())
+      assert(runJobs.size == 1, s"$what: collect ran $runJobs")
+      assert(rows.length == n, what)
+    }
+  }
+
   test("metadata count falls through when shadowing or deletes make it unsafe") {
     val u2 = TestSession.tmpDir("aqc")
     import spark.implicits._

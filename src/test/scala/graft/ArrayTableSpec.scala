@@ -326,6 +326,20 @@ class ArrayTableSpec extends SparkSpec {
       .select("x").as[Long].collect().toSeq == Seq(1L, 2L, 3L))
   }
 
+  test("a fragment dir whose name does not carry its manifest (ts, seq) fails resolution") {
+    val uri = freshUri("badname")
+    ArrayTable.ingest(spark, sample.filter($"x" === 1), uri, dims, tsOpt = Some(100L),
+      overwrite = true)
+    val f = ArrayTable.write(spark, sample.filter($"x" =!= 1), uri, Some(200L))
+    // the tombstone forces the resolution path, which parses (ts, seq)
+    // from the dir name; drop the name's uuid suffix
+    ArrayTable.delete(spark, uri, "v > 40.0", Some(300L))
+    val bare = f"$uri/__fragments/f_${f.ts}%013d_${f.seq}%05d"
+    assert(VFS(spark).rename(f.path, bare))
+    val e = intercept[IllegalArgumentException](ArrayTable.read(spark, uri).collect())
+    assert(e.getMessage.contains(bare), e.getMessage)
+  }
+
   test("readers racing an appending writer never see a partial manifest") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._

@@ -84,6 +84,64 @@ class GraftSourceSpec extends SparkSpec {
     assert(df.count() == 10)
   }
 
+  test("v2 path: MBR pruning keeps the tightest pushed bound per dim") {
+    val uri = TestSession.tmpDir("dsv2tight")
+    // three disjoint fragments: x in [1,30], [31,60], [61,100]
+    ArrayTable.ingest(spark, sample.filter($"x" <= 30), uri, Seq("x", "y"),
+      tsOpt = Some(100L), overwrite = true)
+    ArrayTable.write(spark, sample.filter($"x" > 30 && $"x" <= 60), uri, Some(200L))
+    ArrayTable.write(spark, sample.filter($"x" > 60), uri, Some(300L))
+    val df = spark.read.format("graft").load(uri).filter($"x" > 5 && $"x" > 70)
+    val ps = df.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+    }.head.asInstanceOf[org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan]
+    import org.apache.spark.sql.sources.GreaterThan
+    val pushed = ps.pushedFilters.toSeq
+    assert(pushed.indexOf(GreaterThan("x", 5L)) >= 0 &&
+      pushed.indexOf(GreaterThan("x", 5L)) < pushed.indexOf(GreaterThan("x", 70L)),
+      s"the looser bound must be pushed first: $pushed")
+    assert(ps.fileIndex.rootPaths.size == 1, s"x > 70 must prune two of three fragments: " +
+      ps.fileIndex.rootPaths)
+    assert(df.count() == 30)
+  }
+
+  test("v2 path: a 40-fragment fast-path read plans without a listing job") {
+    val uri = TestSession.tmpDir("dsv2forty")
+    ArrayTable.create(spark, uri, graft.core.ArraySchema.infer(sample.schema, Seq("x", "y")))
+    (1L to 40L).foreach(i => ArrayTable.write(spark, sample.filter($"x" === i), uri, Some(100L + i)))
+    // an attr filter: no fragment prunes, so all 40 dirs reach the scan
+    // (above Spark's 32-path parallel-listing threshold)
+    val df = spark.read.format("graft").load(uri).filter($"y" =!= 2)
+    val (plan, planJobs) = jobsOf(df.queryExecution.executedPlan)
+    val ps = plan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+    }.head.asInstanceOf[org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan]
+    assert(ps.fileIndex.rootPaths.size == 40)
+    assert(planJobs.isEmpty, s"planning must not list the fragments in a job: $planJobs")
+    val (rows, runJobs) = jobsOf(df.select("x").as[Long].collect())
+    assert(runJobs.size == 1, runJobs.toString)
+    assert(rows.sorted.toSeq == (1L to 40L).filter(_ % 4 != 2))
+  }
+
+  test("resolution reads start no parquet inference or listing job") {
+    // the mvcc_read shape: an overlapping rewrite plus a tombstone
+    val uri = TestSession.tmpDir("dsv2resjobs")
+    ArrayTable.ingest(spark, sample, uri, Seq("x", "y"), tsOpt = Some(100L), overwrite = true)
+    ArrayTable.write(spark, sample.limit(5).withColumn("v", lit(0.0)), uri, Some(200L))
+    ArrayTable.delete(spark, uri, "y == 1", Some(300L))
+    def parquetJobs(body: => Long): (Long, Seq[Seq[String]]) = {
+      val (n, jobs) = jobsOf(body)
+      (n, jobs.filter(_.exists(_.startsWith("parquet at"))))
+    }
+    val (all, apiJobs) = parquetJobs(ArrayTable.read(spark, uri).collect().length.toLong)
+    assert(apiJobs.isEmpty, apiJobs.toString)
+    assert(all == (1L to 100L).count(_ % 4 != 1))
+    val (some, srcJobs) = parquetJobs(spark.read.format("graft").load(uri)
+      .where($"x".between(10, 60)).collect().length.toLong)
+    assert(srcJobs.isEmpty, srcJobs.toString)
+    assert(some == (10L to 60L).count(_ % 4 != 1))
+  }
+
   test("resolution reads inline as columnar plans (no RDD row scan)") {
     // overlapping fragments AND a tombstone: the full MVCC resolution
     // path (shadowing window + delete anti-filter)
