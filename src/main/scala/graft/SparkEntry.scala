@@ -122,15 +122,9 @@ object SparkEntry {
   private[graft] def minhashIndex(s: SparkSession, dir: String): String = synchronized {
     val uri = s"$arrayBase/${sfKey(dir)}/minhash_index"
     val fs = graft.storage.VFS(s)
-    // rebuild when absent OR when a stale fixture predates the current
-    // params format (readParams is strict by design)
-    val usable = fs.exists(s"$uri/_params.json") &&
-      scala.util.Try(graft.ops.DedupIndex.readParams(s, uri)).isSuccess
-    if (!usable) {
-      fs.delete(uri)
+    if (!fs.exists(s"$uri/_params.json"))
       graft.ops.DedupIndex.build(t(s, dir, "documents").select("doc_id", "text"),
         "doc_id", "text", uri)
-    }
     uri
   }
 

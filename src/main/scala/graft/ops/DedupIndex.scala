@@ -84,59 +84,23 @@ object DedupIndex {
   private[graft] def liveSigsIncPath(spark: SparkSession, uri: String): String =
     sigsTable(uri).incPath(VFS(spark))
 
-  /** [[graft.storage.TierCache]] / [[graft.storage.PointIndex]] key of a
-    * table's base generation. */
+  /** [[graft.storage.PointIndex]] key of a table's base generation. */
   private def slot(t: graft.storage.TieredTable) = s"${t.uri}#${t.name}"
 
-  private def readFlatMulti(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    val fs = VFS(spark)
-    // base always exists and carries schema-bearing files (build writes
-    // both tables even over an empty corpus), so no empty fallback here
-    spark.read.parquet(paths.filter(fs.exists): _*)
-  }
-
-  /** base ∪ inc rows with the BASE leg riding
-    * [[graft.storage.TierCache]]: the base generation is immutable
-    * until a major flip, so steady-state probes scan it from executor
-    * memory instead of re-reading the whole narrow tier from disk per
-    * batch — the one probe cost that tracked corpus size (no pushdown
-    * vehicle can prune uniformly-hashed probe keys; see TierCache).
-    * The INC leg stays a fresh parquet scan: it changes per append and
-    * is bounded by the minor-fold cadence. Probe filters still prune
-    * the cached leg (InMemoryTableScan batch stats over the key-sorted
-    * tier) and push into the inc leg's parquet scan as before. With
-    * `graft.index.cacheBase=false` this is exactly the r17 one-scan
-    * multi-path read. Tiers resolve inc first
+  /** base ∪ inc rows as one parquet scan over both tiers' paths.
+    * Probes of a servable tier read its base through
+    * [[graft.storage.PointIndex]] instead; this scan serves every other
+    * tier and the maintenance reads. Tiers resolve inc first
     * ([[graft.storage.TieredTable.resolve]]), with `point` between. */
   private def readTiered(spark: SparkSession, t: graft.storage.TieredTable,
       point: String = ""): DataFrame = {
     val fs = VFS(spark)
     val (inc, basePath) = t.resolve(fs, point)
-    if (!graft.storage.TierCache.enabled(spark))
-      return readFlatMulti(spark, Seq(inc, basePath))
-    // existence-guard the base leg exactly as readFlatMulti does: a
-    // crash state with no committed generation and no generation-0 dir
-    // (VersionedDir falls back to the nonexistent build path) must
-    // degrade to the inc tier, not throw AnalysisException
-    if (!fs.exists(basePath)) return readFlatMulti(spark, Seq(inc))
-    // double-residency guard (r20): when this generation's POINT maps
-    // are live ([[graft.storage.PointIndex]] serves the probe traffic),
-    // a fold/maintenance read takes the plain parquet scan instead of
-    // pinning a SECOND in-memory tier copy here — maps ~2–3× raw plus
-    // an InMemoryRelation ~1× raw is ~4× aggregate memory where ~3×
-    // serves. Maintenance reads run once per cadence, so the cold scan
-    // is the right trade. Conditioned on point serving being ENABLED:
-    // with `pointProbe=false` the scan path IS the probe path (the
-    // cache is its serving structure), even if stale maps linger from
-    // before the opt-out — and with the maps evicted, hasLive is false
-    // and the cache path is unchanged.
-    val base =
-      if (graft.storage.PointIndex.enabled(spark) &&
-          graft.storage.PointIndex.hasLive(spark, slot(t), basePath))
-        spark.read.parquet(basePath)
-      else graft.storage.TierCache.scan(spark, slot(t), basePath)(
-        spark.read.parquet(basePath))
-    t.incRows(spark, inc).fold(base)(_.unionByName(base))
+    // a missing dir drops out: a crash state with no committed base
+    // generation degrades to the inc tier. Some path always carries
+    // schema-bearing files (build writes both tables even over an
+    // empty corpus), so no empty fallback here
+    spark.read.parquet(Seq(inc, basePath).filter(fs.exists): _*)
   }
 
   /** base ∪ inc bucket rows — every reader's view of the index. A full
@@ -207,9 +171,8 @@ object DedupIndex {
     val fs = VFS(spark)
     fs.delete(uri)
     // an in-place rebuild lands at the SAME legacy generation paths
-    // ($uri/data, $uri/sigs) — drop any cached generation keyed to
-    // them or probes would keep serving the pre-rebuild rows
-    graft.storage.TierCache.invalidate(s"$uri#")
+    // ($uri/data, $uri/sigs) — drop any point maps keyed to them or
+    // probes would keep serving the pre-rebuild rows
     graft.storage.PointIndex.invalidate(s"$uri#")
     // signatures/buckets are derived from corpus text — an encrypted
     // corpus needs its dedup index encrypted too; appends/compacts
@@ -279,22 +242,17 @@ object DedupIndex {
     * (batch doc, matched corpus doc) with estimate ≥ `threshold`
     * (exact-verified ≥ threshold when `verifyWith` is given).
     *
-    * DEFAULT path (r19): the base tiers are served by POINT LOOKUP
-    * ([[graft.storage.PointIndex]]) — the batch's distinct (band,
+    * The tier schema picks the serving path. Long-id tiers (the
+    * standard layout) serve their base by POINT LOOKUP
+    * ([[graft.storage.PointIndex]]): the batch's distinct (band,
     * bucket) keys probe executor-resident per-generation hash maps,
-    * O(batch keys) with ZERO base-tier bytes scanned; the candidates'
-    * signatures fetch the same way by id. Only the fold-cadence-
-    * bounded INC tiers are scanned, with the probe buckets pushed as
-    * an isin literal below `maxProbeKeys` (footer-stat pruning) and a
-    * broadcast semi-join above it. Opt out with
-    * `graft.index.pointProbe=false` (also automatic for non-long id
-    * tiers), which restores the r18 SCAN model end-to-end: the probe
-    * buckets push into one base ∪ inc tier scan — isin below
-    * `maxProbeKeys` (a bigger In-literal is a plan bomb long before
-    * 10⁶ literals), broadcast semi-join above it (no driver collect,
-    * map-side drop, only footer pruning lost) — and the sig fetch is
-    * a whole-tier broadcast semi-join. Either way: never a
-    * corpus-text pass. */
+    * O(batch keys) with ZERO base-tier bytes scanned, and the
+    * candidates' signatures fetch the same way by id. Only the
+    * fold-cadence-bounded INC tiers are scanned, filtered by
+    * [[probeBuckets]]. Any other tier (e.g. string ids) takes the SCAN
+    * path: [[probeBuckets]] filters one base ∪ inc tier scan, and the
+    * sig fetch is a whole-tier broadcast semi-join. Either way: never
+    * a corpus-text pass. */
   def probe(batch: DataFrame, idCol: String, textCol: String, uri: String,
       threshold: Double = 0.7, maxProbeKeys: Int = 1 << 15,
       verifyWith: Option[DataFrame] = None): DataFrame = {
@@ -502,17 +460,16 @@ object DedupIndex {
     * scan path's bucket-only filtered frame that every downstream
     * consumer (over-cap counts joined on (band, bucket), pair join on
     * (band, bucket)) treats identically. None → caller falls back to
-    * the scan path (`graft.index.pointProbe=false`, non-(int,long,long)
-    * tier schema, or no committed base generation).
+    * the scan path (non-(int,long,long) tier schema, or no committed
+    * base generation).
     *
     * Same resolution order + race window as [[readDataAll]]: inc
     * FIRST, so a read racing a major's base-flip → inc-reset window
     * sees appended rows TWICE (healed by the pair distinct), never a
     * gap. */
-  private def pointProbeRows(spark: SparkSession, uri: String,
+  private def pointBucketRows(spark: SparkSession, uri: String,
       banded: DataFrame, maxProbeKeys: Int,
       lease: Option[graft.storage.PointIndex.Lease]): Option[DataFrame] = {
-    if (!graft.storage.PointIndex.enabled(spark)) return None
     val fs = VFS(spark)
     val t = dataTable(uri)
     val (inc, basePath) = t.resolve(fs, "dedup.read.betweenResolves")
@@ -520,21 +477,24 @@ object DedupIndex {
     graft.storage.PointIndex.bucketRows(spark, slot(t), basePath, banded,
         lease)
       .map { baseRows =>
-        t.incRows(spark, inc).fold(baseRows) { incScan =>
-          // the inc leg keeps the scan path's pruning contract: below
-          // maxProbeKeys the probe buckets push as an isin literal
-          // (footer-stat file/row-group pruning over the fold-sorted
-          // inc files); above it, the broadcast semi-join
-          val probeKeys = banded.select("bucket").distinct()
-            .limit(maxProbeKeys + 1).collect().map(_.getLong(0))
-          val pruned =
-            if (probeKeys.length <= maxProbeKeys)
-              incScan.filter(col("bucket").isin(probeKeys: _*))
-            else incScan.join(broadcast(banded.select("bucket").distinct()),
-              Seq("bucket"), "left_semi")
-          pruned.unionByName(baseRows)
-        }
+        t.incRows(spark, inc).fold(baseRows)(
+          probeBuckets(_, banded, maxProbeKeys).unionByName(baseRows))
       }
+  }
+
+  /** `rows` restricted to the batch's probe buckets. Up to
+    * `maxProbeKeys` distinct buckets push as an isin literal (footer-stat
+    * file/row-group pruning over the bucket-sorted files; a bigger
+    * In-literal is a plan bomb long before 10⁶ literals); above it, a
+    * broadcast left-semi join on bucket (no unbounded driver collect,
+    * map-side drop, only footer pruning lost). */
+  private def probeBuckets(rows: DataFrame, banded: DataFrame,
+      maxProbeKeys: Int): DataFrame = {
+    val probeKeys = banded.select("bucket").distinct()
+      .limit(maxProbeKeys + 1).collect().map(_.getLong(0))
+    if (probeKeys.length <= maxProbeKeys) rows.filter(col("bucket").isin(probeKeys: _*))
+    else rows.join(broadcast(banded.select("bucket").distinct()),
+      Seq("bucket"), "left_semi")
   }
 
   /** The probe's signature fetch as point lookups on the base sigs
@@ -546,7 +506,6 @@ object DedupIndex {
   private def pointSigFetch(spark: SparkSession, uri: String,
       mids: DataFrame,
       lease: Option[graft.storage.PointIndex.Lease]): Option[DataFrame] = {
-    if (!graft.storage.PointIndex.enabled(spark)) return None
     val fs = VFS(spark)
     val t = sigsTable(uri)
     val (inc, basePath) = t.resolve(fs)
@@ -575,21 +534,14 @@ object DedupIndex {
       maxProbeKeys: Int, materialize: Boolean,
       lease: Option[graft.storage.PointIndex.Lease]): (DataFrame, Option[DataFrame]) = {
     val spark = banded.sparkSession
-    val pruned0 = pointProbeRows(spark, uri, banded, maxProbeKeys, lease)
-      .getOrElse {
-      // scan fallback (`graft.index.pointProbe=false`, non-long ids, or
-      // no committed base): probe keys pushed into the tier scan
-      val probeKeys = banded.select("bucket").distinct()
-        .limit(maxProbeKeys + 1).collect().map(_.getLong(0))
-      val index = readDataAll(spark, uri)
-      if (probeKeys.length <= maxProbeKeys) index.filter(col("bucket").isin(probeKeys: _*))
-      else index.join(broadcast(banded.select("bucket").distinct()),
-        Seq("bucket"), "left_semi")
-    }
+    // scan fallback (non-long ids, or no committed base): the probe
+    // buckets filter the one base ∪ inc tier scan
+    val pruned0 = pointBucketRows(spark, uri, banded, maxProbeKeys, lease)
+      .getOrElse(probeBuckets(readDataAll(spark, uri), banded, maxProbeKeys))
     // ONE tier pass per probe (r18): the probed-bucket rows feed BOTH
     // the over-cap group counts and the pair join — un-materialized,
     // each consumer re-scans the whole tier (the semi path's full
-    // in-memory pass ran TWICE per streaming probe). The probed rows
+    // tier pass ran TWICE per streaming probe). The probed rows
     // are candidate-scale (each kept group is bucket-cap bounded,
     // over-cap residue bounded by appends since the last major).
     // persist(), not localCheckpoint: the CacheManager handle lets the

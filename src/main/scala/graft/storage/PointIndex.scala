@@ -18,8 +18,8 @@ import org.apache.spark.storage.StorageLevel
   * span-minimal BETWEEN ranges still covering 90.42%/95.01% of tier
   * rows at 24k/51k probe keys — so under the scan model every probe
   * pays one full pass of the narrow tier, a cost that tracks CORPUS
-  * size, not batch size. [[TierCache]] moves that pass from disk to
-  * block-manager memory, which changes the constant but not the shape.
+  * size, not batch size. Caching the tier in block-manager memory
+  * changes the constant but not the shape (BASELINE.md, round 18).
   *
   * What changes the shape: hash each base tier ONCE per generation
   * into per-partition hash maps and serve probes as O(batch) lookups.
@@ -29,8 +29,7 @@ import org.apache.spark.storage.StorageLevel
   *    `HashMap[key → packed matches]`, persisted `MEMORY_AND_DISK`.
   *    Registered per RESOLVED GENERATION PATH — a maintenance flip
   *    changes the path, so the next probe unpersists the stale RDD and
-  *    builds against the new generation (same invalidation discipline
-  *    as [[TierCache]]);
+  *    builds against the new generation;
   *  - probe: the batch's keys are shuffled with the SAME partitioner
   *    (one batch-scale shuffle, no driver collect, no literal plans)
   *    and zipped partition-wise against the map RDD — each task
@@ -57,9 +56,9 @@ import org.apache.spark.storage.StorageLevel
   *    the WHOLE sigs tier per probe: a semi join carries no file
   *    pruning, so its cost also tracked the corpus).
   *
-  * Scope guards: only LONG keys are served (the standard layout); any
-  * other schema returns None and the caller keeps its scan path — as
-  * does `graft.index.pointProbe=false`, the session opt-out.
+  * Scope guard: the tier's schema alone decides. Only LONG keys are
+  * served (the standard layout); any other schema returns None and the
+  * caller keeps its scan path.
   */
 object PointIndex {
 
@@ -154,9 +153,10 @@ object PointIndex {
 
   def lease(spark: SparkSession): Lease = new Lease(spark)
 
-  /** (session, slot) → served generation, LRU-bounded (mirrors
-    * [[TierCache]]: session itself in the key — reference equality —
-    * never an identity hash). */
+  /** (session, slot) → served generation, LRU-bounded. The key holds
+    * the SparkSession ITSELF (reference equality), never an identity
+    * hash: two live sessions can collide on a hash, and a collision
+    * would hand one session's maps to the other. */
   private val entries =
     new java.util.LinkedHashMap[(SparkSession, String), Entry](16, 0.75f, true) {
       override def removeEldestEntry(
@@ -167,25 +167,6 @@ object PointIndex {
           true
         }
     }
-
-  /** Session opt-out: `graft.index.pointProbe=false` keeps every probe
-    * on the scan path (defensive parse — only an explicit "false"
-    * opts out). */
-  def enabled(spark: SparkSession): Boolean =
-    !spark.conf.getOption("graft.index.pointProbe")
-      .exists(_.trim.equalsIgnoreCase("false"))
-
-  /** Whether `path`'s generation is currently served for (session,
-    * slot) — the readers' seam for avoiding DOUBLE residency: a fold/
-    * maintenance scan of a tier whose point maps are live should read
-    * plain parquet, not pin a second in-memory copy through
-    * [[TierCache]] (maps ~2–3× raw + InMemoryRelation ~1× raw is ~4×
-    * aggregate memory where ~3× serves). */
-  private[graft] def hasLive(spark: SparkSession, slot: String,
-      path: String): Boolean = entries.synchronized {
-    val e = entries.get((spark, slot))
-    e != null && e.path == path
-  }
 
   // ---- bucket tier ---------------------------------------------------
 
@@ -250,13 +231,12 @@ object PointIndex {
     *    no driver collect at any batch size.
     *
     * `keys` must carry (bucket long, band int) columns. None — caller
-    * falls back to the scan — when disabled or the tier's schema is
-    * not the served (int, long, long) shape. Pass a [[Lease]] to
+    * falls back to the scan — when the tier's schema is not the served
+    * (int, long, long) shape. Pass a [[Lease]] to
     * reclaim the probe's broadcast eagerly once the result is
     * materialized (no lease → ContextCleaner GC reclaims it). */
   def bucketRows(spark: SparkSession, slot: String, path: String,
       keys: DataFrame, lease: Option[Lease] = None): Option[DataFrame] = {
-    if (!enabled(spark)) return None
     serve(spark, slot, path)(bucketKeyed)(bucketFold).map { e =>
       val maps = e.rdd.asInstanceOf[RDD[BucketMap]]
       val kr = keys.select(col("bucket"), col("band")).na.drop()
@@ -385,7 +365,6 @@ object PointIndex {
     * scan-with-semi-join path. */
   def sigRows(spark: SparkSession, slot: String, path: String,
       ids: DataFrame, lease: Option[Lease] = None): Option[DataFrame] = {
-    if (!enabled(spark)) return None
     serve(spark, slot, path)(sigKeyed)(sigFold).map { e =>
       val maps = e.rdd.asInstanceOf[RDD[SigMap]]
       val kr = ids.select(col("id")).na.drop()
@@ -470,7 +449,6 @@ object PointIndex {
     * optimization, the probe path builds on demand regardless. */
   private[graft] def warmAsync(spark: SparkSession,
       bucket: (String, String), sigs: (String, String)): Unit = {
-    if (!enabled(spark)) return
     lastWarm = warmer.submit(new Runnable {
       def run(): Unit = {
         try {
@@ -488,15 +466,9 @@ object PointIndex {
   /** The generation's map RDD, built once per (session, slot, path):
     * `toKeyed` projects the tier to a key-first frame + row decoder,
     * or None when the schema is unservable; `fold` turns one
-    * co-partitioned slice into its hash map. The build shuffle runs in
-    * DataFrame land — `repartition(parts, keyCol)` is a Tungsten
-    * binary shuffle of the narrow rows; rows decode to primitives only
-    * AFTER the shuffle, inside the fold task (the RDD `partitionBy`
-    * variant Java-serialized one boxed tuple per tier row through the
-    * shuffle files — measured 158 s vs this path at the 7.1 GB tier).
-    * Probe routing matches via [[shardOf]] (Murmur3, seed 42 — what
-    * `HashPartitioning` computes for one long column; an explicit
-    * numPartitions repartition is never AQE-coalesced). None is NOT
+    * co-partitioned slice into its hash map. The build shuffles the
+    * keyed tuples with `HashPartitioner(parts)`, and probe routing
+    * matches it via [[shardOf]]. None is NOT
     * cached — an unservable tier re-checks its schema per probe (one
     * footer read, fallback-path cost only). */
   private def serve[P: scala.reflect.ClassTag](
@@ -520,16 +492,7 @@ object PointIndex {
           (null, invalidationEpoch, registrationSeq)
         }
       }
-      if (hit != null) {
-        // released on HITS too, not just at registration: a fold read
-        // that raced an in-flight build can pass its hasLive=false
-        // check, then register a TierCache copy AFTER our registration
-        // released the slot — without this, maps + InMemoryRelation
-        // stay co-resident until the next flip. Per-probe plan-level
-        // traffic; the release is an idempotent map remove.
-        TierCache.release(spark, slot)
-        return Some(hit)
-      }
+      if (hit != null) return Some(hit)
       // plan construction + listing OUTSIDE the lock (real I/O against
       // an object store): a cold miss on one index must not serialize
       // every other session's probes JVM-wide
@@ -582,18 +545,8 @@ object PointIndex {
           }
         }
       }
-      registered match {
-        case Some(e) =>
-          // the generation's bytes now live in the point maps — drop
-          // any TierCache copy of the same slot so fold/maintenance
-          // readers don't pin a SECOND in-memory tier (they re-check
-          // hasLive and read plain parquet; see DedupIndex.readTiered).
-          // Outside the entries lock: fixed PointIndex→TierCache lock
-          // order, never nested.
-          TierCache.release(spark, slot)
-          return Some(e)
-        case None => () // epoch moved: retry with fresh listing
-      }
+      // None: the epoch moved — retry with a fresh listing
+      if (registered.isDefined) return registered
     }
     sys.error("unreachable")
   }
@@ -624,8 +577,8 @@ object PointIndex {
     entries.clear()
   }
 
-  /** Unpersist and forget one index's slots (path-boundary prefix,
-    * matching [[TierCache.invalidate]]'s discipline). */
+  /** Unpersist and forget one index's slots (every slot key starting
+    * with `prefix`, e.g. `"<indexUri>#"`). */
   def invalidate(prefix: String): Unit = entries.synchronized {
     invalidationEpoch += 1
     val it = entries.entrySet().iterator()

@@ -29,6 +29,17 @@ class DedupIndexSpec extends SparkSpec {
     planted.unionByName(fresh)
   }
 
+  // string-id twin of the fixture: PointIndex serves only long ids, so
+  // probes of this index take the scan path
+  private def asStrIds(df: org.apache.spark.sql.DataFrame) =
+    df.withColumn("doc_id", col("doc_id").cast("string"))
+
+  private lazy val strIndexUri = {
+    val uri = TestSession.tmpDir("minhash-index-strid")
+    DedupIndex.build(asStrIds(corpus), "doc_id", "text", uri)
+    uri
+  }
+
   test("probe finds planted near-dups, leaves fresh docs unmatched") {
     val matches = DedupIndex.probe(batch, "doc_id", "text", indexUri,
       threshold = 0.6).collect()
@@ -224,24 +235,34 @@ class DedupIndexSpec extends SparkSpec {
 
   test("probe plan: bucket isin prunes the index scan (cached: in-memory " +
     "batch stats; uncached: parquet pushdown), index never shuffles") {
-    // this test pins the SCAN fallback's plan shapes — the default
-    // point-lookup path has its own spec below
-    spark.conf.set("graft.index.pointProbe", "false")
-    try {
+    // pins the SCAN path's plan shapes over the string-id twin (the
+    // point path has its own spec); base tiers are never cached, so
+    // only the parquet-pushdown arm of the title remains
+    Seq(DedupIndex.readDataAll(spark, strIndexUri),
+        DedupIndex.readSigsAll(spark, strIndexUri)).foreach { df =>
+      val p = Shim.plannedPhysical(df)
+      val mem = p.collect {
+        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
+      }
+      assert(mem.isEmpty, s"tier read planned over a cached relation:\n$p")
+    }
     // the candidate stage holds the bucket-table scan (probe
     // checkpoints it eagerly, truncating lineage in the final frame)
-    val df = DedupIndex.candidatePairsFor(batch, "doc_id", "text", indexUri)
+    val df = DedupIndex.candidatePairsFor(asStrIds(batch), "doc_id", "text",
+      strIndexUri)
     val plan = Shim.plannedPhysical(df)
-    // default (TierCache on): the bucket-table BASE leg is an
-    // InMemoryTableScan carrying the In/InSet predicate — cached-batch
-    // stats over the (band, bucket)-sorted tier give the same pruning
-    // the parquet footer stats gave, at memory speed
-    val memScans = plan.collect {
-      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
+    // a parquet scan of the tier with the In literal PUSHED to footers
+    val scans = plan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+          if s.metadata.get("Location").exists(l =>
+            l.contains("minhash-index") && l.contains("/data")) => s
     }
-    assert(memScans.nonEmpty, s"no cached bucket-table scan found:\n$plan")
-    assert(memScans.exists(_.toString.contains("bucket")),
-      s"bucket probe not applied to the cached scan:\n${memScans.head}")
+    assert(scans.nonEmpty, s"no index bucket-table scan found:\n$plan")
+    scans.foreach { s =>
+      val pushed = s.metadata.getOrElse("PushedFilters", "")
+      assert(pushed.contains("In(bucket") || pushed.contains("In(`bucket`"),
+        s"bucket probe not pushed: $pushed")
+    }
     // the CANDIDATE join broadcasts the batch side and streams the
     // index scan with NO exchange in between (the index rows are
     // consumed map-side, never shuffled or sorted). The probe-scale
@@ -257,8 +278,7 @@ class DedupIndexSpec extends SparkSpec {
       val exch = streamed.collect {
         case e: org.apache.spark.sql.execution.exchange.Exchange => e }
       val scan = streamed.collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-        case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s }
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s }
       exch.isEmpty && scan.nonEmpty
     }
     assert(mapSide, s"no exchange-free index-scan join in probe plan:\n$plan")
@@ -271,46 +291,23 @@ class DedupIndexSpec extends SparkSpec {
         org.apache.spark.sql.types.ArrayType])
       assert(wide.isEmpty, s"signature array rides the pair shuffle: ${e.output}")
     }
-    // opt-out arm: with the cache disabled AND cleared the r17 plan
-    // stands — a parquet scan of the tier with the In literal PUSHED
-    // to footers (clearing matters: Spark's CacheManager substitutes a
-    // registered InMemoryRelation into any matching scan, conf or not)
-    spark.conf.set("graft.index.cacheBase", "false")
-    graft.storage.TierCache.clear()
-    try {
-      val raw = Shim.plannedPhysical(
-        DedupIndex.candidatePairsFor(batch, "doc_id", "text", indexUri))
-      val scans = raw.collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec
-            if s.metadata.get("Location").exists(l =>
-              l.contains("minhash-index") && l.contains("/data")) => s
-      }
-      assert(scans.nonEmpty, s"no index bucket-table scan found:\n$raw")
-      scans.foreach { s =>
-        val pushed = s.metadata.getOrElse("PushedFilters", "")
-        assert(pushed.contains("In(bucket") || pushed.contains("In(`bucket`"),
-          s"bucket probe not pushed: $pushed")
-      }
-    } finally spark.conf.unset("graft.index.cacheBase")
-    } finally spark.conf.unset("graft.index.pointProbe")
   }
 
   test("above maxProbeKeys: semi-join path, no giant In literal, same matches") {
-    spark.conf.set("graft.index.pointProbe", "false")
-    try {
-    // force the fallback with a tiny key budget — the plan must carry a
-    // broadcast LEFT SEMI join on bucket instead of a literal In, and
-    // the matches must be identical to the pushdown path's
+    // scan path via the string-id twin: force the semi-join with a tiny
+    // key budget — the plan must carry a broadcast LEFT SEMI join on
+    // bucket instead of a literal In, and the matches must be identical
+    // to the pushdown path's
+    val strBatch = asStrIds(batch)
     val plan = Shim.plannedPhysical(
-      DedupIndex.candidatePairsFor(batch, "doc_id", "text", indexUri, maxProbeKeys = 3))
-    val viaSemi = DedupIndex.probe(batch, "doc_id", "text", indexUri,
+      DedupIndex.candidatePairsFor(strBatch, "doc_id", "text", strIndexUri,
+        maxProbeKeys = 3))
+    val viaSemi = DedupIndex.probe(strBatch, "doc_id", "text", strIndexUri,
       threshold = 0.6, maxProbeKeys = 3)
     val inLiterals = plan.collect {
       case s: org.apache.spark.sql.execution.FileSourceScanExec
           if s.metadata.get("Location").exists(_.contains("minhash-index")) =>
         s.metadata.getOrElse("PushedFilters", "")
-      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-        s.toString // cached base leg: predicates render inline
     }
     assert(inLiterals.nonEmpty, s"no index scan:\n$plan")
     inLiterals.foreach(p => assert(!p.contains("In(bucket") && !p.contains("In(`bucket`"),
@@ -320,11 +317,11 @@ class DedupIndexSpec extends SparkSpec {
           if j.joinType.toString == "LeftSemi" => j
     }
     assert(semis.nonEmpty, s"no broadcast semi-join on bucket:\n$plan")
-    val viaIsin = DedupIndex.probe(batch, "doc_id", "text", indexUri, threshold = 0.6)
+    val viaIsin = DedupIndex.probe(strBatch, "doc_id", "text", strIndexUri,
+      threshold = 0.6)
     def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.select("id", "match_id").as[(Long, Long)].collect().toSet
+      df.select("id", "match_id").as[(String, String)].collect().toSet
     assert(pairs(viaSemi) == pairs(viaIsin))
-    } finally spark.conf.unset("graft.index.pointProbe")
   }
 
   test("degenerate buckets are dropped at build, probes stay bounded") {

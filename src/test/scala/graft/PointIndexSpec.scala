@@ -6,11 +6,12 @@ import org.apache.spark.sql.graftshim.Shim
 
 /** Lifecycle + parity of [[graft.storage.PointIndex]] — the
   * executor-resident point-lookup serving of the dedup index's base
-  * tier (the DEFAULT probe path since r19). Every claim the scan path
+  * tier (the probe path of long-id tiers). Every claim the scan path
   * earned stays pinned here against the point path: exact pair parity,
   * generation-flip invalidation, inc-leg freshness, the
   * no-base-tier-scan plan shape, and the scan fallback for unservable
-  * schemas. */
+  * schemas. The scan path is reached by input: a string-id twin of a
+  * corpus, which PointIndex cannot serve. */
 class PointIndexSpec extends SparkSpec {
   import spark.implicits._
 
@@ -21,14 +22,28 @@ class PointIndexSpec extends SparkSpec {
   private def mkCorpus(n: Int, salt: String) =
     (0 until n).map(i => (i.toLong, docText(salt, i))).toDF("doc_id", "text")
 
-  private def matches(uri: String, batch: org.apache.spark.sql.DataFrame) =
-    DedupIndex.probe(batch, "doc_id", "text", uri, threshold = 0.5)
-      .select("id", "match_id").as[(Long, Long)].collect().toSet
+  /** `df` with its long `doc_id` cast to string. */
+  private def asStrIds(df: org.apache.spark.sql.DataFrame) =
+    df.withColumn("doc_id", col("doc_id").cast("string"))
+
+  /** Probe pairs, ids read back as longs. `strIds` probes with the
+    * string-id twin of `batch` (for an index built over string ids). */
+  private def matches(uri: String, batch: org.apache.spark.sql.DataFrame,
+      strIds: Boolean = false) =
+    DedupIndex.probe(if (strIds) asStrIds(batch) else batch, "doc_id", "text",
+        uri, threshold = 0.5)
+      .select(col("id").cast("long"), col("match_id").cast("long"))
+      .as[(Long, Long)].collect().toSet
 
   test("point path is the default plan — no base-tier file scan — and " +
     "its pairs match the scan path exactly") {
     val uri = TestSession.tmpDir("pointindex-parity")
     DedupIndex.build(mkCorpus(50, "alpha"), "doc_id", "text", uri)
+    // the same corpus with string ids takes the scan path; signatures
+    // depend only on text, so its pairs must map 1:1 onto the point
+    // path's
+    val strUri = TestSession.tmpDir("pointindex-parity-strid")
+    DedupIndex.build(asStrIds(mkCorpus(50, "alpha")), "doc_id", "text", strUri)
     // batch: near-dups of docs 3 and 7 + one fresh doc
     val batch = Seq(
       (900L, docText("alpha", 3) + " zz"),
@@ -45,13 +60,17 @@ class PointIndexSpec extends SparkSpec {
     }
     assert(tierScans.isEmpty,
       s"base tier still scanned under the point path:\n$planned")
+    val strPlanned = Shim.plannedPhysical(
+      DedupIndex.candidatePairsFor(asStrIds(batch), "doc_id", "text", strUri))
+    assert(strPlanned.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+          if s.metadata.get("Location").exists(_.contains("pointindex-parity-strid")) => s
+    }.nonEmpty, s"string-id twin did not scan its tier:\n$strPlanned")
     val viaPoint = matches(uri, batch)
     assert(viaPoint.contains((900L, 3L)) && viaPoint.contains((901L, 7L)),
       viaPoint.toString)
     assert(!viaPoint.exists(_._1 == 902L), "fresh doc matched corpus")
-    spark.conf.set("graft.index.pointProbe", "false")
-    val viaScan = try matches(uri, batch)
-      finally spark.conf.unset("graft.index.pointProbe")
+    val viaScan = matches(strUri, batch, strIds = true)
     assert(viaPoint == viaScan,
       s"point/scan divergence: only-point=${viaPoint -- viaScan} " +
         s"only-scan=${viaScan -- viaPoint}")
@@ -59,38 +78,48 @@ class PointIndexSpec extends SparkSpec {
 
   test("append rides the fresh inc leg; a major flip refreshes the " +
     "served generation (never a stale map)") {
-    val uri = TestSession.tmpDir("pointindex-flip")
-    DedupIndex.build(mkCorpus(40, "beta"), "doc_id", "text", uri)
+    // long ids ride the point maps; the string-id twin pins the scan
+    // path through the same append and major flip
+    for (strIds <- Seq(false, true)) {
+    val ids = (df: org.apache.spark.sql.DataFrame) => if (strIds) asStrIds(df) else df
+    val uri = TestSession.tmpDir(if (strIds) "pointindex-flip-strid" else "pointindex-flip")
+    DedupIndex.build(ids(mkCorpus(40, "beta")), "doc_id", "text", uri)
     val probe = Seq((900L, docText("beta", 7) + " zz")).toDF("doc_id", "text")
-    assert(matches(uri, probe).contains((900L, 7L))) // map populated
+    assert(matches(uri, probe, strIds).contains((900L, 7L))) // map populated
     // appended rows must be visible IMMEDIATELY (inc leg is a fresh
     // scan, not part of the once-per-generation map)
-    DedupIndex.append(Seq((500L, docText("beta", 7)))
-      .toDF("doc_id", "text"), "doc_id", "text", uri)
-    val withInc = matches(uri, probe)
+    DedupIndex.append(ids(Seq((500L, docText("beta", 7)))
+      .toDF("doc_id", "text")), "doc_id", "text", uri)
+    val withInc = matches(uri, probe, strIds)
     assert(withInc.contains((900L, 500L)),
-      s"appended doc invisible to the point probe: $withInc")
+      s"appended doc invisible to the probe (strIds=$strIds): $withInc")
     // major compact folds inc into a NEW base generation: the served
     // map must refresh (path-keyed), keeping both matches
     DedupIndex.compact(spark, uri)
-    val afterFlip = matches(uri, probe)
+    val afterFlip = matches(uri, probe, strIds)
     assert(afterFlip.contains((900L, 7L)) && afterFlip.contains((900L, 500L)),
-      s"stale generation map after major flip: $afterFlip")
+      s"stale generation after major flip (strIds=$strIds): $afterFlip")
+    }
   }
 
   test("in-place rebuild invalidates the served legacy generation") {
-    val uri = TestSession.tmpDir("pointindex-rebuild")
-    DedupIndex.build(mkCorpus(40, "gamma"), "doc_id", "text", uri)
+    // long ids ride the point maps; the string-id twin pins the scan
+    // path through the same rebuild
+    for (strIds <- Seq(false, true)) {
+    val ids = (df: org.apache.spark.sql.DataFrame) => if (strIds) asStrIds(df) else df
+    val uri = TestSession.tmpDir(if (strIds) "pointindex-rebuild-strid" else "pointindex-rebuild")
+    DedupIndex.build(ids(mkCorpus(40, "gamma")), "doc_id", "text", uri)
     val probeGamma = Seq((901L, docText("gamma", 3))).toDF("doc_id", "text")
-    assert(matches(uri, probeGamma).nonEmpty) // map populated
+    assert(matches(uri, probeGamma, strIds).nonEmpty) // map populated
     // rebuild at the SAME uri over a disjoint corpus: legacy generation
     // paths are identical, so only explicit invalidation keeps the
     // probe off the pre-rebuild map
-    DedupIndex.build(mkCorpus(40, "delta"), "doc_id", "text", uri)
-    assert(matches(uri, probeGamma).isEmpty,
-      "probe served pre-rebuild rows from a stale generation map")
+    DedupIndex.build(ids(mkCorpus(40, "delta")), "doc_id", "text", uri)
+    assert(matches(uri, probeGamma, strIds).isEmpty,
+      s"probe served pre-rebuild rows (strIds=$strIds)")
     val probeDelta = Seq((902L, docText("delta", 3))).toDF("doc_id", "text")
-    assert(matches(uri, probeDelta).exists(_._2 == 3L))
+    assert(matches(uri, probeDelta, strIds).exists(_._2 == 3L))
+    }
   }
 
   test("serving traffic is counted: miss on first touch, hits after, " +
@@ -161,24 +190,6 @@ class PointIndexSpec extends SparkSpec {
     assert(created >= 10L, snap.toString)
     assert(created == snap.getOrElse("pointindex.bcast_destroyed", 0L),
       s"leaked probe broadcasts: $snap")
-  }
-
-  test("live point maps release the slot's TierCache entry and keep " +
-    "fold reads off it (no double tier residency)") {
-    val uri = TestSession.tmpDir("pointindex-residency")
-    DedupIndex.build(mkCorpus(40, "kappa"), "doc_id", "text", uri)
-    val probe = Seq((900L, docText("kappa", 3) + " zz")).toDF("doc_id", "text")
-    matches(uri, probe) // point maps register (and release TierCache)
-    graft.core.Stats.reset()
-    // maintenance-style reads of both tiers: with the point maps live
-    // they must take the plain parquet scan — no TierCache traffic
-    DedupIndex.readDataAll(spark, uri).count()
-    DedupIndex.readSigsAll(spark, uri).count()
-    val snap = graft.core.Stats.countersSnapshot
-    assert(snap.getOrElse("tiercache.misses", 0L) == 0L &&
-      snap.getOrElse("tiercache.hits", 0L) == 0L &&
-      snap.getOrElse("tiercache.refreshes", 0L) == 0L,
-      s"fold read registered TierCache beside live point maps: $snap")
   }
 
   test("malformed-tier null handling matches the scan path's effective " +
