@@ -78,48 +78,38 @@ class PointIndexSpec extends SparkSpec {
 
   test("append rides the fresh inc leg; a major flip refreshes the " +
     "served generation (never a stale map)") {
-    // long ids ride the point maps; the string-id twin pins the scan
-    // path through the same append and major flip
-    for (strIds <- Seq(false, true)) {
-    val ids = (df: org.apache.spark.sql.DataFrame) => if (strIds) asStrIds(df) else df
-    val uri = TestSession.tmpDir(if (strIds) "pointindex-flip-strid" else "pointindex-flip")
-    DedupIndex.build(ids(mkCorpus(40, "beta")), "doc_id", "text", uri)
+    val uri = TestSession.tmpDir("pointindex-flip")
+    DedupIndex.build(mkCorpus(40, "beta"), "doc_id", "text", uri)
     val probe = Seq((900L, docText("beta", 7) + " zz")).toDF("doc_id", "text")
-    assert(matches(uri, probe, strIds).contains((900L, 7L))) // map populated
+    assert(matches(uri, probe).contains((900L, 7L))) // map populated
     // appended rows must be visible IMMEDIATELY (inc leg is a fresh
     // scan, not part of the once-per-generation map)
-    DedupIndex.append(ids(Seq((500L, docText("beta", 7)))
-      .toDF("doc_id", "text")), "doc_id", "text", uri)
-    val withInc = matches(uri, probe, strIds)
+    DedupIndex.append(Seq((500L, docText("beta", 7)))
+      .toDF("doc_id", "text"), "doc_id", "text", uri)
+    val withInc = matches(uri, probe)
     assert(withInc.contains((900L, 500L)),
-      s"appended doc invisible to the probe (strIds=$strIds): $withInc")
+      s"appended doc invisible to the point probe: $withInc")
     // major compact folds inc into a NEW base generation: the served
     // map must refresh (path-keyed), keeping both matches
     DedupIndex.compact(spark, uri)
-    val afterFlip = matches(uri, probe, strIds)
+    val afterFlip = matches(uri, probe)
     assert(afterFlip.contains((900L, 7L)) && afterFlip.contains((900L, 500L)),
-      s"stale generation after major flip (strIds=$strIds): $afterFlip")
-    }
+      s"stale generation map after major flip: $afterFlip")
   }
 
   test("in-place rebuild invalidates the served legacy generation") {
-    // long ids ride the point maps; the string-id twin pins the scan
-    // path through the same rebuild
-    for (strIds <- Seq(false, true)) {
-    val ids = (df: org.apache.spark.sql.DataFrame) => if (strIds) asStrIds(df) else df
-    val uri = TestSession.tmpDir(if (strIds) "pointindex-rebuild-strid" else "pointindex-rebuild")
-    DedupIndex.build(ids(mkCorpus(40, "gamma")), "doc_id", "text", uri)
+    val uri = TestSession.tmpDir("pointindex-rebuild")
+    DedupIndex.build(mkCorpus(40, "gamma"), "doc_id", "text", uri)
     val probeGamma = Seq((901L, docText("gamma", 3))).toDF("doc_id", "text")
-    assert(matches(uri, probeGamma, strIds).nonEmpty) // map populated
+    assert(matches(uri, probeGamma).nonEmpty) // map populated
     // rebuild at the SAME uri over a disjoint corpus: legacy generation
     // paths are identical, so only explicit invalidation keeps the
     // probe off the pre-rebuild map
-    DedupIndex.build(ids(mkCorpus(40, "delta")), "doc_id", "text", uri)
-    assert(matches(uri, probeGamma, strIds).isEmpty,
-      s"probe served pre-rebuild rows (strIds=$strIds)")
+    DedupIndex.build(mkCorpus(40, "delta"), "doc_id", "text", uri)
+    assert(matches(uri, probeGamma).isEmpty,
+      "probe served pre-rebuild rows from a stale generation map")
     val probeDelta = Seq((902L, docText("delta", 3))).toDF("doc_id", "text")
-    assert(matches(uri, probeDelta, strIds).exists(_._2 == 3L))
-    }
+    assert(matches(uri, probeDelta).exists(_._2 == 3L))
   }
 
   test("serving traffic is counted: miss on first touch, hits after, " +
