@@ -454,7 +454,9 @@ object DedupIndex {
     * model's cost tracked the tier — no pushdown vehicle prunes
     * uniformly-hashed probe keys; measured, BASELINE.md r18). The inc
     * leg stays a fresh probe-filtered scan: it changes per append and
-    * is bounded by the minor-fold cadence.
+    * is bounded by the minor-fold cadence. It is read with the served
+    * tier's declared schema — the same index wrote both tiers — so it
+    * starts no schema-inference job.
     *
     * Returns the exact (band, bucket) matches — a strict subset of the
     * scan path's bucket-only filtered frame that every downstream
@@ -477,7 +479,7 @@ object DedupIndex {
     graft.storage.PointIndex.bucketRows(spark, slot(t), basePath, banded,
         lease)
       .map { baseRows =>
-        t.incRows(spark, inc).fold(baseRows)(
+        t.incRows(spark, inc, Some(graft.storage.PointIndex.bucketSchema)).fold(baseRows)(
           probeBuckets(_, banded, maxProbeKeys).unionByName(baseRows))
       }
   }
@@ -500,7 +502,8 @@ object DedupIndex {
   /** The probe's signature fetch as point lookups on the base sigs
     * generation ([[graft.storage.PointIndex.sigRows]]): id-keyed hash
     * lookups instead of the whole-tier semi-join scan. Inc sigs (one
-    * file per append, bounded by the fold cadence) keep the semi-join.
+    * file per append, bounded by the fold cadence) keep the semi-join,
+    * over a scan with the served sigs schema declared.
     * Same inc-first resolution order as [[readSigsAll]]. None → scan
     * fallback. */
   private def pointSigFetch(spark: SparkSession, uri: String,
@@ -512,7 +515,7 @@ object DedupIndex {
     if (!fs.exists(basePath)) return None
     graft.storage.PointIndex.sigRows(spark, slot(t), basePath, mids, lease)
       .map { baseSigs =>
-        t.incRows(spark, inc).fold(baseSigs)(
+        t.incRows(spark, inc, Some(graft.storage.PointIndex.sigSchema)).fold(baseSigs)(
           _.join(broadcast(mids), Seq("id"), "left_semi").unionByName(baseSigs))
       }
   }

@@ -3,7 +3,10 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shim
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Full-text retrieval over the document corpus: an inverted index
   * (postings) plus BM25 scoring and top-k search. A training-data
@@ -21,12 +24,15 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField
   *    at all (previously one `groupBy(doc_id, term)` shuffle);
   *  - the query terms resolve on the driver (a query batch is small
   *    by definition), the postings are restricted to them, and
-  *    document-frequency (df) is aggregated over what is left —
-  *    query-batch sized, so the vocabulary table never shuffles and
-  *    the query table never broadcasts for it;
-  *  - candidate generation is a broadcast join of postings against
-  *    the (query, term, idf) table — postings stream, nothing
-  *    corpus-sized shuffles on an unbounded key;
+  *    document-frequency (df) is counted over what is left inside each
+  *    scan task, the partial counts merging on the driver — one job,
+  *    query-batch sized, so the vocabulary table never shuffles;
+  *  - candidate generation attaches idf on the driver's terms: each
+  *    streamed posting looks its term up in the batch's broadcast
+  *    (term → query slot, idf) table ([[graft.functions.TermLookup]];
+  *    the inline path joins the same rows as a broadcast relation) —
+  *    postings stream, nothing corpus-sized shuffles on an unbounded
+  *    key;
   *  - per-(query, doc) score assembly is one shuffle of MATCHING
   *    pairs only, and top-k uses [[Similarity.topKPerKey]]'s bounded
   *    per-partition heaps — no `row_number().over(partitionBy(query))`
@@ -113,7 +119,7 @@ object Search {
     // scoring join drops every other term anyway)
     val qt = queryTerms(queries, qidCol, qtextCol)
     scoreFromPostings(restrictToTerms(post, qt.terms, MaxPushedTerms), qt,
-      nDocs, sumDl, k1, b, maxDfFraction, requireAllTerms)
+      nDocs, sumDl, k1, b, maxDfFraction, requireAllTerms, joinTable = true)
   }
 
   /** Default cap on the terms a probe pushes as `term isin(...)`
@@ -157,35 +163,42 @@ object Search {
     * paying it. Warn-only — results never change without opt-in. */
   val HotTermDfFraction: Double = 0.2
 
-  /** Shared scoring core: joins a postings frame (term, doc_id, tf,
-    * dl) holding EVERY posting of the query terms and no other term
-    * against the batch's (query_id, term, idf) table and produces
-    * (query_id, doc_id, score raw). `df` (document frequency per term)
-    * is computed FROM those postings — exact on the inline path (the
-    * corpus postings restricted to the query terms) and on the index
-    * path (a term's postings all live in its bucket, so df over the
-    * pruned read is identical).
+  /** Shared scoring core: attaches idf to a postings frame (term,
+    * doc_id, tf, dl) holding EVERY posting of the query terms and no
+    * other term, and produces (query_id, doc_id, score raw). `df`
+    * (document frequency per term) is computed FROM those postings —
+    * exact on the inline path (the corpus postings restricted to the
+    * query terms) and on the index path (a term's postings all live in
+    * its bucket, so df over the pruned read is identical).
     *
-    * Spark jobs of one index probe (listener-traced, 8 queries over a
-    * 3k-doc index): df aggregate + collect (2), the broadcast of the
-    * (query, term, idf) table (1 — a `LocalRelation` broadcast still
-    * runs a collect job), scoring shuffle + top-k (3). The query
-    * terms, the df join, the hot-term and elision decisions and the
-    * per-query AND counts are driver-side work on query-batch-sized
-    * data and cost no job; job count, not data volume, is the cost at
-    * this floor (about half of an 11-job probe was driver gap between
-    * jobs). */
+    * Spark jobs of one index probe: the df count (1 — [[termDf]]) and
+    * the scoring query's shuffle + top-k stages (3). idf is computed on
+    * the driver and rides a broadcast variable
+    * ([[graft.functions.TermLookup]]), which starts no job; a broadcast
+    * join of the (query, term, idf) rows would collect its local
+    * relation in a job of its own. The query terms, the df and idf,
+    * the hot-term and elision decisions and the per-query AND counts
+    * are driver-side work on query-batch-sized data. Job count, not
+    * data volume, is the cost at probe sizes: each job adds its own
+    * scheduling and a driver gap before it (traced 8-query probes of
+    * the perfbench `corpus_index` index on 4 cores: 6 jobs spanned
+    * ~710 ms, 4 jobs ~400 ms).
+    *
+    * `joinTable` attaches the same (term, slot, idf) rows through a
+    * broadcast hash join instead — the inline path's plan, whose specs
+    * pin the query table broadcast as a join into the postings stream.
+    * Both give the same rows with the same scores. */
   private def scoreFromPostings(post: DataFrame, qt: QueryTerms,
       nDocs: Long, sumDl: Long, k1: Double, b: Double,
-      maxDfFraction: Double, requireAllTerms: Boolean): DataFrame = {
+      maxDfFraction: Double, requireAllTerms: Boolean,
+      joinTable: Boolean = false): DataFrame = {
     val spark = post.sparkSession
     val n = nDocs.toDouble
     val avgdl = if (nDocs == 0L) 1.0 else sumDl.toDouble / nDocs
-    // ONE aggregate collect: df of every probed term present in the
-    // postings, joined to the (query, term) pairs on the driver
-    val df = post.groupBy(col("term")).agg(count(lit(1)).cast("double"))
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val qdf = qt.pairs.flatMap { case (q, t) => df.get(t).map(d => (q, t, d)) }
+    // df of every probed term present in the postings, joined to the
+    // (query, term) pairs on the driver
+    val df = termDf(post)
+    val qdf = qt.pairs.flatMap { case (q, t) => df.get(t).map(d => (q, t, d.toDouble)) }
     def distinctTerms(rows: Array[(Any, String, Double)]): Long =
       rows.map(_._2).distinct.length.toLong
     // optional stopword elision — the production knob for the
@@ -225,21 +238,34 @@ object Search {
     val need: Map[Any, Long] =
       if (requireAllTerms) kept.groupBy(_._1).map { case (q, ts) => q -> ts.length.toLong }
       else Map.empty
-    val qdfSchema = StructType(Seq(qt.qid, StructField("term", StringType),
-      StructField("__df", DoubleType)) ++
-      (if (requireAllTerms) Seq(StructField("__need", LongType)) else Nil))
-    val qdfRows = kept.map { case (q, t, d) =>
-      if (requireAllTerms) Row(q, t, d, need(q)) else Row(q, t, d) }
-    val carried = if (requireAllTerms) Seq(col("__need")) else Nil
-    // idf stays a Spark expression over the local rows (bit-identical
-    // to every earlier plan of this oracle-pinned formula)
-    val qidf = spark.createDataFrame(java.util.Arrays.asList(qdfRows: _*), qdfSchema)
-      .select(Seq(col("query_id"), col("term"),
-        log(lit(1.0) + (lit(n) - col("__df") + lit(0.5)) / (col("__df") + lit(0.5)))
-          .as("__idf")) ++ carried: _*)
+    // query ids ride as SLOTS into an array literal of the ids (the
+    // caller's id type is kept); each kept (query, term) row is one
+    // (slot, idf) entry of its term, in order
+    val ids = kept.map(_._1).distinct
+    val slotOf = ids.zipWithIndex.toMap
+    val entries = kept.map { case (q, t, d) => (t, slotOf(q), idf(n, d)) }
+    val attached =
+      if (joinTable) post.join(broadcast(spark.createDataFrame(
+          java.util.Arrays.asList(entries.map { case (t, s, i) => Row(t, s, i) }: _*),
+          StructType.fromDDL("term string, __slot int, __idf double"))), "term")
+      else {
+        val table = spark.sparkContext.broadcast(
+          graft.functions.TermLookup.table(entries.toSeq))
+        post.select(col("doc_id"), col("tf"), col("dl"),
+            explode(graft.functions.TermLookup(col("term"), table)).as("__e"))
+          .select(col("doc_id"), col("tf"), col("dl"),
+            col("__e.slot").as("__slot"), col("__e.idf").as("__idf"))
+      }
+    val idType = ArrayType(qt.qid.dataType)
+    val queryId = Shim.toColumn(Literal(
+      CatalystTypeConverters.createToCatalystConverter(idType)(ids.toSeq), idType))
+      .getItem(col("__slot"))
+    val carried =
+      if (requireAllTerms) Seq(lit(ids.map(need)).getItem(col("__slot")).as("__need"))
+      else Nil
     val tfD = col("tf").cast("double")
-    val scored = post.join(broadcast(qidf), "term")
-      .select(Seq(col("query_id"), col("doc_id"),
+    val scored = attached
+      .select(Seq(queryId.as("query_id"), col("doc_id"),
         (col("__idf") * tfD * lit(k1 + 1.0) /
           (tfD + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / lit(avgdl))))
           .as("__s")) ++ carried: _*)
@@ -250,6 +276,47 @@ object Search {
         max(col("__need")).as("__need"))
       .filter(col("__nt") === col("__need"))
       .select(col("query_id"), col("doc_id"), col("score"))
+  }
+
+  /** BM25 idf, `ln(1 + (N - df + 0.5)/(df + 0.5))`, evaluated on the
+    * driver exactly as Spark's `log(lit(1.0) + (lit(n) - df + lit(0.5))
+    * / (df + lit(0.5)))` evaluates it: the same double operations in
+    * the same order, and `StrictMath.log`, which Spark's `Log` calls.
+    * Its argument is `(N + 1)/(df + 0.5) > 0` for every N >= 0 and
+    * df >= 1, so the null Spark returns at or below zero never arises.
+    * `SearchSpec` pins `==` equality with the Spark expression. */
+  private[graft] def idf(n: Double, df: Double): Double =
+    StrictMath.log(1.0 + (n - df + 0.5) / (df + 0.5))
+
+  /** Document frequency of every term in `post`, counted in ONE job
+    * with no exchange at probe sizes: each scan task counts the terms
+    * of its own rows, and the driver merges the per-task counts by
+    * `treeAggregate` (depth 2), so at most O(terms x sqrt(tasks))
+    * partial entries reach it. A `groupBy(term).count().collect()`
+    * plans an exchange, and AQE runs it as two jobs. */
+  private def termDf(post: DataFrame): scala.collection.Map[String, Long] = {
+    type Counts = scala.collection.mutable.HashMap[String, Long]
+    def merge(a: Counts, b: Counts): Counts = {
+      val (big, small) = if (a.size >= b.size) (a, b) else (b, a)
+      small.foreach { case (t, c) => big.update(t, big.getOrElse(t, 0L) + c) }
+      big
+    }
+    post.select(col("term")).queryExecution.toRdd
+      .mapPartitions { rows =>
+        // keyed by the row's UTF-8 bytes (cloned on first sight: the
+        // scan reuses its row buffer); decoded once per distinct term
+        val m = new java.util.HashMap[UTF8String, Array[Long]]()
+        rows.foreach { r =>
+          if (!r.isNullAt(0)) {
+            val c = m.get(r.getUTF8String(0))
+            if (c == null) m.put(r.getUTF8String(0).clone(), Array(1L)) else c(0) += 1L
+          }
+        }
+        val out = new Counts()
+        m.forEach((t, c) => out.update(t.toString, c(0)))
+        Iterator.single(out)
+      }
+      .treeAggregate(new Counts())(merge, merge)
   }
 
   /** Top-k docs per query by BM25, ranked on the 6-decimal-rounded
@@ -371,25 +438,31 @@ object Search {
 
   /** The ONE postings writer: `post` (term, doc_id, tf, dl) bucketed
     * into `tb=NN/` dirs by term hash, each bucket's files sorted by
-    * (term, doc_id) so footer stats prune to the probed terms. Build,
-    * batch append, minor fold and major all write through here.
+    * (term, doc_id) so footer stats can prune to the probed terms.
+    * Build, batch append, minor fold and major all write through here.
     *
-    * NOTE (r21): a parquet BLOOM FILTER on `term` was tried here (r20
-    * verdict item 4) and REVERTED after measurement: (a) the probe
-    * already reads only matching row groups locally (profiled: 0.2 MB
-    * input), (b) parquet silently DROPS the bloom whenever a chunk is
-    * fully dictionary-encoded — the dictionary is already exact
-    * membership, and the in()-pushdown threshold raised in GraftSession
-    * lets the reader prune on it — and (c) where it did materialize it
-    * added an erratic ~66 KB/file footer that broke the tier-size
-    * monotonicity [[maintenanceAdvice]] compares (a 2-doc base read
-    * LARGER than its 4x-corpus major compaction). Term-sorted files +
-    * footer stats + dictionary in() pruning are the honest layout. */
+    * The sort leads with `tb`, the partition column: the planned write
+    * requires its input ordered by `tb` and, when it is not, adds its
+    * own sort on `tb` — and Catalyst then drops a (term, doc_id) sort
+    * below it, so the files came out in doc order. A spec reads a
+    * bucket file back and checks the (term, doc_id) order.
+    *
+    * NOTE: a parquet BLOOM FILTER on `term` was tried here and reverted
+    * after measurement: (a) parquet silently DROPS the bloom whenever a
+    * chunk is fully dictionary-encoded — the dictionary is already
+    * exact membership, and the in()-pushdown threshold raised in
+    * GraftSession lets the reader prune on it — and (b) where it did
+    * materialize it added an erratic ~66 KB/file footer that broke the
+    * tier-size monotonicity [[maintenanceAdvice]] compares (a 2-doc
+    * base read LARGER than its 4x-corpus major compaction). Sorted
+    * files + footer stats + dictionary in() pruning are the layout.
+    * Pruning needs more than one page per file: a bucket file of a
+    * few thousand rows is a single page, which a probe reads whole. */
   private def writePostings(post: DataFrame, uri: String, buckets: Int,
       target: String): Unit =
     post.withColumn("tb", termBucket(col("term"), buckets))
       .repartition(col("tb"))
-      .sortWithinPartitions(col("term"), col("doc_id"))
+      .sortWithinPartitions(col("tb"), col("term"), col("doc_id"))
       .write.options(graft.storage.Encryption.dirWriteOptions(post.sparkSession, uri))
       .partitionBy("tb").parquet(target)
 

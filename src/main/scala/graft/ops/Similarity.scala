@@ -44,7 +44,9 @@ object Similarity {
     * `row_number().over(partitionBy(key))` formulation, which shuffles
     * every scored row — the scale-killer when |corpus| x |queries| is
     * large. Expects columns (keyCol, idCol, scoreCol); ids must be
-    * Comparable for deterministic tie-breaks (score desc, id asc). */
+    * Comparable for deterministic tie-breaks (score desc, id asc).
+    * (long key, long id) inputs take [[topKReducePrimitive]]'s
+    * array-backed heaps, any other pair [[topKReduceGeneric]]'s rows. */
   def topKPerKey(scored: DataFrame, keyCol: String, idCol: String,
       scoreCol: String, k: Int): DataFrame = {
     import org.apache.spark.sql.types.LongType
@@ -99,12 +101,10 @@ object Similarity {
   /** Primitive fast path for (long key, long id): array-backed bounded
     * heaps, no Row allocation / boxed-Comparable dispatch per input
     * row. Same kept set and tie rule as [[topKReduceGeneric]] —
-    * top-k by (score desc, id asc), pinned by `OpsSpec` equality. */
-  private def topKReducePrimitive(proj: DataFrame, k: Int): DataFrame = {
-    val names = proj.columns.toSeq
-    val session = proj.sparkSession
-    import session.implicits._
-    proj.as[(Long, Long, Double)].mapPartitions { rows =>
+    * top-k by (score desc, id asc), pinned by `OpsSpec` equality.
+    * Reads and writes through [[KeyIdScore]], built once. */
+  private def topKReducePrimitive(proj: DataFrame, k: Int): DataFrame =
+    proj.as(KeyIdScore).mapPartitions { rows =>
       val heaps = scala.collection.mutable.LongMap.empty[LongTopKHeap]
       rows.foreach { case (key, id, s) =>
         heaps.getOrElseUpdate(key, new LongTopKHeap(k)).offer(s, id)
@@ -112,7 +112,15 @@ object Similarity {
       heaps.iterator.flatMap { case (key, h) =>
         h.drain().map { case (s, id) => (key, id, s) }
       }
-    }.toDF(names: _*)
+    }(KeyIdScore).toDF(proj.columns.toSeq: _*)
+
+  /** The (key, id, score) encoder of [[topKReducePrimitive]], built once
+    * per JVM: deriving it through `session.implicits._` runs TypeTag
+    * reflection on every top-k call, which every BM25, ANN, IVF, PQ and
+    * RRF query pays at construction and planning time. */
+  private val KeyIdScore: org.apache.spark.sql.Encoder[(Long, Long, Double)] = {
+    import org.apache.spark.sql.Encoders
+    Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaDouble)
   }
 
   /** Cross-corpus SEMANTIC decontamination: every corpus row whose
@@ -766,7 +774,9 @@ object Similarity {
     // derivable from the geometry sidecar — never part of the rows
     val base = if (base1.columns.contains("group_id")) base1.drop("group_id")
       else base1
-    cellsTable(uri).incRows(spark, inc).fold(base) { incLeg =>
+    // the cells' payload schema lives in the geometry sidecar, so this
+    // leg still infers its schema from the files
+    cellsTable(uri).incRows(spark, inc, None).fold(base) { incLeg =>
       // flat inc files carry centroid_id as a DATA column (long); a
       // FLAT base leg's is partition-inferred (int). Align by casting
       // the BASE side UP — partition pruning still evaluates predicates

@@ -4,6 +4,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
@@ -170,7 +171,8 @@ object PointIndex {
 
   // ---- bucket tier ---------------------------------------------------
 
-  private val bucketSchema = StructType(Seq(
+  /** Schema of a servable bucket tier, and of the rows served from it. */
+  private[graft] val bucketSchema = StructType(Seq(
     StructField("band", IntegerType, nullable = true),
     StructField("bucket", LongType, nullable = true),
     StructField("id", LongType, nullable = true)))
@@ -318,7 +320,8 @@ object PointIndex {
 
   // ---- sig tier ------------------------------------------------------
 
-  private val sigSchema = StructType(Seq(
+  /** Schema of a servable sigs tier, and of the rows served from it. */
+  private[graft] val sigSchema = StructType(Seq(
     StructField("id", LongType, nullable = true),
     StructField("sig", ArrayType(LongType, containsNull = false),
       nullable = true)))
@@ -495,8 +498,13 @@ object PointIndex {
       if (hit != null) return Some(hit)
       // plan construction + listing OUTSIDE the lock (real I/O against
       // an object store): a cold miss on one index must not serialize
-      // every other session's probes JVM-wide
-      val tier = spark.read.parquet(path)
+      // every other session's probes JVM-wide. The schema comes from
+      // one data file's footer, read here: schema inference would
+      // spend a Spark job on it. A tier with no data files is not
+      // servable.
+      val file = VFS(spark).lsFilesRecursive(path).find(_.endsWith(".parquet"))
+      if (file.isEmpty) return None
+      val tier = spark.read.schema(Shim.parquetFileSchema(spark, file.get)).parquet(path)
       val keyed = toKeyed(tier) match {
         case None => return None
         case Some(k) => k

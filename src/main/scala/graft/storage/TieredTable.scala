@@ -2,6 +2,7 @@ package graft.storage
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /** One table of a persisted index kept in two tiers under `uri`: the
   * base `<name>` and the inc tier `<name>_inc`, each its own
@@ -51,10 +52,13 @@ final case class TieredTable(uri: String, name: String) {
   /** The inc tier's rows at the resolved path `inc`, or None when it
     * holds no data files. Data files, not bare existence: a
     * freshly-reset inc generation lists only its commit marker, and a
-    * parquet scan of a data-file-less dir dies on schema inference. */
-  def incRows(spark: SparkSession, inc: String): Option[DataFrame] =
+    * parquet scan of a data-file-less dir dies on schema inference.
+    * A declared `schema` plans the scan without inferring one (Spark
+    * infers it in a job of its own); None infers it from the files. */
+  def incRows(spark: SparkSession, inc: String,
+      schema: Option[StructType]): Option[DataFrame] =
     if (VersionedDir.hasDataFiles(VFS(spark).lsFilesRecursive(inc).toSet))
-      Some(spark.read.parquet(inc))
+      Some(schema.fold(spark.read)(spark.read.schema).parquet(inc))
     else None
 
   /** BOUNDED maintenance: fold the inc tier alone into a new inc

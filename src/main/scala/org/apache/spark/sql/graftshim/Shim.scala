@@ -92,6 +92,28 @@ object Shim {
       Some(schema), cache)
   }
 
+  /** The Spark schema of the parquet file `file`, read from its footer
+    * on the driver the way Spark's schema inference reads one (the
+    * stored Spark row schema when present, else the converted parquet
+    * types): `spark.read.parquet(dir)` reads the same footer inside a
+    * Spark job. Encrypted footers decrypt through the session's crypto
+    * factory, as in a scan. */
+  def parquetFileSchema(spark: org.apache.spark.sql.SparkSession,
+      file: String): org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+      ParquetToSparkSchemaConverter}
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val conf = session.sessionState.newHadoopConf()
+    val path = new org.apache.hadoop.fs.Path(file)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf, path).build())
+    try ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(path, reader.getFooter),
+      new ParquetToSparkSchemaConverter(session.sessionState.conf))
+    finally reader.close()
+  }
+
   /** The parquet relation over `index`, read with the declared `schema`:
     * planning it reads no footer. */
   def parquetOf(spark: org.apache.spark.sql.SparkSession,

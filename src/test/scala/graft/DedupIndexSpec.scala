@@ -419,6 +419,26 @@ class DedupIndexSpec extends SparkSpec {
       .count() >= 0L)
   }
 
+  test("a point-path probe with pending incs starts no schema-inference job") {
+    val uri = TestSession.tmpDir("minhash-index-noinfer")
+    DedupIndex.build(corpus.filter(col("doc_id") % 2 === 0), "doc_id", "text", uri)
+    DedupIndex.append(corpus.filter(col("doc_id") % 2 === 1 && col("doc_id") < 40),
+      "doc_id", "text", uri)
+    val fs = graft.storage.VFS(spark)
+    Seq(DedupIndex.liveDataIncPath(spark, uri), DedupIndex.liveSigsIncPath(spark, uri))
+      .foreach(inc => assert(graft.storage.VersionedDir.hasDataFiles(
+        fs.lsFilesRecursive(inc).toSet), s"no pending inc rows at $inc"))
+    graft.core.Stats.reset()
+    // the first probe also builds both base tiers' point maps
+    val (matched, jobs) = jobsOf(DedupIndex.probe(batch, "doc_id", "text", uri,
+      threshold = 0.6).filter(col("match_id") === col("id") - 1000000L).count())
+    assert(graft.core.Stats.counterValue("pointindex.misses") == 2L,
+      "probe did not take the point path on both tiers")
+    val inferring = jobs.filter(_.exists(_.startsWith("parquet at")))
+    assert(inferring.isEmpty, s"schema-inference job(s): ${inferring.mkString("; ")}")
+    assert(matched == 30L, "every planted dup's source is indexed")
+  }
+
   test("params mismatch is loud") {
     assertThrows[Exception] {
       DedupIndex.readParams(spark, TestSession.tmpDir("no-such-index"))

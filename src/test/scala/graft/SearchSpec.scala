@@ -391,6 +391,66 @@ class SearchSpec extends SparkSpec {
     } finally fs.delete(uri)
   }
 
+  test("bm25 index probe: at most 4 Spark jobs, no broadcast exchange or " +
+    "local-table job, the same rows as inline bm25TopK") {
+    val uri = s"target/test-bm25-jobs4-${System.nanoTime()}"
+    val q = Seq((0L, "the cat sat on the mat log"),
+      (1L, "dogs and cats an entirely unrelated sentence about spark")).toDF("qid", "qtext")
+    val batches = Seq(100L, 200L).map(off =>
+      docs.select(($"doc_id" + off).as("doc_id"), $"text"))
+    try {
+      Search.buildIndex(docs, "doc_id", "text", uri, buckets = 64)
+      batches.zipWithIndex.foreach { case (b, i) =>
+        Search.appendBatchToIndex(b, "doc_id", "text", uri, s"batch-${i + 1}") }
+      val ((probe, got), jobs) = jobsOf {
+        val p = Search.bm25IndexTopK(spark, uri, q, "qid", "qtext", k = 5)
+        (p, p.collect())
+      }
+      assert(jobs.nonEmpty && jobs.size <= 4, s"${jobs.size} jobs: ${jobs.mkString("; ")}")
+      val plan = probe.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastExchange") && !plan.contains("LocalTableScan"),
+        s"probe plan broadcasts a local table:\n$plan")
+      val inline = Search.bm25TopK(batches.foldLeft(docs)(_ unionByName _),
+        "doc_id", "text", q, "qid", "qtext", k = 5)
+      assert(got.toSeq.sortBy(r => (r.getLong(0), r.getLong(3))) ==
+        inline.collect().toSeq.sortBy(r => (r.getLong(0), r.getLong(3))))
+    } finally graft.storage.VFS(spark).delete(uri)
+  }
+
+  test("bm25 idf: the driver value equals Spark's log expression bit for bit") {
+    def sparkIdf(dfs: org.apache.spark.sql.DataFrame, n: Double) =
+      dfs.select($"df", log(lit(1.0) + (lit(n) - $"df" + lit(0.5)) / ($"df" + lit(0.5))))
+        .as[(Double, Double)].collect()
+    Seq(1L, 2L, 10L, 977L, 100000L).foreach { n =>
+      // generated rows evaluate through codegen, local rows interpreted
+      val generated = sparkIdf(spark.range(1, n + 1).select($"id".cast("double").as("df")),
+        n.toDouble)
+      val local = sparkIdf((1L to math.min(n, 50L)).map(_.toDouble).toDF("df"), n.toDouble)
+      assert(generated.length == n)
+      (generated ++ local).foreach { case (df, want) =>
+        val got = Search.idf(n.toDouble, df)
+        assert(got == want, s"N=$n df=$df: driver $got, Spark $want")
+      }
+    }
+  }
+
+  test("postings bucket files are sorted by (term, doc_id)") {
+    val uri = s"target/test-bm25-sorted-${System.nanoTime()}"
+    val fs = graft.storage.VFS(spark)
+    try {
+      Search.buildIndex(docs, "doc_id", "text", uri, buckets = 4)
+      val files = fs.lsFilesRecursive(uri).filter(f =>
+        f.endsWith(".parquet") && f.contains("/tb="))
+      val rows = files.map(f => spark.read.parquet(f).select("term", "doc_id")
+        .as[(String, Long)].collect().toSeq)
+      assert(rows.exists(_.map(_._1).distinct.size > 1),
+        s"no bucket file holds two terms: ${rows.map(_.size)}")
+      rows.zip(files).foreach { case (r, f) =>
+        assert(r == r.sorted, s"$f is not (term, doc_id)-sorted: $r")
+      }
+    } finally fs.delete(uri)
+  }
+
   test("bm25 index probe plan: bucket partitions prune, terms push down") {
     val uri = s"target/test-bm25-plan-${System.nanoTime()}"
     try {
