@@ -70,6 +70,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // readStream.table(<catalog graft table>) -> fragment file stream
     ext.injectPostHocResolutionRule(session =>
       graft.plans.StreamTableRewrite(session))
+    // a BM25 index probe (Search.bm25IndexTopK) -> its scoring operator
+    ext.injectPlannerStrategy(_ => graft.ops.Bm25ProbeStrategy)
 
     def register(name: String, usage: String)(builder: Seq[Expression] => Expression): Unit =
       ext.injectFunction((FunctionIdentifier(name),

@@ -1,0 +1,216 @@
+package graft.ops
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet,
+  GenericInternalRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable
+
+/** What one BM25 index probe scores: the batch's distinct (query id,
+  * term) pairs, ids in the caller's type, and the index's exact corpus
+  * stats. */
+private[ops] final case class Bm25Batch(pairs: Seq[(Any, String)], nDocs: Long,
+    sumDl: Long, k: Int, k1: Double, b: Double, maxDfFraction: Double,
+    requireAllTerms: Boolean) {
+  def summary: String =
+    s"k=$k, k1=$k1, b=$b, pairs=${pairs.size}, nDocs=$nDocs, sumDl=$sumDl, " +
+      s"maxDfFraction=$maxDfFraction, requireAllTerms=$requireAllTerms"
+}
+
+/** A BM25 index probe as one Catalyst node over the probe's restricted
+  * postings scan (`child`; `postings` are its term, doc_id, tf, dl
+  * attributes, listed as the node's expressions so column pruning above
+  * the node keeps them). Output: (query_id, doc_id, score, rank). The
+  * scan stays a plan child, so its pushed filters, its semi-join
+  * fallback and its file listing show in the executed plan, and nothing
+  * runs until the caller's action. Planned by [[Bm25ProbeStrategy]]
+  * (injected by [[graft.core.GraftExtensions]]) into [[Bm25ProbeExec]]. */
+private[graft] case class Bm25Probe(batch: Bm25Batch, postings: Seq[Attribute],
+    output: Seq[Attribute], child: LogicalPlan) extends UnaryNode {
+  override def producedAttributes: AttributeSet = AttributeSet(output)
+  override protected def stringArgs: Iterator[Any] = Iterator(batch.summary)
+  override protected def withNewChildInternal(c: LogicalPlan): Bm25Probe = copy(child = c)
+}
+
+private[graft] object Bm25Probe {
+  /** The probe's node over `post` (term, doc_id, tf, dl). The output
+    * columns are nullable exactly as [[Similarity.topKPerKey]] reports
+    * them: with long query ids (doc ids are always long) it reads
+    * through a primitive tuple. */
+  def apply(post: org.apache.spark.sql.DataFrame, qidType: DataType,
+      batch: Bm25Batch): Bm25Probe = {
+    val child = post.queryExecution.analyzed
+    val boxed = qidType != LongType
+    Bm25Probe(batch, child.output, Seq(
+      AttributeReference("query_id", qidType, boxed)(),
+      AttributeReference("doc_id", LongType, boxed)(),
+      AttributeReference("score", DoubleType, boxed)(),
+      AttributeReference("rank", LongType, nullable = false)()), child)
+  }
+
+  /** Contribution rows one scoring reducer merges, at most: a bound on
+    * its (query, doc) sums. */
+  private val RowsPerReducer = 1L << 20
+
+  /** Reducers for `contributions` rows (Σ df over the kept (query,
+    * term) pairs, known on the driver before the scoring job), at most
+    * `cap`. A probe-sized batch gets 1, and then no merge stage runs. */
+  def reducers(contributions: Long, cap: Int): Int =
+    math.max(1L, math.min(cap.toLong, (contributions + RowsPerReducer - 1) / RowsPerReducer)).toInt
+
+  private final class Acc { var sum = 0.0; var n = 0L }
+
+  /** Adds (s, n) to the (slot, doc) sum, creating it at 0.0 as
+    * `HashAggregate`'s `sum` buffer starts. */
+  private def add(acc: Array[mutable.LongMap[Acc]], slot: Int, doc: Long,
+      s: Double, n: Long): Unit = {
+    var m = acc(slot)
+    if (m == null) { m = mutable.LongMap.empty[Acc]; acc(slot) = m }
+    var a = m.getOrNull(doc)
+    if (a == null) { a = new Acc; m.update(doc, a) }
+    a.sum += s
+    a.n += n
+  }
+
+  private def fixedRow(fields: Int): UnsafeRow = {
+    val size = UnsafeRow.calculateBitSetWidthInBytes(fields) + 8 * fields
+    val r = new UnsafeRow(fields)
+    r.pointTo(new Array[Byte](size), size)
+    r
+  }
+
+  /** The scoring job: one RDD pipeline over the postings `rows`
+    * (`at` = ordinals of term, doc_id, tf, dl).
+    *  - Each scan task sums its (query slot, doc) contributions in scan
+    *    order, as a partial `HashAggregate` does.
+    *  - One exchange on (slot, doc) into `parts` reducers, each merging
+    *    the partials in arrival order as the final `HashAggregate`
+    *    does, then applying the AND filter, the 6-decimal HALF_UP
+    *    rounding and a bounded top-k heap per query.
+    *  - With more than one reducer, the per-reducer heaps merge in one
+    *    more exchange keyed by query.
+    * Rows: (query_id, doc_id, score, rank), ranked by rounded score
+    * desc, then doc_id asc, as [[Similarity.topKPerKey]] ranks. */
+  def topK(rows: RDD[InternalRow], at: Array[Int], table: Search.ScoringTable,
+      schema: StructType, k: Int, k1: Double, b: Double, avgdl: Double,
+      parts: Int): RDD[InternalRow] = {
+    val slots = table.ids.length
+    val toId = CatalystTypeConverters.createToCatalystConverter(schema(0).dataType)
+    val ids = table.ids.map(toId)
+    val need = table.need.orNull
+    val lookup = new java.util.HashMap[UTF8String, Array[(Int, Double)]]()
+    table.entries.groupBy(_._1).foreach { case (t, es) =>
+      lookup.put(UTF8String.fromString(t), es.map(e => (e._2, e._3)))
+    }
+    val Array(termAt, docAt, tfAt, dlAt) = at
+    val partials = rows.mapPartitions { it =>
+      val acc = new Array[mutable.LongMap[Acc]](slots)
+      it.foreach { r =>
+        val es = lookup.get(r.getUTF8String(termAt))
+        if (es != null) {
+          val doc = r.getLong(docAt)
+          val tf = r.getLong(tfAt).toDouble
+          val dl = r.getLong(dlAt).toDouble
+          es.foreach { case (slot, idf) =>
+            add(acc, slot, doc, Search.contribution(idf, tf, dl, k1, b, avgdl), 1L)
+          }
+        }
+      }
+      for {
+        slot <- Iterator.range(0, slots) if acc(slot) != null
+        (doc, a) <- acc(slot).iterator
+      } yield {
+        val r = fixedRow(4)
+        r.setInt(0, slot); r.setLong(1, doc); r.setDouble(2, a.sum); r.setLong(3, a.n)
+        (java.lang.Math.floorMod(31 * slot + java.lang.Long.hashCode(doc), parts), r: InternalRow)
+      }
+    }
+    def heaps(): Array[LongTopKHeap] = new Array[LongTopKHeap](slots)
+    def offer(hs: Array[LongTopKHeap], slot: Int, score: Double, doc: Long): Unit = {
+      if (hs(slot) == null) hs(slot) = new LongTopKHeap(k)
+      hs(slot).offer(score, doc)
+    }
+    val scored = Shim.shuffleUnsafeRows(partials, parts, 4).mapPartitions { it =>
+      val acc = new Array[mutable.LongMap[Acc]](slots)
+      it.foreach(r => add(acc, r.getInt(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
+      val hs = heaps()
+      for (slot <- 0 until slots if acc(slot) != null; (doc, a) <- acc(slot))
+        if (need == null || a.n == need(slot)) offer(hs, slot, Search.round6(a.sum), doc)
+      Iterator.single(hs)
+    }
+    val ranked =
+      if (parts == 1) scored
+      else {
+        val byQuery = math.min(parts, slots)
+        val cands = scored.flatMap { hs =>
+          Iterator.range(0, slots).filter(hs(_) != null).flatMap { slot =>
+            hs(slot).drain().map { case (s, doc) =>
+              val r = fixedRow(3)
+              r.setInt(0, slot); r.setLong(1, doc); r.setDouble(2, s)
+              (slot % byQuery, r: InternalRow)
+            }
+          }
+        }
+        Shim.shuffleUnsafeRows(cands, byQuery, 3).mapPartitions { it =>
+          val hs = heaps()
+          it.foreach(r => offer(hs, r.getInt(0), r.getDouble(2), r.getLong(1)))
+          Iterator.single(hs)
+        }
+      }
+    ranked.mapPartitions { it =>
+      val toRow = UnsafeProjection.create(schema)
+      it.flatMap { hs =>
+        Iterator.range(0, slots).filter(hs(_) != null).flatMap { slot =>
+          hs(slot).drain().toArray
+            .sortWith((x, y) => x._1 > y._1 || (x._1 == y._1 && x._2 < y._2)).iterator
+            .zipWithIndex.map { case ((s, doc), i) =>
+              toRow(new GenericInternalRow(Array[Any](ids(slot), doc, s, i + 1L)))
+            }
+        }
+      }
+    }
+  }
+}
+
+/** Plans [[Bm25Probe]] into [[Bm25ProbeExec]] over its planned child. */
+private[graft] object Bm25ProbeStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case p: Bm25Probe => Bm25ProbeExec(p.batch, p.postings, p.output, planLater(p.child)) :: Nil
+    case _ => Nil
+  }
+}
+
+/** Executes one BM25 index probe in 2 Spark jobs over its child's RDD:
+  * the df count ([[Search.termDf]], one `treeAggregate`), then — after
+  * the driver's idf, elision, hot-term and AND decisions
+  * ([[Search.scoringTable]]) — the scoring job ([[Bm25Probe.topK]]),
+  * which the caller's action runs. Both jobs start when the action
+  * executes the node, so a probe planned before a fold and run after it
+  * reads the files it listed. */
+private[graft] case class Bm25ProbeExec(batch: Bm25Batch, postings: Seq[Attribute],
+    output: Seq[Attribute], child: SparkPlan) extends UnaryExecNode {
+  override def producedAttributes: AttributeSet = AttributeSet(output)
+  override protected def stringArgs: Iterator[Any] = Iterator(batch.summary)
+  override protected def withNewChildInternal(c: SparkPlan): Bm25ProbeExec = copy(child = c)
+
+  override protected def doExecute(): RDD[InternalRow] =
+    run(Bm25Probe.reducers(_, conf.numShufflePartitions))
+
+  /** Both jobs' work, with `reducers` sizing the scoring exchange from
+    * the contribution-row count. */
+  private[graft] def run(reducers: Long => Int): RDD[InternalRow] = {
+    val rows = child.execute()
+    val at = postings.map(a => child.output.indexWhere(_.exprId == a.exprId)).toArray
+    val table = Search.scoringTable(session, batch.pairs, Search.termDf(rows, at(0)),
+      batch.nDocs, batch.maxDfFraction, batch.requireAllTerms)
+    if (table.entries.isEmpty) sparkContext.emptyRDD[InternalRow]
+    else Bm25Probe.topK(rows, at, table, DataTypeUtils.fromAttributes(output), batch.k,
+      batch.k1, batch.b, Search.avgdl(batch.nDocs, batch.sumDl), reducers(table.contributions))
+  }
+}

@@ -27,18 +27,22 @@ import org.apache.spark.unsafe.types.UTF8String
   *    document-frequency (df) is counted over what is left inside each
   *    scan task, the partial counts merging on the driver — one job,
   *    query-batch sized, so the vocabulary table never shuffles;
-  *  - candidate generation attaches idf on the driver's terms: each
-  *    streamed posting looks its term up in the batch's broadcast
-  *    (term → query slot, idf) table ([[graft.functions.TermLookup]];
-  *    the inline path joins the same rows as a broadcast relation) —
+  *  - candidate generation attaches idf on the driver's terms: the
+  *    batch's (term → query slot, idf) table is decided once on the
+  *    driver ([[scoringTable]]); an index probe's scoring operator
+  *    ([[Bm25Probe]]) looks each streamed posting's term up in it, and
+  *    the inline path joins the same rows as a broadcast relation —
   *    postings stream, nothing corpus-sized shuffles on an unbounded
   *    key;
   *  - per-(query, doc) score assembly is one shuffle of MATCHING
-  *    pairs only, and top-k uses [[Similarity.topKPerKey]]'s bounded
-  *    per-partition heaps — no `row_number().over(partitionBy(query))`
-  *    window, which would hash-partition every scored row onto
-  *    |queries| reducers (the classic skew bomb when queries are few
-  *    and the corpus is huge).
+  *    pairs only, summed per scan task first. Top-k keeps bounded
+  *    per-query heaps — [[Similarity.topKPerKey]] on the inline path,
+  *    the operator's own heaps on an index probe — never a
+  *    `row_number().over(partitionBy(query))` window, which would
+  *    hash-partition every scored row onto |queries| reducers (the
+  *    classic skew bomb when queries are few and the corpus is huge).
+  *    An index probe runs 2 Spark jobs: the df count and the scoring
+  *    job, which the caller's action starts.
   */
 object Search {
 
@@ -119,7 +123,7 @@ object Search {
     // scoring join drops every other term anyway)
     val qt = queryTerms(queries, qidCol, qtextCol)
     scoreFromPostings(restrictToTerms(post, qt.terms, MaxPushedTerms), qt,
-      nDocs, sumDl, k1, b, maxDfFraction, requireAllTerms, joinTable = true)
+      nDocs, sumDl, k1, b, maxDfFraction, requireAllTerms)
   }
 
   /** Default cap on the terms a probe pushes as `term isin(...)`
@@ -163,43 +167,71 @@ object Search {
     * paying it. Warn-only — results never change without opt-in. */
   val HotTermDfFraction: Double = 0.2
 
-  /** Shared scoring core: attaches idf to a postings frame (term,
+  /** The inline scoring core: attaches idf to a postings frame (term,
     * doc_id, tf, dl) holding EVERY posting of the query terms and no
     * other term, and produces (query_id, doc_id, score raw). `df`
-    * (document frequency per term) is computed FROM those postings —
-    * exact on the inline path (the corpus postings restricted to the
-    * query terms) and on the index path (a term's postings all live in
-    * its bucket, so df over the pruned read is identical).
-    *
-    * Spark jobs of one index probe: the df count (1 — [[termDf]]) and
-    * the scoring query's shuffle + top-k stages (3). idf is computed on
-    * the driver and rides a broadcast variable
-    * ([[graft.functions.TermLookup]]), which starts no job; a broadcast
-    * join of the (query, term, idf) rows would collect its local
-    * relation in a job of its own. The query terms, the df and idf,
-    * the hot-term and elision decisions and the per-query AND counts
-    * are driver-side work on query-batch-sized data. Job count, not
-    * data volume, is the cost at probe sizes: each job adds its own
-    * scheduling and a driver gap before it (traced 8-query probes of
-    * the perfbench `corpus_index` index on 4 cores: 6 jobs spanned
-    * ~710 ms, 4 jobs ~400 ms).
-    *
-    * `joinTable` attaches the same (term, slot, idf) rows through a
-    * broadcast hash join instead — the inline path's plan, whose specs
-    * pin the query table broadcast as a join into the postings stream.
-    * Both give the same rows with the same scores. */
+    * (document frequency per term) is counted FROM those postings
+    * ([[termDf]], one job), exact because the corpus postings are
+    * restricted to the query terms, and the driver decides the rest
+    * ([[scoringTable]]). The (term, query slot, idf) rows reach the
+    * postings stream through a broadcast hash join, which collects its
+    * local relation in a job of its own; the plan specs pin that
+    * broadcast. The index probe shares [[termDf]] and [[scoringTable]]
+    * but scores in its own operator ([[Bm25Probe]]), which plans no
+    * DataFrame per probe. */
   private def scoreFromPostings(post: DataFrame, qt: QueryTerms,
       nDocs: Long, sumDl: Long, k1: Double, b: Double,
-      maxDfFraction: Double, requireAllTerms: Boolean,
-      joinTable: Boolean = false): DataFrame = {
+      maxDfFraction: Double, requireAllTerms: Boolean): DataFrame = {
     val spark = post.sparkSession
+    val table = scoringTable(spark, qt.pairs.toSeq,
+      termDf(post.select(col("term")).queryExecution.toRdd, 0),
+      nDocs, maxDfFraction, requireAllTerms)
+    val attached = post.join(broadcast(spark.createDataFrame(
+        java.util.Arrays.asList(table.entries.map { case (t, s, i) => Row(t, s, i) }: _*),
+        StructType.fromDDL("term string, __slot int, __idf double"))), "term")
+    // query ids ride as SLOTS into an array literal of the ids (the
+    // caller's id type is kept)
+    val idType = ArrayType(qt.qid.dataType)
+    val queryId = Shim.toColumn(Literal(
+      CatalystTypeConverters.createToCatalystConverter(idType)(table.ids.toSeq), idType))
+      .getItem(col("__slot"))
+    val carried = table.need.map(need => lit(need).getItem(col("__slot")).as("__need")).toSeq
+    val tfD = col("tf").cast("double")
+    val scored = attached
+      .select(Seq(queryId.as("query_id"), col("doc_id"),
+        (col("__idf") * tfD * lit(k1 + 1.0) /
+          (tfD + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") /
+            lit(avgdl(nDocs, sumDl)))))
+          .as("__s")) ++ carried: _*)
+      .groupBy(col("query_id"), col("doc_id"))
+    if (!requireAllTerms) scored.agg(sum(col("__s")).as("score"))
+    else scored
+      .agg(sum(col("__s")).as("score"), count(lit(1)).as("__nt"),
+        max(col("__need")).as("__need"))
+      .filter(col("__nt") === col("__need"))
+      .select(col("query_id"), col("doc_id"), col("score"))
+  }
+
+  /** A query batch's scoring decisions, made on the driver from its
+    * (query, term) pairs and the probed terms' df:
+    *  - `ids`: the query ids holding a kept term, in the caller's type;
+    *    a query's SLOT is its index here;
+    *  - `entries`: one (term, slot, idf) per kept (query, term) pair, in
+    *    pair order (a query id given twice keeps both rows' terms);
+    *  - `need`: per slot, the kept pairs an AND-mode doc must match;
+    *  - `contributions`: Σ df over the kept pairs, the contribution
+    *    rows scoring will produce. */
+  private[ops] final case class ScoringTable(ids: Array[Any],
+      entries: Array[(String, Int, Double)], need: Option[Array[Long]], contributions: Long)
+
+  private[ops] def scoringTable(spark: org.apache.spark.sql.SparkSession,
+      pairs: Seq[(Any, String)], df: scala.collection.Map[String, Long], nDocs: Long,
+      maxDfFraction: Double, requireAllTerms: Boolean): ScoringTable = {
     val n = nDocs.toDouble
-    val avgdl = if (nDocs == 0L) 1.0 else sumDl.toDouble / nDocs
     // df of every probed term present in the postings, joined to the
-    // (query, term) pairs on the driver
-    val df = termDf(post)
-    val qdf = qt.pairs.flatMap { case (q, t) => df.get(t).map(d => (q, t, d.toDouble)) }
-    def distinctTerms(rows: Array[(Any, String, Double)]): Long =
+    // (query, term) pairs
+    val qdf = pairs.flatMap { case (q, t) => df.get(t).map(d => (q, t, d.toDouble)) }
+    def distinctTerms(rows: Seq[(Any, String, Double)]): Long =
       rows.map(_._2).distinct.length.toLong
     // optional stopword elision — the production knob for the
     // worst-case term: a term in >maxDfFraction of all docs has
@@ -230,53 +262,41 @@ object Search {
         }
       }
     }
-    // conjunctive (AND) mode keeps docs matching EVERY non-elided query
-    // term: each (query, term) row carries its query's surviving-term
-    // count, compared below with the per-pair contribution count
-    // (postings rows are unique per (doc, term), so count == distinct
-    // matched terms)
-    val need: Map[Any, Long] =
-      if (requireAllTerms) kept.groupBy(_._1).map { case (q, ts) => q -> ts.length.toLong }
-      else Map.empty
-    // query ids ride as SLOTS into an array literal of the ids (the
-    // caller's id type is kept); each kept (query, term) row is one
-    // (slot, idf) entry of its term, in order
     val ids = kept.map(_._1).distinct
     val slotOf = ids.zipWithIndex.toMap
-    val entries = kept.map { case (q, t, d) => (t, slotOf(q), idf(n, d)) }
-    val attached =
-      if (joinTable) post.join(broadcast(spark.createDataFrame(
-          java.util.Arrays.asList(entries.map { case (t, s, i) => Row(t, s, i) }: _*),
-          StructType.fromDDL("term string, __slot int, __idf double"))), "term")
+    // conjunctive (AND) mode keeps docs matching EVERY non-elided query
+    // term: a (query, doc) pair's contribution count must equal its
+    // query's kept-pair count (postings rows are unique per (doc,
+    // term), so count == distinct matched terms)
+    val need =
+      if (!requireAllTerms) None
       else {
-        val table = spark.sparkContext.broadcast(
-          graft.functions.TermLookup.table(entries.toSeq))
-        post.select(col("doc_id"), col("tf"), col("dl"),
-            explode(graft.functions.TermLookup(col("term"), table)).as("__e"))
-          .select(col("doc_id"), col("tf"), col("dl"),
-            col("__e.slot").as("__slot"), col("__e.idf").as("__idf"))
+        val perQuery = kept.groupBy(_._1).map { case (q, ts) => q -> ts.length.toLong }
+        Some(ids.map(perQuery).toArray)
       }
-    val idType = ArrayType(qt.qid.dataType)
-    val queryId = Shim.toColumn(Literal(
-      CatalystTypeConverters.createToCatalystConverter(idType)(ids.toSeq), idType))
-      .getItem(col("__slot"))
-    val carried =
-      if (requireAllTerms) Seq(lit(ids.map(need)).getItem(col("__slot")).as("__need"))
-      else Nil
-    val tfD = col("tf").cast("double")
-    val scored = attached
-      .select(Seq(queryId.as("query_id"), col("doc_id"),
-        (col("__idf") * tfD * lit(k1 + 1.0) /
-          (tfD + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / lit(avgdl))))
-          .as("__s")) ++ carried: _*)
-      .groupBy(col("query_id"), col("doc_id"))
-    if (!requireAllTerms) scored.agg(sum(col("__s")).as("score"))
-    else scored
-      .agg(sum(col("__s")).as("score"), count(lit(1)).as("__nt"),
-        max(col("__need")).as("__need"))
-      .filter(col("__nt") === col("__need"))
-      .select(col("query_id"), col("doc_id"), col("score"))
+    ScoringTable(ids.toArray, kept.map { case (q, t, d) => (t, slotOf(q), idf(n, d)) }.toArray,
+      need, kept.map(_._3).sum.toLong)
   }
+
+  /** The BM25 length normalizer's mean document length (1.0 for an
+    * empty corpus), divided ONCE on the driver from exact integers. */
+  private[graft] def avgdl(nDocs: Long, sumDl: Long): Double =
+    if (nDocs == 0L) 1.0 else sumDl.toDouble / nDocs
+
+  /** One posting's BM25 contribution, evaluated exactly as the inline
+    * path's Spark expression `idf * tf * (k1 + 1) / (tf + k1 * ((1 - b) +
+    * b * dl / avgdl))` evaluates it: the same double operations in the
+    * same order (`k1 + 1` and `1 - b` folded on the driver as its
+    * literals are). `SearchSpec` pins `==` equality. */
+  private[graft] def contribution(idf: Double, tf: Double, dl: Double, k1: Double,
+      b: Double, avgdl: Double): Double =
+    idf * tf * (k1 + 1.0) / (tf + k1 * ((1.0 - b) + b * dl / avgdl))
+
+  /** `score` rounded to 6 decimals HALF_UP, as Spark's `round(_, 6)`
+    * rounds a double (through its shortest decimal string). */
+  private[graft] def round6(score: Double): Double =
+    if (score.isNaN || score.isInfinite) score
+    else java.math.BigDecimal.valueOf(score).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
 
   /** BM25 idf, `ln(1 + (N - df + 0.5)/(df + 0.5))`, evaluated on the
     * driver exactly as Spark's `log(lit(1.0) + (lit(n) - df + lit(0.5))
@@ -288,28 +308,30 @@ object Search {
   private[graft] def idf(n: Double, df: Double): Double =
     StrictMath.log(1.0 + (n - df + 0.5) / (df + 0.5))
 
-  /** Document frequency of every term in `post`, counted in ONE job
-    * with no exchange at probe sizes: each scan task counts the terms
-    * of its own rows, and the driver merges the per-task counts by
-    * `treeAggregate` (depth 2), so at most O(terms x sqrt(tasks))
-    * partial entries reach it. A `groupBy(term).count().collect()`
-    * plans an exchange, and AQE runs it as two jobs. */
-  private def termDf(post: DataFrame): scala.collection.Map[String, Long] = {
+  /** Document frequency of every term in the postings `rows` (the term
+    * at ordinal `termAt`), counted in ONE job with no exchange at probe
+    * sizes: each scan task counts the terms of its own rows, and the
+    * driver merges the per-task counts by `treeAggregate` (depth 2), so
+    * at most O(terms x sqrt(tasks)) partial entries reach it. A
+    * `groupBy(term).count().collect()` plans an exchange, and AQE runs
+    * it as two jobs. */
+  private[ops] def termDf(rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      termAt: Int): scala.collection.Map[String, Long] = {
     type Counts = scala.collection.mutable.HashMap[String, Long]
     def merge(a: Counts, b: Counts): Counts = {
       val (big, small) = if (a.size >= b.size) (a, b) else (b, a)
       small.foreach { case (t, c) => big.update(t, big.getOrElse(t, 0L) + c) }
       big
     }
-    post.select(col("term")).queryExecution.toRdd
-      .mapPartitions { rows =>
+    rows
+      .mapPartitions { it =>
         // keyed by the row's UTF-8 bytes (cloned on first sight: the
         // scan reuses its row buffer); decoded once per distinct term
         val m = new java.util.HashMap[UTF8String, Array[Long]]()
-        rows.foreach { r =>
-          if (!r.isNullAt(0)) {
-            val c = m.get(r.getUTF8String(0))
-            if (c == null) m.put(r.getUTF8String(0).clone(), Array(1L)) else c(0) += 1L
+        it.foreach { r =>
+          if (!r.isNullAt(termAt)) {
+            val c = m.get(r.getUTF8String(termAt))
+            if (c == null) m.put(r.getUTF8String(termAt).clone(), Array(1L)) else c(0) += 1L
           }
         }
         val out = new Counts()
@@ -866,14 +888,33 @@ object Search {
     * buckets select the `tb=` dirs the scan lists (path selection in
     * [[readPostingsMulti]] — pruned buckets are never listed), and the
     * terms push into the scan as a `term isin` predicate, so row groups
-    * prune on the sorted term column. Scoring then reuses the inline
-    * core, so results match [[bm25TopK]] pair-for-pair (pinned by the
-    * `bm25_index_topk` oracle and `SearchSpec`). */
+    * prune on the sorted term column. Results match [[bm25TopK]]
+    * pair-for-pair (pinned by the `bm25_index_topk` oracle and
+    * `SearchSpec`).
+    *
+    * The frame is one [[Bm25Probe]] node over that scan, and building it
+    * only resolves the index state and lists the files. The caller's
+    * action starts 2 Spark jobs over the scan:
+    *  1. the df count ([[termDf]], one `treeAggregate`, no exchange);
+    *  2. the scoring job ([[Bm25Probe.topK]]): per-task (query, doc)
+    *     sums, one exchange, then rounding, the AND filter and bounded
+    *     per-query heaps (one more exchange only above ~1M contribution
+    *     rows).
+    * Between them the driver decides idf, elision, hot terms and the
+    * AND counts ([[scoringTable]]). No scoring DataFrame is built or
+    * planned per probe, and AQE never splits the scoring: each job,
+    * and each plan, is a fixed cost that dominates at probe sizes
+    * (traced 8-query probes of the perfbench `corpus_index` index on 4
+    * cores: 6 jobs spanned ~710 ms, 4 jobs ~400 ms). A probe planned
+    * before a fold and run after its grace cycle fails loudly on the
+    * files it listed. Needs [[graft.core.GraftExtensions]] (set by
+    * [[graft.core.GraftSession]]), which plans the node. */
   def bm25IndexTopK(spark: org.apache.spark.sql.SparkSession, uri: String,
       queries: DataFrame, qidCol: String, qtextCol: String,
       k: Int = 10, k1: Double = 1.25, b: Double = 0.75,
       maxProbeTerms: Int = MaxPushedTerms, maxDfFraction: Double = 1.0,
       requireAllTerms: Boolean = false): DataFrame = {
+    require(k > 0, s"bm25IndexTopK: k must be positive, got $k")
     val (base, incs, nDocs, sumDl, buckets) = liveState(spark, uri)
     // the bucket count bounds the probe's path selection (up to one
     // listed `tb=` dir per bucket and root); buildIndex enforces
@@ -915,10 +956,8 @@ object Search {
     val post = restrictToTerms(readPostingsMulti(spark,
         base +: incs.map(d => s"$d/postings"), Some(tbs)), terms, maxProbeTerms)
       .select("term", "doc_id", "tf", "dl")
-    val scored = scoreFromPostings(post, qt, nDocs, sumDl, k1, b,
-        maxDfFraction, requireAllTerms)
-      .select(col("query_id"), col("doc_id"), round(col("score"), 6).as("score"))
-    Similarity.topKPerKey(scored, "query_id", "doc_id", "score", k)
+    Shim.ofRows(spark, Bm25Probe(post, qt.qid.dataType, Bm25Batch(qt.pairs.toSeq,
+      nDocs, sumDl, k, k1, b, maxDfFraction, requireAllTerms)))
   }
 
   /** Driver-side xxhash64 of a UTF-8 string with Spark's seed (42) —

@@ -60,26 +60,32 @@ class VFS(conf: Configuration) {
   }
 
   /** All FILE paths under `uri`, recursively (partitioned layouts nest
-    * data under `col=value/` dirs). Missing dir = empty.
+    * data under `col=value/` dirs), sorted. Missing dir = empty.
     *
-    * Retries the WHOLE walk (bounded) when an entry vanishes between
-    * the readdir and its stat — a writer's `_temporary` dir being
-    * renamed away mid-walk surfaces from Hadoop's local FS as a
-    * RuntimeException around an `ls` ExitCodeException, and the
-    * single-writer GUARD re-list ([[VersionedDir.commitGuarded]]) hits
-    * exactly this when a contract-violating concurrent append is
-    * committing: the retry walks the post-rename state, sees the
-    * appended files, and lets the guard abort LOUDLY instead of
-    * crashing with a permissions error (observed in the concurrency
-    * rehearsal's deliberate append-during-major). Persistent failures
-    * still throw. */
+    * Walks with one `listStatus` per dir. `listFiles(p, true)` returns
+    * the same files but builds a `LocatedFileStatus` per file, which on
+    * the local FS without native Hadoop loads the file's permissions by
+    * forking `ls -ld`: a few ms per listed file, the cost Spark's own
+    * listing also avoids.
+    *
+    * Retries the WHOLE walk (bounded) when an entry vanishes mid-walk —
+    * a writer's `_temporary` dir being renamed away between a parent's
+    * listing and its own. The single-writer GUARD re-list
+    * ([[VersionedDir.commitGuarded]]) hits exactly this when a
+    * contract-violating concurrent append is committing: the retry
+    * walks the post-rename state, sees the appended files, and lets the
+    * guard abort LOUDLY instead of crashing mid-listing (observed in
+    * the concurrency rehearsal's deliberate append-during-major).
+    * Persistent failures still throw. */
   def lsFilesRecursive(uri: String): Seq[String] = {
     val p = new Path(uri)
     val f = fs(p)
     def walk(): Seq[String] = {
       val out = Seq.newBuilder[String]
-      val it = f.listFiles(p, true)
-      while (it.hasNext) out += it.next().getPath.toString
+      def visit(dir: Path): Unit = f.listStatus(dir).foreach { st =>
+        if (st.isDirectory) visit(st.getPath) else out += st.getPath.toString
+      }
+      visit(p)
       out.result().sorted
     }
     if (!f.exists(p)) Nil
@@ -89,15 +95,12 @@ class VFS(conf: Configuration) {
         tries += 1
         try return walk()
         catch {
-          // FileNotFoundException extends IOException, NOT
-          // RuntimeException: a bare FNFE thrown by the Hadoop
-          // listFiles iterator (HDFS/S3A entry vanished mid-walk) must
-          // match on its own type — a RuntimeException-only clause
-          // would retry only the local-FS message/cause-wrapped forms
+          // a dir listed by its parent and gone by its own listStatus
+          // throws FileNotFoundException (an IOException); a file
+          // system may also wrap it in a RuntimeException
           case e @ (_: java.io.FileNotFoundException | _: RuntimeException)
               if tries < 4 &&
               (e.isInstanceOf[java.io.FileNotFoundException] ||
-                Option(e.getMessage).exists(_.contains("file permissions")) ||
                 Option(e.getCause).exists(
                   _.isInstanceOf[java.io.FileNotFoundException])) =>
             if (!f.exists(p)) return Nil // the whole tree vanished

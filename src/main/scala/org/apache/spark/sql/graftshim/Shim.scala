@@ -34,6 +34,23 @@ object Shim {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `rows` shuffled into `parts` partitions, each to the partition id
+    * it is keyed by, through the serializer Spark SQL's exchanges use
+    * (`UnsafeRowSerializer`, private[spark]). Every value must be an
+    * UnsafeRow of `numFields` fields that is not reused. The reduce side
+    * reuses one row buffer: read each row before taking the next. */
+  def shuffleUnsafeRows(rows: org.apache.spark.rdd.RDD[(Int, org.apache.spark.sql.catalyst.InternalRow)],
+      parts: Int, numFields: Int): org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    val byId = new org.apache.spark.Partitioner {
+      override def numPartitions: Int = parts
+      override def getPartition(key: Any): Int = key.asInstanceOf[Int]
+    }
+    new org.apache.spark.rdd.ShuffledRDD[Int, InternalRow, InternalRow](rows, byId)
+      .setSerializer(new org.apache.spark.sql.execution.UnsafeRowSerializer(numFields))
+      .map(_._2)
+  }
+
   /** The physical plan with exchanges planned (EnsureRequirements
     * applied), unwrapped from the AQE adapter — AdaptiveSparkPlanExec
     * has no children, so a plain `collect` over `executedPlan` sees

@@ -530,4 +530,125 @@ class SearchSpec extends SparkSpec {
     assert(tied.map(_._2) == Seq(1L, 3L), tied)
     assert(tied.map(_._3).distinct.size == 1) // same score, id tie-break
   }
+
+  test("bm25 index probe: exactly 2 Spark jobs, the df treeAggregate and " +
+    "one scoring job, the same rows as inline bm25TopK") {
+    val uri = s"target/test-bm25-jobs2-${System.nanoTime()}"
+    val q = Seq((0L, "the cat sat on the mat log"),
+      (1L, "dogs and cats an entirely unrelated sentence about spark")).toDF("qid", "qtext")
+    val batches = Seq(100L, 200L).map(off =>
+      docs.select(($"doc_id" + off).as("doc_id"), $"text"))
+    try {
+      Search.buildIndex(docs, "doc_id", "text", uri, buckets = 64)
+      batches.zipWithIndex.foreach { case (b, i) =>
+        Search.appendBatchToIndex(b, "doc_id", "text", uri, s"batch-${i + 1}") }
+      val (got, jobs) = jobsOf(Search.bm25IndexTopK(spark, uri, q, "qid", "qtext", k = 5).collect())
+      assert(jobs.size == 2, s"${jobs.size} jobs: ${jobs.mkString("; ")}")
+      assert(jobs.count(_.exists(_.startsWith("treeAggregate at"))) == 1,
+        s"one df treeAggregate job expected: ${jobs.mkString("; ")}")
+      val inline = Search.bm25TopK(batches.foldLeft(docs)(_ unionByName _),
+        "doc_id", "text", q, "qid", "qtext", k = 5)
+      assert(got.nonEmpty && got.toSet == inline.collect().toSet)
+    } finally graft.storage.VFS(spark).delete(uri)
+  }
+
+  test("bm25 contribution and 6-decimal rounding equal Spark's expression bit for bit") {
+    def sparkScores(rows: org.apache.spark.sql.DataFrame, k1: Double, b: Double, avgdl: Double) = {
+      val tfD = $"tf".cast("double")
+      val c = $"idf" * tfD * lit(k1 + 1.0) /
+        (tfD + lit(k1) * (lit(1.0 - b) + lit(b) * $"dl".cast("double") / lit(avgdl)))
+      rows.select($"idf", $"tf", $"dl", c, round(c, 6))
+        .as[(Double, Long, Long, Double, Double)].collect()
+    }
+    for ((n, sumDl) <- Seq((5L, 23L), (977L, 12345L), (100000L, 3141593L));
+         (k1, b) <- Seq((1.25, 0.75), (1.2, 0.5), (2.0, 1.0))) {
+      val avgdl = Search.avgdl(n, sumDl)
+      def grid(ids: org.apache.spark.sql.DataFrame) = ids
+        .select(($"id" % 23 + 1).as("tf"), ($"id" * 13 % n + 1).cast("double").as("df"), $"id")
+        .select($"tf", ($"tf" + $"id" * 7 % 301).as("dl"),
+          log(lit(1.0) + (lit(n.toDouble) - $"df" + lit(0.5)) / ($"df" + lit(0.5))).as("idf"))
+      // generated rows evaluate through codegen, local rows interpreted
+      val generated = sparkScores(grid(spark.range(0, 4000).toDF()), k1, b, avgdl)
+      val local = sparkScores(grid((0L until 200L).toDF("id")), k1, b, avgdl)
+      assert(generated.length == 4000 && local.length == 200)
+      (generated ++ local).foreach { case (idf, tf, dl, raw, rounded) =>
+        val got = Search.contribution(idf, tf.toDouble, dl.toDouble, k1, b, avgdl)
+        assert(got == raw, s"N=$n k1=$k1 b=$b tf=$tf dl=$dl idf=$idf: $got vs Spark $raw")
+        assert(Search.round6(got) == rounded, s"round6($got) = ${Search.round6(got)}, Spark $rounded")
+      }
+    }
+    // values at and around 6-decimal HALF_UP ties
+    val ties = Seq(0.0000005, 0.0000015, 1.2345665, 2.5000005, 0.1234565, 1e-7, 123.4567895,
+      0.30000000000000004, 3.0, 1.0 / 3)
+    val local = ties.toDF("s").select($"s", round($"s", 6)).as[(Double, Double)].collect()
+    val generated = spark.range(0, ties.size).select(
+      element_at(typedLit(ties), ($"id" + 1).cast("int")).as("s"))
+      .select($"s", round($"s", 6)).as[(Double, Double)].collect()
+    (local ++ generated).foreach { case (v, want) =>
+      assert(Search.round6(v) == want, s"round6($v) = ${Search.round6(v)}, Spark $want")
+    }
+  }
+
+  test("bm25 index probe decides like inline bm25TopK: AND mode, elision and " +
+    "its count, the hot-term count, string ids, a batch that hits nothing") {
+    val uri = s"target/test-bm25-parity-${System.nanoTime()}"
+    val counters = Seq("bm25.query_terms_elided", "bm25.hot_terms_probed")
+    def counted(body: => Array[org.apache.spark.sql.Row]) = {
+      graft.core.Stats.reset()
+      val rows = body.toSet
+      (rows, counters.map(graft.core.Stats.counterValue))
+    }
+    def both(q: org.apache.spark.sql.DataFrame, maxDfFraction: Double = 1.0,
+        requireAllTerms: Boolean = false) = {
+      val idx = counted(Search.bm25IndexTopK(spark, uri, q, "qid", "qtext", k = 3,
+        maxDfFraction = maxDfFraction, requireAllTerms = requireAllTerms).collect())
+      val inline = counted(Search.bm25TopK(docs, "doc_id", "text", q, "qid", "qtext", k = 3,
+        maxDfFraction = maxDfFraction, requireAllTerms = requireAllTerms).collect())
+      assert(idx == inline, s"index $idx\ninline $inline")
+      idx
+    }
+    try {
+      Search.buildIndex(docs, "doc_id", "text", uri, buckets = 8)
+      // AND mode: "cat mat" only doc 0; "cat dog" none; an absent term
+      // is not required; a query id given twice keeps both rows' terms
+      val (and, _) = both(Seq((1L, "cat mat"), (2L, "cat dog"), (3L, "cat zzzqqq"),
+        (4L, "the sat on"), (4L, "log")).toDF("qid", "qtext"), requireAllTerms = true)
+      assert(and.map(r => (r.getLong(0), r.getLong(1))) == Set((1L, 0L), (3L, 0L), (4L, 1L)), and)
+      // elision: "sat" (df 2/5) and "the" elide at 0.3, "cat" stays
+      val (elided, Seq(nElided, _)) = both(Seq((1L, "sat cat"), (2L, "the dog"))
+        .toDF("qid", "qtext"), maxDfFraction = 0.3)
+      assert(nElided == 2L && elided.map(_.getLong(1)) == Set(0L, 1L), elided)
+      // hot terms ("the", "sat": df 2/5 > 0.2) are counted once per term
+      val (_, Seq(_, hot)) = both(Seq((1L, "the cat"), (2L, "sat the")).toDF("qid", "qtext"))
+      assert(hot == 2L)
+      // string query ids keep their type
+      val (strs, _) = both(Seq(("a", "cat dog sat"), ("b", "spark sentence"), ("c", ""))
+        .toDF("qid", "qtext"))
+      assert(strs.map(_.getString(0)) == Set("a", "b"), strs)
+      // a batch whose terms hit nothing, and a null text
+      val (none, _) = both(Seq((1L, "zzzqqq xyzzy"), (2L, null)).toDF("qid", "qtext"))
+      assert(none.isEmpty)
+    } finally graft.storage.VFS(spark).delete(uri)
+  }
+
+  test("bm25 index probe: more scoring reducers merge per-query heaps to the same rows") {
+    val uri = s"target/test-bm25-reducers-${System.nanoTime()}"
+    val q = Seq((0L, "the cat sat"), (1L, "dogs and cats"), (2L, "on the log"),
+      (3L, "spark sentence")).toDF("qid", "qtext")
+    try {
+      Search.buildIndex(docs, "doc_id", "text", uri, buckets = 8)
+      Search.appendBatchToIndex(docs.select(($"doc_id" + 10).as("doc_id"), $"text"),
+        "doc_id", "text", uri, "batch-1")
+      val probe = Search.bm25IndexTopK(spark, uri, q, "qid", "qtext", k = 2)
+      val exec = probe.queryExecution.executedPlan.collectFirst {
+        case e: graft.ops.Bm25ProbeExec => e
+      }.getOrElse(fail(s"no probe operator:\n${probe.queryExecution.executedPlan}"))
+      def run(parts: Int) = exec.run(_ => parts).map(_.copy()).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
+      val one = run(1)
+      assert(one == probe.as[(Long, Long, Double, Long)].collect().toSet)
+      assert(one.map(_._1) == Set(0L, 1L, 2L, 3L) && one.forall(_._4 <= 2L), one)
+      Seq(2, 3, 7).foreach(p => assert(run(p) == one, s"$p reducers"))
+    } finally graft.storage.VFS(spark).delete(uri)
+  }
 }

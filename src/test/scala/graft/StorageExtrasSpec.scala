@@ -165,4 +165,29 @@ class StorageExtrasSpec extends SparkSpec {
     assert(Stats.counterValue("dedup.lsh_buckets_dropped") == 0L)
     assert(Stats.countersSnapshot.values.forall(_ == 0L))
   }
+
+  test("VFS.lsFilesRecursive: the listStatus walk lists what listFiles lists, " +
+    "sorted, with _SUCCESS and checksum siblings in a nested tree") {
+    val root = TestSession.tmpDir("vfs-walk")
+    // a spark write leaves _SUCCESS plus .crc siblings (the local FS
+    // hides those) under nested partition dirs
+    Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "p").write.partitionBy("p").parquet(s"$root/t")
+    val fs = VFS(spark)
+    fs.writeString(s"$root/top.json", "{}")
+    fs.writeString(s"$root/x/y/z/deep.txt", "deep")
+    fs.mkdirs(s"$root/empty/dir")
+    val hpath = new org.apache.hadoop.fs.Path(root)
+    val hfs = hpath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val it = hfs.listFiles(hpath, true)
+    val want = Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString).toSeq
+    val got = fs.lsFilesRecursive(root)
+    assert(got == want.sorted, s"walk $got\nlistFiles ${want.sorted}")
+    assert(got.exists(_.endsWith("/t/_SUCCESS")) && got.exists(_.endsWith("/deep.txt")) &&
+      Seq("/p=a/", "/p=b/").forall(d => got.exists(f => f.contains(d) && f.endsWith(".parquet"))),
+      got)
+    assert(new java.io.File(s"$root/t/._SUCCESS.crc").exists() && !got.exists(_.endsWith(".crc")),
+      s"checksum files must stay hidden as listFiles hides them: $got")
+    assert(fs.lsFilesRecursive(s"$root/missing").isEmpty)
+    assert(fs.lsFilesRecursive(s"$root/top.json") == want.filter(_.endsWith("/top.json")))
+  }
 }
