@@ -75,12 +75,12 @@ object SparkEntry {
     uri
   }
 
-  /** Build-once persisted IVF index over the embeddings table (not an
-    * array-table — presence of centroids.json marks it complete). */
+  /** Build-once persisted BM25 index over the documents table, keyed on
+    * its layout version (`_params.json`, written last): a fixture built
+    * by an older layout is rebuilt (buildIndex deletes the uri first). */
   private def bm25Index(s: SparkSession, dir: String): String = synchronized {
     val uri = s"$arrayBase/${sfKey(dir)}/bm25_index"
-    val fs = graft.storage.VFS(s)
-    if (!fs.exists(s"$uri/_stats.json"))
+    if (!Search.isCurrentIndex(s, uri))
       Search.buildIndex(t(s, dir, "documents"), "doc_id", "text", uri)
     uri
   }

@@ -12,15 +12,16 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable
 
-/** What one BM25 index probe scores: the batch's distinct (query id,
-  * term) pairs, ids in the caller's type, and the index's exact corpus
-  * stats. */
-private[ops] final case class Bm25Batch(pairs: Seq[(Any, String)], nDocs: Long,
-    sumDl: Long, k: Int, k1: Double, b: Double, maxDfFraction: Double,
-    requireAllTerms: Boolean) {
+/** What one BM25 index probe scores: the index at `uri` and the postings
+  * roots its scan lists (whose term lexicons give df), the batch's
+  * distinct (query id, term) pairs, ids in the caller's type, and the
+  * index's exact corpus stats. */
+private[ops] final case class Bm25Batch(uri: String, roots: Seq[Search.PostingsRoot],
+    pairs: Seq[(Any, String)], nDocs: Long, sumDl: Long, k: Int, k1: Double, b: Double,
+    maxDfFraction: Double, requireAllTerms: Boolean) {
   def summary: String =
-    s"k=$k, k1=$k1, b=$b, pairs=${pairs.size}, nDocs=$nDocs, sumDl=$sumDl, " +
-      s"maxDfFraction=$maxDfFraction, requireAllTerms=$requireAllTerms"
+    s"k=$k, k1=$k1, b=$b, pairs=${pairs.size}, roots=${roots.size}, nDocs=$nDocs, " +
+      s"sumDl=$sumDl, maxDfFraction=$maxDfFraction, requireAllTerms=$requireAllTerms"
 }
 
 /** A BM25 index probe as one Catalyst node over the probe's restricted
@@ -186,13 +187,14 @@ private[graft] object Bm25ProbeStrategy extends SparkStrategy {
   }
 }
 
-/** Executes one BM25 index probe in 2 Spark jobs over its child's RDD:
-  * the df count ([[Search.termDf]], one `treeAggregate`), then — after
-  * the driver's idf, elision, hot-term and AND decisions
-  * ([[Search.scoringTable]]) — the scoring job ([[Bm25Probe.topK]]),
-  * which the caller's action runs. Both jobs start when the action
-  * executes the node, so a probe planned before a fold and run after it
-  * reads the files it listed. */
+/** Executes one BM25 index probe in 1 Spark job over its child's RDD.
+  * The driver first sums the probed terms' df over the listed roots'
+  * term lexicons ([[Search.probeDf]]) and makes the idf, elision,
+  * hot-term and AND decisions ([[Search.scoringTable]]); then the
+  * scoring job ([[Bm25Probe.topK]]) runs, or none when no probed term is
+  * in the index. All of it happens when the caller's action executes the
+  * node, so a probe planned before a fold and run after it reads the
+  * lexicons and files it listed. */
 private[graft] case class Bm25ProbeExec(batch: Bm25Batch, postings: Seq[Attribute],
     output: Seq[Attribute], child: SparkPlan) extends UnaryExecNode {
   override def producedAttributes: AttributeSet = AttributeSet(output)
@@ -202,15 +204,25 @@ private[graft] case class Bm25ProbeExec(batch: Bm25Batch, postings: Seq[Attribut
   override protected def doExecute(): RDD[InternalRow] =
     run(Bm25Probe.reducers(_, conf.numShufflePartitions))
 
-  /** Both jobs' work, with `reducers` sizing the scoring exchange from
+  /** Collects the probe's rows (k per query). A probe none of whose
+    * terms is indexed starts no job: the default collect would post one
+    * for the RDD with no partitions. */
+  override def executeCollect(): Array[InternalRow] = {
+    val rows = execute()
+    if (rows.getNumPartitions == 0) Array.empty
+    else rows.map(_.copy()).collect()
+  }
+
+  /** The probe's work, with `reducers` sizing the scoring exchange from
     * the contribution-row count. */
   private[graft] def run(reducers: Long => Int): RDD[InternalRow] = {
-    val rows = child.execute()
     val at = postings.map(a => child.output.indexWhere(_.exprId == a.exprId)).toArray
-    val table = Search.scoringTable(session, batch.pairs, Search.termDf(rows, at(0)),
+    val table = Search.scoringTable(session, batch.pairs,
+      Search.probeDf(session, batch.uri, batch.roots, batch.pairs.map(_._2)),
       batch.nDocs, batch.maxDfFraction, batch.requireAllTerms)
     if (table.entries.isEmpty) sparkContext.emptyRDD[InternalRow]
-    else Bm25Probe.topK(rows, at, table, DataTypeUtils.fromAttributes(output), batch.k,
-      batch.k1, batch.b, Search.avgdl(batch.nDocs, batch.sumDl), reducers(table.contributions))
+    else Bm25Probe.topK(child.execute(), at, table, DataTypeUtils.fromAttributes(output),
+      batch.k, batch.k1, batch.b, Search.avgdl(batch.nDocs, batch.sumDl),
+      reducers(table.contributions))
   }
 }

@@ -384,8 +384,9 @@ object Profile {
     * est(v) = min over d of cnt(d, bucket_d(v)). The probes re-derive
     * their buckets with the SAME hash family (probe column type must
     * match the sketched column — xxhash64 of a long and of its string
-    * form differ). Probe side is broadcast (a handful of values by
-    * construction); absent cells count 0 (value never seen). */
+    * form differ). The probes are the preserved side of a left join, so
+    * absent cells count 0 (value never seen); that side cannot be a
+    * broadcast build side, so no hint is given. */
   def cmsEstimates(spark: org.apache.spark.sql.SparkSession, uri: String,
       colName: String, probes: DataFrame, probeCol: String): DataFrame = {
     import graft.core.Json._
@@ -398,7 +399,7 @@ object Profile {
       .select(col("value"), posexplode(transform(sequence(lit(0), lit(depth - 1)),
         d => pmod(xxhash64(col("value"), d), lit(width.toLong)))))
       .select(col("value"), col("pos").as("d"), col("col").as("bucket"))
-    broadcast(pb).join(mergedCms(spark, uri, colName), Seq("d", "bucket"), "left")
+    pb.join(mergedCms(spark, uri, colName), Seq("d", "bucket"), "left")
       .na.fill(0L, Seq("cnt"))
       .groupBy("value").agg(min("cnt").as("estimate"))
   }

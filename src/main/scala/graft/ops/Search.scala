@@ -23,10 +23,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *    [[graft.functions.TermCounts]] kernel — no corpus-sized exchange
   *    at all (previously one `groupBy(doc_id, term)` shuffle);
   *  - the query terms resolve on the driver (a query batch is small
-  *    by definition), the postings are restricted to them, and
-  *    document-frequency (df) is counted over what is left inside each
-  *    scan task, the partial counts merging on the driver — one job,
-  *    query-batch sized, so the vocabulary table never shuffles;
+  *    by definition) and the postings are restricted to them.
+  *    Document frequency (df) comes from the persisted index's per-root
+  *    term lexicons, summed on the driver at probe time; the inline
+  *    path counts it over the restricted postings inside each scan
+  *    task, the partial counts merging on the driver ([[termDf]], one
+  *    job). Either way the vocabulary table never shuffles;
   *  - candidate generation attaches idf on the driver's terms: the
   *    batch's (term → query slot, idf) table is decided once on the
   *    driver ([[scoringTable]]); an index probe's scoring operator
@@ -41,8 +43,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    `row_number().over(partitionBy(query))` window, which would
   *    hash-partition every scored row onto |queries| reducers (the
   *    classic skew bomb when queries are few and the corpus is huge).
-  *    An index probe runs 2 Spark jobs: the df count and the scoring
-  *    job, which the caller's action starts.
+  *    An index probe runs 1 Spark job, the scoring job, which the
+  *    caller's action starts.
   */
 object Search {
 
@@ -176,15 +178,15 @@ object Search {
     * ([[scoringTable]]). The (term, query slot, idf) rows reach the
     * postings stream through a broadcast hash join, which collects its
     * local relation in a job of its own; the plan specs pin that
-    * broadcast. The index probe shares [[termDf]] and [[scoringTable]]
-    * but scores in its own operator ([[Bm25Probe]]), which plans no
-    * DataFrame per probe. */
+    * broadcast. The index probe shares [[scoringTable]] but takes df
+    * from the index's term lexicons ([[probeDf]]) and scores in its own
+    * operator ([[Bm25Probe]]), which plans no DataFrame per probe. */
   private def scoreFromPostings(post: DataFrame, qt: QueryTerms,
       nDocs: Long, sumDl: Long, k1: Double, b: Double,
       maxDfFraction: Double, requireAllTerms: Boolean): DataFrame = {
     val spark = post.sparkSession
     val table = scoringTable(spark, qt.pairs.toSeq,
-      termDf(post.select(col("term")).queryExecution.toRdd, 0),
+      termDf(post.select(col("term")).queryExecution.toRdd, 0).df,
       nDocs, maxDfFraction, requireAllTerms)
     val attached = post.join(broadcast(spark.createDataFrame(
         java.util.Arrays.asList(table.entries.map { case (t, s, i) => Row(t, s, i) }: _*),
@@ -308,37 +310,46 @@ object Search {
   private[graft] def idf(n: Double, df: Double): Double =
     StrictMath.log(1.0 + (n - df + 0.5) / (df + 0.5))
 
+  /** Document frequency of every term in postings rows, and their Σtf
+    * (0 without a tf column). */
+  private[graft] final case class TermDf(df: scala.collection.Map[String, Long], sumTf: Long)
+
   /** Document frequency of every term in the postings `rows` (the term
-    * at ordinal `termAt`), counted in ONE job with no exchange at probe
-    * sizes: each scan task counts the terms of its own rows, and the
-    * driver merges the per-task counts by `treeAggregate` (depth 2), so
-    * at most O(terms x sqrt(tasks)) partial entries reach it. A
+    * at ordinal `termAt`), plus the Σ of the long tf at `tfAt` when it
+    * is >= 0, counted in ONE job with no exchange at probe sizes: each
+    * scan task counts the terms of its own rows, and the driver merges
+    * the per-task counts by `treeAggregate` (depth 2), so at most
+    * O(terms x sqrt(tasks)) partial entries reach it. A
     * `groupBy(term).count().collect()` plans an exchange, and AQE runs
-    * it as two jobs. */
-  private[ops] def termDf(rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      termAt: Int): scala.collection.Map[String, Long] = {
+    * it as two jobs. The inline path counts its probed terms here; the
+    * index writers count a root's whole lexicon here. */
+  private[graft] def termDf(rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      termAt: Int, tfAt: Int = -1): TermDf = {
     type Counts = scala.collection.mutable.HashMap[String, Long]
-    def merge(a: Counts, b: Counts): Counts = {
-      val (big, small) = if (a.size >= b.size) (a, b) else (b, a)
+    def merge(a: (Counts, Long), b: (Counts, Long)): (Counts, Long) = {
+      val (big, small) = if (a._1.size >= b._1.size) (a._1, b._1) else (b._1, a._1)
       small.foreach { case (t, c) => big.update(t, big.getOrElse(t, 0L) + c) }
-      big
+      (big, a._2 + b._2)
     }
-    rows
+    val (df, sumTf) = rows
       .mapPartitions { it =>
         // keyed by the row's UTF-8 bytes (cloned on first sight: the
         // scan reuses its row buffer); decoded once per distinct term
         val m = new java.util.HashMap[UTF8String, Array[Long]]()
+        var tf = 0L
         it.foreach { r =>
           if (!r.isNullAt(termAt)) {
             val c = m.get(r.getUTF8String(termAt))
             if (c == null) m.put(r.getUTF8String(termAt).clone(), Array(1L)) else c(0) += 1L
           }
+          if (tfAt >= 0 && !r.isNullAt(tfAt)) tf += r.getLong(tfAt)
         }
         val out = new Counts()
         m.forEach((t, c) => out.update(t.toString, c(0)))
-        Iterator.single(out)
+        Iterator.single((out, tf))
       }
-      .treeAggregate(new Counts())(merge, merge)
+      .treeAggregate((new Counts(), 0L))(merge, merge)
+    TermDf(df, sumTf)
   }
 
   /** Top-k docs per query by BM25, ranked on the 6-decimal-rounded
@@ -455,6 +466,18 @@ object Search {
   private def paramsPath(uri: String) = s"$uri/_params.json"
   private def postingsPath(uri: String) = s"$uri/postings"
 
+  /** `_params.json` layout version: 2 = every postings root carries a
+    * term lexicon ([[writeLexicon]]) and its commit sidecar a nonce. */
+  private val IndexLayout = 2L
+
+  /** True when `uri` holds a complete index of the current layout
+    * (`_params.json`, written last by [[buildIndex]], says so). Probes
+    * and folds of an older layout fail loudly instead; a build-once
+    * fixture uses this to rebuild. */
+  def isCurrentIndex(spark: org.apache.spark.sql.SparkSession, uri: String): Boolean =
+    graft.storage.VFS(spark).exists(paramsPath(uri)) &&
+      readJson(spark, uri, paramsPath(uri))("layout").exists(_.long == IndexLayout)
+
   private def termBucket(term: Column, buckets: Int): Column =
     pmod(xxhash64(term), lit(buckets.toLong)).cast("int")
 
@@ -553,6 +576,114 @@ object Search {
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], PostingsSchema)
 
+  // --- per-root term lexicons ---
+
+  /** A committed postings root (the build dir, a base generation, or an
+    * inc dir's `postings`) and the nonce its commit sidecar carries. */
+  private[graft] final case class PostingsRoot(path: String, nonce: Option[String])
+
+  /** One lexicon row: the term's `tb` bucket and its df, the term's row
+    * count in that root. */
+  private final case class LexEntry(tb: Int, df: Long)
+  private type Lexicon = Map[String, LexEntry]
+
+  private def lexiconPath(root: String) = s"$root/_lexicon.json"
+
+  private def newNonce(): String = java.util.UUID.randomUUID().toString
+
+  /** The `tb` bucket [[writePostings]] gives `term`: Math.floorMod ==
+    * Spark's pmod for signed longs (remainderUnsigned would diverge for
+    * non-power-of-two bucket counts). */
+  private def bucketOf(term: String, buckets: Int): Int =
+    java.lang.Math.floorMod(xxhash64Of(term), buckets.toLong).toInt
+
+  private def lexiconOf(df: scala.collection.Map[String, Long], buckets: Int): Lexicon =
+    df.iterator.map { case (t, d) => t -> LexEntry(bucketOf(t, buckets), d) }.toMap
+
+  /** The exact lexicon of the row union of roots: df adds per term. */
+  private def sumLexicons(lexicons: Seq[Lexicon]): Lexicon =
+    lexicons.sortBy(-_.size).reduceOption { (acc, l) =>
+      l.foldLeft(acc) { case (m, (t, e)) =>
+        m.updated(t, m.get(t).fold(e)(p => LexEntry(p.tb, p.df + e.df)))
+      }
+    }.getOrElse(Map.empty)
+
+  /** Writes `root`'s lexicon, sorted by (tb, term), through the index's
+    * sidecar envelope (an encrypted index keeps its terms encrypted).
+    * The caller writes the root's commit sidecar with `nonce` AFTER
+    * this, so a committed root always has its lexicon. */
+  private def writeLexicon(spark: org.apache.spark.sql.SparkSession, uri: String,
+      root: String, nonce: String, lex: Lexicon): Unit = {
+    import graft.core.Json._
+    val rows = lex.toSeq.sortBy { case (t, e) => (e.tb, t) }.map { case (t, e) =>
+      JArr(Seq(JStr(t), JLong(e.tb), JLong(e.df)))
+    }
+    graft.storage.Encryption.dirJsonWrite(spark, uri, lexiconPath(root),
+      render(JObj(Seq("nonce" -> JStr(nonce), "terms" -> JArr(rows)))))
+  }
+
+  /** `root`'s lexicon, from the cache or its sidecar. A root written
+    * before lexicons existed has no nonce in its commit sidecar (and no
+    * lexicon): that fails loudly and names the rebuild. A lexicon that
+    * vanished with its root (a grace dir retired under a slow probe)
+    * fails with the file-not-found error. */
+  private def readLexicon(spark: org.apache.spark.sql.SparkSession, uri: String,
+      root: PostingsRoot): Lexicon = {
+    val nonce = root.nonce.getOrElse(sys.error(s"bm25 postings root ${root.path} has no " +
+      "term lexicon (written by an older version) — rebuild the index with Search.buildIndex"))
+    LexiconCache.get(root.path, nonce).getOrElse {
+      import graft.core.Json._
+      val o = readJson(spark, uri, lexiconPath(root.path))
+      require(o("nonce").exists(_.str == nonce), s"bm25 lexicon of ${root.path} belongs " +
+        "to another write of that root than the committed one")
+      val lex: Lexicon = o("terms").map(_.arr).getOrElse(Nil).iterator.map { r =>
+        val a = r.arr
+        a(0).str -> LexEntry(a(1).long.toInt, a(2).long)
+      }.toMap
+      LexiconCache.put(root.path, nonce, lex)
+      lex
+    }
+  }
+
+  /** df of each of `terms` present in the roots: the sum of the roots'
+    * lexicon entries. An index probe takes its df from here, so it
+    * scans the postings once, to score. */
+  private[graft] def probeDf(spark: org.apache.spark.sql.SparkSession, uri: String,
+      roots: Seq[PostingsRoot], terms: Seq[String]): Map[String, Long] = {
+    val lexicons = roots.map(readLexicon(spark, uri, _))
+    terms.distinct.flatMap { t =>
+      val df = lexicons.iterator.map(_.get(t).fold(0L)(_.df)).sum
+      if (df > 0) Some(t -> df) else None
+    }.toMap
+  }
+
+  /** Parsed lexicons on the driver, keyed by (root path, commit
+    * nonce): a root is write-once, and a rewrite of the same path
+    * (a tag replay, a rebuild) commits a new nonce, so an entry never
+    * goes stale. Least-recently-used entries leave above a fixed byte
+    * bound (a lexicon larger than the bound is never kept); a miss
+    * re-reads the sidecar. */
+  private object LexiconCache {
+    private val MaxBytes = 64L << 20
+    private val entries =
+      new java.util.LinkedHashMap[(String, String), (Lexicon, Long)](16, 0.75f, true)
+    private var bytes = 0L
+
+    def get(root: String, nonce: String): Option[Lexicon] =
+      synchronized(Option(entries.get((root, nonce))).map(_._1))
+
+    def put(root: String, nonce: String, lex: Lexicon): Unit = {
+      // a rough heap size: the term's chars plus the map node and entry
+      val size = lex.keysIterator.map(t => 96L + 2L * t.length).sum
+      if (size <= MaxBytes) synchronized {
+        Option(entries.put((root, nonce), (lex, size))).foreach(old => bytes -= old._2)
+        bytes += size
+        val eldest = entries.values.iterator
+        while (bytes > MaxBytes) { bytes -= eldest.next()._2; eldest.remove() }
+      }
+    }
+  }
+
   private def readJson(spark: org.apache.spark.sql.SparkSession, uri: String,
       path: String): graft.core.Json.JObj =
     graft.core.Json.parse(graft.storage.Encryption.dirJsonRead(spark, uri, path)).obj
@@ -569,14 +700,17 @@ object Search {
     *
     * Index layout: `postings/tb=NN/` term-hash-bucketed postings
     * (term, doc_id, tf, dl), each bucket's files SORTED by term so
-    * parquet footer stats prune to the probed terms; `_stats.json`
-    * holds the exact-integer corpus stats (nDocs, sumDl) that BM25
-    * needs globally and `_params.json` the bucket count. There is NO
-    * separate document-frequency table: a term's postings all live in
-    * its bucket, so a probe recomputes exact df from the rows it reads
-    * anyway — which also makes [[appendBatchToIndex]] trivially
-    * correct (postings files + a stats sidecar; no global table to
-    * rebuild).
+    * parquet footer stats prune to the probed terms;
+    * `postings/_lexicon.json` the root's term lexicon (per term its
+    * `tb` bucket and df); `_stats.json` the exact-integer corpus stats
+    * (nDocs, sumDl) that BM25 needs globally plus the write's nonce;
+    * and `_params.json` the bucket count and layout version. Every
+    * postings root — this one, each batch append, each minor fold, each
+    * major generation — is write-once and carries its own lexicon,
+    * written before its commit sidecar, so a probe sums df over the
+    * roots it lists without reading a posting. The lexicon and Σtf come
+    * from one `treeAggregate` over the just-written postings
+    * ([[termDf]]).
     *
     * The 100 TB story mirrors [[DedupIndex]]: build once (one corpus
     * pass, one shuffle), then every query batch reads only the
@@ -603,17 +737,19 @@ object Search {
     // inherit the key with no further plumbing.
     encryptionKey.foreach(id => graft.storage.Encryption.markDir(spark, uri, id))
     writePostings(postings(docs, idCol, textCol), uri, buckets, postingsPath(uri))
-    // stats from the JUST-WRITTEN postings (sum(dl) = sum(tf)) + a
-    // metadata-only row count — no second corpus text pass. The read
-    // tolerates an index built over zero docs (the streaming bootstrap
-    // shape), whose postings dir holds no tb= dirs.
-    val sumDl = Option(readPostingsMulti(spark, Seq(postingsPath(uri)), None)
-      .agg(sum(col("tf"))).head().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
+    // lexicon and stats from the JUST-WRITTEN postings (sum(dl) =
+    // sum(tf)) + a metadata-only row count — no second corpus text
+    // pass. The read tolerates an index built over zero docs (the
+    // streaming bootstrap shape), whose postings dir holds no tb= dirs.
+    val written = termDf(readPostingsMulti(spark, Seq(postingsPath(uri)), None)
+      .queryExecution.toRdd, 0, 2)
+    val nonce = newNonce()
+    writeLexicon(spark, uri, postingsPath(uri), nonce, lexiconOf(written.df, buckets))
     graft.storage.Encryption.dirJsonWrite(spark, uri, statsPath(uri),
-      render(JObj(Seq("nDocs" -> JLong(docs.count()), "sumDl" -> JLong(sumDl)))))
+      render(JObj(Seq("nDocs" -> JLong(docs.count()), "sumDl" -> JLong(written.sumTf),
+        "nonce" -> JStr(nonce)))))
     graft.storage.Encryption.dirJsonWrite(spark, uri, paramsPath(uri),
-      render(JObj(Seq("buckets" -> JLong(buckets), "layout" -> JLong(1)))))
+      render(JObj(Seq("buckets" -> JLong(buckets), "layout" -> JLong(IndexLayout)))))
   }
 
   // --- incremental batch appends (idempotent, streaming-safe) ---
@@ -625,13 +761,15 @@ object Search {
     * subsumes — transitively, so exclusion never depends on a chain of
     * still-present intermediate folds). */
   private case class IncDir(dir: String, tag: String, nDocs: Long,
-      sumDl: Long, tags: Seq[String])
+      sumDl: Long, tags: Seq[String], nonce: Option[String]) {
+    def root: PostingsRoot = PostingsRoot(s"$dir/postings", nonce)
+  }
 
   /** One snapshot of the index, from ONE listing of the inc tier: the
     * live base postings generation with its exact stats (nDocs,
     * sumDl), the base's already-folded tag set, the fold-number
     * high-water mark, and every committed inc dir. */
-  private case class IncState(base: String, baseDocs: Long, baseDl: Long,
+  private case class IncState(base: PostingsRoot, baseDocs: Long, baseDl: Long,
       folded: Set[String], foldHw: Int, committed: Seq[IncDir]) {
     /** (retired, pending): committed dirs already subsumed by the base
       * generation's folded tag set or by another committed fold's tag
@@ -661,15 +799,15 @@ object Search {
     // folded tags and the persisted fold high-water mark. The build
     // generation has none — its stats are the root `_stats.json`, and
     // nothing is folded into it yet.
-    val (baseDocs, baseDl, folded, hw) =
+    val (baseDocs, baseDl, folded, hw, baseNonce) =
       if (fs.exists(genStatsPath)) {
         val o = readJson(spark, uri, genStatsPath)
         (long(o, "nDocs"), long(o, "sumDl"),
           o("tags").map(_.arr.map(_.str).toSet).getOrElse(Set.empty[String]),
-          o("foldHw").map(_.long.toInt).getOrElse(0))
+          o("foldHw").map(_.long.toInt).getOrElse(0), o("nonce").map(_.str))
       } else {
         val o = readJson(spark, uri, statsPath(uri))
-        (long(o, "nDocs"), long(o, "sumDl"), Set.empty[String], 0)
+        (long(o, "nDocs"), long(o, "sumDl"), Set.empty[String], 0, o("nonce").map(_.str))
       }
     // race injection: a major can be forced AFTER the base+genstats
     // resolution, BEFORE the inc listing — the old generation and its
@@ -686,7 +824,7 @@ object Search {
       } else try {
         val o = readJson(spark, uri, s"$d/_stats.json")
         Some(IncDir(d, tag, long(o, "nDocs"), long(o, "sumDl"),
-          o("tags").map(_.arr.map(_.str)).getOrElse(Nil)))
+          o("tags").map(_.arr.map(_.str)).getOrElse(Nil), o("nonce").map(_.str)))
       } catch {
         // the dir vanished between the listing and this read: a
         // RETIRED grace dir deleted by a concurrent maintenance verb.
@@ -705,11 +843,12 @@ object Search {
     // path re-materialize with different content within its grace window.
     val foldHw = (committed.map(_.tag) ++ committed.flatMap(_.tags) ++ folded)
       .flatMap(foldNum).maxOption.getOrElse(0).max(hw)
-    IncState(base, baseDocs, baseDl, folded, foldHw, committed)
+    IncState(PostingsRoot(base, baseNonce), baseDocs, baseDl, folded, foldHw, committed)
   }
 
-  /** The live index state: base postings generation (VersionedDir —
-    * compaction flips reader-safely), the PENDING inc dirs — committed
+  /** The live index state: the postings roots — the base generation
+    * (VersionedDir — compaction flips reader-safely) first, then the
+    * postings of the PENDING inc dirs, committed
     * batch/fold dirs not yet subsumed by the base generation's folded
     * tag set or by another committed fold's tag list — the summed
     * exact stats, and the bucket count. A batch dir only counts once
@@ -719,11 +858,11 @@ object Search {
     * from both the scan roots and the stats, so a crash between any
     * commit and its source cleanup never double-counts. Reads each
     * index-level sidecar once. */
-  private def liveState(spark: org.apache.spark.sql.SparkSession,
-      uri: String): (String, Seq[String], Long, Long, Int) = {
+  private[graft] def liveState(spark: org.apache.spark.sql.SparkSession,
+      uri: String): (Seq[PostingsRoot], Long, Long, Int) = {
     val st = incCommitted(spark, uri)
     val pending = st.retiredAndPending._2
-    (st.base, pending.map(_.dir), st.baseDocs + pending.map(_.nDocs).sum,
+    (st.base +: pending.map(_.root), st.baseDocs + pending.map(_.nDocs).sum,
       st.baseDl + pending.map(_.sumDl).sum, readBuckets(spark, uri))
   }
 
@@ -732,8 +871,10 @@ object Search {
     * directory with a per-batch stats sidecar written last. Replaying
     * the same tag (micro-batch retry, crash replay) OVERWRITES the same
     * directory — effectively-once: postings and stats are never
-    * doubled. df needs no maintenance (recomputed at probe time from
-    * the complete per-term postings); idf and the length normalizer
+    * doubled. The batch's lexicon and Σtf come from one `treeAggregate`
+    * over its postings, and the lexicon is written before the stats
+    * sidecar, whose nonce is new on every write (a replay included);
+    * idf and the length normalizer
     * shift for ALL queries as the corpus grows — exactly BM25's
     * definition, and the index path stays equal to an inline run over
     * corpus ∪ batches. Probes union the base generation with pending
@@ -755,11 +896,15 @@ object Search {
     val dir = s"${incPath(uri)}/$tag"
     fs.delete(dir)
     val batch = postings(docs, idCol, textCol).localCheckpoint(true)
-    writePostings(batch, uri, readBuckets(spark, uri), s"$dir/postings")
-    val s1 = Option(batch.agg(sum(col("tf"))).head().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
+    val buckets = readBuckets(spark, uri)
+    writePostings(batch, uri, buckets, s"$dir/postings")
+    val written = termDf(batch.queryExecution.toRdd, batch.schema.fieldIndex("term"),
+      batch.schema.fieldIndex("tf"))
+    val nonce = newNonce()
+    writeLexicon(spark, uri, s"$dir/postings", nonce, lexiconOf(written.df, buckets))
     graft.storage.Encryption.dirJsonWrite(spark, uri, s"$dir/_stats.json",
-      render(JObj(Seq("nDocs" -> JLong(docs.count()), "sumDl" -> JLong(s1)))))
+      render(JObj(Seq("nDocs" -> JLong(docs.count()), "sumDl" -> JLong(written.sumTf),
+        "nonce" -> JStr(nonce)))))
   }
 
   /** Reserved prefix of minor-fold inc dirs — maintenance-owned. */
@@ -780,6 +925,9 @@ object Search {
     * pending dirs is ~0.4 s/dir of listing/plan work; the fold resets
     * the pending count to 1). [[compactIndex]] (major, O(corpus))
     * remains the lull-time verb that folds everything into the base.
+    *
+    * The fold rewrites the exact row union of its sources, so its
+    * lexicon is their lexicons summed on the driver, with no data job.
     *
     * Crash-safe without a VersionedDir flip of its own: the fold dir's
     * `_stats.json` (written LAST, carrying the merged nDocs/sumDl and
@@ -803,15 +951,18 @@ object Search {
     if (pending.size <= 1) { retired.foreach(d => fs.delete(d.dir)); return }
     // fold numbers never reuse a LIVE number (see IncState.foldHw)
     val dir = f"${incPath(uri)}/$FoldTagPrefix${st.foldHw + 1}%06d"
+    val lex = sumLexicons(pending.map(d => readLexicon(spark, uri, d.root)))
     fs.delete(dir)
     writePostings(
-      readPostingsMulti(spark, pending.map(d => s"${d.dir}/postings"), None),
+      readPostingsMulti(spark, pending.map(_.root.path), None),
       uri, readBuckets(spark, uri), s"$dir/postings")
     val tags = (pending.map(_.tag) ++ pending.flatMap(_.tags)).distinct
+    val nonce = newNonce()
+    writeLexicon(spark, uri, s"$dir/postings", nonce, lex)
     graft.storage.Encryption.dirJsonWrite(spark, uri, s"$dir/_stats.json",
       render(JObj(Seq("nDocs" -> JLong(pending.map(_.nDocs).sum),
         "sumDl" -> JLong(pending.map(_.sumDl).sum),
-        "tags" -> JArr(tags.map(JStr))))))
+        "tags" -> JArr(tags.map(JStr)), "nonce" -> JStr(nonce)))))
     retired.foreach(d => fs.delete(d.dir))
   }
 
@@ -827,8 +978,10 @@ object Search {
     * in-flight probes that listed them pre-flip (the r16 ADVICE race:
     * immediate deletion could yank a pending dir mid-scan), then
     * deleted by the next maintenance verb; dirs already retired by an
-    * earlier fold are deleted here. O(corpus) — the lull-time verb;
-    * [[minorCompactIndex]] is the bounded in-loop one. */
+    * earlier fold are deleted here. The new generation's lexicon is the
+    * sum of its sources' lexicons, as in [[minorCompactIndex]].
+    * O(corpus) — the lull-time verb; [[minorCompactIndex]] is the
+    * bounded in-loop one. */
   def compactIndex(spark: org.apache.spark.sql.SparkSession, uri: String): Unit = {
     import graft.core.Json._
     val fs = graft.storage.VFS(spark)
@@ -843,9 +996,10 @@ object Search {
     if (pendingDirs.isEmpty) { retired.foreach(d => fs.delete(d.dir)); return }
     val n = st.baseDocs + pendingDirs.map(_.nDocs).sum
     val sumDl = st.baseDl + pendingDirs.map(_.sumDl).sum
+    val sources = st.base +: pendingDirs.map(_.root)
+    val lex = sumLexicons(sources.map(readLexicon(spark, uri, _)))
     val target = graft.storage.VersionedDir.next(fs, uri, "postings")
-    writePostings(readPostingsMulti(spark,
-        st.base +: pendingDirs.map(d => s"${d.dir}/postings"), None),
+    writePostings(readPostingsMulti(spark, sources.map(_.path), None),
       uri, readBuckets(spark, uri), target)
     // the new folded set covers EVERY dir in the listing snapshot —
     // pending (now baked into the generation) AND retired grace dirs
@@ -860,9 +1014,12 @@ object Search {
     // the folded set resets to this snapshot's tags, so numbers seen
     // only in the OLD set would otherwise be forgotten and reused by
     // the next minor fold
+    val nonce = newNonce()
+    writeLexicon(spark, uri, target, nonce, lex)
     graft.storage.Encryption.dirJsonWrite(spark, uri, s"$target/_genstats.json",
       render(JObj(Seq("nDocs" -> JLong(n), "sumDl" -> JLong(sumDl),
-        "tags" -> JArr(tags.map(JStr)), "foldHw" -> JLong(st.foldHw)))))
+        "tags" -> JArr(tags.map(JStr)), "foldHw" -> JLong(st.foldHw),
+        "nonce" -> JStr(nonce)))))
     graft.storage.VersionedDir.commit(fs, uri, "postings", target)
     // race injection: the commit → cleanup window (retired grace dirs
     // still on disk; the rewritten genstats must keep them excluded —
@@ -877,9 +1034,9 @@ object Search {
     * the fold that subsumed them). Listings only, no data read. */
   def maintenanceAdvice(spark: org.apache.spark.sql.SparkSession,
       uri: String): graft.storage.MaintenanceAdvice = {
-    val (base, incs, _, _, _) = liveState(spark, uri)
-    graft.storage.MaintenanceAdvice.of(graft.storage.VFS(spark), Seq(base),
-      incs.map(d => s"$d/postings"))
+    val (roots, _, _, _) = liveState(spark, uri)
+    graft.storage.MaintenanceAdvice.of(graft.storage.VFS(spark), Seq(roots.head.path),
+      roots.tail.map(_.path))
   }
 
   /** Top-k BM25 against a persisted index. The query batch's terms
@@ -893,29 +1050,27 @@ object Search {
     * `SearchSpec`).
     *
     * The frame is one [[Bm25Probe]] node over that scan, and building it
-    * only resolves the index state and lists the files. The caller's
-    * action starts 2 Spark jobs over the scan:
-    *  1. the df count ([[termDf]], one `treeAggregate`, no exchange);
-    *  2. the scoring job ([[Bm25Probe.topK]]): per-task (query, doc)
-    *     sums, one exchange, then rounding, the AND filter and bounded
-    *     per-query heaps (one more exchange only above ~1M contribution
-    *     rows).
-    * Between them the driver decides idf, elision, hot terms and the
-    * AND counts ([[scoringTable]]). No scoring DataFrame is built or
-    * planned per probe, and AQE never splits the scoring: each job,
-    * and each plan, is a fixed cost that dominates at probe sizes
-    * (traced 8-query probes of the perfbench `corpus_index` index on 4
-    * cores: 6 jobs spanned ~710 ms, 4 jobs ~400 ms). A probe planned
-    * before a fold and run after its grace cycle fails loudly on the
-    * files it listed. Needs [[graft.core.GraftExtensions]] (set by
-    * [[graft.core.GraftSession]]), which plans the node. */
+    * only resolves the index state and lists the files. When the
+    * caller's action runs it, the driver sums the probed terms' df over
+    * the listed roots' term lexicons ([[probeDf]], cached per root
+    * write) and decides idf, elision, hot terms and the AND counts
+    * ([[scoringTable]]); then 1 Spark job scores
+    * ([[Bm25Probe.topK]]): per-task (query, doc) sums, one exchange,
+    * then rounding, the AND filter and bounded per-query heaps (one
+    * more exchange only above ~1M contribution rows). A batch none of
+    * whose terms is in the index runs no job. No scoring DataFrame is
+    * built or planned per probe, and AQE never splits the scoring: each
+    * job, and each plan, is a fixed cost that dominates at probe sizes.
+    * A probe planned before a fold and run after its grace cycle fails
+    * loudly on the files it listed. Needs [[graft.core.GraftExtensions]]
+    * (set by [[graft.core.GraftSession]]), which plans the node. */
   def bm25IndexTopK(spark: org.apache.spark.sql.SparkSession, uri: String,
       queries: DataFrame, qidCol: String, qtextCol: String,
       k: Int = 10, k1: Double = 1.25, b: Double = 0.75,
       maxProbeTerms: Int = MaxPushedTerms, maxDfFraction: Double = 1.0,
       requireAllTerms: Boolean = false): DataFrame = {
     require(k > 0, s"bm25IndexTopK: k must be positive, got $k")
-    val (base, incs, nDocs, sumDl, buckets) = liveState(spark, uri)
+    val (roots, nDocs, sumDl, buckets) = liveState(spark, uri)
     // the bucket count bounds the probe's path selection (up to one
     // listed `tb=` dir per bucket and root); buildIndex enforces
     // <= 4096 at write time, but the cost is paid HERE from persisted
@@ -946,18 +1101,15 @@ object Search {
         s"bm25IndexTopK: query batch exceeds $maxProbeTerms distinct terms; " +
           "probing via broadcast semi-join (bucket pruning only)")
     }
-    // Math.floorMod == Spark's pmod for signed longs (remainderUnsigned
-    // would diverge for non-power-of-two bucket counts)
-    val tbs = terms.map(t =>
-      java.lang.Math.floorMod(xxhash64Of(t), buckets.toLong).toInt).distinct
+    val tbs = terms.map(bucketOf(_, buckets)).distinct
     // ONE scan over base + pending dirs, bucket-pruned by PATH
     // SELECTION inside readPostingsMulti; term pruning pushes into the
     // row groups of the selected files
-    val post = restrictToTerms(readPostingsMulti(spark,
-        base +: incs.map(d => s"$d/postings"), Some(tbs)), terms, maxProbeTerms)
+    val post = restrictToTerms(readPostingsMulti(spark, roots.map(_.path), Some(tbs)),
+        terms, maxProbeTerms)
       .select("term", "doc_id", "tf", "dl")
-    Shim.ofRows(spark, Bm25Probe(post, qt.qid.dataType, Bm25Batch(qt.pairs.toSeq,
-      nDocs, sumDl, k, k1, b, maxDfFraction, requireAllTerms)))
+    Shim.ofRows(spark, Bm25Probe(post, qt.qid.dataType, Bm25Batch(uri, roots,
+      qt.pairs.toSeq, nDocs, sumDl, k, k1, b, maxDfFraction, requireAllTerms)))
   }
 
   /** Driver-side xxhash64 of a UTF-8 string with Spark's seed (42) —

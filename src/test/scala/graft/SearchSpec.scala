@@ -531,9 +531,9 @@ class SearchSpec extends SparkSpec {
     assert(tied.map(_._3).distinct.size == 1) // same score, id tie-break
   }
 
-  test("bm25 index probe: exactly 2 Spark jobs, the df treeAggregate and " +
-    "one scoring job, the same rows as inline bm25TopK") {
-    val uri = s"target/test-bm25-jobs2-${System.nanoTime()}"
+  test("bm25 index probe: exactly 1 Spark job, no df treeAggregate, " +
+    "the same rows as inline bm25TopK") {
+    val uri = s"target/test-bm25-jobs1-${System.nanoTime()}"
     val q = Seq((0L, "the cat sat on the mat log"),
       (1L, "dogs and cats an entirely unrelated sentence about spark")).toDF("qid", "qtext")
     val batches = Seq(100L, 200L).map(off =>
@@ -543,13 +543,141 @@ class SearchSpec extends SparkSpec {
       batches.zipWithIndex.foreach { case (b, i) =>
         Search.appendBatchToIndex(b, "doc_id", "text", uri, s"batch-${i + 1}") }
       val (got, jobs) = jobsOf(Search.bm25IndexTopK(spark, uri, q, "qid", "qtext", k = 5).collect())
-      assert(jobs.size == 2, s"${jobs.size} jobs: ${jobs.mkString("; ")}")
-      assert(jobs.count(_.exists(_.startsWith("treeAggregate at"))) == 1,
-        s"one df treeAggregate job expected: ${jobs.mkString("; ")}")
+      assert(jobs.size == 1, s"${jobs.size} jobs: ${jobs.mkString("; ")}")
+      assert(!jobs.flatten.exists(_.startsWith("treeAggregate at")),
+        s"df treeAggregate in the probe: ${jobs.mkString("; ")}")
       val inline = Search.bm25TopK(batches.foldLeft(docs)(_ unionByName _),
         "doc_id", "text", q, "qid", "qtext", k = 5)
       assert(got.nonEmpty && got.toSet == inline.collect().toSet)
     } finally graft.storage.VFS(spark).delete(uri)
+  }
+
+  test("bm25 index probe: a batch whose terms are all absent from the index runs no Spark job") {
+    val uri = s"target/test-bm25-jobs0-${System.nanoTime()}"
+    try {
+      Search.buildIndex(docs, "doc_id", "text", uri, buckets = 8)
+      Search.appendBatchToIndex(Seq((50L, "an appended cat doc")).toDF("doc_id", "text"),
+        "doc_id", "text", uri, "batch-1")
+      val q = Seq((0L, "zebra quokka"), (1L, "")).toDF("qid", "qtext")
+      val (got, jobs) = jobsOf(Search.bm25IndexTopK(spark, uri, q, "qid", "qtext", k = 5).collect())
+      assert(got.isEmpty && jobs.isEmpty, s"${jobs.size} jobs: ${jobs.mkString("; ")}")
+    } finally graft.storage.VFS(spark).delete(uri)
+  }
+
+  /** Every term's df over the index's live roots two ways: summed from
+    * their term lexicons, and counted by `termDf` over their postings. */
+  private def lexiconAndScanDf(uri: String, terms: Seq[String]) = {
+    val (roots, _, _, _) = Search.liveState(spark, uri)
+    val scan = roots.map(r => spark.read.schema("term string").parquet(r.path).select("term"))
+      .reduce(_ unionByName _)
+    (Search.probeDf(spark, uri, roots, terms),
+      Search.termDf(scan.queryExecution.toRdd, 0).df.toMap)
+  }
+
+  test("bm25 lexicons: summed lexicon df equals termDf for every term over " +
+    "base, appends, a replayed tag, a minor fold, a major and a zero-doc build") {
+    val uri = s"target/test-bm25-lex-${System.nanoTime()}"
+    val empty = s"target/test-bm25-lex0-${System.nanoTime()}"
+    val b1 = Seq((50L, "an appended cat doc"), (51L, "cat cat log")).toDF("doc_id", "text")
+    val b2 = Seq((52L, "another appended spark doc")).toDF("doc_id", "text")
+    // the replay of tag batch-1 carries different rows
+    val b1r = Seq((53L, "a replayed dog sentence about mats")).toDF("doc_id", "text")
+    val vocab = Seq(docs, b1, b2, b1r).flatMap(_.select("text").as[String].collect())
+      .flatMap(_.toLowerCase.split("[^\\p{L}\\p{N}]+")).filter(_.nonEmpty).distinct
+    def check(at: String, step: String): Unit = {
+      val (lex, scan) = lexiconAndScanDf(at, vocab)
+      assert(lex == scan, s"$step: lexicon df $lex != scanned df $scan")
+    }
+    val q = Seq((0L, "cat dog sat"), (1L, "appended spark mats")).toDF("qid", "qtext")
+    try {
+      Search.buildIndex(docs, "doc_id", "text", uri, buckets = 8)
+      check(uri, "base")
+      Search.appendBatchToIndex(b1, "doc_id", "text", uri, "batch-1")
+      check(uri, "append 1")
+      Search.appendBatchToIndex(b2, "doc_id", "text", uri, "batch-2")
+      check(uri, "append 2")
+      // a probe caches batch-1's lexicon; the replay commits a new nonce
+      Search.bm25IndexTopK(spark, uri, q, "qid", "qtext", k = 5).collect()
+      Search.appendBatchToIndex(b1r, "doc_id", "text", uri, "batch-1")
+      check(uri, "replayed tag")
+      val inline = Search.bm25TopK(docs.unionByName(b1r).unionByName(b2), "doc_id", "text",
+        q, "qid", "qtext", k = 5)
+      assert(Search.bm25IndexTopK(spark, uri, q, "qid", "qtext", k = 5).collect().toSet ==
+        inline.collect().toSet, "probe after the replay diverged")
+      Search.minorCompactIndex(spark, uri)
+      check(uri, "minor fold")
+      Search.compactIndex(spark, uri)
+      check(uri, "major")
+      // the streaming bootstrap shape: an index over zero docs, then a batch
+      Search.buildIndex(docs.limit(0), "doc_id", "text", empty, buckets = 8)
+      check(empty, "zero-doc build")
+      assert(lexiconAndScanDf(empty, vocab)._1.isEmpty)
+      Search.appendBatchToIndex(b2, "doc_id", "text", empty, "batch-1")
+      check(empty, "append to the zero-doc build")
+    } finally {
+      graft.storage.VFS(spark).delete(uri)
+      graft.storage.VFS(spark).delete(empty)
+    }
+  }
+
+  test("bm25 lexicons of an encrypted index hold no plaintext term") {
+    val enc = s"target/test-bm25-lexenc-${System.nanoTime()}"
+    val fs = graft.storage.VFS(spark)
+    graft.storage.Encryption.enable(spark, "lexkey", "L" * 32)
+    try {
+      // checks the lexicons on disk now (a fold retires its sources)
+      var seen = Set.empty[String]
+      def checkLexicons(): Unit =
+        fs.lsFilesRecursive(enc).filter(_.endsWith("/_lexicon.json")).foreach { f =>
+          seen += f
+          val text = new String(fs.readBytes(f), "ISO-8859-1")
+          assert(text.startsWith("GFT1"), s"$f: lexicon not enveloped")
+          Seq("cat", "unrelated", "sentence", "spark").foreach(t =>
+            assert(!text.contains(t), s"$f leaks '$t'"))
+        }
+      Search.buildIndex(docs, "doc_id", "text", enc, buckets = 4, encryptionKey = Some("lexkey"))
+      Seq("batch-1", "batch-2").foreach(t => Search.appendBatchToIndex(
+        Seq((50L, s"unrelated cat $t")).toDF("doc_id", "text"), "doc_id", "text", enc, t))
+      checkLexicons()
+      Search.minorCompactIndex(spark, enc)
+      Search.compactIndex(spark, enc)
+      checkLexicons()
+      // build, two appends, one fold, one major
+      assert(seen.size == 5, seen)
+      val q = Seq((0L, "unrelated cat")).toDF("qid", "qtext")
+      assert(Search.bm25IndexTopK(spark, enc, q, "qid", "qtext", k = 5).count() > 0)
+    } finally fs.delete(enc)
+  }
+
+  test("bm25 roots without a lexicon fail loudly at probe and fold time, naming " +
+    "Search.buildIndex") {
+    val uri = s"target/test-bm25-nolex-${System.nanoTime()}"
+    val fs = graft.storage.VFS(spark)
+    val q = Seq((0L, "cat dog")).toDF("qid", "qtext")
+    // what an older writer left: no lexicon, no nonce in the commit sidecar
+    def strip(root: String, stats: String): Unit = {
+      fs.delete(s"$root/_lexicon.json")
+      fs.writeString(stats, fs.readString(stats).replaceAll(",\"nonce\":\"[^\"]*\"", ""))
+    }
+    def assertNamesRebuild(e: Throwable): Unit =
+      assert(Option(e.getMessage).exists(_.contains("Search.buildIndex")), e.toString)
+    try {
+      Search.buildIndex(docs, "doc_id", "text", uri, buckets = 8)
+      assert(Search.isCurrentIndex(spark, uri))
+      Seq("batch-1", "batch-2").foreach(t => Search.appendBatchToIndex(
+        Seq((50L, s"a cat $t")).toDF("doc_id", "text"), "doc_id", "text", uri, t))
+      strip(s"$uri/postings_inc/batch-1/postings", s"$uri/postings_inc/batch-1/_stats.json")
+      val probe = Search.bm25IndexTopK(spark, uri, q, "qid", "qtext", k = 5)
+      assertNamesRebuild(intercept[Throwable](probe.collect()))
+      assertNamesRebuild(intercept[Throwable](Search.minorCompactIndex(spark, uri)))
+      assert(fs.ls(s"$uri/postings_inc").forall(!_.contains("fold-")),
+        "a failed fold must write nothing")
+      strip(s"$uri/postings", s"$uri/_stats.json")
+      assertNamesRebuild(intercept[Throwable](Search.compactIndex(spark, uri)))
+      // an older layout's params: the build-once fixture check rebuilds it
+      fs.writeString(s"$uri/_params.json", "{\"buckets\":8,\"layout\":1}")
+      assert(!Search.isCurrentIndex(spark, uri))
+    } finally fs.delete(uri)
   }
 
   test("bm25 contribution and 6-decimal rounding equal Spark's expression bit for bit") {
