@@ -85,35 +85,23 @@ object SparkEntry {
     uri
   }
 
+  /** Build-once IVF index over the embeddings table (marker:
+    * centroids.json). */
   private def ivfIndex(s: SparkSession, dir: String): String = synchronized {
     val uri = s"$arrayBase/${sfKey(dir)}/ivf_index"
-    val fs = graft.storage.VFS(s)
-    // self-heal stale fixtures that predate the quantized cell layout
-    // (cells must carry int8 codes for the re-rank path)
-    val usable = fs.exists(s"$uri/centroids.json") &&
-      scala.util.Try(s.read.parquet(Similarity.cellsPath(s, uri))
-        .schema.fieldNames.contains("codes")).getOrElse(false)
-    if (!usable) {
-      fs.delete(uri)
+    if (!graft.storage.VFS(s).exists(s"$uri/centroids.json"))
       Similarity.buildIvfIndex(t(s, dir, "embeddings"), "vec_id", "embedding",
         uri, nCentroids = 16, lloydSteps = 2)
-    }
     uri
   }
 
   /** Build-once labeled IVF index (label payload rides in the cell
-    * files) for the filtered-search gate. */
+    * files) for the filtered-search gate (marker: centroids.json). */
   private def ivfIndexLabeled(s: SparkSession, dir: String): String = synchronized {
     val uri = s"$arrayBase/${sfKey(dir)}/ivf_index_labeled"
-    val fs = graft.storage.VFS(s)
-    val usable = fs.exists(s"$uri/centroids.json") &&
-      scala.util.Try(s.read.parquet(Similarity.cellsPath(s, uri))
-        .schema.fieldNames.contains("label")).getOrElse(false)
-    if (!usable) {
-      fs.delete(uri)
+    if (!graft.storage.VFS(s).exists(s"$uri/centroids.json"))
       Similarity.buildIvfIndex(t(s, dir, "embeddings"), "vec_id", "embedding",
         uri, nCentroids = 16, lloydSteps = 2, payload = Seq("label"))
-    }
     uri
   }
 

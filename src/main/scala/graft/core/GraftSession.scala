@@ -38,7 +38,7 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.core.GraftExtensions")
     // A/B seam for the bench tools: SPARK_GRAFT_CONF="k=v,k=v" lands
     // extra confs on every tool's session (e.g.
-    // graft.par.gates=false to bench the gates sequentially)
+    // graft.widen.maxInputBytes=0 to bench without widening)
     sys.env.get("SPARK_GRAFT_CONF").toSeq
       .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
       .foldLeft(b) { (bb, kv) =>

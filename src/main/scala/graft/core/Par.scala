@@ -12,9 +12,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Only for actions with NO data dependency (each closure must read
   * already-materialized inputs or independent plans). Results come
-  * back in argument order; failures propagate. Kill switch:
-  * `graft.par.gates=false` runs the closures sequentially (A/B seam —
-  * same results either way, by construction).
+  * back in argument order; failures propagate.
   *
   * NESTING: a closure that itself calls [[jobs]] would block a pool
   * thread on `fu.get()` of tasks starved by the same fixed pool — a
@@ -36,14 +34,9 @@ object Par {
     })
 
   def jobs[T](spark: SparkSession)(fs: (() => T)*): Seq[T] = {
-    // tolerant conf parse: anything other than an explicit "false"
-    // (case-insensitive) means enabled — a malformed value must not
-    // crash a gate with an uninformative IllegalArgumentException
-    val enabled = !spark.conf.getOption("graft.par.gates")
-      .exists(_.trim.equalsIgnoreCase("false"))
     // reentrancy guard: never block a pool thread on the pool
     val nested = Thread.currentThread().getName == PoolThreadName
-    if (!enabled || nested || fs.size <= 1) fs.map(_()).toSeq
+    if (nested || fs.size <= 1) fs.map(_()).toSeq
     else {
       val futs = fs.map(f => pool.submit(new java.util.concurrent.Callable[T] {
         def call(): T = {

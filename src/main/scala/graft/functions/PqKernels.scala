@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types._
 
-/** Native Catalyst kernels for the product-quantization hot paths
+/* Native Catalyst kernels for the product-quantization hot paths
   * (same rationale and pattern as [[VectorKernels]]): the HOF
   * formulations evaluate an interpreted lambda per array element, which
   * is fatal exactly where PQ is supposed to win — ADC scoring runs per
@@ -17,12 +17,6 @@ import org.apache.spark.sql.types._
   * left-to-right accumulation, same strict-less argmin tie rule, same
   * null poisoning), pinned by `VectorKernelsSpec`.
   */
-object PqKernels {
-  private[functions] def isVec(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType | DoubleType, _) => true
-    case _ => false
-  }
-}
 
 /** ADC score: sum over subspaces s of lut(s)(codes(s)). Mirrors
   * `aggregate(sequence(0, m-1), 0.0, (acc, s) -> acc +

@@ -12,26 +12,39 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable
 
-/** What one BM25 index probe scores: the index at `uri` and the postings
-  * roots its scan lists (whose term lexicons give df), the batch's
-  * distinct (query id, term) pairs, ids in the caller's type, and the
-  * index's exact corpus stats. */
-private[ops] final case class Bm25Batch(uri: String, roots: Seq[Search.PostingsRoot],
-    pairs: Seq[(Any, String)], nDocs: Long, sumDl: Long, k: Int, k1: Double, b: Double,
-    maxDfFraction: Double, requireAllTerms: Boolean) {
+/** Where a BM25 batch's df comes from. */
+private[ops] sealed trait DfSource { def summary: String }
+
+/** The term lexicons of the index at `uri`, over the postings roots the
+  * probe's scan lists, summed when the node executes ([[Search.probeDf]]). */
+private[ops] final case class LexiconDf(uri: String, roots: Seq[Search.PostingsRoot])
+    extends DfSource { def summary: String = s"lexicons of ${roots.size} roots" }
+
+/** df the inline path counted over its restricted postings ([[Search.termDf]]). */
+private[ops] final case class CountedDf(df: scala.collection.Map[String, Long])
+    extends DfSource { def summary: String = s"counted for ${df.size} terms" }
+
+/** What one BM25 batch scores: where its df comes from, its distinct
+  * (query id, term) pairs, ids in the caller's type, and the corpus's
+  * exact stats. `k` = None scores every (query, doc) pair, unranked. */
+private[ops] final case class Bm25Batch(df: DfSource, pairs: Seq[(Any, String)], nDocs: Long,
+    sumDl: Long, k: Option[Int], k1: Double, b: Double, maxDfFraction: Double,
+    requireAllTerms: Boolean) {
   def summary: String =
-    s"k=$k, k1=$k1, b=$b, pairs=${pairs.size}, roots=${roots.size}, nDocs=$nDocs, " +
-      s"sumDl=$sumDl, maxDfFraction=$maxDfFraction, requireAllTerms=$requireAllTerms"
+    s"k=${k.fold("all")(_.toString)}, k1=$k1, b=$b, pairs=${pairs.size}, df=${df.summary}, " +
+      s"nDocs=$nDocs, sumDl=$sumDl, maxDfFraction=$maxDfFraction, requireAllTerms=$requireAllTerms"
 }
 
-/** A BM25 index probe as one Catalyst node over the probe's restricted
-  * postings scan (`child`; `postings` are its term, doc_id, tf, dl
-  * attributes, listed as the node's expressions so column pruning above
-  * the node keeps them). Output: (query_id, doc_id, score, rank). The
-  * scan stays a plan child, so its pushed filters, its semi-join
-  * fallback and its file listing show in the executed plan, and nothing
-  * runs until the caller's action. Planned by [[Bm25ProbeStrategy]]
-  * (injected by [[graft.core.GraftExtensions]]) into [[Bm25ProbeExec]]. */
+/** One BM25 batch as a Catalyst node over its restricted postings
+  * (`child`; `postings` are its term, doc_id, tf, dl attributes, listed
+  * as the node's expressions so column pruning above the node keeps
+  * them): an index probe's scan, or the inline path's in-memory
+  * postings. Output: (query_id, doc_id, score, rank) with a `k`, or
+  * (query_id, doc_id, score) with the raw sums without one. The child
+  * stays a plan child, so its pushed filters, its semi joins and its
+  * file listing show in the executed plan, and nothing runs until the
+  * caller's action. Planned by [[Bm25ProbeStrategy]] (injected by
+  * [[graft.core.GraftExtensions]]) into [[Bm25ProbeExec]]. */
 private[graft] case class Bm25Probe(batch: Bm25Batch, postings: Seq[Attribute],
     output: Seq[Attribute], child: LogicalPlan) extends UnaryNode {
   override def producedAttributes: AttributeSet = AttributeSet(output)
@@ -40,24 +53,25 @@ private[graft] case class Bm25Probe(batch: Bm25Batch, postings: Seq[Attribute],
 }
 
 private[graft] object Bm25Probe {
-  /** The probe's node over `post` (term, doc_id, tf, dl). The output
+  /** The batch's node over `post` (term, doc_id, tf, dl). Ranked
     * columns are nullable exactly as [[Similarity.topKPerKey]] reports
     * them: with long query ids (doc ids are always long) it reads
-    * through a primitive tuple. */
+    * through a primitive tuple. Unranked columns are all nullable. */
   def apply(post: org.apache.spark.sql.DataFrame, qidType: DataType,
       batch: Bm25Batch): Bm25Probe = {
     val child = post.queryExecution.analyzed
-    val boxed = qidType != LongType
+    val boxed = batch.k.isEmpty || qidType != LongType
     Bm25Probe(batch, child.output, Seq(
       AttributeReference("query_id", qidType, boxed)(),
       AttributeReference("doc_id", LongType, boxed)(),
-      AttributeReference("score", DoubleType, boxed)(),
-      AttributeReference("rank", LongType, nullable = false)()), child)
+      AttributeReference("score", DoubleType, boxed)()) ++
+      batch.k.map(_ => AttributeReference("rank", LongType, nullable = false)()), child)
   }
 
   /** Contribution rows one scoring reducer merges, at most: a bound on
-    * its (query, doc) sums. */
-  private val RowsPerReducer = 1L << 20
+    * its (query, doc) sums. Also the bound on the (query, doc) partials
+    * one scan task holds before it hands them to the exchange. */
+  val RowsPerReducer: Long = 1L << 20
 
   /** Reducers for `contributions` rows (Σ df over the kept (query,
     * term) pairs, known on the driver before the scoring job), at most
@@ -68,15 +82,17 @@ private[graft] object Bm25Probe {
   private final class Acc { var sum = 0.0; var n = 0L }
 
   /** Adds (s, n) to the (slot, doc) sum, creating it at 0.0 as
-    * `HashAggregate`'s `sum` buffer starts. */
+    * `HashAggregate`'s `sum` buffer starts; true when it was created. */
   private def add(acc: Array[mutable.LongMap[Acc]], slot: Int, doc: Long,
-      s: Double, n: Long): Unit = {
+      s: Double, n: Long): Boolean = {
     var m = acc(slot)
     if (m == null) { m = mutable.LongMap.empty[Acc]; acc(slot) = m }
     var a = m.getOrNull(doc)
-    if (a == null) { a = new Acc; m.update(doc, a) }
+    val created = a == null
+    if (created) { a = new Acc; m.update(doc, a) }
     a.sum += s
     a.n += n
+    created
   }
 
   private def fixedRow(fields: Int): UnsafeRow = {
@@ -89,18 +105,23 @@ private[graft] object Bm25Probe {
   /** The scoring job: one RDD pipeline over the postings `rows`
     * (`at` = ordinals of term, doc_id, tf, dl).
     *  - Each scan task sums its (query slot, doc) contributions in scan
-    *    order, as a partial `HashAggregate` does.
+    *    order, as a partial `HashAggregate` does. Once it holds
+    *    `partialBound` sums it hands them to the exchange and starts
+    *    again, so a task's memory stays bounded on whole-corpus
+    *    postings; the reducers merge partials from any number of
+    *    sources.
     *  - One exchange on (slot, doc) into `parts` reducers, each merging
     *    the partials in arrival order as the final `HashAggregate`
-    *    does, then applying the AND filter, the 6-decimal HALF_UP
-    *    rounding and a bounded top-k heap per query.
-    *  - With more than one reducer, the per-reducer heaps merge in one
-    *    more exchange keyed by query.
-    * Rows: (query_id, doc_id, score, rank), ranked by rounded score
-    * desc, then doc_id asc, as [[Similarity.topKPerKey]] ranks. */
+    *    does, then applying the AND filter.
+    *  - Without `k` the reducers emit (query_id, doc_id, raw score)
+    *    rows. With it they round to 6 decimals HALF_UP and keep a
+    *    bounded top-k heap per query; with more than one reducer the
+    *    per-reducer heaps merge in one more exchange keyed by query.
+    *    Rows: (query_id, doc_id, score, rank), ranked by rounded score
+    *    desc, then doc_id asc, as [[Similarity.topKPerKey]] ranks. */
   def topK(rows: RDD[InternalRow], at: Array[Int], table: Search.ScoringTable,
-      schema: StructType, k: Int, k1: Double, b: Double, avgdl: Double,
-      parts: Int): RDD[InternalRow] = {
+      schema: StructType, k: Option[Int], k1: Double, b: Double, avgdl: Double,
+      parts: Int, partialBound: Long = RowsPerReducer): RDD[InternalRow] = {
     val slots = table.ids.length
     val toId = CatalystTypeConverters.createToCatalystConverter(schema(0).dataType)
     val ids = table.ids.map(toId)
@@ -111,41 +132,57 @@ private[graft] object Bm25Probe {
     }
     val Array(termAt, docAt, tfAt, dlAt) = at
     val partials = rows.mapPartitions { it =>
-      val acc = new Array[mutable.LongMap[Acc]](slots)
-      it.foreach { r =>
-        val es = lookup.get(r.getUTF8String(termAt))
-        if (es != null) {
-          val doc = r.getLong(docAt)
-          val tf = r.getLong(tfAt).toDouble
-          val dl = r.getLong(dlAt).toDouble
-          es.foreach { case (slot, idf) =>
-            add(acc, slot, doc, Search.contribution(idf, tf, dl, k1, b, avgdl), 1L)
+      Iterator.continually(it).takeWhile(_.hasNext).flatMap { _ =>
+        val acc = new Array[mutable.LongMap[Acc]](slots)
+        var held = 0L
+        while (held < partialBound && it.hasNext) {
+          val r = it.next()
+          val es = lookup.get(r.getUTF8String(termAt))
+          if (es != null) {
+            val doc = r.getLong(docAt)
+            val tf = r.getLong(tfAt).toDouble
+            val dl = r.getLong(dlAt).toDouble
+            es.foreach { case (slot, idf) =>
+              if (add(acc, slot, doc, Search.contribution(idf, tf, dl, k1, b, avgdl), 1L))
+                held += 1
+            }
           }
         }
+        for {
+          slot <- Iterator.range(0, slots) if acc(slot) != null
+          (doc, a) <- acc(slot).iterator
+        } yield {
+          val r = fixedRow(4)
+          r.setInt(0, slot); r.setLong(1, doc); r.setDouble(2, a.sum); r.setLong(3, a.n)
+          (java.lang.Math.floorMod(31 * slot + java.lang.Long.hashCode(doc), parts), r: InternalRow)
+        }
       }
-      for {
-        slot <- Iterator.range(0, slots) if acc(slot) != null
-        (doc, a) <- acc(slot).iterator
-      } yield {
-        val r = fixedRow(4)
-        r.setInt(0, slot); r.setLong(1, doc); r.setDouble(2, a.sum); r.setLong(3, a.n)
-        (java.lang.Math.floorMod(31 * slot + java.lang.Long.hashCode(doc), parts), r: InternalRow)
+    }
+    // (slot, doc, raw score) of every pair that passes the AND filter
+    val summed = Shim.shuffleUnsafeRows(partials, parts, 4).mapPartitions { it =>
+      val acc = new Array[mutable.LongMap[Acc]](slots)
+      it.foreach(r => add(acc, r.getInt(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
+      Iterator.range(0, slots).filter(acc(_) != null).flatMap { slot =>
+        acc(slot).iterator.collect {
+          case (doc, a) if need == null || a.n == need(slot) => (slot, doc, a.sum)
+        }
       }
+    }
+    if (k.isEmpty) return summed.mapPartitions { it =>
+      val toRow = UnsafeProjection.create(schema)
+      it.map { case (slot, doc, s) => toRow(new GenericInternalRow(Array[Any](ids(slot), doc, s))) }
     }
     def heaps(): Array[LongTopKHeap] = new Array[LongTopKHeap](slots)
     def offer(hs: Array[LongTopKHeap], slot: Int, score: Double, doc: Long): Unit = {
-      if (hs(slot) == null) hs(slot) = new LongTopKHeap(k)
+      if (hs(slot) == null) hs(slot) = new LongTopKHeap(k.get)
       hs(slot).offer(score, doc)
     }
-    val scored = Shim.shuffleUnsafeRows(partials, parts, 4).mapPartitions { it =>
-      val acc = new Array[mutable.LongMap[Acc]](slots)
-      it.foreach(r => add(acc, r.getInt(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
+    val scored = summed.mapPartitions { it =>
       val hs = heaps()
-      for (slot <- 0 until slots if acc(slot) != null; (doc, a) <- acc(slot))
-        if (need == null || a.n == need(slot)) offer(hs, slot, Search.round6(a.sum), doc)
+      it.foreach { case (slot, doc, s) => offer(hs, slot, Search.round6(s), doc) }
       Iterator.single(hs)
     }
-    val ranked =
+    val merged =
       if (parts == 1) scored
       else {
         val byQuery = math.min(parts, slots)
@@ -164,7 +201,7 @@ private[graft] object Bm25Probe {
           Iterator.single(hs)
         }
       }
-    ranked.mapPartitions { it =>
+    merged.mapPartitions { it =>
       val toRow = UnsafeProjection.create(schema)
       it.flatMap { hs =>
         Iterator.range(0, slots).filter(hs(_) != null).flatMap { slot =>
@@ -187,12 +224,13 @@ private[graft] object Bm25ProbeStrategy extends SparkStrategy {
   }
 }
 
-/** Executes one BM25 index probe in 1 Spark job over its child's RDD.
-  * The driver first sums the probed terms' df over the listed roots'
-  * term lexicons ([[Search.probeDf]]) and makes the idf, elision,
-  * hot-term and AND decisions ([[Search.scoringTable]]); then the
-  * scoring job ([[Bm25Probe.topK]]) runs, or none when no probed term is
-  * in the index. All of it happens when the caller's action executes the
+/** Executes one BM25 batch in 1 Spark job over its child's RDD. The
+  * driver first takes the probed terms' df — summed over the listed
+  * roots' term lexicons ([[Search.probeDf]]) for an index probe, or the
+  * map the inline path counted — and makes the idf, elision, hot-term
+  * and AND decisions ([[Search.scoringTable]]); then the scoring job
+  * ([[Bm25Probe.topK]]) runs, or none when no probed term is in the
+  * corpus. All of it happens when the caller's action executes the
   * node, so a probe planned before a fold and run after it reads the
   * lexicons and files it listed. */
 private[graft] case class Bm25ProbeExec(batch: Bm25Batch, postings: Seq[Attribute],
@@ -204,25 +242,30 @@ private[graft] case class Bm25ProbeExec(batch: Bm25Batch, postings: Seq[Attribut
   override protected def doExecute(): RDD[InternalRow] =
     run(Bm25Probe.reducers(_, conf.numShufflePartitions))
 
-  /** Collects the probe's rows (k per query). A probe none of whose
-    * terms is indexed starts no job: the default collect would post one
-    * for the RDD with no partitions. */
+  /** Collects the batch's rows. A batch none of whose terms is in the
+    * corpus starts no job: the default collect would post one for the
+    * RDD with no partitions. */
   override def executeCollect(): Array[InternalRow] = {
     val rows = execute()
     if (rows.getNumPartitions == 0) Array.empty
     else rows.map(_.copy()).collect()
   }
 
-  /** The probe's work, with `reducers` sizing the scoring exchange from
-    * the contribution-row count. */
-  private[graft] def run(reducers: Long => Int): RDD[InternalRow] = {
+  /** The batch's work, with `reducers` sizing the scoring exchange from
+    * the contribution-row count and `partialBound` bounding each scan
+    * task's partial sums. */
+  private[graft] def run(reducers: Long => Int,
+      partialBound: Long = Bm25Probe.RowsPerReducer): RDD[InternalRow] = {
     val at = postings.map(a => child.output.indexWhere(_.exprId == a.exprId)).toArray
-    val table = Search.scoringTable(session, batch.pairs,
-      Search.probeDf(session, batch.uri, batch.roots, batch.pairs.map(_._2)),
-      batch.nDocs, batch.maxDfFraction, batch.requireAllTerms)
+    val df = batch.df match {
+      case LexiconDf(uri, roots) => Search.probeDf(session, uri, roots, batch.pairs.map(_._2))
+      case CountedDf(counted) => counted
+    }
+    val table = Search.scoringTable(session, batch.pairs, df, batch.nDocs,
+      batch.maxDfFraction, batch.requireAllTerms)
     if (table.entries.isEmpty) sparkContext.emptyRDD[InternalRow]
     else Bm25Probe.topK(child.execute(), at, table, DataTypeUtils.fromAttributes(output),
       batch.k, batch.k1, batch.b, Search.avgdl(batch.nDocs, batch.sumDl),
-      reducers(table.contributions))
+      reducers(table.contributions), partialBound)
   }
 }

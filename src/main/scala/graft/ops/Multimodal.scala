@@ -2974,11 +2974,6 @@ object Multimodal {
     }
   }
 
-  /** Column-level resize stub: keeps the binary contract (truncate/pad),
-    * documenting where a real resampler plugs in. */
-  def resizeStub(content: org.apache.spark.sql.Column, targetBytes: Int): org.apache.spark.sql.Column =
-    substring(content, 1, targetBytes)
-
   /** Interleaved RGB pixels (one Int per channel sample) for the
     * resize path: P6 via the pure parser, anything else through
     * ImageIO. Returns (w, h, rgb[w*h*3]). */

@@ -3,9 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shim
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.expressions.Literal
-import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Full-text retrieval over the document corpus: an inverted index
@@ -29,22 +27,22 @@ import org.apache.spark.unsafe.types.UTF8String
   *    path counts it over the restricted postings inside each scan
   *    task, the partial counts merging on the driver ([[termDf]], one
   *    job). Either way the vocabulary table never shuffles;
-  *  - candidate generation attaches idf on the driver's terms: the
-  *    batch's (term → query slot, idf) table is decided once on the
-  *    driver ([[scoringTable]]); an index probe's scoring operator
-  *    ([[Bm25Probe]]) looks each streamed posting's term up in it, and
-  *    the inline path joins the same rows as a broadcast relation —
-  *    postings stream, nothing corpus-sized shuffles on an unbounded
-  *    key;
+  *  - ONE scoring core serves both paths: the [[Bm25Probe]] operator
+  *    over the restricted postings — an index probe's scan, or the
+  *    inline path's in-memory postings. The batch's (term → query
+  *    slot, idf) table is decided once on the driver
+  *    ([[scoringTable]]) and the operator looks each streamed posting's
+  *    term up in it — postings stream, nothing corpus-sized shuffles on
+  *    an unbounded key;
   *  - per-(query, doc) score assembly is one shuffle of MATCHING
-  *    pairs only, summed per scan task first. Top-k keeps bounded
-  *    per-query heaps — [[Similarity.topKPerKey]] on the inline path,
-  *    the operator's own heaps on an index probe — never a
-  *    `row_number().over(partitionBy(query))` window, which would
-  *    hash-partition every scored row onto |queries| reducers (the
-  *    classic skew bomb when queries are few and the corpus is huge).
-  *    An index probe runs 1 Spark job, the scoring job, which the
-  *    caller's action starts.
+  *    pairs only, summed per scan task first (a task hands its partial
+  *    sums on at a fixed bound, so whole-corpus postings stay within
+  *    memory). Top-k keeps the operator's bounded per-query heaps,
+  *    never a `row_number().over(partitionBy(query))` window, which
+  *    would hash-partition every scored row onto |queries| reducers
+  *    (the classic skew bomb when queries are few and the corpus is
+  *    huge). The scoring is 1 Spark job, which the caller's action
+  *    starts.
   */
 object Search {
 
@@ -96,23 +94,42 @@ object Search {
     * Robertson/Lucene non-negative variant
     * `ln(1 + (N - df + 0.5)/(df + 0.5))`.
     *
-    * Output: (query_id, doc_id, score raw double). Callers round for
+    * Output: (query_id, doc_id, score raw double), one unranked
+    * [[Bm25Probe]] node (see [[inlineBatch]]). Callers round for
     * presentation; [[bm25TopK]] ranks on the 6-decimal rounding so
-    * ordering is reproducible across engines. */
+    * ordering is reproducible across engines. Doc ids must be long. */
   def bm25Scores(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, qidCol: String, qtextCol: String,
       k1: Double = 1.25, b: Double = 0.75,
       materializePostings: Boolean = true,
       maxDfFraction: Double = 1.0,
-      requireAllTerms: Boolean = false): DataFrame = {
-    // The postings frame feeds THREE consumers (df aggregation, the
-    // scoring join, sumDl) — without materialization each one re-runs
+      requireAllTerms: Boolean = false): DataFrame =
+    inlineBatch(docs, idCol, textCol, queries, qidCol, qtextCol, None, k1, b,
+      materializePostings, maxDfFraction, requireAllTerms, None)
+
+  /** The inline path: `docs`' postings restricted to the query terms,
+    * scored by one [[Bm25Probe]] node (ranked with `k`, raw sums
+    * without). nDocs, sumDl and df are counted eagerly, before the node
+    * is built: df over the restricted postings ([[termDf]], one job),
+    * exact because they hold EVERY posting of the query terms. A
+    * `docFilter` joins the filtered doc ids onto the node's child after
+    * df is counted, so df and avgdl stay global; a doc's score depends
+    * only on its own postings, so the filtered scores and ranks are
+    * those of the whole corpus restricted to the filtered docs. */
+  private def inlineBatch(docs: DataFrame, idCol: String, textCol: String,
+      queries: DataFrame, qidCol: String, qtextCol: String, k: Option[Int],
+      k1: Double, b: Double, materializePostings: Boolean, maxDfFraction: Double,
+      requireAllTerms: Boolean, docFilter: Option[Column]): DataFrame = {
+    // The postings frame feeds THREE consumers (sumDl, the df count,
+    // the scoring job) — without materialization each one re-runs
     // the tokenize + count subtree (measured 23 s -> 8 s at the 10x
     // rehearsal, 50k docs). localCheckpoint, not cache, for the same
     // CacheManager-pinning reason as minhashNearDups; pass false on
     // long-lived clusters where executor loss must not fail the job
     // (or use buildIndex + bm25IndexTopK, the real at-scale path).
     val postPlan = postings(docs, idCol, textCol)
+    require(postPlan.schema("doc_id").dataType == LongType,
+      s"bm25: doc id column $idCol must be long, got ${postPlan.schema("doc_id").dataType}")
     val post = if (materializePostings) postPlan.localCheckpoint(true) else postPlan
     // exact-integer corpus stats WITHOUT extra text passes:
     // sum(dl over docs) = sum(tf over postings); empty docs hold no
@@ -120,12 +137,17 @@ object Search {
     val nDocs = docs.count()
     val sumDl = Option(post.agg(sum(col("tf"))).head().get(0))
       .map(_.asInstanceOf[Long]).getOrElse(0L)
-    // the postings are restricted to the query terms before the df
-    // aggregate, so the collected df stays query-batch sized (the
-    // scoring join drops every other term anyway)
     val qt = queryTerms(queries, qidCol, qtextCol)
-    scoreFromPostings(restrictToTerms(post, qt.terms, MaxPushedTerms), qt,
-      nDocs, sumDl, k1, b, maxDfFraction, requireAllTerms)
+    val restricted = restrictToTerms(post, qt.terms, MaxPushedTerms)
+    val df = termDf(restricted.select(col("term")).queryExecution.toRdd, 0).df
+    // docFilter = metadata-restricted retrieval (Lucene-style filtered
+    // search): a filter narrows the result set, not the collection
+    // statistics, and the top-k holds k ELIGIBLE docs
+    val scored = docFilter.fold(restricted)(f => restricted.join(
+        docs.filter(f).select(col(idCol).as("doc_id")), Seq("doc_id"), "left_semi"))
+      .select("term", "doc_id", "tf", "dl")
+    Shim.ofRows(docs.sparkSession, Bm25Probe(scored, qt.qid.dataType, Bm25Batch(CountedDf(df),
+      qt.pairs.toSeq, nDocs, sumDl, k, k1, b, maxDfFraction, requireAllTerms)))
   }
 
   /** Default cap on the terms a probe pushes as `term isin(...)`
@@ -168,51 +190,6 @@ object Search {
     * near-zero idf, and at 100 TB the operator should KNOW they are
     * paying it. Warn-only — results never change without opt-in. */
   val HotTermDfFraction: Double = 0.2
-
-  /** The inline scoring core: attaches idf to a postings frame (term,
-    * doc_id, tf, dl) holding EVERY posting of the query terms and no
-    * other term, and produces (query_id, doc_id, score raw). `df`
-    * (document frequency per term) is counted FROM those postings
-    * ([[termDf]], one job), exact because the corpus postings are
-    * restricted to the query terms, and the driver decides the rest
-    * ([[scoringTable]]). The (term, query slot, idf) rows reach the
-    * postings stream through a broadcast hash join, which collects its
-    * local relation in a job of its own; the plan specs pin that
-    * broadcast. The index probe shares [[scoringTable]] but takes df
-    * from the index's term lexicons ([[probeDf]]) and scores in its own
-    * operator ([[Bm25Probe]]), which plans no DataFrame per probe. */
-  private def scoreFromPostings(post: DataFrame, qt: QueryTerms,
-      nDocs: Long, sumDl: Long, k1: Double, b: Double,
-      maxDfFraction: Double, requireAllTerms: Boolean): DataFrame = {
-    val spark = post.sparkSession
-    val table = scoringTable(spark, qt.pairs.toSeq,
-      termDf(post.select(col("term")).queryExecution.toRdd, 0).df,
-      nDocs, maxDfFraction, requireAllTerms)
-    val attached = post.join(broadcast(spark.createDataFrame(
-        java.util.Arrays.asList(table.entries.map { case (t, s, i) => Row(t, s, i) }: _*),
-        StructType.fromDDL("term string, __slot int, __idf double"))), "term")
-    // query ids ride as SLOTS into an array literal of the ids (the
-    // caller's id type is kept)
-    val idType = ArrayType(qt.qid.dataType)
-    val queryId = Shim.toColumn(Literal(
-      CatalystTypeConverters.createToCatalystConverter(idType)(table.ids.toSeq), idType))
-      .getItem(col("__slot"))
-    val carried = table.need.map(need => lit(need).getItem(col("__slot")).as("__need")).toSeq
-    val tfD = col("tf").cast("double")
-    val scored = attached
-      .select(Seq(queryId.as("query_id"), col("doc_id"),
-        (col("__idf") * tfD * lit(k1 + 1.0) /
-          (tfD + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") /
-            lit(avgdl(nDocs, sumDl)))))
-          .as("__s")) ++ carried: _*)
-      .groupBy(col("query_id"), col("doc_id"))
-    if (!requireAllTerms) scored.agg(sum(col("__s")).as("score"))
-    else scored
-      .agg(sum(col("__s")).as("score"), count(lit(1)).as("__nt"),
-        max(col("__need")).as("__need"))
-      .filter(col("__nt") === col("__need"))
-      .select(col("query_id"), col("doc_id"), col("score"))
-  }
 
   /** A query batch's scoring decisions, made on the driver from its
     * (query, term) pairs and the probed terms' df:
@@ -285,11 +262,12 @@ object Search {
   private[graft] def avgdl(nDocs: Long, sumDl: Long): Double =
     if (nDocs == 0L) 1.0 else sumDl.toDouble / nDocs
 
-  /** One posting's BM25 contribution, evaluated exactly as the inline
-    * path's Spark expression `idf * tf * (k1 + 1) / (tf + k1 * ((1 - b) +
-    * b * dl / avgdl))` evaluates it: the same double operations in the
-    * same order (`k1 + 1` and `1 - b` folded on the driver as its
-    * literals are). `SearchSpec` pins `==` equality. */
+  /** One posting's BM25 contribution, `idf * tf * (k1 + 1) / (tf + k1 *
+    * ((1 - b) + b * dl / avgdl))`, evaluated exactly as that Spark
+    * expression evaluates it (the formula the DuckDB oracles replay):
+    * the same double operations in the same order (`k1 + 1` and `1 - b`
+    * folded on the driver as its literals are). `SearchSpec` pins `==`
+    * equality. */
   private[graft] def contribution(idf: Double, tf: Double, dl: Double, k1: Double,
       b: Double, avgdl: Double): Double =
     idf * tf * (k1 + 1.0) / (tf + k1 * ((1.0 - b) + b * dl / avgdl))
@@ -321,8 +299,9 @@ object Search {
     * the per-task counts by `treeAggregate` (depth 2), so at most
     * O(terms x sqrt(tasks)) partial entries reach it. A
     * `groupBy(term).count().collect()` plans an exchange, and AQE runs
-    * it as two jobs. The inline path counts its probed terms here; the
-    * index writers count a root's whole lexicon here. */
+    * it as two jobs. The inline path counts its probed terms' df here
+    * before it builds its [[Bm25Probe]] node; the index writers count a
+    * root's whole lexicon here. */
   private[graft] def termDf(rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
       termAt: Int, tfAt: Int = -1): TermDf = {
     type Counts = scala.collection.mutable.HashMap[String, Long]
@@ -356,33 +335,25 @@ object Search {
     * score with doc_id ascending as the tie-break (rounded ranking
     * keeps the order stable under last-ulp float differences between
     * engines; ties at 6 decimals are broken deterministically).
-    * Output: (query_id, doc_id, score, rank). */
+    * Output: (query_id, doc_id, score, rank), one ranked [[Bm25Probe]]
+    * node (see [[inlineBatch]]) — the scoring core an index probe uses,
+    * so it needs [[graft.core.GraftExtensions]] too.
+    *
+    * requireAllTerms = conjunctive (AND) retrieval: only docs matching
+    * EVERY query term that exists in the corpus (and survives elision)
+    * are ranked — absent terms can't be required of any doc, matching
+    * standard AND-semantics over the indexable vocabulary. docFilter =
+    * metadata-restricted retrieval: df/avgdl stay GLOBAL and ranks are
+    * assigned after the restriction. */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, qidCol: String, qtextCol: String,
       k: Int = 10, k1: Double = 1.25, b: Double = 0.75,
       maxDfFraction: Double = 1.0,
       requireAllTerms: Boolean = false,
       docFilter: Option[Column] = None): DataFrame = {
-    // requireAllTerms = conjunctive (AND) retrieval: only docs
-    // matching EVERY query term that exists in the corpus (and
-    // survives elision) are ranked — absent terms can't be required
-    // of any doc, matching standard AND-semantics over the indexable
-    // vocabulary
-    val scored = bm25Scores(docs, idCol, textCol, queries, qidCol, qtextCol,
-        k1, b, materializePostings = true, maxDfFraction, requireAllTerms)
-      .select(col("query_id"), col("doc_id"), round(col("score"), 6).as("score"))
-    // docFilter = metadata-restricted retrieval (Lucene-style filtered
-    // search): df/avgdl stay GLOBAL — a filter narrows the result
-    // set, not the collection statistics — and ranks are assigned
-    // after the restriction, so the top-k holds k ELIGIBLE docs. The
-    // semi join moves only the candidate set (docs sharing a query
-    // term), never the corpus.
-    val restricted = docFilter match {
-      case Some(f) => scored.join(
-        docs.filter(f).select(col(idCol).as("doc_id")), Seq("doc_id"), "left_semi")
-      case None => scored
-    }
-    Similarity.topKPerKey(restricted, "query_id", "doc_id", "score", k)
+    require(k > 0, s"bm25TopK: k must be positive, got $k")
+    inlineBatch(docs, idCol, textCol, queries, qidCol, qtextCol, Some(k), k1, b,
+      materializePostings = true, maxDfFraction, requireAllTerms, docFilter)
   }
 
   /** Reciprocal-rank fusion (the RRF hybrid-retrieval combiner):
@@ -1108,8 +1079,8 @@ object Search {
     val post = restrictToTerms(readPostingsMulti(spark, roots.map(_.path), Some(tbs)),
         terms, maxProbeTerms)
       .select("term", "doc_id", "tf", "dl")
-    Shim.ofRows(spark, Bm25Probe(post, qt.qid.dataType, Bm25Batch(uri, roots,
-      qt.pairs.toSeq, nDocs, sumDl, k, k1, b, maxDfFraction, requireAllTerms)))
+    Shim.ofRows(spark, Bm25Probe(post, qt.qid.dataType, Bm25Batch(LexiconDf(uri, roots),
+      qt.pairs.toSeq, nDocs, sumDl, Some(k), k1, b, maxDfFraction, requireAllTerms)))
   }
 
   /** Driver-side xxhash64 of a UTF-8 string with Spark's seed (42) —

@@ -1550,10 +1550,15 @@ object Similarity {
 
   /** Merge a PQ index's accumulated append files into a fresh
     * generation (one pass over the 8-byte codes — cheap by
-    * construction), committed via the reader-safe generation flip. */
+    * construction), committed via the reader-safe generation flip. The
+    * flip is guarded by the live listing taken before the read: an
+    * [[appendToPqIndex]] landing in between writes into the generation
+    * being retired, so the flip aborts loudly ("quiesce appends")
+    * instead of dropping its rows, and the live generation stays. */
   def compactPqIndex(spark: org.apache.spark.sql.SparkSession,
       uri: String): Unit = {
     val fs = graft.storage.VFS(spark)
+    val before = graft.storage.VersionedDir.liveListing(fs, uri, "codes")
     val cur = graft.storage.VersionedDir.resolve(fs, uri, "codes")
     val next = graft.storage.VersionedDir.next(fs, uri, "codes")
     val codes = spark.read.parquet(cur)
@@ -1562,7 +1567,9 @@ object Similarity {
     codes.repartition(nFiles).write
       .options(graft.storage.Encryption.dirWriteOptions(spark, uri))
       .parquet(next)
-    graft.storage.VersionedDir.commit(fs, uri, "codes", next)
+    // race injection: the read → guarded-commit window
+    graft.storage.FlipHooks.at("pq.compact.beforeCommit")
+    graft.storage.VersionedDir.commitGuarded(fs, uri, "codes", next, before)
   }
 
   /** Load a persisted PQ codebook. */

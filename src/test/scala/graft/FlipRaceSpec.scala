@@ -365,4 +365,32 @@ class FlipRaceSpec extends SparkSpec {
     assert(Similarity.cellsIncPath(spark, uri) != incBefore, "re-run did not fold")
     assert(Similarity.readCellsAll(spark, uri).count() == 203L)
   }
+
+  test("pq: a real append inside the compaction's read → commit window " +
+    "aborts the flip loudly; nothing is lost, a re-run compacts") {
+    val uri = TestSession.tmpDir("fliprace-compact-pq")
+    def vecs(ids: Seq[Long]) = ids.map(i =>
+      (i, Array.tabulate(16)(j => math.sin(i * 7 + j * 13).toFloat))).toDF("vec_id", "embedding")
+    Similarity.buildPqIndex(vecs(0L until 200L), "vec_id", "embedding", uri, m = 4, ksub = 8)
+    def appendOne(i: Long): Unit =
+      Similarity.appendToPqIndex(vecs(Seq(900L + i)), "vec_id", "embedding", uri)
+    def codeRows() = spark.read.parquet(Similarity.pqCodesPath(spark, uri)).count()
+    appendOne(0); appendOne(1)
+    val liveBefore = Similarity.pqCodesPath(spark, uri)
+    var fired = false
+    FlipHooks.setOnce("pq.compact.beforeCommit") {
+      appendOne(2); fired = true
+    }
+    try {
+      val e = intercept[RuntimeException] { Similarity.compactPqIndex(spark, uri) }
+      assert(fired, "pause point never fired")
+      assert(e.getMessage.contains("quiesce"), e.getMessage)
+    } finally FlipHooks.clear()
+    assert(Similarity.pqCodesPath(spark, uri) == liveBefore,
+      "the aborted compaction moved the live generation")
+    assert(codeRows() == 203L)
+    Similarity.compactPqIndex(spark, uri)
+    assert(Similarity.pqCodesPath(spark, uri) != liveBefore, "re-run did not compact")
+    assert(codeRows() == 203L)
+  }
 }

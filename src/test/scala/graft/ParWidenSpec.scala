@@ -5,9 +5,9 @@ import org.scalatest.time.{Seconds, Span}
 
 /** Pins the two r21 seam hardenings (r20 verdict item 7 / ADVICE):
   * [[graft.core.Par]]'s reentrancy guard (a nested `jobs` call must run
-  * inline, never deadlock the fixed pool) and tolerant conf parsing,
-  * and [[graft.ops.Widen.forHeavyRows]]'s size budget (an over-budget
-  * frame must be left alone). */
+  * inline, never deadlock the fixed pool) and
+  * [[graft.ops.Widen.forHeavyRows]]'s size budget (an over-budget frame
+  * must be left alone). */
 class ParWidenSpec extends SparkSpec with TimeLimits {
 
   test("Par.jobs: nested calls run inline instead of deadlocking the pool") {
@@ -20,14 +20,6 @@ class ParWidenSpec extends SparkSpec with TimeLimits {
         graft.core.Par.jobs(spark)(() => i, () => 10 * i).sum): _*)
     }
     assert(r == (1 to 7).map(i => 11 * i))
-  }
-
-  test("Par.jobs: malformed graft.par.gates value means enabled, not a crash") {
-    spark.conf.set("graft.par.gates", "garbage")
-    try {
-      val r = graft.core.Par.jobs(spark)(() => 1, () => 2)
-      assert(r == Seq(1, 2))
-    } finally spark.conf.unset("graft.par.gates")
   }
 
   test("Widen.forHeavyRows: applies the size budget; bad conf falls back") {

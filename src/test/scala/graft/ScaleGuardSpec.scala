@@ -196,8 +196,11 @@ class ScaleGuardSpec extends SparkSpec {
   test("bm25: query terms broadcast, top-k via heaps, no corpus windows") {
     val q = Seq((0L, "document topic"), (1L, "filler template")).toDF("qid", "qtext")
     val top = graft.ops.Search.bm25TopK(docs, "doc_id", "text", q, "qid", "qtext", k = 5)
-    assert(broadcasts(top).nonEmpty,
-      s"query-term table must broadcast into the postings stream:\n${plan(top)}")
+    // the (term, slot, idf) table rides inside the scoring operator:
+    // nothing broadcasts
+    assert(plan(top).collect { case e: graft.ops.Bm25ProbeExec => e }.size == 1 &&
+      broadcasts(top).isEmpty,
+      s"bm25 top-k must score in one Bm25ProbeExec with no broadcast:\n${plan(top)}")
     assert(windows(top).isEmpty,
       s"bm25 top-k must use bounded heaps, not a rank window:\n${plan(top)}")
     assert(singlePartExchanges(top).isEmpty,

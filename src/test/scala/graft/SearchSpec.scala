@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Search
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
 
 class SearchSpec extends SparkSpec {
@@ -505,10 +506,14 @@ class SearchSpec extends SparkSpec {
 
   test("bm25 plan: postings build map-side-combines; queries broadcast") {
     val q = Seq((0L, "cat dog")).toDF("qid", "qtext")
-    val plan = Search.bm25Scores(docs, "doc_id", "text", q, "qid", "qtext")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"),
-      s"query side must broadcast:\n$plan")
+    val executed = Search.bm25Scores(docs, "doc_id", "text", q, "qid", "qtext")
+      .queryExecution.executedPlan
+    val plan = executed.toString
+    // the query side's (term, slot, idf) table rides inside the one
+    // scoring operator: nothing broadcasts
+    assert(executed.collect { case e: graft.ops.Bm25ProbeExec => e }.size == 1 &&
+      executed.collect { case e: BroadcastExchangeExec => e }.isEmpty,
+      s"scores must come from one Bm25ProbeExec with no broadcast:\n$plan")
     assert(!plan.contains("CartesianProduct"), s"no cartesian products:\n$plan")
   }
 
@@ -778,5 +783,61 @@ class SearchSpec extends SparkSpec {
       assert(one.map(_._1) == Set(0L, 1L, 2L, 3L) && one.forall(_._4 <= 2L), one)
       Seq(2, 3, 7).foreach(p => assert(run(p) == one, s"$p reducers"))
     } finally graft.storage.VFS(spark).delete(uri)
+  }
+
+  test("inline bm25TopK: one Bm25ProbeExec, 7 Spark jobs, no broadcast") {
+    val q = Seq((0L, "the cat sat"), (1L, "dogs and cats"), (2L, "spark sentence"))
+      .toDF("qid", "qtext")
+    val (top, jobs) = jobsOf {
+      val t = Search.bm25TopK(docs, "doc_id", "text", q, "qid", "qtext", k = 2)
+      (t, t.collect())
+    }
+    // the postings checkpoint, nDocs and sumDl (an AQE map stage and a
+    // result job each), the df count, then the one scoring job: no job
+    // collects a query-term table to broadcast
+    assert(jobs.size == 7, s"${jobs.size} jobs: ${jobs.mkString("; ")}")
+    assert(jobs.count(_.exists(_.contains("Bm25Probe.scala"))) == 1 &&
+      jobs.last.exists(_.contains("Bm25Probe.scala")), jobs.mkString("; "))
+    val executed = top._1.queryExecution.executedPlan
+    assert(executed.collect { case e: graft.ops.Bm25ProbeExec => e }.size == 1 &&
+      executed.collect { case e: BroadcastExchangeExec => e }.isEmpty, executed)
+    assert(top._2.map(r => (r.getLong(0), r.getLong(3))).toSet ==
+      Set((0L, 1L), (0L, 2L), (1L, 1L), (2L, 1L)), top._2.toSeq)
+  }
+
+  test("bm25 scoring: a scan task's flushed partial sums merge to the same rows") {
+    val q = Seq((0L, "the cat sat on the mat"), (1L, "dogs and cats"), (2L, "the log"))
+      .toDF("qid", "qtext")
+    def exec(d: org.apache.spark.sql.DataFrame) = d.queryExecution.executedPlan.collectFirst {
+      case e: graft.ops.Bm25ProbeExec => e
+    }.getOrElse(fail(s"no scoring operator:\n${d.queryExecution.executedPlan}"))
+    Seq(Search.bm25TopK(docs, "doc_id", "text", q, "qid", "qtext", k = 3),
+      Search.bm25Scores(docs, "doc_id", "text", q, "qid", "qtext"),
+      Search.bm25Scores(docs, "doc_id", "text", q, "qid", "qtext", requireAllTerms = true))
+      .foreach { d =>
+        val e = exec(d)
+        def run(parts: Int, bound: Long) =
+          e.run(_ => parts, bound).map(_.copy()).collect().map(_.toSeq(d.schema)).toSet
+        val whole = run(1, graft.ops.Bm25Probe.RowsPerReducer)
+        assert(whole.nonEmpty && whole == d.collect().map(_.toSeq).toSet)
+        Seq(1L, 2L, 3L).foreach { bound =>
+          Seq(1, 3).foreach(p => assert(run(p, bound) == whole, s"bound $bound, $p reducers"))
+        }
+      }
+  }
+
+  test("bm25TopK docFilter: global df and avgdl, ranks over the filtered docs only") {
+    val tagged = docs.withColumn("lang", when($"doc_id" % 2 === 0, "en").otherwise("fr"))
+    val q = Seq((0L, "the cat sat"), (1L, "dogs and cats the log")).toDF("qid", "qtext")
+    val got = Search.bm25TopK(tagged, "doc_id", "text", q, "qid", "qtext", k = 2,
+      docFilter = Some($"lang" === "en")).as[(Long, Long, Double, Long)].collect().toSet
+    val want = Search.bm25Scores(tagged, "doc_id", "text", q, "qid", "qtext")
+      .filter($"doc_id" % 2 === 0).as[(Long, Long, Double)].collect().toSeq
+      .groupBy(_._1).toSeq.flatMap { case (qid, rs) =>
+        rs.map(r => (r._2, Search.round6(r._3))).sortBy(r => (-r._2, r._1)).take(2)
+          .zipWithIndex.map { case ((doc, s), i) => (qid, doc, s, i + 1L) }
+      }.toSet
+    assert(got.map(r => (r._1, r._2)) == Set((0L, 0L), (1L, 2L), (1L, 0L)), got)
+    assert(got == want)
   }
 }
