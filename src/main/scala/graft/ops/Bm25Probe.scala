@@ -68,16 +68,17 @@ private[graft] object Bm25Probe {
       batch.k.map(_ => AttributeReference("rank", LongType, nullable = false)()), child)
   }
 
-  /** Contribution rows one scoring reducer merges, at most: a bound on
-    * its (query, doc) sums. Also the bound on the (query, doc) partials
-    * one scan task holds before it hands them to the exchange. */
+  /** The (query, doc) partials one scan task holds before it hands
+    * them to the exchange, and the rows one scoring reducer merges on
+    * average: the two bounds on the scoring job's memory. */
   val RowsPerReducer: Long = 1L << 20
 
   /** Reducers for `contributions` rows (Σ df over the kept (query,
-    * term) pairs, known on the driver before the scoring job), at most
-    * `cap`. A probe-sized batch gets 1, and then no merge stage runs. */
-  def reducers(contributions: Long, cap: Int): Int =
-    math.max(1L, math.min(cap.toLong, (contributions + RowsPerReducer - 1) / RowsPerReducer)).toInt
+    * term) pairs, known on the driver before the scoring job): one per
+    * `RowsPerReducer` with no cap, as a task's partials never outnumber
+    * its contributions. A probe-sized batch gets 1, and no merge runs. */
+  def reducers(contributions: Long): Int =
+    math.max(1L, (contributions + RowsPerReducer - 1) / RowsPerReducer).toInt
 
   private final class Acc { var sum = 0.0; var n = 0L }
 
@@ -239,8 +240,7 @@ private[graft] case class Bm25ProbeExec(batch: Bm25Batch, postings: Seq[Attribut
   override protected def stringArgs: Iterator[Any] = Iterator(batch.summary)
   override protected def withNewChildInternal(c: SparkPlan): Bm25ProbeExec = copy(child = c)
 
-  override protected def doExecute(): RDD[InternalRow] =
-    run(Bm25Probe.reducers(_, conf.numShufflePartitions))
+  override protected def doExecute(): RDD[InternalRow] = run(Bm25Probe.reducers)
 
   /** Collects the batch's rows. A batch none of whose terms is in the
     * corpus starts no job: the default collect would post one for the

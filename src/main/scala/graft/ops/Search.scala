@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shim
-import org.apache.spark.sql.types.{LongType, StructField}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Full-text retrieval over the document corpus: an inverted index
@@ -35,9 +35,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *    term up in it — postings stream, nothing corpus-sized shuffles on
   *    an unbounded key;
   *  - per-(query, doc) score assembly is one shuffle of MATCHING
-  *    pairs only, summed per scan task first (a task hands its partial
-  *    sums on at a fixed bound, so whole-corpus postings stay within
-  *    memory). Top-k keeps the operator's bounded per-query heaps,
+  *    pairs only, summed per scan task first. A task hands its partial
+  *    sums on at a fixed bound, and the exchange gets one reducer per
+  *    that many contribution rows, so neither side's sums grow with
+  *    the corpus. Top-k keeps the operator's bounded per-query heaps,
   *    never a `row_number().over(partitionBy(query))` window, which
   *    would hash-partition every scored row onto |queries| reducers
   *    (the classic skew bomb when queries are few and the corpus is
@@ -97,7 +98,7 @@ object Search {
     * Output: (query_id, doc_id, score raw double), one unranked
     * [[Bm25Probe]] node (see [[inlineBatch]]). Callers round for
     * presentation; [[bm25TopK]] ranks on the 6-decimal rounding so
-    * ordering is reproducible across engines. Doc ids must be long. */
+    * ordering is reproducible across engines. Integral doc ids come back long. */
   def bm25Scores(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, qidCol: String, qtextCol: String,
       k1: Double = 1.25, b: Double = 0.75,
@@ -120,6 +121,10 @@ object Search {
       queries: DataFrame, qidCol: String, qtextCol: String, k: Option[Int],
       k1: Double, b: Double, materializePostings: Boolean, maxDfFraction: Double,
       requireAllTerms: Boolean, docFilter: Option[Column]): DataFrame = {
+    // the operator reads long doc ids; narrower integral ids widen exactly
+    val idType = docs.schema(idCol).dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"bm25: doc id column $idCol must be integral, got $idType")
     // The postings frame feeds THREE consumers (sumDl, the df count,
     // the scoring job) — without materialization each one re-runs
     // the tokenize + count subtree (measured 23 s -> 8 s at the 10x
@@ -127,9 +132,7 @@ object Search {
     // CacheManager-pinning reason as minhashNearDups; pass false on
     // long-lived clusters where executor loss must not fail the job
     // (or use buildIndex + bm25IndexTopK, the real at-scale path).
-    val postPlan = postings(docs, idCol, textCol)
-    require(postPlan.schema("doc_id").dataType == LongType,
-      s"bm25: doc id column $idCol must be long, got ${postPlan.schema("doc_id").dataType}")
+    val postPlan = postings(docs, idCol, textCol).withColumn("doc_id", col("doc_id").cast(LongType))
     val post = if (materializePostings) postPlan.localCheckpoint(true) else postPlan
     // exact-integer corpus stats WITHOUT extra text passes:
     // sum(dl over docs) = sum(tf over postings); empty docs hold no
@@ -144,7 +147,7 @@ object Search {
     // search): a filter narrows the result set, not the collection
     // statistics, and the top-k holds k ELIGIBLE docs
     val scored = docFilter.fold(restricted)(f => restricted.join(
-        docs.filter(f).select(col(idCol).as("doc_id")), Seq("doc_id"), "left_semi"))
+        docs.filter(f).select(col(idCol).cast(LongType).as("doc_id")), Seq("doc_id"), "left_semi"))
       .select("term", "doc_id", "tf", "dl")
     Shim.ofRows(docs.sparkSession, Bm25Probe(scored, qt.qid.dataType, Bm25Batch(CountedDf(df),
       qt.pairs.toSeq, nDocs, sumDl, k, k1, b, maxDfFraction, requireAllTerms)))

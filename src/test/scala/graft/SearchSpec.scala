@@ -840,4 +840,27 @@ class SearchSpec extends SparkSpec {
     assert(got.map(r => (r._1, r._2)) == Set((0L, 0L), (1L, 2L), (1L, 0L)), got)
     assert(got == want)
   }
+
+  test("bm25 scoring reducers: one per RowsPerReducer contributions, with no cap") {
+    import graft.ops.Bm25Probe.{RowsPerReducer, reducers}
+    assert(reducers(0L) == 1 && reducers(RowsPerReducer) == 1 && reducers(RowsPerReducer + 1) == 2)
+    // far past the session's shuffle partitions: each reducer's sums stay bounded
+    val many = 64L * spark.sessionState.conf.numShufflePartitions
+    assert(reducers(many * RowsPerReducer) == many)
+  }
+
+  test("inline bm25: integral doc ids widen to long; other id types are refused") {
+    val q = Seq((0L, "the cat sat"), (1L, "dogs and cats")).toDF("qid", "qtext")
+    val asLong = Search.bm25TopK(docs, "doc_id", "text", q, "qid", "qtext", k = 3)
+      .as[(Long, Long, Double, Long)].collect().toSet
+    val asInt = Search.bm25TopK(docs.select($"doc_id".cast("int").as("doc_id"), $"text"),
+      "doc_id", "text", q, "qid", "qtext", k = 3)
+    assert(asInt.schema("doc_id").dataType == org.apache.spark.sql.types.LongType)
+    assert(asLong.nonEmpty && asInt.as[(Long, Long, Double, Long)].collect().toSet == asLong)
+    val e = intercept[IllegalArgumentException] {
+      Search.bm25Scores(docs.select($"doc_id".cast("string").as("doc_id"), $"text"),
+        "doc_id", "text", q, "qid", "qtext")
+    }
+    assert(e.getMessage.contains("doc id column doc_id must be integral, got StringType"), e)
+  }
 }
